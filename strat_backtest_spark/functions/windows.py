@@ -131,20 +131,23 @@ def last_value(col: str | Column, w: WindowSpec) -> Column:
     )
 
 
-def tail_n(df: DataFrame, n: int, w: WindowSpec, order_col: str = "date") -> DataFrame:
-    """W9 — positional ``.tail(n)`` per partition (strats.py:594-597):
-    row_number over descending order <= n."""
-    desc_w = Window.partitionBy(*_partition_cols(w)).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(desc_w))
-        .filter(F.col("__rn") <= n)
-        .drop("__rn")
+def tail_n(
+    df: DataFrame,
+    n: int,
+    partition_cols: list[str],
+    order_cols: str | list[str] = "date",
+    rank_col: str | None = None,
+) -> DataFrame:
+    """W9 — positional ``.tail(n)`` per ``partition_cols`` group
+    (strats.py:594-597): row_number over descending ``order_cols`` <= n.
+    ``rank_col``, if given, keeps that row number (1 = last row)."""
+    order = [order_cols] if isinstance(order_cols, str) else order_cols
+    desc_w = Window.partitionBy(*partition_cols).orderBy(
+        *[F.col(c).desc() for c in order]
     )
-
-
-def _partition_cols(w: WindowSpec):
-    # WindowSpec does not expose its keys; engine convention is ticker.
-    return ["ticker"]
+    rn = rank_col or "__rn"
+    out = df.withColumn(rn, F.row_number().over(desc_w)).filter(F.col(rn) <= n)
+    return out if rank_col else out.drop(rn)
 
 
 def trailing_period_filter(df: DataFrame, col: str, interval: str, partition_cols: list[str] | None = None) -> DataFrame:

@@ -4,10 +4,11 @@ Everything else in the engine is declarative DataFrame algebra; this
 module is the one genuinely path-dependent component — cash balance,
 FIFO order book, stop-loss heap, and the strategy decision loop — and
 it runs per (ticker, run_id) group inside a ``mapInPandas`` batch
-walker (see ``run_kernel`` for why not ``applyInPandas``). State is O(open orders) per group; groups are independent, so the
-kernel parallelizes across tickers × parameter points on a cluster
-(the two axes the reference cannot exploit: its grid search is
-effectively serial, optimize.py:221-225).
+walker (see ``run_kernel`` for why not ``applyInPandas``). State is
+O(open orders) per group; groups are independent, so the kernel
+parallelizes across tickers on a cluster, and a grid sweep simulates
+all of a ticker's parameter points from one pass over its bars (the
+reference's grid search is effectively serial, optimize.py:221-225).
 
 Semantics replicate the reference order engine exactly, including its
 quirks (SURVEY.md Appendix A), because the golden tests depend on
@@ -246,34 +247,53 @@ class TradingEngine:
 
 # ---------------------------------------------------------------------------
 # strategy decision drivers — the imperative residue of each Strategy
-# subclass; signal GENERATION stays vectorized in operators/signals.py.
+# subclass; signal GENERATION stays vectorized in operators/signals.py,
+# except for grid sweeps (see _sma_table and run_kernel's ``runs``).
 # ---------------------------------------------------------------------------
+
+def _ma_cross_walk(
+    eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
+    idxs: np.ndarray, buys: np.ndarray,
+    stop_loss_pct: float | None = None, sell_shares: float = -1,
+) -> None:
+    """Reference custom_strats.py:41-62: buy at every up-cross; sell at
+    down-crosses strictly after the first buy. ``idxs`` are the cross
+    edges' row indices (ascending) and ``buys`` marks the up-crosses
+    among them. One loop for every MA-cross caller: the action-column
+    drivers below and ``run_kernel(runs=...)``, which finds the edges
+    itself. Drivers take plain numpy views (not per-group pandas
+    frames): a grid sweep runs thousands of simulations and per-group
+    pandas masking was a measurable slice of the sweep."""
+    buy_pos = np.flatnonzero(buys)
+    if buy_pos.size == 0:
+        return
+    first_buy = dates[idxs[buy_pos[0]]]
+    for i, is_buy in zip(idxs, buys):
+        if is_buy:
+            close = closes[i]
+            eng.buy(
+                dates[i], close,
+                stop_loss=(close * stop_loss_pct) if stop_loss_pct else None,
+            )
+        elif dates[i] > first_buy:
+            eng.sell(dates[i], closes[i], num_shares=sell_shares)
+
+
+def _action_edges(actions: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(edge indices, is-buy) of a feed's buy/sell action column."""
+    idxs = np.flatnonzero((actions == "buy") | (actions == "sell"))
+    return idxs, actions[idxs] == "buy"
+
 
 def ma_cross_driver(
     eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
     actions: np.ndarray, params: dict,
 ) -> None:
-    """Reference custom_strats.py:41-62: buy at every up-cross; sell at
-    down-crosses strictly after the first buy. Drivers take plain
-    numpy views (not per-group pandas frames): a grid sweep runs tens
-    of thousands of groups and per-group pandas masking was a
-    measurable slice of the sweep."""
-    mask = (actions == "buy") | (actions == "sell")
-    idxs = np.flatnonzero(mask)
-    if idxs.size == 0:
-        return
-    acts = actions[idxs]
-    buy_pos = np.flatnonzero(acts == "buy")
-    if buy_pos.size == 0:
-        return
-    first_buy = dates[idxs[buy_pos[0]]]
-    slpct = params.get("stop_loss_pct")
-    for i in idxs:
-        if actions[i] == "buy":
-            close = closes[i]
-            eng.buy(dates[i], close, stop_loss=(close * slpct) if slpct else None)
-        elif dates[i] > first_buy:
-            eng.sell(dates[i], closes[i])
+    """MA-cross over a feed whose ``action`` column marks the edges."""
+    _ma_cross_walk(
+        eng, dates, closes, *_action_edges(actions),
+        stop_loss_pct=params.get("stop_loss_pct"),
+    )
 
 
 def band_driver(
@@ -313,21 +333,10 @@ def ma_cross_partial_driver(
     ``sell(-1)`` closes never reach. No shipped reference strategy
     issues partial closes; this driver exists so the partial path has
     end-to-end batch/streaming parity coverage."""
-    shares = params.get("sell_shares", 1.0)
-    mask = (actions == "buy") | (actions == "sell")
-    idxs = np.flatnonzero(mask)
-    if idxs.size == 0:
-        return
-    acts = actions[idxs]
-    buy_pos = np.flatnonzero(acts == "buy")
-    if buy_pos.size == 0:
-        return
-    first_buy = dates[idxs[buy_pos[0]]]
-    for i in idxs:
-        if actions[i] == "buy":
-            eng.buy(dates[i], closes[i])
-        elif dates[i] > first_buy:
-            eng.sell(dates[i], closes[i], num_shares=shares)
+    _ma_cross_walk(
+        eng, dates, closes, *_action_edges(actions),
+        sell_shares=params.get("sell_shares", 1.0),
+    )
 
 
 DRIVERS: dict[str, Callable[..., None]] = {
@@ -409,14 +418,15 @@ class _KernelOutAcc:
 
 def _run_one_group(
     acc: _KernelOutAcc, ticker, run_id,
-    dates: np.ndarray, closes: np.ndarray, actions: np.ndarray,
-    driver, initial_amount: float, params: dict, parity: bool,
+    dates: np.ndarray, closes: np.ndarray,
+    initial_amount: float, parity: bool, drive, *args,
 ) -> None:
-    """Simulate one (ticker, run_id) group into the accumulator.
+    """Simulate one (ticker, run_id) group into the accumulator:
+    ``drive(engine, dates, closes, *args)`` makes the decisions.
     Inputs are numpy views over the batch arrays, already date-sorted
     (the feed sort guarantees it) — no per-group pandas objects."""
     eng = TradingEngine(dates, closes, initial_amount, parity=parity)
-    driver(eng, dates, closes, actions, params)
+    drive(eng, dates, closes, *args)
     for o in eng.book.completed:
         acc.add_order(ticker, run_id, o)
     for o in eng.book.open_orders:
@@ -435,13 +445,64 @@ def _run_one_group(
         )
 
 
+def _sma_table(closes: np.ndarray, lengths) -> dict[int, np.ndarray]:
+    """Rolling means of ``closes`` for every length in ``lengths``,
+    bit-identical to ``functions.windows.rolling_mean`` — NaN where it
+    is null (before row n). Spark evaluates ``avg() OVER (ROWS n-1
+    PRECEDING)`` by re-aggregating the frame for every row: start at
+    0.0, add the n values left to right, divide by float(n). Adding
+    the same values in the same order reproduces each sum exactly, and
+    the n-row sum starting at row i is the (n-1)-row one plus one more
+    add, so one running vector serves every length: max(lengths)
+    vector adds per series, however many lengths and runs share it."""
+    m = len(closes)
+    sums = np.zeros(m)
+    added = 0
+    out = {}
+    for n in sorted(lengths):
+        while added < min(n, m):
+            sums[: m - added] += closes[added:]
+            added += 1
+        sma = np.full(m, np.nan)
+        if n <= m:
+            sma[n - 1:] = sums[: m - n + 1] / float(n)
+        out[n] = sma
+    return out
+
+
+def _run_grid(
+    acc: _KernelOutAcc, ticker, dates: np.ndarray, closes: np.ndarray,
+    runs, initial_amount: float, stop_loss_pct, parity: bool,
+) -> None:
+    """Every MA-cross run of ``runs`` over one ticker's bars. The
+    signal semantics are ``MACrossStrategy.signal_feed``'s: ``cross``
+    is sma_fast > sma_lagging with a null (NaN) SMA counting as false,
+    and the edges are the first row plus every row where ``cross``
+    changes."""
+    if not np.isfinite(closes).all():
+        # Spark orders NaN above every number and skips null closes in
+        # its window averages; this path does neither, so refuse
+        # rather than return a number the Backtest path would not
+        raise ValueError(f"ticker {ticker!r}: null or non-finite close in a sweep")
+    smas = _sma_table(closes, {n for _, f, l in runs for n in (f, l)})
+    edge = np.ones(len(closes), dtype=bool)
+    for run_id, fast, lagging in runs:
+        cross = smas[fast] > smas[lagging]
+        np.not_equal(cross[1:], cross[:-1], out=edge[1:])
+        idxs = np.flatnonzero(edge)
+        _run_one_group(
+            acc, ticker, run_id, dates, closes, initial_amount, parity,
+            _ma_cross_walk, idxs, cross[idxs], stop_loss_pct,
+        )
+
+
 def run_kernel(
     feed: DataFrame,
     initial_amount: float,
     strategy: str = "ma_cross",
     params: dict | None = None,
     parity: bool = True,
-    partition_cols: tuple[str, ...] = ("ticker", "run_id"),
+    runs: list[tuple[int, int, int]] | None = None,
 ) -> DataFrame:
     """Run the order-matching simulation per (ticker, run_id) group.
 
@@ -450,36 +511,47 @@ def run_kernel(
     and path-dependent drivers need the full series; Catalyst prunes
     the unused columns from the scan).
 
-    Plan shape: repartition on (ticker, run_id) + sortWithinPartitions
-    + ``mapInPandas`` with a batch-spanning group walker — NOT
-    ``groupBy().applyInPandas``. Both shuffle once on the same key;
-    the difference is Python-side: mapInPandas lets one Python call
-    process every group in an Arrow batch (list-append output,
-    one frame per flush), where applyInPandas pays per-group pandas
-    frame construction — ~1 ms × (tickers × grid points), the
-    dominant cost of a parameter sweep.
+    ``runs``: a parameter sweep's (run_id, fast, lagging) grid. The
+    kernel then computes the MA-cross signals itself: ``feed`` carries
+    one plain bar series per ticker (``action`` and ``run_id`` are
+    ignored; see ``signals.ma_cross_feed_grid``), every run is
+    simulated over it, and the output rows carry the runs' ids. Each
+    distinct moving-average length is computed once per ticker and
+    shared by every run that uses it (``_sma_table``; bit-identical to
+    the Spark window ``MACrossStrategy.signal_feed`` uses). Compared
+    with a Spark-built grid feed, each bar crosses into Python once
+    instead of once per run, and no window re-aggregates its frame for
+    every row. Only ``strategy="ma_cross"``; ``params`` may set
+    ``stop_loss_pct``. Closes must be finite (``ValueError``
+    otherwise).
 
-    ``partition_cols`` keys the exchange. Any key set under which every
-    (ticker, run_id) group lands whole in one partition is valid — the
-    walker splits partitions on key changes, so co-resident groups cost
-    nothing. Single-run callers (``Backtest.run`` / ``final_net_worth``)
-    pass ``("ticker",)``: their feed leaves the signal windows already
-    hash-partitioned by ticker, and Spark ELIDES a repartition whose
-    keys match the child's existing partitioning — the kernel then adds
-    ZERO exchanges (a (ticker, run_id) repartition never matches and
-    re-shuffled the whole feed). The default keeps (ticker, run_id) for
-    parameter sweeps, where runs of one ticker must spread (a
-    single-ticker SA chain would otherwise serialize on one core).
+    Plan shape: repartition on ticker + sortWithinPartitions +
+    ``mapInPandas`` with a batch-spanning group walker — NOT
+    ``groupBy().applyInPandas``. Both shuffle once; the difference is
+    Python-side: mapInPandas lets one Python call process every group
+    in an Arrow batch (list-append output, one frame per flush), where
+    applyInPandas pays per-group pandas frame construction for every
+    (ticker, run_id) group. The walker splits partitions on key
+    changes, so groups sharing a partition cost nothing. Keying on
+    ticker alone lets Spark ELIDE the repartition when the feed comes
+    straight off a per-ticker signal window (``signal_feed``): the
+    kernel then adds no exchange.
 
     Returns the tagged kernel output (KERNEL_OUT_SCHEMA); split with
     :func:`split_kernel_output`.
     """
     driver = DRIVERS[strategy]
     params = params or {}
+    if runs is not None:
+        if strategy != "ma_cross":
+            raise ValueError(f"runs= computes MA-cross signals, not {strategy!r}")
+        runs = [(int(i), int(f), int(l)) for i, f, l in runs]
+        if any(min(f, l) < 1 for _, f, l in runs):
+            raise ValueError("moving-average lengths must be at least 1")
 
     srt = (
         feed.select("ticker", "run_id", "date", "close", "action")
-        .repartition(*partition_cols)
+        .repartition("ticker")
         .sortWithinPartitions("ticker", "run_id", "date")
     )
 
@@ -496,8 +568,12 @@ def run_kernel(
                 d = np.concatenate([x[0] for x in segs])
                 c = np.concatenate([x[1] for x in segs])
                 a = np.concatenate([x[2] for x in segs])
-            _run_one_group(acc, key[0], key[1], d, c, a,
-                           driver, initial_amount, params, parity)
+            if runs is None:
+                _run_one_group(acc, key[0], key[1], d, c, initial_amount,
+                               parity, driver, a, params)
+            else:
+                _run_grid(acc, key[0], d, c, runs, initial_amount,
+                          params.get("stop_loss_pct"), parity)
 
         for pdf in batches:
             if len(pdf) == 0:

@@ -5,11 +5,16 @@ The reference's grid search forks a process pool but blocks per task
 (quirk Q8, optimize.py:221-225) — effectively serial, one full
 backtest per grid point. Here the WHOLE grid is one Spark job:
 
-    params (run_id, fast, lagging)  —broadcast—→  bars × params
-    signals for every point from ONE bars scan (prefix-sum self-joins,
-    operators/signals.py:ma_cross_signals_grid)
-    kernel per (ticker, run_id) group — tickers × points in parallel
-    argmax net worth per ticker
+    bars ──→ ma_cross_feed_grid: one (ticker, date, close) row per bar
+         ──→ run_kernel(runs=grid), one task per ticker: each distinct
+             SMA length computed once per ticker, then every grid
+             point's cross edges and order simulation in the walker
+         ──→ final_net_worth_from_events: net worth at the last bar,
+             telescoped from the sparse trade events
+         ──→ argmax net worth per ticker (grid_search)
+
+Nothing runs until the caller consumes the result: no persist, count
+or checkpoint jobs while the plan is built.
 
 Simulated annealing (reference optimize.py:138-207) keeps its
 inherently sequential temperature loop on the driver, but evaluates
@@ -69,108 +74,31 @@ def expand_grid(spark: SparkSession, fast_range, lagging_range) -> DataFrame:
     return _params_local_relation(spark, _grid_rows(fast_range, lagging_range))
 
 
-def _sweep_partition_cols(bars: DataFrame, n_runs: int) -> tuple[str, ...]:
-    """Adaptive kernel-exchange key for a parameter sweep.
-
-    ``("ticker",)`` lets Spark ELIDE the kernel repartition (the grid
-    feed leaves the signal windows hash(ticker)-partitioned), but it
-    lands EVERY run of a ticker in one partition — a single-ticker
-    51-point grid (the reference's headline workload) would walk all 51
-    simulations serially on one core. ``("ticker", "run_id")`` spreads
-    runs across the cluster at the price of one feed exchange.
-
-    Rule: keep the elision only when the ticker count alone saturates
-    the cluster (≥ 4× defaultParallelism — the hash-collision cushion
-    of guide §2.5; at 1× about e⁻¹ ≈ 37% of partitions would sit
-    empty). The ticker count costs one approx_count_distinct job over
-    ``bars`` — map-side HLL sketches, a merge of a few KB — and for the
-    materialize=True grid path that job doubles as the cache warm-up
-    the feed build was about to pay anyway. A single-run sweep never
-    spreads: (ticker, run_id) has the same granularity as (ticker) but
-    would forfeit the elision."""
-    if n_runs <= 1:
-        return ("ticker",)
-    target = 4 * bars.sparkSession.sparkContext.defaultParallelism
-    n_tickers = bars.agg(
-        F.approx_count_distinct("ticker").alias("n")
-    ).collect()[0]["n"]
-    return ("ticker",) if n_tickers >= target else ("ticker", "run_id")
-
-
-def evaluate_params(
-    bars: DataFrame, params: DataFrame, initial_amount: float,
-    materialize: bool = True,
-    partition_cols: tuple[str, ...] | None = None,
-) -> DataFrame:
+def evaluate_params(bars: DataFrame, params, initial_amount: float) -> DataFrame:
     """Final net worth for every (ticker, run_id): the shared engine of
-    grid search and SA neighborhoods. One bars scan, one kernel pass.
+    grid search and SA neighborhoods. ``params`` is a list of
+    (run_id, fast, lagging) rows or a DataFrame of them.
 
-    The objective needs only the LAST point of each net-worth curve,
-    and at the last bar the curve telescopes to an aggregation over the
-    kernel's sparse trade events:
+    The kernel reads each ticker's bars once and simulates every grid
+    point over them (``run_kernel``'s ``runs``). The objective needs
+    only the LAST point of each net-worth curve, and at the last bar
+    the curve telescopes to an aggregation over the kernel's sparse
+    trade events:
 
         net_worth(T) = shares(T)·close(T) − Σ buy·close + Σ sell·close + init
 
-    so the earlier full build_portfolio pass (two window functions over
-    the |bars|×|runs| feed, plus a second consumption of the cached
-    feed) is replaced by one map-side-combining agg over |events| rows
-    — events are edge-sparse, orders of magnitude smaller than the
-    feed. The kernel remains the only consumer of the expanded feed,
-    which therefore no longer needs persist().
-
-    ``bars`` itself has THREE plan consumers (signal windows, the
-    bars×runs feed base, last_bar) — unpinned, each branch re-ran the
-    full bars lineage (for synthetic bars: a scan plus a two-stage
-    sort-aggregation). materialize=True pins bars for the duration of
-    the job and unpins right after the eager checkpoint; the
-    materialize=False caller (SA) already walks a localCheckpointed
-    bars table, so pinning there would only duplicate storage."""
-    if materialize:
-        bars = bars.persist()
+    so no per-bar portfolio is built. The result is lazy, like any
+    other plan; a caller that reuses it caches it."""
     if isinstance(params, DataFrame):
-        # legacy callers hand a DataFrame; the plan-embedded signal
-        # grid needs the rows anyway, so collect ONCE here (tiny by
-        # contract) instead of inside the feed builder
-        param_rows = [(r["run_id"], r["fast"], r["lagging"]) for r in params.collect()]
-    else:
-        param_rows = [(int(i), int(f), int(l)) for i, f, l in params]
-        params = _params_local_relation(bars.sparkSession, param_rows)
-    # Full feed straight off the multi-window pass (see
-    # ma_cross_feed_grid): the former bars×runs ⟕ edge-rows join built
-    # the expanded table twice and re-shuffled it into the kernel; the
-    # direct feed stays hash(ticker)-partitioned from the window
-    # exchange, so the kernel's ("ticker",) repartition is elided and
-    # each bar row crosses the network exactly once.
-    if partition_cols is None:
-        # adaptive: elide the kernel exchange only when tickers alone
-        # saturate the cluster; spread few-ticker sweeps on run_id too
-        # (optimization round 2: the fixed ("ticker",) key serialized a
-        # single-ticker grid/SA chain on one core)
-        partition_cols = _sweep_partition_cols(bars, len(param_rows))
-    # spread follows the same adaptivity: when tickers alone saturate
-    # the cluster, the elided single-exchange feed is strictly better;
-    # when they don't, the per-run lag work must leave the per-ticker
-    # window partition too (a 10k-point single-ticker grid would
-    # otherwise run |runs| lag passes serially on one core — the same
-    # hole the kernel keying fix closed, one stage earlier). Either
-    # way the kernel repartition below matches the feed's last window
-    # exchange and is elided.
-    feed = ma_cross_feed_grid(
-        bars, param_rows, spread=partition_cols != ("ticker",)
-    )
-    kernel_out = run_kernel(feed, initial_amount, partition_cols=partition_cols)
+        params = [(r["run_id"], r["fast"], r["lagging"]) for r in params.collect()]
+    rows = [(int(i), int(f), int(l)) for i, f, l in params]
+    param_df = _params_local_relation(bars.sparkSession, rows)
+    feed = ma_cross_feed_grid(bars, rows)
+    kernel_out = run_kernel(feed, initial_amount, runs=rows)
     _, events = split_kernel_output(kernel_out)
-    out = final_net_worth_from_events(
-        bars, events, params.select("run_id"), initial_amount
-    ).join(F.broadcast(params), "run_id")
-    # The objective table is tiny (|tickers|×|runs| rows): eagerly
-    # materialize it so repeated calls don't stack lazy kernel DAGs.
-    # A caller that collects the result immediately (SA's score step)
-    # passes materialize=False and saves one job per chain step.
-    if materialize:
-        out = out.localCheckpoint(eager=True)
-        bars.unpersist()  # checkpoint cut the lineage; pin no longer needed
-    return out
+    return final_net_worth_from_events(
+        bars, events, param_df.select("run_id"), initial_amount
+    ).join(F.broadcast(param_df), "run_id")
 
 
 def grid_search(
@@ -270,25 +198,17 @@ def simulated_annealing(
     Metropolis-accepts against the incumbent. Single-ticker bars
     expected (aggregate over tickers otherwise)."""
     # The chain re-consumes bars every step (and evaluate_params reads
-    # them in four plan branches): pin them once so the upstream DAG
-    # (scan + bar derivation + filters) doesn't re-run ~4x per
-    # iteration. Single-ticker bars are small by contract; a persist()
-    # would do at larger scale.
+    # them in two plan branches): pin them once so the upstream DAG
+    # (scan + bar derivation + filters) doesn't re-run per iteration.
+    # Single-ticker bars are small by contract; a persist() would do
+    # at larger scale.
     bars = bars.localCheckpoint(eager=True)
-    # Kernel spread decision ONCE for the whole chain (the ticker set
-    # is fixed across steps; deciding inside evaluate_params would cost
-    # one count job per score call). Single-ticker chains — the SA
-    # contract — spread each neighbor batch on ("ticker", "run_id")
-    # instead of serializing every step on one core.
-    pcols = _sweep_partition_cols(bars, neighbors_per_step)
 
     from strat_backtest_spark.functions.numeric import round_half_up_col
 
     def score(states: list[tuple[int, int]]) -> list[float]:
         rows = [(i, int(f), int(l)) for i, (f, l) in enumerate(states)]
-        scored = evaluate_params(
-            bars, rows, initial_amount, materialize=False, partition_cols=pcols
-        )
+        scored = evaluate_params(bars, rows, initial_amount)
         got = {
             r["run_id"]: r["net_worth"]
             for r in scored.groupBy("run_id")

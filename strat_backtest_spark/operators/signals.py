@@ -9,7 +9,9 @@ indexing (custom_strats.py:45-48):
 
 Here the same semantics are a lag + filter over a per-ticker window —
 fully declarative, whole-stage-codegen'd, and partitionable across any
-number of (ticker, run_id) groups.
+number of (ticker, run_id) groups. Grid sweeps are the exception: the
+kernel computes every grid point's edges from one bar series per
+ticker (see ``ma_cross_feed_grid``).
 
 pandas parity notes:
 - NaN > NaN is False in pandas, so `cross` is False during the MA
@@ -63,194 +65,18 @@ def ma_cross_signals(
     )
 
 
-def ma_cross_signals_grid(bars: DataFrame, params) -> DataFrame:
-    """MA-crossover signals for a whole parameter grid at once — the
-    scalable replacement for the reference's per-state re-run
-    (optimize.py:218-225).
-
-    Strategy: the parameter table is driver-built and tiny by
-    construction (a grid or an SA neighborhood), so bake it into the
-    PLAN instead of joining it as data:
-
-    1. one window pass per DISTINCT moving-average length n — all over
-       the same (ticker, date) sort, so Catalyst chains the WindowExecs
-       behind a SINGLE exchange on ticker;
-    2. per run_id, cross = sma_fast > sma_lagging and its lag — more
-       expressions over the same sort, still no extra shuffle;
-    3. explode one struct per run_id and keep only edge rows.
-
-    The |bars|×|params| blow-up therefore never materializes: rows
-    multiply only AFTER the edge filter, and signal edges are sparse.
-    Compare the previous design (prefix-sum self-joins) which shuffled
-    the expanded table twice and recomputed the base window per join.
-
-    params: DataFrame or list of (run_id, fast, lagging) rows.
-    """
-    if isinstance(params, DataFrame):
-        rows = [(r["run_id"], r["fast"], r["lagging"]) for r in params.collect()]
-    else:
-        rows = [(int(i), int(f), int(l)) for i, f, l in params]
-    w = ticker_window()
-    lengths = sorted({f for _, f, _ in rows} | {l for _, _, l in rows})
-
-    df = bars.select(
-        "ticker", "date", "close",
-        *[rolling_mean("close", n, w).alias(f"__sma_{n}") for n in lengths],
-    )
-    crosses = [
-        F.coalesce(
-            F.col(f"__sma_{f}") > F.col(f"__sma_{l}"), F.lit(False)
-        ).alias(f"__cross_{rid}")
-        for rid, f, l in rows
-    ]
-    df = df.select("ticker", "date", "close", *crosses)
-    df = df.select(
-        "ticker", "date", "close",
-        *[F.col(f"__cross_{rid}") for rid, _, _ in rows],
-        *[F.lag(f"__cross_{rid}").over(w).alias(f"__prev_{rid}") for rid, _, _ in rows],
-    )
-    runs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(rid).cast("long").alias("run_id"),
-                    F.col(f"__cross_{rid}").alias("cross"),
-                    (
-                        F.col(f"__prev_{rid}").isNull()
-                        | (F.col(f"__cross_{rid}") != F.col(f"__prev_{rid}"))
-                    ).alias("changed"),
-                )
-                for rid, _, _ in rows
-            ]
-        )
-    )
-    edges = (
-        df.select("ticker", "date", "close", runs.alias("r"))
-        .filter(F.col("r.changed"))
-    )
-    return edges.select(
-        "ticker",
-        F.col("r.run_id").alias("run_id"),
-        "date",
-        "close",
-        F.when(F.col("r.cross"), F.lit("buy")).otherwise(F.lit("sell")).alias("action"),
-    )
-
-
-def ma_cross_feed_grid(bars: DataFrame, params, spread: bool = False) -> DataFrame:
-    """FULL kernel feed for a parameter grid — every (ticker, run_id,
-    date, close) row with ``action`` null off-edge — emitted straight
-    off the one-exchange multi-window pass of
-    :func:`ma_cross_signals_grid` (same SMA/cross/lag expressions, same
-    explode; the edge filter becomes a CASE that nulls the action
-    instead of dropping the row).
-
-    Why this exists (round 14): the grid evaluator used to build the
-    feed as ``bars × run_ids ⟕ edge-rows`` — constructing the
-    |bars|×|runs| table a second time just to re-attach the sparse
-    edges, and then re-shuffling that expanded table into the kernel.
-    Emitting the full feed here keeps the expansion INSIDE the
-    window-partitioned stage, so it stays hash(ticker)-partitioned
-    (deterministically — the window exchange, not an AQE join choice)
-    and the kernel's ``partition_cols=("ticker",)`` repartition is
-    ELIDED: a grid job moves each bar row across the network exactly
-    once, in the window exchange, at any scale.
-
-    Built as Spark-SQL text (round 15): the Column form cost ~100 py4j
-    round-trips PER RUN (5,041 for a 51-point grid, ~1.6 s of driver
-    wall — and an SA chain rebuilds the feed every step). The text
-    form is four parses regardless of grid size; tree equality with
-    the Column form is pinned by tests/test_r15_optimizations.py.
-
-    ``spread=True`` (round 15, the few-ticker complement of the
-    adaptive kernel keying): the default form computes every run's
-    ``lag`` window — |runs| O(|bars|) passes — inside the ONE
-    per-ticker window partition, which serializes a single-ticker
-    sweep's per-run work on one core no matter how large the grid
-    (measured: +5.7 s serial for 51 runs × 150k bars; it scales with
-    |runs|). The spread form explodes to (run_id, cross) rows right
-    after the (serial-by-nature) SMA pass and computes the ONE lag
-    per row in a (ticker, run_id)-partitioned window — the per-run
-    work then parallelizes across |tickers|×|runs| partitions. Same
-    exchange count either way (the (t, r) window exchange replaces
-    the kernel repartition, which elides on the matching
-    partitioning), but the expanded table crosses the network once
-    more than the elided form's zero — which is why the saturating-
-    ticker path keeps ``spread=False``. Values are identical: the
-    SMAs come off the same serial pass, ``cross`` is a row-wise
-    compare, and ``lag`` over (ticker, run_id) of the exploded rows
-    is ``lag`` over (ticker) of that run's column (dates are unique
-    per ticker by the bars contract) — pinned by
-    tests/test_r15_optimizations.py.
-
-    params: list of (run_id, fast, lagging) rows (or DataFrame)."""
-    from strat_backtest_spark.functions.windows import (
-        rolling_mean_sql,
-        ticker_window_sql,
-    )
-
-    if isinstance(params, DataFrame):
-        rows = [(r["run_id"], r["fast"], r["lagging"]) for r in params.collect()]
-    else:
-        rows = [(int(i), int(f), int(l)) for i, f, l in params]
-    w = ticker_window_sql()
-    lengths = sorted({f for _, f, _ in rows} | {l for _, _, l in rows})
-
-    df = bars.selectExpr(
-        "ticker", "date", "close",
-        *[f"{rolling_mean_sql('close', n)} AS __sma_{n}" for n in lengths],
-    )
-    df = df.selectExpr(
-        "ticker", "date", "close",
-        *[
-            f"coalesce((__sma_{f} > __sma_{l}), false) AS __cross_{rid}"
-            for rid, f, l in rows
-        ],
-    )
-    if spread:
-        cross_structs = ", ".join(
-            f"struct(CAST({rid} AS BIGINT) AS run_id,"
-            f" __cross_{rid} AS cross)"
-            for rid, _, _ in rows
-        )
-        df = df.selectExpr(
-            "ticker", "date", "close",
-            f"explode(array({cross_structs})) AS r",
-        ).selectExpr(
-            "ticker", "r.run_id AS run_id", "date", "close",
-            "r.cross AS __cross",
-        )
-        wr = ticker_window_sql("run_id")
-        df = df.selectExpr(
-            "ticker", "run_id", "date", "close", "__cross",
-            f"lag(__cross) OVER ({wr}) AS __prev",
-        )
-        return df.selectExpr(
-            "ticker", "run_id", "date", "close",
-            "(CASE WHEN ((__prev IS NULL) OR (__cross != __prev))"
-            " THEN (CASE WHEN __cross THEN 'buy' ELSE 'sell' END)"
-            " END) AS action",
-        )
-    df = df.selectExpr(
-        "ticker", "date", "close",
-        *[f"__cross_{rid}" for rid, _, _ in rows],
-        *[
-            f"lag(__cross_{rid}) OVER ({w}) AS __prev_{rid}"
-            for rid, _, _ in rows
-        ],
-    )
-    structs = ", ".join(
-        f"struct(CAST({rid} AS BIGINT) AS run_id,"
-        f" (CASE WHEN ((__prev_{rid} IS NULL) OR (__cross_{rid} !="
-        f" __prev_{rid})) THEN (CASE WHEN __cross_{rid} THEN 'buy'"
-        " ELSE 'sell' END) END) AS action)"
-        for rid, _, _ in rows
-    )
-    return df.selectExpr(
-        "ticker", "date", "close", f"explode(array({structs})) AS r"
-    ).selectExpr(
-        "ticker", "r.run_id AS run_id", "date", "close",
-        "r.action AS action",
+def ma_cross_feed_grid(bars: DataFrame, params) -> DataFrame:
+    """Kernel feed for a parameter grid: each ticker's bar series once,
+    as (ticker, run_id=0, date, close, action=NULL) — one row per bar,
+    not one per bar and grid point. The grid's signals are not built
+    here: ``run_kernel(feed, ..., runs=params)`` computes every
+    point's MA-cross edges over this series inside the kernel (see
+    ``operators/kernel.py:_run_grid``). The series is the same for
+    every grid; ``params`` (the (run_id, fast, lagging) rows) only
+    names the grid it feeds."""
+    return bars.selectExpr(
+        "ticker", "CAST(0 AS BIGINT) AS run_id", "date", "close",
+        "CAST(NULL AS STRING) AS action",
     )
 
 

@@ -140,7 +140,7 @@ class Backtest:
 
         self.release()
         # feed is consumed twice (kernel input + portfolio join): persist
-        # so the bars scan + signal windows run once, same as the grid path
+        # so the bars scan + signal windows run once
         feed = self.strategy.signal_feed(bars).persist()
         kernel_out = run_kernel(
             feed,
@@ -148,10 +148,6 @@ class Backtest:
             strategy=self.strategy.kernel_driver,
             params=self.strategy.kernel_params(),
             parity=self.parity,
-            # single-run feed leaves signal_feed hash-partitioned by
-            # ticker (the window exchange); keying the kernel on ticker
-            # alone lets Spark elide its repartition — zero exchanges
-            partition_cols=("ticker",),
         ).cache()  # consumed twice (orders + events); sim runs once
         self._cached = [feed, kernel_out]
         orders, events = split_kernel_output(kernel_out)
@@ -230,7 +226,6 @@ class Backtest:
             strategy=self.strategy.kernel_driver,
             params=self.strategy.kernel_params(),
             parity=self.parity,
-            partition_cols=("ticker",),  # see run(): elided exchange
         )
         _, events = split_kernel_output(kernel_out)
         # VALUES LocalRelation, not createDataFrame: an RDD-backed

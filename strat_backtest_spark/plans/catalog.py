@@ -434,13 +434,12 @@ def q10_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q11_tail_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W9: positional tail-n per group."""
+    from strat_backtest_spark.functions.windows import tail_n
+
     ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("event_id", "user_id", "rn")
-    )
+    return tail_n(
+        ev, 3, ["user_id"], order_cols=["ts", "event_id"], rank_col="rn"
+    ).select("event_id", "user_id", "rn")
 
 
 @query(

@@ -40,8 +40,8 @@ def _ma_kernel_sim_sql(
     groups differ before rounding) at sf0.01.
 
     ``runs``: (run_id, fast, lagging) triples; window frames are baked
-    as literals per distinct MA length, mirroring
-    ma_cross_signals_grid's one-pass multi-window plan.
+    as literals, one per distinct MA length, shared by every run that
+    uses it.
     """
     lengths = sorted({f for _, f, _ in runs} | {l for _, _, l in runs})
     win_cols = ",\n             ".join(

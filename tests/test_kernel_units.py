@@ -118,3 +118,24 @@ def test_no_sell_without_position_q13():
     eng = TradingEngine(d, closes, 100.0)
     eng.sell(d[1], 11.0)  # silent no-op
     assert not eng.book.completed
+
+
+def test_sma_table_sums_each_frame_left_to_right():
+    """_sma_table must reproduce Spark's sliding-frame average bit for
+    bit: 0.0 plus the frame's values in row order, divided by n; NaN
+    before row n and for a window longer than the series."""
+    from strat_backtest_spark.operators.kernel import _sma_table
+
+    closes = np.random.default_rng(3).normal(0.0, 1.0, 40) * 1e3 + 0.1
+    got = _sma_table(closes, {1, 3, 7, 40, 41})
+    for n, sma in got.items():
+        want = []
+        for i in range(len(closes)):
+            if i < n - 1:
+                want.append(float("nan"))
+                continue
+            acc = 0.0
+            for x in closes[i - n + 1: i + 1]:
+                acc += x
+            want.append(acc / float(n))
+        np.testing.assert_array_equal(sma, np.array(want), err_msg=str(n))

@@ -1,9 +1,6 @@
 """Round-14 optimization equivalence tests: every plan-shape change
 must be value-invisible. Each test pins one rewrite against the shape
-it replaced (or a differently-keyed execution of the same operator)."""
-
-import pytest
-from pyspark.sql import functions as F
+it replaced."""
 
 from conftest import SF_SMALL
 
@@ -15,49 +12,8 @@ def _bars(spark, sf_dir):
     return bars_from_events(_t(spark, sf_dir, "events"))
 
 
-GRID = [(0, 3, 8), (1, 3, 13), (2, 5, 8), (3, 5, 13)]
-
-
 def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
-
-
-def test_feed_grid_equals_edge_join_construction(spark):
-    """ma_cross_feed_grid (direct full feed off the window pass) must
-    equal the former bars×runs ⟕ edge-rows construction row-for-row —
-    including NULL actions on non-edge bars."""
-    from strat_backtest_spark.operators.signals import (
-        ma_cross_feed_grid,
-        ma_cross_signals_grid,
-    )
-
-    bars = _bars(spark, SF_SMALL)
-    new = ma_cross_feed_grid(bars, GRID)
-
-    run_ids = spark.sql(
-        "SELECT * FROM VALUES (0L),(1L),(2L),(3L) AS t(run_id)"
-    )
-    base = bars.select("ticker", "date", "close").crossJoin(F.broadcast(run_ids))
-    old = base.join(
-        ma_cross_signals_grid(bars, GRID).select("ticker", "run_id", "date", "action"),
-        ["ticker", "run_id", "date"],
-        "left",
-    )
-    cols = ["ticker", "run_id", "date", "close", "action"]
-    assert _rows(new, cols) == _rows(old, cols)
-
-
-def test_kernel_partition_cols_value_invariant(spark):
-    """run_kernel keyed on ("ticker",) — the elidable key set — must
-    produce the same orders and events as the (ticker, run_id) default."""
-    from strat_backtest_spark.operators.kernel import run_kernel
-    from strat_backtest_spark.operators.signals import ma_cross_feed_grid
-
-    feed = ma_cross_feed_grid(_bars(spark, SF_SMALL), GRID)
-    a = run_kernel(feed, 10_000.0)
-    b = run_kernel(feed, 10_000.0, partition_cols=("ticker",))
-    cols = a.columns
-    assert _rows(a, cols) == _rows(b, cols)
 
 
 def test_final_net_worth_universe_from_last_bar(spark):

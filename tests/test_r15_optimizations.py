@@ -74,39 +74,6 @@ def test_attach_benchmark_positional_equals_full_outer_join(spark):
     assert any(r["close"] is None for r in new.collect())
 
 
-def test_sweep_partition_cols_decision(spark):
-    """Adaptive kernel keying: single-run sweeps and cluster-saturating
-    ticker counts keep the elidable ("ticker",) key; a few-ticker
-    multi-run sweep spreads on ("ticker", "run_id")."""
-    from strat_backtest_spark.operators.optimize import _sweep_partition_cols
-
-    par = spark.sparkContext.defaultParallelism
-    one_ticker = spark.range(10).select(
-        F.lit("x").alias("ticker"), F.col("id").alias("v")
-    )
-    many = spark.range(8 * par).select(
-        F.col("id").cast("string").alias("ticker"), F.col("id").alias("v")
-    )
-    assert _sweep_partition_cols(one_ticker, 1) == ("ticker",)
-    assert _sweep_partition_cols(one_ticker, 51) == ("ticker", "run_id")
-    assert _sweep_partition_cols(many, 51) == ("ticker",)
-
-
-def test_evaluate_params_partition_cols_value_invariant(spark):
-    """evaluate_params must score identically under both kernel keyings
-    (the adaptive decision may pick either at different scales)."""
-    from strat_backtest_spark.operators.optimize import evaluate_params
-    from strat_backtest_spark.plans.catalog import _t
-    from strat_backtest_spark.sources.bars import bars_from_events
-
-    bars = bars_from_events(_t(spark, SF_SMALL, "events"))
-    rows = [(0, 3, 8), (1, 3, 13), (2, 5, 8), (3, 5, 13)]
-    a = evaluate_params(bars, rows, 10_000.0, partition_cols=("ticker",))
-    b = evaluate_params(bars, rows, 10_000.0, partition_cols=("ticker", "run_id"))
-    cols = ["ticker", "run_id", "net_worth"]
-    assert _rows(a, cols) == _rows(b, cols)
-
-
 def _norm_analyzed(df) -> str:
     import re
 
@@ -439,63 +406,6 @@ def test_build_portfolio_text_equals_column_build(spark):
     assert _norm_optimized(new_f) == _norm_optimized(old_f)
 
 
-def test_feed_grid_text_equals_column_build(spark):
-    """ma_cross_feed_grid's selectExpr rewrite must optimize to the
-    identical plan as the Column-built original (frozen below)."""
-    from strat_backtest_spark.functions.windows import rolling_mean, ticker_window
-    from strat_backtest_spark.operators.signals import ma_cross_feed_grid
-
-    bars = _bars(spark, SF_SMALL)
-    rows = [(0, 3, 8), (1, 5, 13)]
-    new = ma_cross_feed_grid(bars, rows)
-
-    # frozen Column form
-    w = ticker_window()
-    lengths = sorted({f for _, f, _ in rows} | {l for _, _, l in rows})
-    df = bars.select(
-        "ticker", "date", "close",
-        *[rolling_mean("close", n, w).alias(f"__sma_{n}") for n in lengths],
-    )
-    crosses = [
-        F.coalesce(
-            F.col(f"__sma_{f}") > F.col(f"__sma_{l}"), F.lit(False)
-        ).alias(f"__cross_{rid}")
-        for rid, f, l in rows
-    ]
-    df = df.select("ticker", "date", "close", *crosses)
-    df = df.select(
-        "ticker", "date", "close",
-        *[F.col(f"__cross_{rid}") for rid, _, _ in rows],
-        *[F.lag(f"__cross_{rid}").over(w).alias(f"__prev_{rid}") for rid, _, _ in rows],
-    )
-    runs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(rid).cast("long").alias("run_id"),
-                    F.when(
-                        F.col(f"__prev_{rid}").isNull()
-                        | (F.col(f"__cross_{rid}") != F.col(f"__prev_{rid}")),
-                        F.when(F.col(f"__cross_{rid}"), F.lit("buy")).otherwise(
-                            F.lit("sell")
-                        ),
-                    ).alias("action"),
-                )
-                for rid, _, _ in rows
-            ]
-        )
-    )
-    old = df.select("ticker", "date", "close", runs.alias("r")).select(
-        "ticker",
-        F.col("r.run_id").alias("run_id"),
-        "date",
-        "close",
-        F.col("r.action").alias("action"),
-    )
-    assert new.columns == old.columns
-    assert _norm_optimized(new) == _norm_optimized(old)
-
-
 def test_params_local_relation_empty_grid(spark):
     """expand_grid over an empty range must return an empty typed
     relation, not raise a ParseException (VALUES with no rows)."""
@@ -504,26 +414,3 @@ def test_params_local_relation_empty_grid(spark):
     df = expand_grid(spark, (3, 3, 1), (8, 14, 5))
     assert df.columns == ["run_id", "fast", "lagging"]
     assert df.count() == 0
-
-
-def test_feed_grid_spread_equals_default(spark):
-    """The spread feed form (explode-before-lag, per-(ticker, run_id)
-    window — the few-ticker branch of the adaptive sweep) must emit
-    row-identical feeds to the default elided form: the SMAs come off
-    the same serial pass, cross is a row-wise compare, and lag over
-    (ticker, run_id) of the exploded rows is lag over (ticker) of that
-    run's column (dates unique per ticker)."""
-    from strat_backtest_spark.operators.signals import ma_cross_feed_grid
-
-    bars = _bars(spark, SF_SMALL)
-    rows = [(0, 3, 8), (1, 3, 13), (2, 5, 8), (3, 5, 13)]
-    cols = ["ticker", "run_id", "date", "close", "action"]
-    a = _rows(ma_cross_feed_grid(bars, rows, spread=False), cols)
-    b = _rows(ma_cross_feed_grid(bars, rows, spread=True), cols)
-    assert a == b and len(a) > 0
-
-    # single-ticker slice too (the workload the spread form exists for)
-    one = bars.filter(F.col("ticker") == bars.select("ticker").first()[0])
-    a1 = _rows(ma_cross_feed_grid(one, rows, spread=False), cols)
-    b1 = _rows(ma_cross_feed_grid(one, rows, spread=True), cols)
-    assert a1 == b1 and len(a1) > 0

@@ -114,3 +114,24 @@ def test_percent_return_matches_pandas(spark):
     # row 0: pandas NaN, ours null
     assert np.isnan(got[0]) or got[0] is None
     assert np.allclose(got[1:], exp[1:], rtol=1e-9)
+
+
+def test_tail_n_partitions_on_given_keys(spark):
+    """tail_n keeps the last n rows of every (ticker, run_id) group.
+    Keyed on ticker alone (the old fixed key) it kept two rows in total,
+    both from the run with the later dates."""
+    from datetime import date
+
+    from strat_backtest_spark.functions.windows import tail_n
+
+    rows = [("a", 0, date(2024, 1, d), float(d)) for d in range(1, 6)] + [
+        ("a", 1, date(2024, 1, d), float(d)) for d in range(1, 4)
+    ]
+    df = spark.createDataFrame(rows, "ticker string, run_id long, date date, close double")
+    got = sorted(tuple(r) for r in tail_n(df, 2, ["ticker", "run_id"]).collect())
+    assert got == [
+        ("a", 0, date(2024, 1, 4), 4.0), ("a", 0, date(2024, 1, 5), 5.0),
+        ("a", 1, date(2024, 1, 2), 2.0), ("a", 1, date(2024, 1, 3), 3.0),
+    ]
+    ranked = tail_n(df, 1, ["ticker"], order_cols=["date", "run_id"], rank_col="rn")
+    assert [tuple(r) for r in ranked.collect()] == [("a", 0, date(2024, 1, 5), 5.0, 1)]
