@@ -30,7 +30,7 @@ from typing import Callable, Iterable
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from strat_backtest_spark.schemas import KERNEL_OUT_SCHEMA
 
@@ -247,8 +247,11 @@ class TradingEngine:
 
 # ---------------------------------------------------------------------------
 # strategy decision drivers — the imperative residue of each Strategy
-# subclass; signal GENERATION stays vectorized in operators/signals.py,
-# except for grid sweeps (see _sma_table and run_kernel's ``runs``).
+# subclass. MA-cross signals are computed here, from one plain bar
+# series per ticker, for every Backtest and sweep (see _sma_table and
+# run_kernel's ``runs``); the action-column drivers below walk a feed
+# whose edges were marked by the Spark-side reference
+# (``MACrossStrategy.signal_feed``). The band driver decides on every bar.
 # ---------------------------------------------------------------------------
 
 def _ma_cross_walk(
@@ -261,9 +264,11 @@ def _ma_cross_walk(
     edges' row indices (ascending) and ``buys`` marks the up-crosses
     among them. One loop for every MA-cross caller: the action-column
     drivers below and ``run_kernel(runs=...)``, which finds the edges
-    itself. Drivers take plain numpy views (not per-group pandas
-    frames): a grid sweep runs thousands of simulations and per-group
-    pandas masking was a measurable slice of the sweep."""
+    itself. ``sell_shares`` is -1 (close the oldest order) or the fixed
+    share count of the partial-sell driver. Drivers take plain numpy
+    views (not per-group pandas frames): a grid sweep runs thousands of
+    simulations and per-group pandas masking was a measurable slice of
+    the sweep."""
     buy_pos = np.flatnonzero(buys)
     if buy_pos.size == 0:
         return
@@ -350,20 +355,38 @@ DRIVERS: dict[str, Callable[..., None]] = {
 # the Spark-facing operator
 # ---------------------------------------------------------------------------
 
+def _null_column(dtype, n: int) -> np.ndarray:
+    """``n`` nulls of a KERNEL_OUT_SCHEMA type as a typed array: Arrow
+    masks NaN and NaT to null without visiting Python objects. (Every
+    string column of a 'bar' row is filled.)"""
+    if isinstance(dtype, T.DateType):
+        return np.full(n, np.datetime64("NaT"), dtype="datetime64[ns]")
+    return np.full(n, np.nan)  # double, long and boolean slots
+
+
 class _KernelOutAcc:
-    """Column-list accumulator for kernel output rows.
+    """Accumulator for kernel output rows.
 
     A grid sweep makes (tickers × params) groups — tens of thousands of
     SMALL groups. Building two pandas frames + a concat per group (the
     naive applyInPandas shape) costs ~1 ms/group of pure pandas
-    overhead, which dominates the sweep. Appending Python scalars to
-    lists and constructing ONE frame per Arrow flush amortizes that
-    overhead across every group in the batch."""
+    overhead, which dominates the sweep. Order and event rows (a few
+    per group) are appended as Python scalars to column lists; curve
+    rows (one per bar) are kept as one block of typed numpy columns per
+    group. Each Arrow flush builds one frame of each kind, amortizing
+    the overhead across every group in the batch."""
 
-    _NAMES = [f.name for f in KERNEL_OUT_SCHEMA.fields]
+    _TYPES = {f.name: f.dataType for f in KERNEL_OUT_SCHEMA.fields}
+    _NAMES = list(_TYPES)
+    # the columns a 'bar' row fills; every other column is null
+    _BAR_NAMES = (
+        "date", "buy_shares", "sell_shares", "shares_owned", "net_worth",
+        "event_close", "action",
+    )
 
     def __init__(self) -> None:
         self.cols: dict[str, list] = {n: [] for n in self._NAMES}
+        self.bars: list[tuple] = []
         self.n = 0
 
     def add_order(self, ticker, run_id, o: "_KOrder") -> None:
@@ -406,25 +429,53 @@ class _KernelOutAcc:
         c["event_close"].append(close)
         self.n += 1
 
-    def flush(self) -> pd.DataFrame:
-        # object columns of python scalars/None: Arrow casts directly
-        # against KERNEL_OUT_SCHEMA; no NaN-in-date normalization needed
-        out = pd.DataFrame(
-            {n: pd.Series(self.cols[n], dtype=object) for n in self._NAMES}
+    def add_curve(self, ticker, run_id, *columns: np.ndarray) -> None:
+        """One group's bar rows: ``columns`` are its per-bar arrays in
+        ``_BAR_NAMES`` order."""
+        self.bars.append((ticker, run_id, columns))
+        self.n += len(columns[0])
+
+    def _bar_frame(self) -> pd.DataFrame:
+        lens = [len(cols[0]) for _, _, cols in self.bars]
+        n = sum(lens)
+        out = {
+            name: _null_column(dtype, n) for name, dtype in self._TYPES.items()
+        }
+        out["ticker"] = np.repeat(
+            np.array([t for t, _, _ in self.bars], dtype=object), lens
         )
+        out["run_id"] = np.repeat(
+            np.array([r for _, r, _ in self.bars], dtype=np.int64), lens
+        )
+        out["row_type"] = np.full(n, "bar", dtype=object)
+        for j, name in enumerate(self._BAR_NAMES):
+            out[name] = np.concatenate([cols[j] for _, _, cols in self.bars])
+        return pd.DataFrame(out, columns=self._NAMES)
+
+    def flush(self) -> Iterable[pd.DataFrame]:
+        # order/event rows: object columns of python scalars/None, which
+        # Arrow casts directly against KERNEL_OUT_SCHEMA (no NaN-in-date
+        # normalization needed); bar rows: typed columns
+        if self.cols["ticker"]:
+            yield pd.DataFrame(
+                {n: pd.Series(self.cols[n], dtype=object) for n in self._NAMES}
+            )
+        if self.bars:
+            yield self._bar_frame()
         self.__init__()
-        return out
 
 
 def _run_one_group(
     acc: _KernelOutAcc, ticker, run_id,
     dates: np.ndarray, closes: np.ndarray,
-    initial_amount: float, parity: bool, drive, *args,
+    initial_amount: float, parity: bool, actions, drive, *args,
 ) -> None:
     """Simulate one (ticker, run_id) group into the accumulator:
     ``drive(engine, dates, closes, *args)`` makes the decisions.
     Inputs are numpy views over the batch arrays, already date-sorted
-    (the feed sort guarantees it) — no per-group pandas objects."""
+    (the feed sort guarantees it) — no per-group pandas objects.
+    ``actions``: the group's per-bar signal column, to emit its curve
+    rows with; None emits no curve."""
     eng = TradingEngine(dates, closes, initial_amount, parity=parity)
     drive(eng, dates, closes, *args)
     for o in eng.book.completed:
@@ -432,17 +483,56 @@ def _run_one_group(
     for o in eng.book.open_orders:
         acc.add_order(ticker, run_id, o)
     buy_orders, sell_orders, owned = eng.buy_orders, eng.sell_orders, eng.book.shares_owned
+    events = []
     for d in sorted(set(buy_orders) | set(sell_orders) | set(owned)):
         # buy_orders holds order objects: read num_shares NOW so the
         # reference's post-hoc mutation (Q4) is reflected, matching
         # `buy * close` evaluated after the sim (strats.py:570).
         b = buy_orders.get(d)
-        acc.add_event(
-            ticker, run_id, d,
+        i = np.searchsorted(dates, d)
+        ev = (
             b.num_shares if b is not None else None,
             sell_orders.get(d), owned.get(d),
-            float(closes[np.searchsorted(dates, d)]),
         )
+        acc.add_event(ticker, run_id, d, *ev, float(closes[i]))
+        if actions is not None:
+            events.append((i, *ev))
+    if actions is not None:
+        acc.add_curve(
+            ticker, run_id, dates,
+            *_portfolio_curve(closes, events, initial_amount), closes, actions,
+        )
+
+
+def _portfolio_curve(closes: np.ndarray, events, initial_amount: float):
+    """(buy, sell, shares_owned, net_worth) per bar from one group's
+    trade ``events`` — (bar index, buy, sell, shares owned) with None
+    for a missing value — in ``portfolio.build_portfolio``'s exact IEEE
+    order: buy and sell 0-filled; shares_owned forward-filled, then
+    0-filled; the running sums of buy·close and sell·close start at
+    0.0 and add left to right, as Spark's growing-frame SUM does
+    (np.cumsum is sequential, never pairwise); then
+    ((shares·close − Σbuy·close) + Σsell·close) + initial_amount."""
+    m = len(closes)
+    buy, sell = np.zeros(m), np.zeros(m)
+    last = np.full(m, -1)  # index of the bar's last shares_owned value
+    owned: list = []
+    for i, b, s, o in events:
+        if b is not None:
+            buy[i] = b
+        if s is not None:
+            sell[i] = s
+        if o is not None:
+            last[i] = len(owned)
+            owned.append(o)
+    np.maximum.accumulate(last, out=last)
+    # index -1 (no value yet) reads the trailing 0.0
+    shares = np.append(np.asarray(owned, dtype=float), 0.0)[last]
+    zero = np.zeros(1)
+    cum_buy = np.cumsum(np.concatenate((zero, buy * closes)))[1:]
+    cum_sell = np.cumsum(np.concatenate((zero, sell * closes)))[1:]
+    net = ((shares * closes - cum_buy) + cum_sell) + float(initial_amount)
+    return buy, sell, shares, net
 
 
 def _sma_table(closes: np.ndarray, lengths) -> dict[int, np.ndarray]:
@@ -470,29 +560,38 @@ def _sma_table(closes: np.ndarray, lengths) -> dict[int, np.ndarray]:
     return out
 
 
+_EDGE_ACTIONS = np.array(["sell", "buy"], dtype=object)
+
+
 def _run_grid(
     acc: _KernelOutAcc, ticker, dates: np.ndarray, closes: np.ndarray,
-    runs, initial_amount: float, stop_loss_pct, parity: bool,
+    runs, initial_amount: float, stop_loss_pct, sell_shares, parity: bool,
+    curve: bool,
 ) -> None:
     """Every MA-cross run of ``runs`` over one ticker's bars. The
     signal semantics are ``MACrossStrategy.signal_feed``'s: ``cross``
     is sma_fast > sma_lagging with a null (NaN) SMA counting as false,
-    and the edges are the first row plus every row where ``cross``
-    changes."""
+    the edges are the first row plus every row where ``cross`` changes,
+    and an edge's action is 'buy' where ``cross`` holds, else 'sell'."""
     if not np.isfinite(closes).all():
         # Spark orders NaN above every number and skips null closes in
         # its window averages; this path does neither, so refuse
-        # rather than return a number the Backtest path would not
-        raise ValueError(f"ticker {ticker!r}: null or non-finite close in a sweep")
+        # rather than return a number the Spark windows would not
+        raise ValueError(f"ticker {ticker!r}: null or non-finite close")
     smas = _sma_table(closes, {n for _, f, l in runs for n in (f, l)})
     edge = np.ones(len(closes), dtype=bool)
     for run_id, fast, lagging in runs:
         cross = smas[fast] > smas[lagging]
         np.not_equal(cross[1:], cross[:-1], out=edge[1:])
         idxs = np.flatnonzero(edge)
+        buys = cross[idxs]
+        actions = None
+        if curve:
+            actions = np.full(len(closes), None, dtype=object)
+            actions[idxs] = _EDGE_ACTIONS[buys.astype(np.intp)]
         _run_one_group(
             acc, ticker, run_id, dates, closes, initial_amount, parity,
-            _ma_cross_walk, idxs, cross[idxs], stop_loss_pct,
+            actions, _ma_cross_walk, idxs, buys, stop_loss_pct, sell_shares,
         )
 
 
@@ -503,6 +602,7 @@ def run_kernel(
     params: dict | None = None,
     parity: bool = True,
     runs: list[tuple[int, int, int]] | None = None,
+    curve: bool = False,
 ) -> DataFrame:
     """Run the order-matching simulation per (ticker, run_id) group.
 
@@ -511,25 +611,33 @@ def run_kernel(
     and path-dependent drivers need the full series; Catalyst prunes
     the unused columns from the scan).
 
-    ``runs``: a parameter sweep's (run_id, fast, lagging) grid. The
-    kernel then computes the MA-cross signals itself: ``feed`` carries
-    one plain bar series per ticker (``action`` and ``run_id`` are
-    ignored; see ``signals.ma_cross_feed_grid``), every run is
-    simulated over it, and the output rows carry the runs' ids. Each
-    distinct moving-average length is computed once per ticker and
-    shared by every run that uses it (``_sma_table``; bit-identical to
-    the Spark window ``MACrossStrategy.signal_feed`` uses). Compared
-    with a Spark-built grid feed, each bar crosses into Python once
-    instead of once per run, and no window re-aggregates its frame for
-    every row. Only ``strategy="ma_cross"``; ``params`` may set
-    ``stop_loss_pct``. Closes must be finite (``ValueError``
-    otherwise).
+    ``runs``: the (run_id, fast, lagging) points to simulate — a
+    ``Backtest``'s single point or a sweep's grid. The kernel then
+    computes the MA-cross signals itself: ``feed`` carries one plain
+    bar series per ticker (``action`` and ``run_id`` are ignored; see
+    ``signals.ma_cross_feed_grid``), every run is simulated over it,
+    and the output rows carry the runs' ids. Each distinct
+    moving-average length is computed once per ticker and shared by
+    every run that uses it (``_sma_table``; bit-identical to the Spark
+    window ``MACrossStrategy.signal_feed`` uses). Compared with a
+    Spark-built feed, each bar crosses into Python once instead of once
+    per run, and no window re-aggregates its frame for every row. Only
+    ``strategy="ma_cross"`` (``params`` may set ``stop_loss_pct``) and
+    ``"ma_cross_partial"`` (``sell_shares``). Closes must be finite
+    (``ValueError`` naming the ticker otherwise).
+
+    ``curve``: also emit one ``row_type='bar'`` row per input bar and
+    run — the daily net-worth curve ``portfolio.build_portfolio`` would
+    build from the feed and the trade events, bit for bit, with the
+    bar's signal ``action`` (read it with :func:`portfolio_curve`).
+    ``Backtest.run`` needs it; the sweep and ``final_net_worth`` only
+    need the events, and skip the |bars| × |runs| rows.
 
     Plan shape: repartition on ticker + sortWithinPartitions +
     ``mapInPandas`` with a batch-spanning group walker — NOT
     ``groupBy().applyInPandas``. Both shuffle once; the difference is
     Python-side: mapInPandas lets one Python call process every group
-    in an Arrow batch (list-append output, one frame per flush), where
+    in an Arrow batch (see ``_KernelOutAcc``), where
     applyInPandas pays per-group pandas frame construction for every
     (ticker, run_id) group. The walker splits partitions on key
     changes, so groups sharing a partition cost nothing. Keying on
@@ -538,12 +646,17 @@ def run_kernel(
     kernel then adds no exchange.
 
     Returns the tagged kernel output (KERNEL_OUT_SCHEMA); split with
-    :func:`split_kernel_output`.
+    :func:`split_kernel_output` and :func:`portfolio_curve`.
     """
     driver = DRIVERS[strategy]
     params = params or {}
     if runs is not None:
-        if strategy != "ma_cross":
+        # the walk options ma_cross_driver / ma_cross_partial_driver read
+        if strategy == "ma_cross":
+            walk_opts = (params.get("stop_loss_pct"), -1)
+        elif strategy == "ma_cross_partial":
+            walk_opts = (None, params.get("sell_shares", 1.0))
+        else:
             raise ValueError(f"runs= computes MA-cross signals, not {strategy!r}")
         runs = [(int(i), int(f), int(l)) for i, f, l in runs]
         if any(min(f, l) < 1 for _, f, l in runs):
@@ -570,10 +683,10 @@ def run_kernel(
                 a = np.concatenate([x[2] for x in segs])
             if runs is None:
                 _run_one_group(acc, key[0], key[1], d, c, initial_amount,
-                               parity, driver, a, params)
+                               parity, a if curve else None, driver, a, params)
             else:
                 _run_grid(acc, key[0], d, c, runs, initial_amount,
-                          params.get("stop_loss_pct"), parity)
+                          *walk_opts, parity, curve)
 
         for pdf in batches:
             if len(pdf) == 0:
@@ -600,11 +713,10 @@ def run_kernel(
                     carry.append(seg)
                     carry_key = key
             if acc.n >= 20_000:
-                yield acc.flush()
+                yield from acc.flush()
         if carry_key is not None:
             run(carry_key, carry)
-        if acc.n:
-            yield acc.flush()
+        yield from acc.flush()
 
     return srt.mapInPandas(walk, KERNEL_OUT_SCHEMA)
 
@@ -630,3 +742,12 @@ def split_kernel_output(kernel_out: DataFrame) -> tuple[DataFrame, DataFrame]:
         "event_close",
     )
     return orders, events
+
+
+def portfolio_curve(kernel_out: DataFrame) -> DataFrame:
+    """The daily net-worth curve of a ``run_kernel(..., curve=True)``
+    output, with ``portfolio.build_portfolio``'s columns in its order."""
+    return kernel_out.filter(F.col("row_type") == "bar").selectExpr(
+        "ticker", "run_id", "date", "event_close AS close", "action",
+        "buy_shares AS buy", "sell_shares AS sell", "shares_owned", "net_worth",
+    )

@@ -1,9 +1,14 @@
 """Portfolio / net-worth algebra and benchmark attachment
 (SURVEY.md §2.9 K10, §2.3 J3/J5, §2.5 W4/W7).
 
-The reference computes this layer vectorized in pandas
-(strats.py:557-579); here it is pure window algebra over
-(ticker, run_id) partitions — whole-stage-codegen'd, no Python.
+The reference computes the daily net-worth curve vectorized in pandas
+(strats.py:557-579). ``Backtest.run`` takes it from the kernel
+(``run_kernel(curve=True)``), which has the bars and the trade events
+in hand; ``build_portfolio`` is the Spark-side reference form of the
+same curve — feed ⟕ events plus window algebra over (ticker, run_id)
+partitions — that the tests hold the kernel to bit for bit.
+``final_net_worth_from_events`` and ``attach_benchmark`` serve the
+backtest and the sweep directly.
 """
 
 from __future__ import annotations
@@ -123,13 +128,13 @@ def attach_benchmark(
     mode='date' is the fix: a plain date equi-join (benchmark
     broadcast — it is one row per trading day).
 
-    ``row_stats`` lets a caller that KNOWS a row-count-preserving
-    proxy for the portfolio (e.g. ``Backtest.run``'s cached feed: the
+    ``row_stats`` lets a caller that KNOWS a cheaper row-count-preserving
+    proxy for the portfolio (e.g. the feed of ``build_portfolio``: the
     portfolio is feed ⟕ one-event-per-bar-date, so per-group max(date)
     and count are identical) supply the per-(ticker, run_id)
     ``(__last_date, __n)`` aggregate directly — the optimizer cannot
-    prove that equivalence, so computing stats from the portfolio here
-    re-ran its join lineage a second time.
+    prove that equivalence, so computing stats from a joined portfolio
+    here re-runs its join lineage a second time.
 
     Preconditions (inherent to Q6's by-date alignment): ``portfolio``
     has at most one row per (ticker, run_id, date) — a net-worth curve

@@ -7,11 +7,14 @@ indexing (custom_strats.py:45-48):
     buy  = cross.iloc[np.where(cross & (cross != cross.shift(1)))]
     sell = cross.iloc[np.where(~cross & (cross != cross.shift(1)))]
 
-Here the same semantics are a lag + filter over a per-ticker window —
-fully declarative, whole-stage-codegen'd, and partitionable across any
-number of (ticker, run_id) groups. Grid sweeps are the exception: the
-kernel computes every grid point's edges from one bar series per
-ticker (see ``ma_cross_feed_grid``).
+Here the same semantics are a lag + filter over a per-ticker window.
+``Backtest`` and the sweeps do not run these windows: the kernel
+computes every MA-cross point's edges, bit for bit the same, from one
+plain bar series per ticker (``ma_cross_feed_grid``;
+``operators/kernel.py:_run_grid``). ``ma_cross_signals`` and
+``MACrossStrategy.signal_feed`` are the Spark-side reference forms the
+tests hold the kernel to; ``band_signals`` is the band strategy's
+all-bars feed.
 
 pandas parity notes:
 - NaN > NaN is False in pandas, so `cross` is False during the MA
@@ -66,7 +69,8 @@ def ma_cross_signals(
 
 
 def ma_cross_feed_grid(bars: DataFrame, params) -> DataFrame:
-    """Kernel feed for a parameter grid: each ticker's bar series once,
+    """Kernel feed for MA-cross runs (a ``Backtest``'s one point or a
+    sweep's grid): each ticker's bar series once,
     as (ticker, run_id=0, date, close, action=NULL) — one row per bar,
     not one per bar and grid point. The grid's signals are not built
     here: ``run_kernel(feed, ..., runs=params)`` computes every

@@ -7,13 +7,17 @@ runs the whole simulation inside Strategy.__init__,
 strats.py:551-554). ``Backtest.run()`` assembles one lazy DataFrame
 graph:
 
-    bars → signals (window exprs) → feed
-         → kernel (mapInPandas group walker per ticker×run) → orders + events
-         → portfolio (window algebra) → benchmark join
+    bars (one row per bar) → kernel (mapInPandas group walker per
+         ticker: MA-cross signals, simulation, net-worth curve) → cache
+       ├─ order rows → orders
+       └─ bar rows   → portfolio → benchmark attach → metrics
 
-and Catalyst optimizes the whole thing; nothing executes until an
-action. Multi-ticker and multi-parameter runs reuse the same graph
-shape with more partitions — the cluster absorbs the scale.
+and nothing executes until an action. The band strategy feeds the
+kernel its all-bars ``signal_feed`` instead of the plain series.
+``MACrossStrategy.signal_feed`` (Spark windows) and
+``portfolio.build_portfolio`` (feed ⟕ events window algebra) compute
+the same signals and curve on the Spark side; the tests hold the kernel
+to them bit for bit.
 """
 
 from __future__ import annotations
@@ -23,10 +27,18 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from strat_backtest_spark.operators.kernel import run_kernel, split_kernel_output
+from strat_backtest_spark.operators.kernel import (
+    portfolio_curve,
+    run_kernel,
+    split_kernel_output,
+)
 from strat_backtest_spark.operators.metrics import compute_metrics
-from strat_backtest_spark.operators.portfolio import attach_benchmark, build_portfolio
-from strat_backtest_spark.operators.signals import band_signals
+from strat_backtest_spark.operators.portfolio import attach_benchmark
+# build_portfolio is not called here (the kernel emits the curve), but
+# perfbench/layers.py wraps every backtest layer under its name in this
+# module
+from strat_backtest_spark.operators.portfolio import build_portfolio  # noqa: F401
+from strat_backtest_spark.operators.signals import band_signals, ma_cross_feed_grid
 
 
 @dataclass
@@ -53,6 +65,8 @@ class MACrossStrategy:
             self.kernel_driver = "ma_cross_partial"
 
     def signal_feed(self, bars: DataFrame, run_id: int = 0) -> DataFrame:
+        # The Spark-side reference for the signals run_kernel(runs=...)
+        # computes (Backtest feeds the kernel the plain bar series).
         # Action computed INLINE over the same window pass instead of
         # joining ma_cross_signals' edge rows back onto the bars: the
         # join recomputed the bars lineage on both sides (two source
@@ -95,6 +109,11 @@ class MACrossStrategy:
             p["sell_shares"] = self.sell_shares
         return p
 
+    def kernel_runs(self) -> list:
+        """The kernel computes the signals of this one (run_id, fast,
+        lagging) point itself."""
+        return [(0, self.fast, self.lagging)]
+
 
 @dataclass
 class BandStrategy:
@@ -114,13 +133,23 @@ class BandStrategy:
     def kernel_params(self) -> dict:
         return {"sell": self.sell, "buy": self.buy}
 
+    def kernel_runs(self) -> None:
+        """The kernel reads every bar from ``signal_feed``."""
+        return None
+
 
 @dataclass
 class Backtest:
     """Reference: Backtest(initial_amount, ticker, strat, ...),
     strats.py:489-549. Ticker selection is a filter (partition-prunable
     on ticker-partitioned parquet); omit to backtest every ticker in
-    one job."""
+    one job.
+
+    An MA-cross backtest refuses a null or non-finite close: the job
+    that reads ``run()``, ``metrics()``, ``orders`` or
+    ``final_net_worth()`` fails with the kernel's ``ValueError`` naming
+    the ticker (raised in the Python worker, so Spark reports it
+    wrapped in a ``PythonException``)."""
 
     bars: DataFrame
     initial_amount: float
@@ -133,45 +162,45 @@ class Backtest:
     _portfolio: Optional[DataFrame] = None
     _cached: list = field(default_factory=list)
 
-    def run(self) -> DataFrame:
-        bars = self.bars
-        if self.ticker is not None:
-            bars = bars.filter(F.col("ticker") == self.ticker.lower())
+    def _bars(self) -> DataFrame:
+        if self.ticker is None:
+            return self.bars
+        return self.bars.filter(F.col("ticker") == self.ticker.lower())
 
-        self.release()
-        # feed is consumed twice (kernel input + portfolio join): persist
-        # so the bars scan + signal windows run once
-        feed = self.strategy.signal_feed(bars).persist()
-        kernel_out = run_kernel(
+    def _kernel_out(self, bars: DataFrame, curve: bool) -> DataFrame:
+        runs = self.strategy.kernel_runs()
+        feed = (
+            self.strategy.signal_feed(bars)
+            if runs is None
+            else ma_cross_feed_grid(bars, runs)
+        )
+        return run_kernel(
             feed,
             self.initial_amount,
             strategy=self.strategy.kernel_driver,
             params=self.strategy.kernel_params(),
             parity=self.parity,
-        ).cache()  # consumed twice (orders + events); sim runs once
-        self._cached = [feed, kernel_out]
-        orders, events = split_kernel_output(kernel_out)
-        portfolio = build_portfolio(feed, events, self.initial_amount)
+            runs=runs,
+            curve=curve,
+        )
+
+    def run(self) -> DataFrame:
+        self.release()
+        # consumed by the orders, the curve and the benchmark attach's
+        # row stats: cache so the simulation runs once
+        kernel_out = self._kernel_out(self._bars(), curve=True).cache()
+        self._cached = [kernel_out]
+        orders, _ = split_kernel_output(kernel_out)
+        portfolio = portfolio_curve(kernel_out)
         if self.benchmark is not None:
             mode = "positional" if self.parity else "date"
-            # build_portfolio is row-preserving over the feed (left join
-            # against at most one kernel event row per bar date), so the
-            # positional attach's per-group (max date, row count) can be
-            # aggregated from the CACHED feed instead of re-running the
-            # portfolio's join lineage — knowledge Catalyst cannot infer
-            row_stats = feed.groupBy("ticker", "run_id").agg(
-                F.max("date").alias("__last_date"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            portfolio = attach_benchmark(
-                portfolio, self.benchmark, mode=mode, row_stats=row_stats
-            )
+            portfolio = attach_benchmark(portfolio, self.benchmark, mode=mode)
         self._orders = orders
         self._portfolio = portfolio
         return portfolio
 
     def release(self) -> None:
-        """Unpersist the feed/kernel caches from the last ``run``.
+        """Unpersist the kernel cache from the last ``run``.
 
         A long-lived session running many backtests would otherwise
         accumulate cached partitions until eviction churn. Lazy results
@@ -216,18 +245,8 @@ class Backtest:
             final_net_worth_from_events,
         )
 
-        bars = self.bars
-        if self.ticker is not None:
-            bars = bars.filter(F.col("ticker") == self.ticker.lower())
-        feed = self.strategy.signal_feed(bars)
-        kernel_out = run_kernel(
-            feed,
-            self.initial_amount,
-            strategy=self.strategy.kernel_driver,
-            params=self.strategy.kernel_params(),
-            parity=self.parity,
-        )
-        _, events = split_kernel_output(kernel_out)
+        bars = self._bars()
+        _, events = split_kernel_output(self._kernel_out(bars, curve=False))
         # VALUES LocalRelation, not createDataFrame: an RDD-backed
         # one-row table costs a full (defaultParallelism-task) Python
         # job per consumer; plan-literal rows broadcast with zero jobs

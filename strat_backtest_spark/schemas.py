@@ -74,13 +74,16 @@ EVENTS_SCHEMA = T.StructType(
     ]
 )
 
-# Kernel output rows are tagged so one kernel pass can emit both
-# the order ledger and the trade events (split downstream by row_type).
+# Kernel output rows are tagged so one kernel pass can emit the order
+# ledger, the trade events and, with ``run_kernel(curve=True)``, the
+# per-bar net-worth curve (split downstream by row_type). A 'bar' row
+# reuses the event columns for build_portfolio's 0-filled buy/sell,
+# forward-filled shares_owned and the bar's close (event_close).
 KERNEL_OUT_SCHEMA = T.StructType(
     [
         T.StructField("ticker", T.StringType(), False),
         T.StructField("run_id", T.LongType(), False),
-        T.StructField("row_type", T.StringType(), False),  # 'order' | 'event'
+        T.StructField("row_type", T.StringType(), False),  # 'order' | 'event' | 'bar'
         # order fields
         T.StructField("order_id", T.LongType(), True),
         T.StructField("num_shares", T.DoubleType(), True),
@@ -100,6 +103,9 @@ KERNEL_OUT_SCHEMA = T.StructType(
         # FINAL net worth (grid/SA objectives) aggregate events
         # directly instead of joining back onto the |bars|x|runs| feed
         T.StructField("event_close", T.DoubleType(), True),
+        # bar fields: the feed's signal action and the curve's value
+        T.StructField("action", T.StringType(), True),
+        T.StructField("net_worth", T.DoubleType(), True),
     ]
 )
 

@@ -1,7 +1,8 @@
-"""Optimizer objective parity: evaluate_params' telescoped final-net-
-worth aggregation must equal the full build_portfolio curve's last
-point for every (ticker, run) — and the reference's README grid must
-reproduce the golden best point."""
+"""Optimizer objective parity: evaluate_params, which computes its
+MA-cross signals inside the kernel, must score every (ticker, run)
+exactly as the Spark-window reference path — ``signal_feed`` →
+``run_kernel`` (action feed) → ``final_net_worth_from_events`` — and
+the reference's README grid must reproduce the golden best point."""
 
 from datetime import date, timedelta
 
@@ -11,9 +12,28 @@ import pytest
 from conftest import SF_SMALL
 
 
+def _spark_window_finals(bars, fast, lagging):
+    """ticker -> final net worth of one MA-cross point, with its
+    signals built by Spark windows (``MACrossStrategy.signal_feed``),
+    not by the kernel."""
+    from strat_backtest_spark.operators.kernel import run_kernel, split_kernel_output
+    from strat_backtest_spark.operators.portfolio import final_net_worth_from_events
+    from strat_backtest_spark.plans.backtest import MACrossStrategy
+
+    strategy = MACrossStrategy(fast, lagging)
+    kernel_out = run_kernel(
+        strategy.signal_feed(bars), 10_000.0, params=strategy.kernel_params()
+    )
+    _, events = split_kernel_output(kernel_out)
+    run_ids = bars.sparkSession.sql("SELECT CAST(0 AS BIGINT) AS run_id")
+    return {
+        r["ticker"]: r["net_worth"]
+        for r in final_net_worth_from_events(bars, events, run_ids, 10_000.0).collect()
+    }
+
+
 def test_evaluate_params_matches_portfolio_finals(spark):
     from strat_backtest_spark.operators.optimize import evaluate_params, expand_grid
-    from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
     from strat_backtest_spark.plans.catalog import _t
     from strat_backtest_spark.sources.bars import bars_from_events
 
@@ -24,15 +44,10 @@ def test_evaluate_params_matches_portfolio_finals(spark):
         for r in evaluate_params(bars, params, 10_000.0).collect()
     }
     for p in params.collect():
-        bt = Backtest(
-            bars, 10_000.0, MACrossStrategy(p["fast"], p["lagging"])
-        )
-        for r in bt.final_net_worth().collect():
-            want = r["net_worth"]
-            assert got[(r["ticker"], p["run_id"])] == pytest.approx(
+        for ticker, want in _spark_window_finals(bars, p["fast"], p["lagging"]).items():
+            assert got[(ticker, p["run_id"])] == pytest.approx(
                 want, rel=1e-12
-            ), (r["ticker"], p["run_id"])
-        bt.release()
+            ), (ticker, p["run_id"])
 
 
 def _edge_shape_bars(spark):
@@ -60,18 +75,12 @@ def _edge_shape_bars(spark):
     return spark.createDataFrame(rows, "ticker string, date date, close double")
 
 
-def _backtest_finals(bars, fast, lagging):
-    from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
-
-    bt = Backtest(bars, 10_000.0, MACrossStrategy(fast, lagging))
-    return {r["ticker"]: r["net_worth"] for r in bt.final_net_worth().collect()}
-
-
 def test_evaluate_params_equals_backtest_exactly(spark):
     """The sweep computes its MA-cross signals inside the kernel; every
-    objective value must be the same double as a single-point Backtest,
-    which builds its signals with Spark windows. Covers fast < lagging,
-    fast == lagging, fast > lagging and a length-1 window."""
+    objective value must be the same double as the single-point
+    reference path, which builds its signals with Spark windows. Covers
+    fast < lagging, fast == lagging, fast > lagging and a length-1
+    window."""
     from strat_backtest_spark.operators.optimize import evaluate_params
 
     bars = _edge_shape_bars(spark)
@@ -82,7 +91,7 @@ def test_evaluate_params_equals_backtest_exactly(spark):
     }
     assert len(got) == 6 * len(rows)
     for run_id, f, l in rows:
-        for ticker, want in _backtest_finals(bars, f, l).items():
+        for ticker, want in _spark_window_finals(bars, f, l).items():
             assert got[(ticker, run_id)] == (f, l, want), (ticker, f, l)
     # the walks trade; the edge shapes end at the initial amount
     assert got[("walk0", 0)][2] != 10_000.0
@@ -94,7 +103,7 @@ def test_evaluate_params_one_point_and_empty_grid(spark):
 
     bars = _edge_shape_bars(spark)
     one = evaluate_params(bars, [(7, 4, 12)], 10_000.0).collect()
-    want = _backtest_finals(bars, 4, 12)
+    want = _spark_window_finals(bars, 4, 12)
     assert {r["ticker"]: (r["run_id"], r["net_worth"]) for r in one} == {
         t: (7, v) for t, v in want.items()
     }

@@ -63,9 +63,9 @@ def test_signal_feed_is_join_free(spark):
     from strat_backtest_spark.plans.catalog import _t
     from strat_backtest_spark.sources.bars import bars_from_events
 
-    # cached relations from earlier tests (Backtest.run persists its
-    # feed) splice InMemoryRelation plans - with their own scan
-    # mentions - into this plan string; assert on a cold plan
+    # cached relations from earlier tests (Backtest.run caches its
+    # kernel output) splice InMemoryRelation plans - with their own
+    # scan mentions - into this plan string; assert on a cold plan
     spark.catalog.clearCache()
     bars = bars_from_events(_t(spark, SF_MED, "events"))
     feed = MACrossStrategy(fast=3, lagging=8).signal_feed(bars)
@@ -196,21 +196,29 @@ def test_q42_metrics_plan_shape(spark):
     scale properties, ratcheted so a refactor cannot silently regress:
     every wide exchange partitions on ticker (or a per-ticker grouping
     key) — no Exchange SinglePartition funnel — and the exchange/scan
-    counts stay at or below the audited round-7 plan (15 exchanges
-    incl. reuses, 8 scan mentions: one window-prep pass feeding 4
-    frame specs over ONE (ticker, run) partitioning + the kernel feed
-    + broadcast benchmark attach)."""
+    counts stay at or below the audited plan (9 exchanges incl. reuses,
+    6 scan mentions: the kernel, which emits the net-worth curve
+    itself, + one window-prep pass feeding 4 frame specs over ONE
+    (ticker, run) partitioning + broadcast benchmark attach). The
+    backtest itself joins nothing: no feed ⟕ events portfolio join."""
     import re
 
-    from strat_backtest_spark.plans.catalog import CATALOG
+    from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
+    from strat_backtest_spark.plans.catalog import CATALOG, _t
+    from strat_backtest_spark.sources.bars import bars_from_events
 
     spark.catalog.clearCache()
     p = _formatted(CATALOG["q42_backtest_metrics"].fn(spark, SF_MED))
     assert "Exchange SinglePartition" not in p, "global funnel leaked into q42"
     keys = set(re.findall(r"hashpartitioning\((\w+)", p))
     assert keys <= {"ticker", "_groupingexpression"}, f"unexpected shuffle keys: {keys}"
-    assert len(_distinct_exchanges(p)) <= 15, "q42 gained exchanges"
-    assert p.count("Scan parquet") <= 8, "q42 gained source scans"
+    assert len(_distinct_exchanges(p)) <= 9, "q42 gained exchanges"
+    assert p.count("Scan parquet") <= 6, "q42 gained source scans"
+
+    spark.catalog.clearCache()
+    bars = bars_from_events(_t(spark, SF_MED, "events"))
+    with Backtest(bars, 10_000.0, MACrossStrategy(fast=3, lagging=8)) as bt:
+        assert "Join" not in _formatted(bt.run()), "portfolio joins feed and events"
 
 
 def test_q72_stoploss_plan_shape(spark):
