@@ -21,15 +21,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
 
     tables = load_testdata(spark, "/root/testdata/sf0.001", "events")
-    from pyspark.sql import functions as F
-
-    ev = tables["events"]
-    ts_type = dict(ev.dtypes).get("ts")
-    if ts_type == "bigint":  # TIMESTAMP(NANOS) drop read via nanosAsLong
-        ev = ev.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
-    elif ts_type == "timestamp_ntz":  # MICROS drop; session is UTC
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    bars = bars_from_events(ev)
+    bars = bars_from_events(tables["events"])
     bt = Backtest(bars, initial_amount=10_000.0, strategy=MACrossStrategy(fast=3, lagging=8))
     return bt.final_net_worth()
 

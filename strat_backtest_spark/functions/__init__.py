@@ -1,6 +1,4 @@
 from strat_backtest_spark.functions.windows import (  # noqa: F401
-    ticker_window,
-    rolling_mean,
     lag,
     pct_change,
     cum_sum,

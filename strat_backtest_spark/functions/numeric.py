@@ -23,39 +23,30 @@ from __future__ import annotations
 import numpy as np
 
 
-def round_half_up_col(c, decimals: int):
-    """pyspark Column version of :func:`round_half_up` — binary-value
-    HALF_UP as pure IEEE ops (signum/abs/floor/mul/div), so the SAME
-    expression evaluated by DuckDB (:func:`round_half_up_sql`) on a
-    bit-identical input produces a bit-identical output. Needed where
-    magnitudes get large enough (≥ ~1e10) that one double ULP is
-    comparable to the rounding unit and Spark ``F.round``'s
-    shortest-decimal BigDecimal path visibly disagrees with DuckDB
-    ``round()`` — e.g. the compounding band-strategy net-worth curve.
+def round_half_up_spark_expr(col_sql: str, decimals: int) -> str:
+    """Spark-SQL text of binary-value HALF_UP as pure IEEE ops
+    (signum/abs/floor/mul/div), so the SAME expression evaluated by
+    DuckDB (:func:`round_half_up_sql`) on a bit-identical input
+    produces a bit-identical output. Needed where magnitudes get large
+    enough (>= ~1e10) that one double ULP is comparable to the rounding
+    unit and Spark ``F.round``'s shortest-decimal BigDecimal path
+    visibly disagrees with DuckDB ``round()`` — e.g. the compounding
+    band-strategy net-worth curve.
 
     Above 2^53 the scaled value has no fractional part, so DuckDB's
-    double-typed ``floor`` is the identity there; Spark's ``F.floor``
-    returns LONG (which would clamp at 2^63 for degenerate metrics
-    like a ^255-compounded sharpe), so the same branch is taken
-    explicitly and the op sequence stays engine-identical."""
-    from pyspark.sql import functions as F
+    double-typed ``floor`` is the identity there; Spark's ``FLOOR``
+    returns LONG (which would clamp at 2^63 for degenerate metrics like
+    a ^255-compounded sharpe), so the same branch is taken explicitly
+    and the op sequence stays engine-identical. All fractional literals
+    carry the ``D`` double suffix so ANSI mode cannot read them as
+    DECIMAL.
 
-    scale = float(10.0 ** decimals)
-    y = F.abs(c) * scale + F.lit(0.5)
-    fl = F.when(y < 2.0 ** 53, F.floor(y).cast("double")).otherwise(y)
-    return F.signum(c) * fl / scale
-
-
-def round_half_up_spark_expr(col_sql: str, decimals: int) -> str:
-    """Spark-SQL text twin of :func:`round_half_up_col` — parses to the
-    IDENTICAL expression tree (all fractional literals carry the ``D``
-    double suffix so ANSI mode cannot read them as DECIMAL, and the
-    2^53 CASE branch is spelled out exactly as the Column builder emits
-    it). Exists because building the Column form costs ~40 py4j
-    round-trips per output column; a 20-column projection through
-    ``selectExpr`` is ONE round-trip plus a JVM-side parse. Tree
-    equality with the Column form is pinned by
-    tests/test_r15_optimizations.py."""
+    ``col_sql`` is any Spark-SQL expression text; in a Column context
+    wrap the result in ``F.expr``. Text rather than stacked Columns: a
+    20-column ``selectExpr`` projection is one py4j round-trip plus a
+    JVM-side parse instead of ~40 round-trips per column. Bit parity
+    with DuckDB across the magnitude range is pinned by
+    tests/test_kernel_oracle.py."""
     scale = f"{float(10.0 ** decimals)!r}D"
     y = f"((abs({col_sql}) * {scale}) + 0.5D)"
     fl = (
@@ -66,8 +57,8 @@ def round_half_up_spark_expr(col_sql: str, decimals: int) -> str:
 
 
 def round_half_up_sql(expr: str, decimals: int) -> str:
-    """The DuckDB-side twin of :func:`round_half_up_col`: identical
-    operation sequence, identical IEEE results."""
+    """The DuckDB-side twin of :func:`round_half_up_spark_expr`:
+    identical operation sequence, identical IEEE results."""
     scale = repr(10.0 ** decimals)
     return f"sign({expr}) * floor((abs({expr}) * {scale}) + 0.5) / {scale}"
 

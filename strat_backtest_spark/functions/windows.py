@@ -1,8 +1,9 @@
 """Window / time-series function library (SURVEY.md §2.5 W1-W11).
 
-Each helper is a pure Column-in / Column-out (or DataFrame transform)
-replicating the pandas semantics the reference relies on — with the
-null-handling quirks made explicit:
+Each helper is a pure Column-in / Column-out (or DataFrame transform;
+the standard frame and W1 are Spark-SQL text for selectExpr-built
+plans) replicating the pandas semantics the reference relies on — with
+the null-handling quirks made explicit:
 
 - pandas ``rolling(n).mean()`` yields NaN for the first n-1 rows
   (min_periods=n): replicated with a row-count guard (W1).
@@ -22,42 +23,29 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
 
 
-def ticker_window(*extra_keys: str, order_col: str = "date") -> WindowSpec:
-    """Per-ticker, date-ordered window — the engine's standard frame."""
-    return Window.partitionBy("ticker", *extra_keys).orderBy(order_col)
-
-
 def _cum(w: WindowSpec) -> WindowSpec:
     return w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
 
-def ticker_window_sql(*extra_keys: str, order_col: str = "date") -> str:
-    """Spark-SQL OVER-clause text twin of :func:`ticker_window` — for
-    selectExpr-built plans (one JVM parse instead of a py4j round-trip
-    per Column op; trees identical, pinned by the r15 tests)."""
-    keys = ", ".join(["ticker", *extra_keys])
-    return f"PARTITION BY {keys} ORDER BY {order_col}"
+def ticker_window_sql() -> str:
+    """Per-ticker, date-ordered window — the engine's standard frame,
+    as OVER-clause text for selectExpr-built plans (one JVM parse
+    instead of a py4j round-trip per Column op)."""
+    return "PARTITION BY ticker ORDER BY date"
 
 
-def rolling_mean_sql(col_sql: str, n: int, w_sql: str | None = None) -> str:
-    """Spark-SQL text twin of :func:`rolling_mean` (W1 — null until n
-    observations). Parses to the identical tree."""
-    w = w_sql if w_sql is not None else ticker_window_sql()
+def rolling_mean_sql(col_sql: str, n: int) -> str:
+    """W1 — pandas ``rolling(n).mean()`` parity (custom_strats.py:38-39)
+    as Spark-SQL text over :func:`ticker_window_sql`: null until n
+    observations exist (min_periods defaults to the window size in
+    pandas)."""
+    w = ticker_window_sql()
     start = f"{n - 1} PRECEDING" if n > 1 else "CURRENT ROW"
     frame = f"{w} ROWS BETWEEN {start} AND CURRENT ROW"
     return (
         f"CASE WHEN (count({col_sql}) OVER ({frame}) >= {n})"
         f" THEN avg({col_sql}) OVER ({frame}) END"
     )
-
-
-def rolling_mean(col: str | Column, n: int, w: WindowSpec) -> Column:
-    """W1 — pandas ``rolling(n).mean()`` parity (custom_strats.py:38-39):
-    null until n observations exist (min_periods defaults to the window
-    size in pandas)."""
-    c = F.col(col) if isinstance(col, str) else col
-    frame = w.rowsBetween(-(n - 1), 0)
-    return F.when(F.count(c).over(frame) >= n, F.avg(c).over(frame))
 
 
 def lag(col: str | Column, w: WindowSpec, offset: int = 1) -> Column:

@@ -537,7 +537,7 @@ def _portfolio_curve(closes: np.ndarray, events, initial_amount: float):
 
 def _sma_table(closes: np.ndarray, lengths) -> dict[int, np.ndarray]:
     """Rolling means of ``closes`` for every length in ``lengths``,
-    bit-identical to ``functions.windows.rolling_mean`` — NaN where it
+    bit-identical to ``functions.windows.rolling_mean_sql`` — NaN where it
     is null (before row n). Spark evaluates ``avg() OVER (ROWS n-1
     PRECEDING)`` by re-aggregating the frame for every row: start at
     0.0, add the n values left to right, divide by float(n). Adding

@@ -32,12 +32,12 @@ TEXT through ``selectExpr``/``F.expr`` instead of stacked Column
 operators. The Column form cost ~2,300 py4j round-trips per build
 (~0.7-1.7 s of driver wall on this host, per cProfile) — a real
 per-query cost the bench times inside fn(); the text form is one
-round-trip per select plus a JVM parse. The parsed trees are IDENTICAL
-to the Column-built ones (pinned by
-tests/test_r15_optimizations.py::test_compute_metrics_text_equals_column_build
-via normalized analyzed-plan comparison): every fractional literal
+round-trip per select plus a JVM parse. Every fractional literal
 carries the ``D`` double suffix — a bare ``0.5`` is DECIMAL under ANSI
-and would drift the ^255-amplified, hash-checked stats.
+and would drift the ^255-amplified, hash-checked stats. The values are
+pinned bit for bit (``repr``) by
+tests/test_metrics_differential.py::test_metrics_exact_values and
+against DuckDB by the q42 oracle.
 """
 
 from __future__ import annotations

@@ -93,7 +93,7 @@ def evaluate_params(bars: DataFrame, params, initial_amount: float) -> DataFrame
         params = [(r["run_id"], r["fast"], r["lagging"]) for r in params.collect()]
     rows = [(int(i), int(f), int(l)) for i, f, l in params]
     param_df = _params_local_relation(bars.sparkSession, rows)
-    feed = ma_cross_feed_grid(bars, rows)
+    feed = ma_cross_feed_grid(bars)
     kernel_out = run_kernel(feed, initial_amount, runs=rows)
     _, events = split_kernel_output(kernel_out)
     return final_net_worth_from_events(
@@ -113,7 +113,7 @@ def grid_search(
     scored = evaluate_params(
         bars, _grid_rows(fast_range, lagging_range), initial_amount
     )
-    from strat_backtest_spark.functions.numeric import round_half_up_col
+    from strat_backtest_spark.functions.numeric import round_half_up_spark_expr
 
     w = Window.partitionBy("ticker").orderBy(F.desc("net_worth"), F.asc("run_id"))
     return (
@@ -125,7 +125,7 @@ def grid_search(
             "lagging",
             # IEEE-stable rounding (not F.round): objective magnitudes
             # can reach ~1e11 where one double ULP straddles 1e-4
-            round_half_up_col(F.col("net_worth"), 4).alias("net_worth"),
+            F.expr(round_half_up_spark_expr("net_worth", 4)).alias("net_worth"),
         )
     )
 
@@ -204,7 +204,7 @@ def simulated_annealing(
     # at larger scale.
     bars = bars.localCheckpoint(eager=True)
 
-    from strat_backtest_spark.functions.numeric import round_half_up_col
+    from strat_backtest_spark.functions.numeric import round_half_up_spark_expr
 
     def score(states: list[tuple[int, int]]) -> list[float]:
         rows = [(i, int(f), int(l)) for i, (f, l) in enumerate(states)]
@@ -215,7 +215,11 @@ def simulated_annealing(
             # round(4) like grid_search's output: the chain's accept
             # decisions then run on the same doubles the DuckDB replay
             # oracle computes (q46), instead of ULP-off unrounded sums
-            .agg(round_half_up_col(F.avg("net_worth"), 4).alias("net_worth"))
+            .agg(
+                F.expr(round_half_up_spark_expr("avg(net_worth)", 4)).alias(
+                    "net_worth"
+                )
+            )
             .collect()
         }
         return [got.get(i, float("-inf")) for i in range(len(states))]

@@ -41,9 +41,9 @@ def build_portfolio(feed: DataFrame, trade_events: DataFrame, initial_amount: fl
     df = feed.join(ev, ["ticker", "run_id", "date"], "left")
 
     # Expressions as Spark-SQL text (one parse instead of ~200 py4j
-    # round-trips of Column stacking; trees identical — pinned by
-    # tests/test_r15_optimizations.py). D-suffixed literals: a bare
-    # 0.0 is DECIMAL under ANSI.
+    # round-trips of Column stacking; values pinned by
+    # tests/test_backtest.py, which holds the kernel's curve to this
+    # one). D-suffixed literals: a bare 0.0 is DECIMAL under ANSI.
     cum = (
         "PARTITION BY ticker, run_id ORDER BY date"
         " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"

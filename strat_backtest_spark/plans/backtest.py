@@ -38,7 +38,11 @@ from strat_backtest_spark.operators.portfolio import attach_benchmark
 # perfbench/layers.py wraps every backtest layer under its name in this
 # module
 from strat_backtest_spark.operators.portfolio import build_portfolio  # noqa: F401
-from strat_backtest_spark.operators.signals import band_signals, ma_cross_feed_grid
+from strat_backtest_spark.operators.signals import (
+    band_signals,
+    ma_cross_feed_grid,
+    ma_cross_signal_feed,
+)
 
 
 @dataclass
@@ -65,43 +69,10 @@ class MACrossStrategy:
             self.kernel_driver = "ma_cross_partial"
 
     def signal_feed(self, bars: DataFrame, run_id: int = 0) -> DataFrame:
-        # The Spark-side reference for the signals run_kernel(runs=...)
-        # computes (Backtest feeds the kernel the plain bar series).
-        # Action computed INLINE over the same window pass instead of
-        # joining ma_cross_signals' edge rows back onto the bars: the
-        # join recomputed the bars lineage on both sides (two source
-        # scans + two aggregations) and added a 3-key shuffle, for a
-        # column that is a pure window expression of the feed itself.
-        # Same semantics as ma_cross_signals (operators/signals.py):
-        # null action off-edge, first row always an edge.
-        # Spark-SQL text, not stacked Columns: one parse per select
-        # instead of ~150 py4j round-trips; tree equality with the
-        # Column form is pinned (tests/test_r15_optimizations.py).
-        from strat_backtest_spark.functions.windows import (
-            rolling_mean_sql,
-            ticker_window_sql,
-        )
-
-        w = ticker_window_sql()
-        cross = (
-            f"coalesce(({rolling_mean_sql('close', self.fast)}"
-            f" > {rolling_mean_sql('close', self.lagging)}), false)"
-        )
-        df = bars.selectExpr(
-            "ticker",
-            f"CAST({int(run_id)} AS BIGINT) AS run_id",
-            "date",
-            "close",
-            f"{cross} AS __cross",
-        )
-        prev = f"lag(__cross) OVER ({w})"
-        action = (
-            f"CASE WHEN (({prev} IS NULL) OR (__cross != {prev}))"
-            " THEN (CASE WHEN __cross THEN 'buy' ELSE 'sell' END) END"
-        )
-        return df.selectExpr(
-            "ticker", "run_id", "date", "close", f"{action} AS action"
-        )
+        """The Spark-side reference for the signals
+        ``run_kernel(runs=...)`` computes (``Backtest`` feeds the kernel
+        the plain bar series)."""
+        return ma_cross_signal_feed(bars, self.fast, self.lagging, run_id)
 
     def kernel_params(self) -> dict:
         p: dict = {"stop_loss_pct": self.stop_loss_pct}
@@ -172,7 +143,7 @@ class Backtest:
         feed = (
             self.strategy.signal_feed(bars)
             if runs is None
-            else ma_cross_feed_grid(bars, runs)
+            else ma_cross_feed_grid(bars)
         )
         return run_kernel(
             feed,

@@ -23,9 +23,10 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from strat_backtest_spark.functions.numeric import (
-    round_half_up_col,
+    round_half_up_spark_expr,
     round_half_up_sql,
 )
+from strat_backtest_spark.sources.bars import load_testdata
 
 
 @dataclass
@@ -95,29 +96,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _t_build(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
-        # events.ts has shipped as both TIMESTAMP(NANOS) (earlier
-        # testdata drops) and TIMESTAMP(MICROS) parquet. Vanilla Spark
-        # refuses NANOS; nanosAsLong is runtime-settable, so set it
-        # here — the caller's session (driver harness included) need
-        # not be pre-configured. Under that conf a NANOS file arrives
-        # as raw long nanos (µs-aligned, so the micros conversion is
-        # lossless) while a MICROS file still arrives as timestamp —
-        # branch on the landed dtype, not on an assumption about the
-        # file.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
-            )
-        elif ts_type == "timestamp_ntz":
-            # MICROS-without-tz drop: downstream uses unix_micros and
-            # streaming watermarks, which need TIMESTAMP (ltz). The
-            # session runs UTC (session.py), so the cast preserves
-            # both wall-clock and epoch values.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return load_testdata(spark, sf_dir, "events")["events"]
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name in ("documents", "embeddings"):
         # These tables carry heavy per-row compute (shingle/minhash/
@@ -321,7 +300,6 @@ def q06_rolling_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q07_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2+W3: lag and percent change."""
     ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return ev.select(
         "event_id",
         "user_id",
@@ -331,8 +309,10 @@ def q07_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
         # IEEE-stable rounding (functions/numeric.py): F.round's
         # shortest-decimal BigDecimal path disagrees with DuckDB round
         # at representation ties (one row in ~70k flips at sf0.1)
-        round_half_up_col(
-            F.try_divide(F.col("value"), F.lag("value").over(w)) - 1, 6
+        F.expr(
+            round_half_up_spark_expr(
+                f"try_divide(value, lag(value) OVER ({_EVW})) - 1", 6
+            )
         ).alias("pct_change"),
     )
 

@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
 from strat_backtest_spark.functions.numeric import (
-    round_half_up_col,
     round_half_up_spark_expr,
     round_half_up_sql,
 )
@@ -371,7 +370,7 @@ def q39_ma_cross_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(0, 3, 8)],
         # net_worth(T) telescope (portfolio.py:64-100), Spark's exact
         # parenthesization: ((shares·close − cb) + cs) + init; rounded
-        # via the IEEE-stable helper (see round_half_up_col) so huge
+        # via the IEEE-stable helper (see round_half_up_spark_expr) so huge
         # magnitudes cannot strand the two engines' round() on
         # different sides of a decimal boundary
         final_select=f"""
@@ -399,7 +398,7 @@ def q40_backtest_networth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bt.final_net_worth().select(
         "ticker",
         "run_id",
-        round_half_up_col(F.col("net_worth"), 4).alias("net_worth"),
+        F.expr(round_half_up_spark_expr("net_worth", 4)).alias("net_worth"),
     )
 
 
@@ -468,11 +467,9 @@ def q42_backtest_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     date_cols = {"start_time", "end_time"}
     # one schema fetch: dict(m.dtypes) inside the per-column loop
     # re-resolved the full metrics plan once per output column.
-    # selectExpr + the text twin of round_half_up_col: the Column form
-    # of this 21-column projection alone cost ~1,400 py4j round-trips
-    # (~1 s of driver wall per build); the text form is one round-trip
-    # and parses to the identical tree (pinned in
-    # tests/test_r15_optimizations.py).
+    # selectExpr + round_half_up_spark_expr: built from Columns, this
+    # 21-column projection alone cost ~1,400 py4j round-trips (~1 s of
+    # driver wall per build); the text form is one round-trip.
     dtypes = dict(m.dtypes)
     return m.selectExpr(
         *[
@@ -561,7 +558,7 @@ def _fmt_curve(df: DataFrame) -> DataFrame:
         F.round("close", 6).alias("close"),
         "action",
         "shares_owned",
-        round_half_up_col(F.col("net_worth"), 4).alias("net_worth"),
+        F.expr(round_half_up_spark_expr("net_worth", 4)).alias("net_worth"),
     )
 
 
@@ -802,7 +799,9 @@ def q65_stream_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain_stream(spark, curve)
         .groupBy("ticker", "run_id")
         .agg(
-            round_half_up_col(F.max_by("net_worth", "date"), 4).alias("net_worth")
+            F.expr(
+                round_half_up_spark_expr("max_by(net_worth, date)", 4)
+            ).alias("net_worth")
         )
         .orderBy("ticker", "run_id")
         .limit(150)
@@ -834,7 +833,7 @@ def q72_stoploss_networth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bt.final_net_worth().select(
         "ticker",
         "run_id",
-        round_half_up_col(F.col("net_worth"), 4).alias("net_worth"),
+        F.expr(round_half_up_spark_expr("net_worth", 4)).alias("net_worth"),
     )
 
 

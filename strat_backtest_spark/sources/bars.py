@@ -68,14 +68,39 @@ def write_bars_parquet(bars: DataFrame, path: str, mode: str = "overwrite") -> N
     bars.write.mode(mode).partitionBy("ticker").parquet(path)
 
 
+def normalize_events_ts(events: DataFrame) -> DataFrame:
+    """Return ``events`` (batch or streaming) with ``ts`` as TIMESTAMP,
+    branching on the dtype it landed as.
+
+    Under ``nanosAsLong`` (vanilla Spark refuses NANOS) a
+    TIMESTAMP(NANOS) file lands as raw ``bigint`` nanos, µs-aligned, so
+    the micros conversion is lossless. A MICROS file without the UTC
+    adjustment lands as ``timestamp_ntz``; ``unix_micros`` and
+    streaming watermarks need TIMESTAMP (ltz), and the session runs UTC
+    (session.py), so the cast keeps wall clock and epoch alike."""
+    ts_type = dict(events.dtypes).get("ts")
+    if ts_type == "bigint":
+        return events.withColumn(
+            "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
+        )
+    if ts_type == "timestamp_ntz":
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
+
+
 def load_testdata(spark: SparkSession, sf_dir: str, *tables: str) -> dict[str, DataFrame]:
-    """Load the harness's synthetic tables (TESTDATA.md)."""
+    """Load the harness's synthetic tables (TESTDATA.md); ``events``
+    comes with ``ts`` as TIMESTAMP (:func:`normalize_events_ts`)."""
     names = tables or TESTDATA_TABLES
     if "events" in names:
-        # events.ts is TIMESTAMP(NANOS) parquet; runtime-set so any
-        # caller session (incl. an unconfigured one) can read it.
+        # events.ts ships as TIMESTAMP(MICROS) today and shipped as
+        # TIMESTAMP(NANOS) in earlier drops; runtime-set so any caller
+        # session (an unconfigured one included) can read either
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in names}
+    out = {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in names}
+    if "events" in out:
+        out["events"] = normalize_events_ts(out["events"])
+    return out
 
 
 def bars_from_events(events: DataFrame) -> DataFrame:

@@ -45,13 +45,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from strat_backtest_spark.sources.bars import normalize_events_ts
+
 SESSION_GAP_MICROS = 30 * 60 * 1_000_000  # 30 min, as batch q35
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Runtime-set so a vanilla session (e.g. the driver harness) can
-    # read a TIMESTAMP(NANOS) events drop; a MICROS drop is unaffected.
-    # Branch on the landed dtype, matching plans/catalog.py:_t.
+    # read a TIMESTAMP(NANOS) events drop; the stream takes the file's
+    # landed schema and is normalized like the batch reader.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     static = spark.read.parquet(f"{sf_dir}/events.parquet")
     stream = (
@@ -60,17 +62,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    ts_type = dict(static.dtypes).get("ts")
-    if ts_type == "bigint":
-        # ts arrives as raw nanos — convert like the batch path
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
-        )
-    elif ts_type == "timestamp_ntz":
-        # watermarks need TIMESTAMP (ltz); session is UTC so the cast
-        # is value-preserving
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_events_ts(stream)
 
 
 def _drain_to_parquet(

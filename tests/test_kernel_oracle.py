@@ -35,16 +35,16 @@ MAGNITUDES = [
 
 
 @pytest.mark.parametrize("decimals", [4, 6])
-def test_round_half_up_col_matches_sql(spark, decimals):
+def test_round_half_up_spark_expr_matches_sql(spark, decimals):
     from strat_backtest_spark.functions.numeric import (
-        round_half_up_col,
+        round_half_up_spark_expr,
         round_half_up_sql,
     )
-    from pyspark.sql import functions as F
 
     df = spark.createDataFrame([(v,) for v in MAGNITUDES], "x double")
     got = [
-        r.y for r in df.select(round_half_up_col(F.col("x"), decimals).alias("y")).collect()
+        r.y
+        for r in df.selectExpr(f"{round_half_up_spark_expr('x', decimals)} AS y").collect()
     ]
     con = duckdb.connect()
     exp = [

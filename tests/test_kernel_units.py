@@ -1,7 +1,8 @@
 """Kernel unit tests on tiny hand-computed series (SURVEY.md §5.2 #2):
 FIFO matching, -1 sentinels, buying-power quirks, stop-losses, band
 strategy. Pure-Python engine tests (no Spark) — the Spark integration
-is covered by test_golden / test_entry."""
+is covered by test_golden, test_backtest and
+test_oracle::test_entry_contract."""
 
 import datetime as dt
 

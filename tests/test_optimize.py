@@ -131,6 +131,44 @@ def test_evaluate_params_rejects_bad_input(spark):
         evaluate_params(bars, [(0, 0, 2)], 10_000.0)
 
 
+def test_params_local_relation_empty_grid(spark):
+    """expand_grid over an empty range must return an empty typed
+    relation, not raise a ParseException (VALUES with no rows)."""
+    from strat_backtest_spark.operators.optimize import expand_grid
+
+    df = expand_grid(spark, (3, 3, 1), (8, 14, 5))
+    assert df.columns == ["run_id", "fast", "lagging"]
+    assert df.count() == 0
+
+
+def test_final_net_worth_universe_from_last_bar(spark):
+    """final_net_worth_from_events must emit one row per
+    (bars ticker × run_id) with init-only net worth for zero-trade
+    groups — the last_bar-driven universe rewrite's contract."""
+    from strat_backtest_spark.operators.portfolio import (
+        final_net_worth_from_events,
+    )
+    from strat_backtest_spark.plans.catalog import _t
+    from strat_backtest_spark.sources.bars import bars_from_events
+
+    bars = bars_from_events(_t(spark, SF_SMALL, "events"))
+    run_ids = spark.sql("SELECT * FROM VALUES (0L),(7L) AS t(run_id)")
+    # empty event stream: every group must still appear, at exactly init
+    events = spark.createDataFrame(
+        [],
+        "ticker string, run_id long, date date, buy_shares double, "
+        "sell_shares double, shares_owned double, event_close double",
+    )
+    out = final_net_worth_from_events(bars, events, run_ids, 10_000.0)
+    tickers = {r[0] for r in bars.select("ticker").distinct().collect()}
+    got = out.collect()
+    assert len(got) == 2 * len(tickers)
+    assert {(r["ticker"], r["run_id"]) for r in got} == {
+        (t, i) for t in tickers for i in (0, 7)
+    }
+    assert all(r["net_worth"] == 10_000.0 for r in got)
+
+
 def test_grid_search_reproduces_reference_golden(spark):
     """README grid fast=[36,42,2] x lagging=[40,210,10] on AAPL
     last-10Y: best point is (36,40) with net worth 1,283,666.449897766

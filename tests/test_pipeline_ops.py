@@ -140,6 +140,24 @@ def test_connected_components_spares_foreign_persisted_state(spark):
     assert foreign.selectExpr("sum(y)").collect()[0][0] == 2 * sum(range(500))
 
 
+def test_union_find_rows_handoff(spark):
+    """_union_find_local with pre-collected rows must equal the
+    collect-inside path (the one-bounded-collect gate rewrite)."""
+    from strat_backtest_spark.operators.dedup import _union_find_local
+
+    p = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (5, 5)], "u bigint, v bigint"
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("id", "component").collect())
+
+    a = rows(_union_find_local(p))
+    b = rows(_union_find_local(p, rows=p.collect()))
+    assert a == b
+    assert a == [(1, 1), (2, 1), (3, 1), (5, 5), (10, 10), (11, 10)]
+
+
 def test_token_count_tokenizer_injection(spark):
     """A real subword tokenizer injects as an Arrow-batched pandas UDF
     in place of the regex approximation — the plumbing contract the

@@ -218,3 +218,55 @@ def test_reddit_json_adapter_end_to_end(spark, tmp_path):
     top = ticker_mentions(docs, symbols, stopwords, n=5)
     counts = {r["symbol"]: r["n_mentions"] for r in top.collect()}
     assert counts == {"aapl": 4, "goog": 3}
+
+
+@pytest.mark.parametrize("unit", ["ns", "us", "us-utc"])
+def test_load_testdata_normalizes_events_ts(spark, tmp_path, unit):
+    """An events drop lands ``ts`` as raw-nanos ``bigint`` (a NANOS
+    file under nanosAsLong), ``timestamp_ntz`` (naive MICROS) or
+    ``timestamp`` (UTC MICROS); ``load_testdata`` hands back
+    ``timestamp`` for each, and the bars derived from it fall on the
+    right dates."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from strat_backtest_spark.sources.bars import bars_from_events, load_testdata
+
+    ts = pd.to_datetime(
+        [
+            "2024-01-02 15:00:00",
+            "2024-01-02 10:00:00",
+            "2024-01-03 09:30:00.000001",
+            "2024-01-03 23:59:59.999999",
+        ],
+        format="ISO8601",
+    )
+    pdf = pd.DataFrame(
+        {
+            "event_id": [1, 2, 3, 4],
+            "ts": ts.as_unit("ns" if unit == "ns" else "us"),
+            "user_id": [7, 7, 7, 8],
+            "value": [2.0, 1.0, 3.0, 4.0],
+        }
+    )
+    if unit == "us-utc":
+        pdf["ts"] = pdf["ts"].dt.tz_localize("UTC")
+    path = tmp_path / "events.parquet"
+    pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
+    want_unit = "ns" if unit == "ns" else "us"
+    assert pq.read_schema(path).field("ts").type.unit == want_unit
+
+    events = load_testdata(spark, str(tmp_path), "events")["events"]
+    assert dict(events.dtypes)["ts"] == "timestamp"
+    bars = bars_from_events(events)
+    got = sorted(
+        (r["ticker"], str(r["date"]), r["close"])
+        for r in bars.select("ticker", "date", "close").collect()
+    )
+    assert got == [
+        ("7", "2024-01-02", 1.0),
+        ("7", "2024-01-03", 3.0),
+        ("8", "2024-01-03", 4.0),
+    ]
+    micros = [r[0] for r in events.orderBy("event_id").selectExpr("unix_micros(ts)").collect()]
+    assert micros == [t.value // 1000 for t in ts.tz_localize("UTC")]

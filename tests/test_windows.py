@@ -6,7 +6,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from strat_backtest_spark.functions.windows import (
     cum_max,
@@ -14,8 +14,7 @@ from strat_backtest_spark.functions.windows import (
     cum_sum,
     forward_fill,
     pct_change,
-    rolling_mean,
-    ticker_window,
+    rolling_mean_sql,
 )
 
 
@@ -40,8 +39,7 @@ def _col(df, col):
 
 def test_rolling_mean_matches_pandas(walk):
     df, pdf = walk
-    w = ticker_window()
-    got = _col(df.withColumn("sma", rolling_mean("close", 20, w)), "sma")
+    got = _col(df.withColumn("sma", F.expr(rolling_mean_sql("close", 20))), "sma")
     exp = pdf.close.rolling(20).mean().tolist()
     for g, e in zip(got, exp):
         if pd.isna(e):
@@ -52,7 +50,7 @@ def test_rolling_mean_matches_pandas(walk):
 
 def test_pct_change_cumsum_cummax(walk):
     df, pdf = walk
-    w = ticker_window()
+    w = Window.partitionBy("ticker").orderBy("date")
     out = df.select(
         "date",
         pct_change("close", w).alias("pc"),
@@ -74,7 +72,7 @@ def test_pct_change_cumsum_cummax(walk):
 
 def test_cumprod_matches_pandas(walk):
     df, pdf = walk
-    w = ticker_window()
+    w = Window.partitionBy("ticker").orderBy("date")
     ret1 = (F.col("close") / F.lag("close").over(w)).alias("r")
     out = df.select("date", cum_prod(F.coalesce(ret1, F.lit(1.0)), w).alias("cp"))
     got = _col(out, "cp")
@@ -85,7 +83,7 @@ def test_cumprod_matches_pandas(walk):
 
 def test_forward_fill_matches_pandas(walk):
     df, pdf = walk
-    w = ticker_window()
+    w = Window.partitionBy("ticker").orderBy("date")
     got = _col(df.withColumn("f", forward_fill("sparse", w, default=0.0)), "f")
     exp = pdf["sparse"].ffill().fillna(0.0).tolist()
     assert got == pytest.approx(exp)
