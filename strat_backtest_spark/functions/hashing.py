@@ -31,15 +31,6 @@ def char_hash(col: str | Column) -> Column:
     )
 
 
-def char_hash_sql(expr: str) -> str:
-    """The same hash as DuckDB SQL over a string expression."""
-    return (
-        f"list_reduce(list_prepend(0::BIGINT, "
-        f"list_transform(string_split({expr}, ''), c -> ascii(c)::BIGINT)), "
-        f"(a, b) -> (a * 31 + b) % {P})"
-    )
-
-
 def md5_hash(col: str | Column) -> Column:
     """Native md5 → 60-bit prefix → mod P, LongType in [0, P).
 
@@ -57,25 +48,3 @@ def md5_hash(col: str | Column) -> Column:
 def md5_hash_sql(expr: str) -> str:
     """The same md5-prefix hash as DuckDB SQL over a string expression."""
     return f"(('0x' || substring(md5({expr}), 1, 15))::BIGINT % {P})"
-
-
-def fast_hash(col: str | Column) -> Column:
-    """xxhash64 → [0, P): a native-hash alternative for shingle/token
-    hashing, NOT reproducible outside Spark (oracle-gated entries keep
-    md5_hash). Measured note: inside a higher-order ``transform`` the
-    hash function is NOT the bottleneck (interpreted HOF evaluation
-    is — xxhash64 ≈ md5+conv there, both ~19 µs/shingle); the real
-    hot path is the Arrow impl in ``minhash_signatures``. This exists
-    for expression contexts outside HOFs where a dependency on md5's
-    availability or cost matters (pmod: xxhash64 is signed)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.pmod(F.xxhash64(c), F.lit(P)).cast("long")
-
-
-def perm_hash(x: Column, a: int, b: int) -> Column:
-    """h(x) = (a·x + b) mod P on a long column."""
-    return (x * F.lit(a) + F.lit(b)) % P
-
-
-def perm_hash_sql(expr: str, a: int, b: int) -> str:
-    return f"(({expr}) * {a} + {b}) % {P}"

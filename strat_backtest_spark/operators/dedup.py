@@ -145,37 +145,6 @@ def _py_shingle_occurrences(text, n: int) -> list:
     ]
 
 
-def minhash_sig_array(
-    df: DataFrame, k: int = 8, shingle_n: int = 3,
-    text_col: str = "text", id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, sig: array<long>[k]) — ALL k minima folded in ONE
-    ``aggregate`` pass over the shingle array, so the shingle pipeline
-    (the expensive per-character hash) is evaluated exactly once per
-    document no matter how Catalyst collapses projections. Empty
-    shingle sets yield null slots (parity with array_min of [])."""
-    sh = shingle_hashes(text_col, shingle_n)
-    coeffs = F.array(
-        *[
-            F.struct(
-                F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b")
-            )
-            for a, b in perm_params(k)
-        ]
-    )
-    init = F.array_repeat(F.lit(P).cast("long"), k)
-    folded = F.aggregate(
-        sh,
-        init,
-        lambda acc, x: F.zip_with(
-            acc, coeffs, lambda m, c: F.least(m, (x * c["a"] + c["b"]) % P)
-        ),
-    )
-    # (a·x+b) mod P < P always, so P survives only for empty shingle sets
-    sig = F.transform(folded, lambda m: F.nullif(m, F.lit(P).cast("long")))
-    return df.select(F.col(id_col), sig.alias("sig"))
-
-
 def minhash_signatures(
     df: DataFrame, k: int = 8, shingle_n: int = 3,
     text_col: str = "text", id_col: str = "doc_id",

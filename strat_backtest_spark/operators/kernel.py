@@ -9,6 +9,10 @@ O(open orders) per group; groups are independent, so the kernel
 parallelizes across tickers on a cluster, and a grid sweep simulates
 all of a ticker's parameter points from one pass over its bars (the
 reference's grid search is effectively serial, optimize.py:221-225).
+For ``Backtest`` the walker also finishes each group's outputs while
+it holds the group's arrays: the net-worth curve, the attached
+benchmark and the metric aggregates (``run_kernel(curve=True)``), so
+nothing after the kernel needs a window or a shuffle.
 
 Semantics replicate the reference order engine exactly, including its
 quirks (SURVEY.md Appendix A), because the golden tests depend on
@@ -24,15 +28,21 @@ custom_strats.py:83-101.
 from __future__ import annotations
 
 import heapq
+import math
 from collections import deque
-from typing import Callable, Iterable
+from typing import Callable, Iterable, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from strat_backtest_spark.schemas import KERNEL_OUT_SCHEMA
+from strat_backtest_spark.schemas import (
+    KERNEL_LEDGER_SCHEMA,
+    KERNEL_OUT_SCHEMA,
+    STATS_COLUMNS,
+)
 
 
 class _KOrder:
@@ -356,11 +366,12 @@ DRIVERS: dict[str, Callable[..., None]] = {
 # ---------------------------------------------------------------------------
 
 def _null_column(dtype, n: int) -> np.ndarray:
-    """``n`` nulls of a KERNEL_OUT_SCHEMA type as a typed array: Arrow
-    masks NaN and NaT to null without visiting Python objects. (Every
-    string column of a 'bar' row is filled.)"""
+    """``n`` nulls of a kernel output type as a typed array: Arrow
+    masks NaN and NaT to null without visiting Python objects."""
     if isinstance(dtype, T.DateType):
         return np.full(n, np.datetime64("NaT"), dtype="datetime64[ns]")
+    if isinstance(dtype, T.StringType):
+        return np.full(n, None, dtype=object)
     return np.full(n, np.nan)  # double, long and boolean slots
 
 
@@ -370,64 +381,50 @@ class _KernelOutAcc:
     A grid sweep makes (tickers × params) groups — tens of thousands of
     SMALL groups. Building two pandas frames + a concat per group (the
     naive applyInPandas shape) costs ~1 ms/group of pure pandas
-    overhead, which dominates the sweep. Order and event rows (a few
-    per group) are appended as Python scalars to column lists; curve
-    rows (one per bar) are kept as one block of typed numpy columns per
-    group. Each Arrow flush builds one frame of each kind, amortizing
-    the overhead across every group in the batch."""
+    overhead, which dominates the sweep. Order, event and stats rows (a
+    few per group) are appended as tuples of Python scalars holding only
+    the columns their row type fills; curve rows (one per bar) are kept
+    as one block of typed numpy columns per group. Each Arrow flush
+    builds one frame per row type, amortizing the overhead across every
+    group in the batch, and fills every other column of ``schema``
+    with a typed null array, so a row pays nothing per column it
+    leaves null."""
 
-    _TYPES = {f.name: f.dataType for f in KERNEL_OUT_SCHEMA.fields}
-    _NAMES = list(_TYPES)
-    # the columns a 'bar' row fills; every other column is null
+    # the columns each scalar row type fills after ticker and run_id
+    _FILLS = {
+        "order": (
+            "order_id", "num_shares", "start_time", "start_amount", "filled",
+            "end_time", "end_amount", "profit", "stop_loss",
+        ),
+        "event": ("date", "buy_shares", "sell_shares", "shares_owned", "event_close"),
+        "stats": STATS_COLUMNS,
+    }
+    # the columns a 'bar' row fills
     _BAR_NAMES = (
         "date", "buy_shares", "sell_shares", "shares_owned", "net_worth",
-        "event_close", "action",
+        "event_close", "action", "sp500",
     )
 
-    def __init__(self) -> None:
-        self.cols: dict[str, list] = {n: [] for n in self._NAMES}
+    def __init__(self, schema: T.StructType) -> None:
+        self.types = {f.name: f.dataType for f in schema.fields}
+        self._reset()
+
+    def _reset(self) -> None:
+        self.rows: dict[str, list[tuple]] = {kind: [] for kind in self._FILLS}
         self.bars: list[tuple] = []
         self.n = 0
 
-    def add_order(self, ticker, run_id, o: "_KOrder") -> None:
-        c = self.cols
-        c["ticker"].append(ticker)
-        c["run_id"].append(run_id)
-        c["row_type"].append("order")
-        c["order_id"].append(o.oid)
-        c["num_shares"].append(o.num_shares)
-        c["start_time"].append(o.start_time)
-        c["start_amount"].append(o.start_amount)
-        c["filled"].append(o.filled)
-        c["end_time"].append(o.end_time)
-        c["end_amount"].append(o.end_amount)
-        c["profit"].append(o.profit)
-        c["stop_loss"].append(o.stop_loss)
-        c["date"].append(None)
-        c["buy_shares"].append(None)
-        c["sell_shares"].append(None)
-        c["shares_owned"].append(None)
-        c["event_close"].append(None)
+    def add(self, kind: str, ticker, run_id, *values) -> None:
+        """One row of ``kind``: ``values`` in ``_FILLS[kind]`` order."""
+        self.rows[kind].append((ticker, run_id, *values))
         self.n += 1
 
-    def add_event(
-        self, ticker, run_id, date, buy_shares, sell_shares, shares_owned, close
-    ) -> None:
-        c = self.cols
-        c["ticker"].append(ticker)
-        c["run_id"].append(run_id)
-        c["row_type"].append("event")
-        for name in (
-            "order_id", "num_shares", "start_time", "start_amount",
-            "filled", "end_time", "end_amount", "profit", "stop_loss",
-        ):
-            c[name].append(None)
-        c["date"].append(date)
-        c["buy_shares"].append(buy_shares)
-        c["sell_shares"].append(sell_shares)
-        c["shares_owned"].append(shares_owned)
-        c["event_close"].append(close)
-        self.n += 1
+    def add_order(self, ticker, run_id, o: "_KOrder") -> None:
+        self.add(
+            "order", ticker, run_id, o.oid, o.num_shares, o.start_time,
+            o.start_amount, o.filled, o.end_time, o.end_amount, o.profit,
+            o.stop_loss,
+        )
 
     def add_curve(self, ticker, run_id, *columns: np.ndarray) -> None:
         """One group's bar rows: ``columns`` are its per-bar arrays in
@@ -435,52 +432,98 @@ class _KernelOutAcc:
         self.bars.append((ticker, run_id, columns))
         self.n += len(columns[0])
 
+    def _frame(self, kind: str, n: int, filled: dict) -> pd.DataFrame:
+        out, nulls = {}, {}  # one read-only null array per Spark type
+        for name, dtype in self.types.items():
+            if name not in filled:
+                if dtype not in nulls:
+                    nulls[dtype] = _null_column(dtype, n)
+                out[name] = nulls[dtype]
+        out["row_type"] = np.full(n, kind, dtype=object)
+        out.update(filled)
+        # copy=False also skips pandas' block consolidation, a copy of
+        # every column the Arrow conversion would not need
+        return pd.DataFrame(out, columns=list(self.types), copy=False)
+
+    def _row_frame(self, kind: str) -> pd.DataFrame:
+        # object columns of python scalars/None, which Arrow casts
+        # directly against the output schema
+        rows = self.rows[kind]
+        names = ("ticker", "run_id", *self._FILLS[kind])
+        return self._frame(kind, len(rows), {
+            name: np.array(col, dtype=object)
+            for name, col in zip(names, zip(*rows))
+        })
+
     def _bar_frame(self) -> pd.DataFrame:
         lens = [len(cols[0]) for _, _, cols in self.bars]
-        n = sum(lens)
-        out = {
-            name: _null_column(dtype, n) for name, dtype in self._TYPES.items()
+        filled = {
+            "ticker": np.repeat(
+                np.array([t for t, _, _ in self.bars], dtype=object), lens
+            ),
+            "run_id": np.repeat(
+                np.array([r for _, r, _ in self.bars], dtype=np.int64), lens
+            ),
         }
-        out["ticker"] = np.repeat(
-            np.array([t for t, _, _ in self.bars], dtype=object), lens
-        )
-        out["run_id"] = np.repeat(
-            np.array([r for _, r, _ in self.bars], dtype=np.int64), lens
-        )
-        out["row_type"] = np.full(n, "bar", dtype=object)
         for j, name in enumerate(self._BAR_NAMES):
-            out[name] = np.concatenate([cols[j] for _, _, cols in self.bars])
-        return pd.DataFrame(out, columns=self._NAMES)
+            filled[name] = np.concatenate([cols[j] for _, _, cols in self.bars])
+        return self._frame("bar", sum(lens), filled)
 
     def flush(self) -> Iterable[pd.DataFrame]:
-        # order/event rows: object columns of python scalars/None, which
-        # Arrow casts directly against KERNEL_OUT_SCHEMA (no NaN-in-date
-        # normalization needed); bar rows: typed columns
-        if self.cols["ticker"]:
-            yield pd.DataFrame(
-                {n: pd.Series(self.cols[n], dtype=object) for n in self._NAMES}
-            )
+        for kind, rows in self.rows.items():
+            if rows:
+                yield self._row_frame(kind)
         if self.bars:
             yield self._bar_frame()
-        self.__init__()
+        self._reset()
+
+
+class _Sim(NamedTuple):
+    """The settings every group of one ``run_kernel`` call shares."""
+
+    initial_amount: float
+    parity: bool
+    # (days, sp500) from ``benchmark_series``, or None
+    benchmark: tuple[np.ndarray, np.ndarray] | None
+
+
+def _check_bars(ticker, dates: np.ndarray, closes: np.ndarray) -> np.ndarray:
+    """The bars contract every walk relies on: within a group the dates
+    strictly increase (the event lookups and the stop-loss scan
+    ``searchsorted`` them) and every close is finite (Spark orders NaN
+    above every number and skips null closes in its window averages;
+    no walk does either). Returns the dates as datetime64[D] days;
+    raises ``ValueError`` naming the ticker and the first offending
+    date otherwise."""
+    # Arrow converts date objects ~50x faster than numpy's astype
+    days = pa.array(dates, type=pa.date32()).to_numpy(zero_copy_only=False)
+    ok = ~np.isnat(days)
+    ok[1:] &= days[1:] > days[:-1]
+    if not ok.all():
+        bad = days[np.flatnonzero(~ok)[0]]
+        raise ValueError(f"ticker {ticker!r}: duplicate or null date {bad}")
+    ok = np.isfinite(closes)
+    if not ok.all():
+        bad = days[np.flatnonzero(~ok)[0]]
+        raise ValueError(f"ticker {ticker!r}: null or non-finite close on {bad}")
+    return days
 
 
 def _run_one_group(
-    acc: _KernelOutAcc, ticker, run_id,
-    dates: np.ndarray, closes: np.ndarray,
-    initial_amount: float, parity: bool, actions, drive, *args,
+    acc: _KernelOutAcc, sim: _Sim, ticker, run_id,
+    dates: np.ndarray, days: np.ndarray, closes: np.ndarray,
+    actions, drive, *args,
 ) -> None:
     """Simulate one (ticker, run_id) group into the accumulator:
     ``drive(engine, dates, closes, *args)`` makes the decisions.
     Inputs are numpy views over the batch arrays, already date-sorted
-    (the feed sort guarantees it) — no per-group pandas objects.
+    and checked (``_check_bars``) — no per-group pandas objects.
     ``actions``: the group's per-bar signal column, to emit its curve
-    rows with; None emits no curve."""
-    eng = TradingEngine(dates, closes, initial_amount, parity=parity)
+    rows and its stats row with; None emits neither."""
+    eng = TradingEngine(dates, closes, sim.initial_amount, parity=sim.parity)
     drive(eng, dates, closes, *args)
-    for o in eng.book.completed:
-        acc.add_order(ticker, run_id, o)
-    for o in eng.book.open_orders:
+    orders = [*eng.book.completed, *eng.book.open_orders]
+    for o in orders:
         acc.add_order(ticker, run_id, o)
     buy_orders, sell_orders, owned = eng.buy_orders, eng.sell_orders, eng.book.shares_owned
     events = []
@@ -494,14 +537,54 @@ def _run_one_group(
             b.num_shares if b is not None else None,
             sell_orders.get(d), owned.get(d),
         )
-        acc.add_event(ticker, run_id, d, *ev, float(closes[i]))
+        acc.add("event", ticker, run_id, d, *ev, float(closes[i]))
         if actions is not None:
             events.append((i, *ev))
-    if actions is not None:
-        acc.add_curve(
-            ticker, run_id, dates,
-            *_portfolio_curve(closes, events, initial_amount), closes, actions,
+    if actions is None:
+        return
+    buy, sell, shares, net = _portfolio_curve(closes, events, sim.initial_amount)
+    out_days, sp500 = _benchmark_rows(days, sim.benchmark, sim.parity)
+    if len(out_days) > len(days):  # benchmark-only rows (Q6)
+        at = np.searchsorted(out_days, days)
+        dates = out_days.astype(object)
+        closes, buy, sell, shares, net, actions = (
+            _spread(x, at, len(out_days))
+            for x in (closes, buy, sell, shares, net, actions)
         )
+    acc.add_curve(ticker, run_id, dates, buy, sell, shares, net, closes, actions, sp500)
+    acc.add("stats", ticker, run_id, *_group_stats(dates, out_days, net, sp500, orders))
+
+
+def _benchmark_rows(days: np.ndarray, benchmark, parity: bool):
+    """(days of the group's curve rows, sp500 per row with NaN for
+    null) once the benchmark is attached to bars on ``days`` —
+    ``portfolio.attach_benchmark``'s result, row for row (reference
+    strats.py:592-600). ``parity``: Q6 — the last len(days) benchmark
+    rows on or before the last bar, aligned by date with outer
+    semantics, so their dates off the bar calendar become extra rows;
+    otherwise a left join on date."""
+    if benchmark is None:
+        return days, np.full(len(days), np.nan)
+    b_days, b_vals = benchmark
+    out_days = days
+    if parity:
+        hi = np.searchsorted(b_days, days[-1], side="right")
+        lo = max(0, hi - len(days))
+        b_days, b_vals = b_days[lo:hi], b_vals[lo:hi]
+        out_days = np.union1d(days, b_days)
+    sp500 = np.full(len(out_days), np.nan)
+    if len(b_days):
+        k = np.minimum(np.searchsorted(b_days, out_days), len(b_days) - 1)
+        hit = b_days[k] == out_days
+        sp500[hit] = b_vals[k[hit]]
+    return out_days, sp500
+
+
+def _spread(x: np.ndarray, at: np.ndarray, n: int) -> np.ndarray:
+    """``x`` placed at rows ``at`` of ``n``, null (NaN or None) elsewhere."""
+    out = np.full(n, None if x.dtype == object else np.nan, dtype=x.dtype)
+    out[at] = x
+    return out
 
 
 def _portfolio_curve(closes: np.ndarray, events, initial_amount: float):
@@ -535,6 +618,123 @@ def _portfolio_curve(closes: np.ndarray, events, initial_amount: float):
     return buy, sell, shares, net
 
 
+# ---------------------------------------------------------------------------
+# the metrics aggregates of one group, with Spark's arithmetic
+# ---------------------------------------------------------------------------
+
+def _opt(x):
+    """A float, or None where NaN stands for null (the bars contract
+    and ``benchmark_series`` keep real NaN out of every input)."""
+    return None if x != x else float(x)
+
+
+def _seq_sum(values) -> float:
+    """Spark's Sum and Average: start at 0.0 and add the non-null
+    values left to right (np.cumsum is sequential, never pairwise)."""
+    return float(np.cumsum(np.concatenate(([0.0], np.asarray(values, dtype=float))))[-1])
+
+
+def _sum(values):
+    return _seq_sum(values) if len(values) else None
+
+
+def _avg(values):
+    """avg: the sequential sum ÷ count; null over no values."""
+    return _seq_sum(values) / len(values) if len(values) else None
+
+
+def _var_std(values) -> tuple:
+    """(var_samp, stddev_samp) by Spark's CentralMomentAgg: one Welford
+    update per value, in order; null below two values (Spark 4's
+    default, not NaN)."""
+    n = avg = m2 = 0.0
+    for x in values.tolist():
+        n += 1.0
+        delta = x - avg
+        delta_n = delta / n
+        avg += delta_n
+        m2 += delta * (delta - delta_n)
+    if n < 2.0:
+        return None, None
+    var = m2 / (n - 1.0)
+    return var, math.sqrt(var)
+
+
+def _ffill(x: np.ndarray) -> np.ndarray:
+    """``last(x, true) OVER (ROWS UNBOUNDED PRECEDING)``: each null
+    (NaN) replaced by the last value before it, null while none."""
+    at = np.where(np.isnan(x), -1, np.arange(len(x)))
+    np.maximum.accumulate(at, out=at)
+    return np.append(x, np.nan)[at]  # index -1 reads the trailing NaN
+
+
+def _ratio_less_one(num: np.ndarray, den: np.ndarray) -> np.ndarray:
+    """``try_divide(num, den) - 1``: null where either side is null or
+    ``den`` is zero."""
+    out = np.full(len(num), np.nan)
+    ok = ~np.isnan(num) & ~np.isnan(den) & (den != 0)
+    out[ok] = num[ok] / den[ok] - 1.0
+    return out
+
+
+def _returns(x: np.ndarray) -> np.ndarray:
+    """Per-row return of the forward-filled series (pandas
+    ``pct_change(fill_method='pad')``), null on the first row."""
+    ff = _ffill(x)
+    out = np.full(len(x), np.nan)
+    out[1:] = _ratio_less_one(ff[1:], ff[:-1])
+    return out
+
+
+def _group_stats(dates, days, net: np.ndarray, sp500: np.ndarray, orders) -> tuple:
+    """One group's ``metrics.metric_aggregates`` row (STATS_COLUMNS
+    order) from its attached curve — ``dates``/``days`` ascending,
+    ``net`` and ``sp500`` with NaN for null — and its order rows, in the
+    kernel's emission order (the order Spark's aggregates see them).
+    Every value is the double Spark computes: the windows as the
+    vectorized forms above, and each aggregate added in row order as
+    ``_seq_sum``/``_avg``/``_var_std`` do."""
+    r_s, r_m = _returns(net), _returns(sp500)
+    drawdown = _ratio_less_one(net, np.fmax.accumulate(net))
+    rs, rm, dd = (x[~np.isnan(x)] for x in (r_s, r_m, drawdown))
+    mean_r_s, mean_r_m = _avg(rs), _avg(rm)
+    var_r_s, std_r_s = _var_std(rs)
+    cov = np.full(len(net), np.nan)
+    if mean_r_s is not None and mean_r_m is not None:
+        # Q11: sum over rows where both returns exist, ÷ n_rows later
+        cov = (r_s - mean_r_s) * (r_m - mean_r_m)
+    cov = cov[~np.isnan(cov)]
+    max_dd = float(dd.min()) * 100.0 if len(dd) else None
+    avg_dd = _avg(dd) * 100.0 if len(dd) else None
+    return (
+        dates[0], dates[-1], _opt(net[-1]), _opt(net[0]), max_dd, avg_dd,
+        mean_r_s, std_r_s, var_r_s, mean_r_m, _var_std(rm)[1], _sum(cov),
+        len(net), _opt(sp500[-1]), _opt(sp500[0]),
+        # Q10: integer years
+        math.floor(int((days[-1] - days[0]).astype(np.int64)) / 365),
+        *_order_stats(orders),
+    )
+
+
+def _order_stats(orders) -> tuple:
+    """The order-side aggregates of one group (the orders ⟕ join of
+    ``metric_aggregates``: all null without orders)."""
+    if not orders:
+        return (None,) * 10
+    profits = [o.profit for o in orders if o.profit is not None]
+    losses = [p for p in profits if p < 0]
+    gains = [p for p in profits if p > 0]
+    return (
+        _avg([(o.end_time - o.start_time).days for o in orders if o.end_time is not None]),
+        _avg(losses), _avg(gains),
+        min(losses, default=None), max(profits, default=None),
+        _sum(losses), _sum(gains),
+        _sum([o.profit for o in orders if o.filled and o.profit is not None]),
+        _sum([o.start_amount * o.num_shares for o in orders]),
+        len(orders),
+    )
+
+
 def _sma_table(closes: np.ndarray, lengths) -> dict[int, np.ndarray]:
     """Rolling means of ``closes`` for every length in ``lengths``,
     bit-identical to ``functions.windows.rolling_mean_sql`` — NaN where it
@@ -564,20 +764,15 @@ _EDGE_ACTIONS = np.array(["sell", "buy"], dtype=object)
 
 
 def _run_grid(
-    acc: _KernelOutAcc, ticker, dates: np.ndarray, closes: np.ndarray,
-    runs, initial_amount: float, stop_loss_pct, sell_shares, parity: bool,
-    curve: bool,
+    acc: _KernelOutAcc, sim: _Sim, ticker,
+    dates: np.ndarray, days: np.ndarray, closes: np.ndarray,
+    runs, stop_loss_pct, sell_shares, curve: bool,
 ) -> None:
     """Every MA-cross run of ``runs`` over one ticker's bars. The
     signal semantics are ``MACrossStrategy.signal_feed``'s: ``cross``
     is sma_fast > sma_lagging with a null (NaN) SMA counting as false,
     the edges are the first row plus every row where ``cross`` changes,
     and an edge's action is 'buy' where ``cross`` holds, else 'sell'."""
-    if not np.isfinite(closes).all():
-        # Spark orders NaN above every number and skips null closes in
-        # its window averages; this path does neither, so refuse
-        # rather than return a number the Spark windows would not
-        raise ValueError(f"ticker {ticker!r}: null or non-finite close")
     smas = _sma_table(closes, {n for _, f, l in runs for n in (f, l)})
     edge = np.ones(len(closes), dtype=bool)
     for run_id, fast, lagging in runs:
@@ -590,8 +785,8 @@ def _run_grid(
             actions = np.full(len(closes), None, dtype=object)
             actions[idxs] = _EDGE_ACTIONS[buys.astype(np.intp)]
         _run_one_group(
-            acc, ticker, run_id, dates, closes, initial_amount, parity,
-            actions, _ma_cross_walk, idxs, buys, stop_loss_pct, sell_shares,
+            acc, sim, ticker, run_id, dates, days, closes, actions,
+            _ma_cross_walk, idxs, buys, stop_loss_pct, sell_shares,
         )
 
 
@@ -603,13 +798,17 @@ def run_kernel(
     parity: bool = True,
     runs: list[tuple[int, int, int]] | None = None,
     curve: bool = False,
+    benchmark: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """Run the order-matching simulation per (ticker, run_id) group.
 
     ``feed``: (ticker, run_id, date, close, action) — all bars for the
     group, with ``action`` null on non-event bars (the stop-loss scan
     and path-dependent drivers need the full series; Catalyst prunes
-    the unused columns from the scan).
+    the unused columns from the scan). Every group must have strictly
+    increasing dates and finite closes; a group that breaks this bars
+    contract fails the job with a ``ValueError`` naming the ticker and
+    the first offending date (``_check_bars``).
 
     ``runs``: the (run_id, fast, lagging) points to simulate — a
     ``Backtest``'s single point or a sweep's grid. The kernel then
@@ -623,15 +822,22 @@ def run_kernel(
     Spark-built feed, each bar crosses into Python once instead of once
     per run, and no window re-aggregates its frame for every row. Only
     ``strategy="ma_cross"`` (``params`` may set ``stop_loss_pct``) and
-    ``"ma_cross_partial"`` (``sell_shares``). Closes must be finite
-    (``ValueError`` naming the ticker otherwise).
+    ``"ma_cross_partial"`` (``sell_shares``).
 
-    ``curve``: also emit one ``row_type='bar'`` row per input bar and
-    run — the daily net-worth curve ``portfolio.build_portfolio`` would
-    build from the feed and the trade events, bit for bit, with the
-    bar's signal ``action`` (read it with :func:`portfolio_curve`).
-    ``Backtest.run`` needs it; the sweep and ``final_net_worth`` only
-    need the events, and skip the |bars| × |runs| rows.
+    ``curve``: also emit, per group, one ``row_type='bar'`` row per
+    curve row and one ``row_type='stats'`` row. The bar rows are the
+    daily net-worth curve ``portfolio.build_portfolio`` would build from
+    the feed and the trade events, bit for bit, with the bar's signal
+    ``action`` and ``benchmark`` attached as ``attach_benchmark`` would
+    (Q6 positional when ``parity``, by date otherwise; read them with
+    :func:`portfolio_curve`). The stats row holds the per-group
+    aggregates ``metrics.metric_aggregates`` computes from that curve
+    and the group's orders, as the same doubles (``_group_stats``; read
+    it with :func:`kernel_stats`). ``Backtest.run`` needs both; the
+    sweep and ``final_net_worth`` only need the events, and skip the
+    |bars| × |runs| rows.
+
+    ``benchmark``: ``benchmark_series``' (days, sp500) arrays, or None.
 
     Plan shape: repartition on ticker + sortWithinPartitions +
     ``mapInPandas`` with a batch-spanning group walker — NOT
@@ -645,11 +851,14 @@ def run_kernel(
     straight off a per-ticker signal window (``signal_feed``): the
     kernel then adds no exchange.
 
-    Returns the tagged kernel output (KERNEL_OUT_SCHEMA); split with
-    :func:`split_kernel_output` and :func:`portfolio_curve`.
+    Returns the tagged kernel output — KERNEL_OUT_SCHEMA with the
+    curve, KERNEL_LEDGER_SCHEMA without; split with
+    :func:`split_kernel_output`, :func:`portfolio_curve` and
+    :func:`kernel_stats`.
     """
     driver = DRIVERS[strategy]
     params = params or {}
+    sim = _Sim(float(initial_amount), parity, benchmark)
     if runs is not None:
         # the walk options ma_cross_driver / ma_cross_partial_driver read
         if strategy == "ma_cross":
@@ -668,8 +877,10 @@ def run_kernel(
         .sortWithinPartitions("ticker", "run_id", "date")
     )
 
+    schema = KERNEL_OUT_SCHEMA if curve else KERNEL_LEDGER_SCHEMA
+
     def walk(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        acc = _KernelOutAcc()
+        acc = _KernelOutAcc(schema)
         # open group's segments as (dates, closes, actions) array views
         carry: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
         carry_key = None
@@ -681,12 +892,12 @@ def run_kernel(
                 d = np.concatenate([x[0] for x in segs])
                 c = np.concatenate([x[1] for x in segs])
                 a = np.concatenate([x[2] for x in segs])
+            days = _check_bars(key[0], d, c)
             if runs is None:
-                _run_one_group(acc, key[0], key[1], d, c, initial_amount,
-                               parity, a if curve else None, driver, a, params)
+                _run_one_group(acc, sim, key[0], key[1], d, days, c,
+                               a if curve else None, driver, a, params)
             else:
-                _run_grid(acc, key[0], d, c, runs, initial_amount,
-                          *walk_opts, parity, curve)
+                _run_grid(acc, sim, key[0], d, days, c, runs, *walk_opts, curve)
 
         for pdf in batches:
             if len(pdf) == 0:
@@ -718,7 +929,31 @@ def run_kernel(
             run(carry_key, carry)
         yield from acc.flush()
 
-    return srt.mapInPandas(walk, KERNEL_OUT_SCHEMA)
+    return srt.mapInPandas(walk, schema)
+
+
+def benchmark_series(benchmark: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """A (date, sp500) benchmark as ``run_kernel``'s ``benchmark``: its
+    days (datetime64[D], ascending) and sp500 values (NaN for null),
+    with one plain ``collect()`` — a benchmark is one row per trading
+    day, and sorting it here is cheaper than a Spark sort. Rows with a
+    null date are dropped (no attach can match them). Raises
+    ``ValueError`` naming the first duplicate date, since neither
+    alignment is defined for one, or the first NaN or infinite value,
+    which the kernel could not tell from null."""
+    rows = benchmark.selectExpr(
+        "CAST(date AS DATE) AS date", "CAST(sp500 AS DOUBLE) AS sp500"
+    ).collect()
+    rows = sorted((r for r in rows if r[0] is not None), key=lambda r: r[0])
+    days = np.array([r[0] for r in rows], dtype="datetime64[D]")
+    vals = np.array([np.nan if r[1] is None else r[1] for r in rows], dtype=float)
+    dup = np.flatnonzero(days[1:] == days[:-1])
+    if dup.size:
+        raise ValueError(f"benchmark: duplicate date {days[dup[0]]}")
+    bad = next((d for d, v in rows if v is not None and not math.isfinite(v)), None)
+    if bad is not None:
+        raise ValueError(f"benchmark: non-finite sp500 on {bad}")
+    return days, vals
 
 
 def split_kernel_output(kernel_out: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -744,10 +979,21 @@ def split_kernel_output(kernel_out: DataFrame) -> tuple[DataFrame, DataFrame]:
     return orders, events
 
 
-def portfolio_curve(kernel_out: DataFrame) -> DataFrame:
+def portfolio_curve(kernel_out: DataFrame, sp500: bool = False) -> DataFrame:
     """The daily net-worth curve of a ``run_kernel(..., curve=True)``
-    output, with ``portfolio.build_portfolio``'s columns in its order."""
+    output, with ``portfolio.build_portfolio``'s columns in its order
+    and, with ``sp500``, ``attach_benchmark``'s trailing benchmark column."""
     return kernel_out.filter(F.col("row_type") == "bar").selectExpr(
         "ticker", "run_id", "date", "event_close AS close", "action",
         "buy_shares AS buy", "sell_shares AS sell", "shares_owned", "net_worth",
+        *(["sp500"] if sp500 else []),
+    )
+
+
+def kernel_stats(kernel_out: DataFrame) -> DataFrame:
+    """The stats rows of a ``run_kernel(..., curve=True)`` output: the
+    ``metrics.metric_aggregates`` columns, one row per (ticker, run_id),
+    ready for ``metrics.finish_metrics``."""
+    return kernel_out.filter(F.col("row_type") == "stats").select(
+        "ticker", "run_id", *STATS_COLUMNS
     )

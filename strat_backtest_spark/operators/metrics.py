@@ -1,9 +1,19 @@
 """The 18-statistic metrics suite (SURVEY.md §2.11; reference
-strats.py:657-789).
+strats.py:657-789), in two layers:
 
-One pass of window prep + one aggregation per input table, joined on
-(ticker, run_id) — each metric is a Column expression, so adding a
-ticker or a thousand parameter points changes nothing structurally.
+- ``metric_aggregates``: one pass of window prep + one aggregation per
+  input table, joined on (ticker, run_id) — the per-group aggregates
+  (``schemas.STATS_COLUMNS``) of a portfolio and its orders;
+- ``finish_metrics``: one projection from those aggregates to the 18
+  stats (the Q9 ^255 chain, the ``try_divide`` ratios and the
+  risk-free rate).
+
+``compute_metrics`` is the two composed, for any user-supplied
+portfolio, and the Spark-side reference the tests hold the kernel to:
+``Backtest.metrics()`` runs ``finish_metrics`` alone over the stats
+rows the kernel computes with the same arithmetic
+(``kernel._group_stats``), so it adds no window and no exchange after
+the kernel.
 
 The reference's estimator idiosyncrasies are replicated on purpose
 (they are part of its observable behavior):
@@ -65,6 +75,14 @@ def compute_metrics(
     risk_free_rate: float = 0.03,
 ) -> DataFrame:
     """Returns one row per (ticker, run_id) with the full stats suite."""
+    return finish_metrics(
+        metric_aggregates(portfolio, orders), initial_amount, risk_free_rate
+    )
+
+
+def metric_aggregates(portfolio: DataFrame, orders: DataFrame) -> DataFrame:
+    """The per-(ticker, run_id) aggregates the stats are finished from:
+    ticker, run_id and ``schemas.STATS_COLUMNS``."""
     keys = ["ticker", "run_id"]
 
     if "sp500" not in portfolio.columns:
@@ -145,8 +163,14 @@ def compute_metrics(
         F.expr("count(1) AS n_orders"),
     )
 
-    m = port_agg.join(ord_agg, keys, "left")
+    return port_agg.join(ord_agg, keys, "left")
 
+
+def finish_metrics(
+    aggregates: DataFrame, initial_amount: float, risk_free_rate: float = 0.03
+) -> DataFrame:
+    """The 18 stats from ``metric_aggregates`` (or the kernel's stats
+    rows) as one projection."""
     init = _dlit(initial_amount)
     rf = _dlit(risk_free_rate)
     sqrt252 = _dlit(math.sqrt(252))
@@ -173,8 +197,9 @@ def compute_metrics(
     beta = f"try_divide({covariance}, var_r_s)"
     stock_return = "try_divide((end_amount - first_net_worth), first_net_worth)"
 
-    return m.selectExpr(
-        *keys,
+    return aggregates.selectExpr(
+        "ticker",
+        "run_id",
         "start_time",
         "end_time",
         f"{init} AS start_amount",

@@ -2,22 +2,20 @@
 (SURVEY.md §2.9 K10, §2.3 J3/J5, §2.5 W4/W7).
 
 The reference computes the daily net-worth curve vectorized in pandas
-(strats.py:557-579). ``Backtest.run`` takes it from the kernel
-(``run_kernel(curve=True)``), which has the bars and the trade events
-in hand; ``build_portfolio`` is the Spark-side reference form of the
-same curve — feed ⟕ events plus window algebra over (ticker, run_id)
-partitions — that the tests hold the kernel to bit for bit.
-``final_net_worth_from_events`` and ``attach_benchmark`` serve the
-backtest and the sweep directly.
+(strats.py:557-579) and concatenates the benchmark onto it
+(strats.py:592-600). ``Backtest.run`` takes both from the kernel
+(``run_kernel(curve=True, benchmark=...)``), which has the bars, the
+trade events and the benchmark series in hand. ``build_portfolio``
+(feed ⟕ events plus window algebra over (ticker, run_id) partitions)
+and ``attach_benchmark`` are the Spark-side forms of the same curve and
+attach: the path for a user-built portfolio, and the reference the
+tests hold the kernel to bit for bit. ``final_net_worth_from_events``
+serves the backtest and the sweep directly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-
-
-def _w(order_col: str = "date"):
-    return Window.partitionBy("ticker", "run_id").orderBy(order_col)
 
 
 def build_portfolio(feed: DataFrame, trade_events: DataFrame, initial_amount: float) -> DataFrame:
@@ -113,7 +111,9 @@ def attach_benchmark(
     mode: str = "positional",
     row_stats: DataFrame | None = None,
 ) -> DataFrame:
-    """Attach the market-index column (reference: strats.py:592-600).
+    """Attach the market-index column (reference: strats.py:592-600) —
+    the Spark form of the attach ``run_kernel(benchmark=...)`` performs
+    for ``Backtest`` (``kernel._benchmark_rows``).
 
     mode='positional' replicates quirk Q6: the benchmark series is
     truncated to dates ≤ the portfolio's last date and its last

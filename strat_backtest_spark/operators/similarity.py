@@ -51,17 +51,6 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """Cosine with per-vector norms precomputed on the join inputs.
-
-    Norms are a property of one vector; computing them inside the pair
-    expression re-evaluates an O(dim) aggregate once per PAIR instead
-    of once per VECTOR — at n² candidate pairs that is 2/3 of the
-    per-pair arithmetic. Value-identical to :func:`cosine` (same
-    expression, same vector), so oracles need no change."""
-    return _dot(a, b) / (na * nb)
-
-
 def _rounded_cosine_block(Vc, Vq) -> "np.ndarray":
     """(n_corpus, n_query) cosine matrix, rounded HALF_UP to 6 dp —
     the one scoring kernel every similarity path shares (and the exact

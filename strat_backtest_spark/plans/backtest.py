@@ -8,16 +8,21 @@ strats.py:551-554). ``Backtest.run()`` assembles one lazy DataFrame
 graph:
 
     bars (one row per bar) → kernel (mapInPandas group walker per
-         ticker: MA-cross signals, simulation, net-worth curve) → cache
+         ticker: MA-cross signals, simulation, net-worth curve,
+         benchmark attach, metric aggregates) → cache
        ├─ order rows → orders
-       └─ bar rows   → portfolio → benchmark attach → metrics
+       ├─ bar rows   → portfolio (with sp500)
+       └─ stats rows → metrics (one projection: finish_metrics)
 
-and nothing executes until an action. The band strategy feeds the
-kernel its all-bars ``signal_feed`` instead of the plain series.
-``MACrossStrategy.signal_feed`` (Spark windows) and
-``portfolio.build_portfolio`` (feed ⟕ events window algebra) compute
-the same signals and curve on the Spark side; the tests hold the kernel
-to them bit for bit.
+Its one eager job is a plain ``collect()`` of the benchmark's (date,
+sp500) rows, which the kernel receives as driver-side arrays
+(``kernel.benchmark_series``); everything else executes at the first
+action. The band strategy feeds the kernel its all-bars ``signal_feed``
+instead of the plain series. ``MACrossStrategy.signal_feed`` (Spark
+windows), ``portfolio.build_portfolio`` (feed ⟕ events window
+algebra), ``portfolio.attach_benchmark`` and
+``metrics.compute_metrics`` compute the same signals, curve and stats
+on the Spark side; the tests hold the kernel to them bit for bit.
 """
 
 from __future__ import annotations
@@ -28,15 +33,19 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from strat_backtest_spark.operators.kernel import (
+    benchmark_series,
+    kernel_stats,
     portfolio_curve,
     run_kernel,
     split_kernel_output,
 )
-from strat_backtest_spark.operators.metrics import compute_metrics
-from strat_backtest_spark.operators.portfolio import attach_benchmark
-# build_portfolio is not called here (the kernel emits the curve), but
-# perfbench/layers.py wraps every backtest layer under its name in this
-# module
+from strat_backtest_spark.operators.metrics import finish_metrics
+# build_portfolio, attach_benchmark and compute_metrics are not called
+# here (the kernel emits the curve, the attached benchmark and the
+# metric aggregates), but perfbench/layers.py wraps every backtest
+# layer under its name in this module
+from strat_backtest_spark.operators.metrics import compute_metrics  # noqa: F401
+from strat_backtest_spark.operators.portfolio import attach_benchmark  # noqa: F401
 from strat_backtest_spark.operators.portfolio import build_portfolio  # noqa: F401
 from strat_backtest_spark.operators.signals import (
     band_signals,
@@ -116,11 +125,14 @@ class Backtest:
     on ticker-partitioned parquet); omit to backtest every ticker in
     one job.
 
-    An MA-cross backtest refuses a null or non-finite close: the job
-    that reads ``run()``, ``metrics()``, ``orders`` or
-    ``final_net_worth()`` fails with the kernel's ``ValueError`` naming
-    the ticker (raised in the Python worker, so Spark reports it
-    wrapped in a ``PythonException``)."""
+    The kernel enforces the bars contract: a (ticker, run) with a
+    duplicate date or a null or non-finite close makes the job that
+    reads ``run()``, ``metrics()``, ``orders`` or ``final_net_worth()``
+    fail with a ``ValueError`` naming the ticker and the date (raised
+    in the Python worker, so Spark reports it wrapped in a
+    ``PythonException``). ``run()`` itself refuses a ``benchmark``
+    with a duplicate date or a NaN or infinite value; it reads the
+    benchmark's ``date`` and ``sp500`` (as DOUBLE) columns."""
 
     bars: DataFrame
     initial_amount: float
@@ -131,6 +143,7 @@ class Backtest:
 
     _orders: Optional[DataFrame] = None
     _portfolio: Optional[DataFrame] = None
+    _stats: Optional[DataFrame] = None
     _cached: list = field(default_factory=list)
 
     def _bars(self) -> DataFrame:
@@ -138,7 +151,7 @@ class Backtest:
             return self.bars
         return self.bars.filter(F.col("ticker") == self.ticker.lower())
 
-    def _kernel_out(self, bars: DataFrame, curve: bool) -> DataFrame:
+    def _kernel_out(self, bars: DataFrame, curve: bool, benchmark=None) -> DataFrame:
         runs = self.strategy.kernel_runs()
         feed = (
             self.strategy.signal_feed(bars)
@@ -153,20 +166,26 @@ class Backtest:
             parity=self.parity,
             runs=runs,
             curve=curve,
+            benchmark=benchmark,
         )
 
     def run(self) -> DataFrame:
         self.release()
-        # consumed by the orders, the curve and the benchmark attach's
-        # row stats: cache so the simulation runs once
-        kernel_out = self._kernel_out(self._bars(), curve=True).cache()
-        self._cached = [kernel_out]
-        orders, _ = split_kernel_output(kernel_out)
-        portfolio = portfolio_curve(kernel_out)
+        bench = None
         if self.benchmark is not None:
-            mode = "positional" if self.parity else "date"
-            portfolio = attach_benchmark(portfolio, self.benchmark, mode=mode)
-        self._orders = orders
+            bench = benchmark_series(self.benchmark)
+        # consumed by the orders, the curve and the metrics: cache so
+        # the simulation runs once
+        kernel_out = self._kernel_out(self._bars(), curve=True, benchmark=bench).cache()
+        self._cached = [kernel_out]
+        self._orders, _ = split_kernel_output(kernel_out)
+        self._stats = kernel_stats(kernel_out)
+        portfolio = portfolio_curve(kernel_out, sp500=bench is not None)
+        if bench is not None and not self.parity:
+            # attach_benchmark's by-date join leads with its key
+            portfolio = portfolio.select(
+                "date", *[c for c in portfolio.columns if c != "date"]
+            )
         self._portfolio = portfolio
         return portfolio
 
@@ -188,11 +207,12 @@ class Backtest:
         self.release()
 
     def metrics(self, risk_free_rate: float = 0.03) -> DataFrame:
-        if self._portfolio is None:
+        """The 18-stat suite, one row per (ticker, run_id): one
+        projection over the kernel's stats rows — no window and no
+        exchange after the cached kernel output."""
+        if self._stats is None:
             self.run()
-        return compute_metrics(
-            self._portfolio, self._orders, self.initial_amount, risk_free_rate
-        )
+        return finish_metrics(self._stats, self.initial_amount, risk_free_rate)
 
     @property
     def orders(self) -> DataFrame:

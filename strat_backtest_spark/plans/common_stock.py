@@ -53,32 +53,6 @@ def ticker_mentions(
     )
 
 
-def common_stock_sweep(
-    bars: DataFrame,
-    mentions: DataFrame,
-    initial_amount: float,
-    fast_range=(10, 40, 10),
-    lagging_range=(50, 150, 50),
-) -> DataFrame:
-    """O5 — optimize the strategy on the most-talked-about stocks:
-    restrict bars to the mentioned tickers (broadcast semi-join), then
-    ONE grid-search job over every (ticker, grid point). The reference
-    loops stocks serially, one full re-optimization each
-    (optimize.py:84-98); here tickers × points fill the cluster."""
-    from strat_backtest_spark.operators.optimize import grid_search
-
-    # mentions is a top-n (tiny by construction) but its DAG is the
-    # whole corpus regex pipeline — pin it so the sweep's several
-    # consumers don't re-run document extraction per plan branch
-    mentions = mentions.localCheckpoint(eager=True)
-    sel = bars.join(
-        F.broadcast(mentions.select(F.col("symbol").alias("ticker"))),
-        "ticker",
-        "left_semi",
-    )
-    return grid_search(sel, initial_amount, fast_range, lagging_range)
-
-
 # ===========================================================================
 # catalog entries
 # ===========================================================================

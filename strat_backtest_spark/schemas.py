@@ -74,16 +74,52 @@ EVENTS_SCHEMA = T.StructType(
     ]
 )
 
+# The per-(ticker, run_id) aggregates the metrics suite is finished from
+# (operators/metrics.py: ``metric_aggregates`` computes them in Spark,
+# the kernel's 'stats' row carries them). start_time, end_time and
+# end_amount share the order columns of the same name and type.
+_STATS_FIELDS = [
+    T.StructField(name, dtype, True)
+    for name, dtype in [
+        ("first_net_worth", T.DoubleType()),
+        ("max_drawdown_pct", T.DoubleType()),
+        ("avg_drawdown_pct", T.DoubleType()),
+        ("mean_r_s", T.DoubleType()),
+        ("std_r_s", T.DoubleType()),
+        ("var_r_s", T.DoubleType()),
+        ("mean_r_m", T.DoubleType()),
+        ("std_r_m", T.DoubleType()),
+        ("cov_num", T.DoubleType()),
+        ("n_rows", T.LongType()),
+        ("sp500_last", T.DoubleType()),
+        ("sp500_first", T.DoubleType()),
+        ("years", T.LongType()),
+        ("avg_hold_days", T.DoubleType()),
+        ("avg_losses", T.DoubleType()),
+        ("avg_profits", T.DoubleType()),
+        ("biggest_loss", T.DoubleType()),
+        ("biggest_win", T.DoubleType()),
+        ("loss_sum", T.DoubleType()),
+        ("profit_sum", T.DoubleType()),
+        ("filled_profit_sum", T.DoubleType()),
+        ("total_risked", T.DoubleType()),
+        ("n_orders", T.LongType()),
+    ]
+]
+STATS_COLUMNS = ("start_time", "end_time", "end_amount", *(f.name for f in _STATS_FIELDS))
+
 # Kernel output rows are tagged so one kernel pass can emit the order
 # ledger, the trade events and, with ``run_kernel(curve=True)``, the
-# per-bar net-worth curve (split downstream by row_type). A 'bar' row
-# reuses the event columns for build_portfolio's 0-filled buy/sell,
-# forward-filled shares_owned and the bar's close (event_close).
-KERNEL_OUT_SCHEMA = T.StructType(
+# per-bar net-worth curve with the benchmark attached plus one stats
+# row per group (split downstream by row_type). Without the curve the
+# kernel emits the narrower KERNEL_LEDGER_SCHEMA: a sweep's order and
+# event rows carry no curve or stats columns, not even as nulls.
+KERNEL_LEDGER_SCHEMA = T.StructType(
     [
         T.StructField("ticker", T.StringType(), False),
         T.StructField("run_id", T.LongType(), False),
-        T.StructField("row_type", T.StringType(), False),  # 'order' | 'event' | 'bar'
+        # 'order' | 'event', and with the curve 'bar' | 'stats'
+        T.StructField("row_type", T.StringType(), False),
         # order fields
         T.StructField("order_id", T.LongType(), True),
         T.StructField("num_shares", T.DoubleType(), True),
@@ -103,9 +139,22 @@ KERNEL_OUT_SCHEMA = T.StructType(
         # FINAL net worth (grid/SA objectives) aggregate events
         # directly instead of joining back onto the |bars|x|runs| feed
         T.StructField("event_close", T.DoubleType(), True),
-        # bar fields: the feed's signal action and the curve's value
+    ]
+)
+# A 'bar' row reuses the event columns for build_portfolio's 0-filled
+# buy/sell, forward-filled shares_owned and the bar's close
+# (event_close); a benchmark-only row of the positional (Q6) attach is
+# a 'bar' row with only date and sp500. A 'stats' row fills
+# STATS_COLUMNS.
+KERNEL_OUT_SCHEMA = T.StructType(
+    [
+        *KERNEL_LEDGER_SCHEMA.fields,
+        # bar fields: the feed's signal action, the curve's value and
+        # the attached benchmark
         T.StructField("action", T.StringType(), True),
         T.StructField("net_worth", T.DoubleType(), True),
+        T.StructField("sp500", T.DoubleType(), True),
+        *_STATS_FIELDS,
     ]
 )
 

@@ -1,8 +1,11 @@
 """Exact differential test of ``Backtest``: the kernel computes the
-MA-cross signals and the daily net-worth curve itself, so every output
-must be the same double, compared by ``repr``, as the Spark-side
-reference chain ``signal_feed`` → ``run_kernel`` (action feed) →
-``build_portfolio`` → ``attach_benchmark`` → ``compute_metrics``."""
+MA-cross signals, the daily net-worth curve, the benchmark attach and
+the metric aggregates itself, so every output must be the same double,
+compared by ``repr``, as the Spark-side reference chain
+``signal_feed`` → ``run_kernel`` (action feed) → ``build_portfolio`` →
+``attach_benchmark`` → ``compute_metrics``. Also the bars contract:
+duplicate dates, bad closes and a duplicate benchmark date fail by
+name."""
 
 from datetime import date, timedelta
 
@@ -17,9 +20,15 @@ N_DAYS = 300
 def bars_and_benchmark(spark):
     """Seeded walks plus the edge shapes: a late-starting ticker, a
     series shorter than the lagging windows, one bar and flat closes.
-    The benchmark misses two days inside the late ticker's span, so the
-    positional (Q6) attach reaches back before its first bar and leaves
-    benchmark-only rows in its portfolio."""
+    Benchmark calendars, by name:
+
+    - ``gappy`` misses two days inside the late ticker's span, so the
+      positional (Q6) attach reaches back before its first bar and
+      leaves benchmark-only rows in its portfolio;
+    - ``late`` starts after the first bar (null sp500_first, so alpha
+      is null);
+    - ``ends_early`` ends before the last bar (null sp500_last);
+    - ``long`` runs past the last bar (Q6 drops the tail)."""
     rng = np.random.default_rng(5)
     series = {  # ticker: (first day, closes)
         "walk0": (0, 50.0 * np.exp(np.cumsum(rng.normal(0.0, 0.02, N_DAYS)))),
@@ -39,20 +48,25 @@ def bars_and_benchmark(spark):
         ],
         "ticker string, date date, close double",
     ).localCheckpoint()
-    index = 1_000.0 * np.exp(np.cumsum(rng.normal(0.0, 0.01, N_DAYS)))
-    bench = spark.createDataFrame(
-        [
-            (d0 + timedelta(days=i), float(v))
-            for i, v in enumerate(index)
-            if i not in (200, 201)
-        ],
-        "date date, sp500 double",
-    ).localCheckpoint()
-    return bars, bench
+    index = 1_000.0 * np.exp(np.cumsum(rng.normal(0.0, 0.01, N_DAYS + 40)))
+    days = {
+        "gappy": [i for i in range(N_DAYS) if i not in (200, 201)],
+        "late": range(30, N_DAYS),
+        "ends_early": range(N_DAYS - 50),
+        "long": range(N_DAYS + 40),
+    }
+    benches = {
+        name: spark.createDataFrame(
+            [(d0 + timedelta(days=i), float(index[i])) for i in keep],
+            "date date, sp500 double",
+        ).localCheckpoint()
+        for name, keep in days.items()
+    }
+    return bars, benches
 
 
-def _reference(bars, bench, strategy, parity):
-    """The Spark-side chain the kernel curve replaces."""
+def _reference(bars, bench, strategy, parity, rf):
+    """The Spark-side chain the kernel curve, attach and stats replace."""
     from pyspark.sql import functions as F
 
     from strat_backtest_spark.operators.kernel import run_kernel, split_kernel_output
@@ -75,7 +89,7 @@ def _reference(bars, bench, strategy, parity):
     run_ids = bars.sparkSession.sql("SELECT CAST(0 AS BIGINT) AS run_id")
     return {
         "portfolio": port,
-        "metrics": compute_metrics(port, orders, INIT),
+        "metrics": compute_metrics(port, orders, INIT, rf),
         "orders": orders,
         "final": final_net_worth_from_events(bars, events, run_ids, INIT),
         "last_point": port.groupBy("ticker", "run_id").agg(
@@ -100,17 +114,25 @@ def _assert_same(got, want, keys, what):
 
 
 def _strategies():
+    """case: (strategy, parity, benchmark calendar or None, risk-free rate)."""
     from strat_backtest_spark.plans.backtest import BandStrategy, MACrossStrategy
 
+    ma = MACrossStrategy(3, 8)
     return {
-        "ma3x8": (MACrossStrategy(3, 8), True, True),
-        "ma5x20_no_benchmark": (MACrossStrategy(5, 20), True, False),
-        "fast_eq_lagging": (MACrossStrategy(8, 8), True, True),
-        "fast_gt_lagging": (MACrossStrategy(20, 5), True, True),
-        "stop_loss": (MACrossStrategy(3, 8, stop_loss_pct=0.95), True, True),
-        "sell_shares": (MACrossStrategy(3, 8, sell_shares=2.0), True, True),
-        "band": (BandStrategy(), True, True),
-        "no_parity": (MACrossStrategy(3, 8), False, True),
+        "ma3x8": (ma, True, "gappy", 0.03),
+        "ma5x20_no_benchmark": (MACrossStrategy(5, 20), True, None, 0.03),
+        "fast_eq_lagging": (MACrossStrategy(8, 8), True, "gappy", 0.03),
+        "fast_gt_lagging": (MACrossStrategy(20, 5), True, "gappy", 0.03),
+        "stop_loss": (MACrossStrategy(3, 8, stop_loss_pct=0.95), True, "gappy", 0.03),
+        "sell_shares": (MACrossStrategy(3, 8, sell_shares=2.0), True, "gappy", 0.03),
+        "band": (BandStrategy(), True, "gappy", 0.03),
+        "no_parity": (ma, False, "gappy", 0.03),
+        "bench_late": (ma, True, "late", 0.05),
+        "bench_late_no_parity": (ma, False, "late", 0.03),
+        "bench_ends_early": (ma, True, "ends_early", 0.03),
+        "bench_ends_early_no_parity": (ma, False, "ends_early", 0.03),
+        "bench_long": (ma, True, "long", 0.03),
+        "bench_long_no_parity": (ma, False, "long", 0.03),
     }
 
 
@@ -118,17 +140,18 @@ def _strategies():
 def test_backtest_equals_spark_reference_exactly(bars_and_benchmark, case):
     from strat_backtest_spark.plans.backtest import Backtest
 
-    strategy, parity, with_bench = _strategies()[case]
-    bars, bench = bars_and_benchmark
-    bench = bench if with_bench else None
-    want = _reference(bars, bench, strategy, parity)
+    strategy, parity, calendar, rf = _strategies()[case]
+    bars, benches = bars_and_benchmark
+    bench = None if calendar is None else benches[calendar]
+    want = _reference(bars, bench, strategy, parity, rf)
 
     fresh = Backtest(bars, INIT, strategy, parity=parity)
     _assert_same(fresh.final_net_worth(), want["final"], ["ticker"], "final_net_worth")
     with Backtest(bars, INIT, strategy, benchmark=bench, parity=parity) as bt:
         port = bt.run()
         _assert_same(port, want["portfolio"], ["ticker", "run_id", "date"], "portfolio")
-        _assert_same(bt.metrics(), want["metrics"], ["ticker"], "metrics")
+        metrics = bt.metrics() if rf == 0.03 else bt.metrics(risk_free_rate=rf)
+        _assert_same(metrics, want["metrics"], ["ticker"], "metrics")
         _assert_same(bt.orders, want["orders"], ["ticker", "order_id"], "orders")
         _assert_same(
             bt.final_net_worth(), want["last_point"], ["ticker"], "final after run"
@@ -140,6 +163,11 @@ def test_backtest_equals_spark_reference_exactly(bars_and_benchmark, case):
             assert {r["ticker"] for r in orders} >= {"walk0", "walk1", "late"}
             late = [r for r in port.collect() if r["ticker"] == "late"]
             assert any(r["net_worth"] is None for r in late)
+        if calendar in ("late", "ends_early"):
+            # walk0 spans the whole calendar: its first (late) or last
+            # (ends_early) row has no benchmark value
+            [walk0] = [r for r in metrics.collect() if r["ticker"] == "walk0"]
+            assert walk0["alpha"] is None and walk0["beta"] is not None
 
 
 @pytest.mark.parametrize("bad", [float("nan"), float("inf"), None])
@@ -158,3 +186,56 @@ def test_backtest_refuses_bad_close(spark, bad):
             bt.run().collect()
     with pytest.raises(Exception, match="ValueError: ticker 'bad': null or non-finite close"):
         Backtest(bars, INIT, MACrossStrategy(1, 2)).final_net_worth().collect()
+
+
+def _bars_with(spark, ticker_rows):
+    """One clean ticker plus ``ticker_rows``: (ticker, day, close)."""
+    return spark.createDataFrame(
+        [("ok", date(2020, 1, d), 1.0 + d) for d in range(1, 11)]
+        + [(t, date(2020, 1, d), c) for t, d, c in ticker_rows],
+        "ticker string, date date, close double",
+    )
+
+
+@pytest.mark.parametrize(
+    "strategy,defect",
+    [("ma", "duplicate"), ("band", "duplicate"), ("band", "nan")],
+)
+def test_backtest_refuses_broken_bars_contract(spark, strategy, defect):
+    """Every strategy refuses a ticker whose dates repeat, and the band
+    strategy a NaN close, naming the ticker and the first offending
+    date, instead of simulating it."""
+    from strat_backtest_spark.plans.backtest import (
+        Backtest,
+        BandStrategy,
+        MACrossStrategy,
+    )
+
+    rows = [("bad", d, 2.0 + (d % 3)) for d in range(1, 11)]
+    if defect == "duplicate":
+        rows.append(("bad", 4, 9.0))
+        match = "ValueError: ticker 'bad': duplicate or null date 2020-01-04"
+    else:
+        rows[5] = ("bad", 6, float("nan"))
+        match = "ValueError: ticker 'bad': null or non-finite close on 2020-01-06"
+    bars = _bars_with(spark, rows)
+    strat = MACrossStrategy(1, 2) if strategy == "ma" else BandStrategy()
+    with pytest.raises(Exception, match=match):
+        with Backtest(bars, INIT, strat) as bt:
+            bt.metrics().collect()
+    with pytest.raises(Exception, match=match):
+        Backtest(bars, INIT, strat).final_net_worth().collect()
+
+
+def test_backtest_refuses_duplicate_benchmark_date(spark):
+    """A benchmark with a repeated date has no defined alignment:
+    ``run()`` refuses it on the driver, naming the date."""
+    from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
+
+    bars = _bars_with(spark, [])
+    bench = spark.createDataFrame(
+        [(date(2020, 1, d), 100.0 + d) for d in (1, 2, 3, 3, 4, 5)],
+        "date date, sp500 double",
+    )
+    with pytest.raises(ValueError, match="benchmark: duplicate date 2020-01-03"):
+        Backtest(bars, INIT, MACrossStrategy(1, 2), benchmark=bench).run()

@@ -131,6 +131,19 @@ def test_evaluate_params_rejects_bad_input(spark):
         evaluate_params(bars, [(0, 0, 2)], 10_000.0)
 
 
+def test_evaluate_params_refuses_duplicate_dates(spark):
+    """A sweep refuses a ticker with a repeated date instead of scoring
+    it, naming the ticker and the date."""
+    from strat_backtest_spark.operators.optimize import evaluate_params
+
+    bars = spark.createDataFrame(
+        [("x", date(2020, 1, d), float(d)) for d in (1, 2, 3, 3, 4, 5)],
+        "ticker string, date date, close double",
+    )
+    with pytest.raises(Exception, match="ticker 'x': duplicate or null date 2020-01-03"):
+        evaluate_params(bars, [(0, 1, 2), (1, 2, 3)], 10_000.0).collect()
+
+
 def test_params_local_relation_empty_grid(spark):
     """expand_grid over an empty range must return an empty typed
     relation, not raise a ParseException (VALUES with no rows)."""

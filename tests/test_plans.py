@@ -196,11 +196,14 @@ def test_q42_metrics_plan_shape(spark):
     scale properties, ratcheted so a refactor cannot silently regress:
     every wide exchange partitions on ticker (or a per-ticker grouping
     key) — no Exchange SinglePartition funnel — and the exchange/scan
-    counts stay at or below the audited plan (9 exchanges incl. reuses,
-    6 scan mentions: the kernel, which emits the net-worth curve
-    itself, + one window-prep pass feeding 4 frame specs over ONE
-    (ticker, run) partitioning + broadcast benchmark attach). The
-    backtest itself joins nothing: no feed ⟕ events portfolio join."""
+    counts stay at or below the audited plan (2 exchanges, 2 scan
+    mentions: the bars-from-events aggregation and the kernel's ticker
+    repartition over one source scan). The kernel attaches the
+    benchmark (collected on the driver) and emits the metric
+    aggregates as stats rows, so ``Backtest.metrics()`` is one
+    projection over one scan of the cached kernel output: no Window
+    and no exchange besides the kernel's, no broadcast. The backtest
+    itself joins nothing: no feed ⟕ events portfolio join."""
     import re
 
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
@@ -212,13 +215,26 @@ def test_q42_metrics_plan_shape(spark):
     assert "Exchange SinglePartition" not in p, "global funnel leaked into q42"
     keys = set(re.findall(r"hashpartitioning\((\w+)", p))
     assert keys <= {"ticker", "_groupingexpression"}, f"unexpected shuffle keys: {keys}"
-    assert len(_distinct_exchanges(p)) <= 9, "q42 gained exchanges"
-    assert p.count("Scan parquet") <= 6, "q42 gained source scans"
+    assert len(_distinct_exchanges(p)) <= 2, "q42 gained exchanges"
+    assert p.count("Scan parquet") <= 2, "q42 gained source scans"
+    assert "Window" not in p, "q42 computes its metrics in Spark windows again"
 
     spark.catalog.clearCache()
-    bars = bars_from_events(_t(spark, SF_MED, "events"))
-    with Backtest(bars, 10_000.0, MACrossStrategy(fast=3, lagging=8)) as bt:
+    bars = bars_from_events(_t(spark, SF_MED, "events")).localCheckpoint()
+    bench = bars.filter("ticker = '0'").selectExpr("date", "close AS sp500")
+    with Backtest(
+        bars, 10_000.0, MACrossStrategy(fast=3, lagging=8), benchmark=bench
+    ) as bt:
         assert "Join" not in _formatted(bt.run()), "portfolio joins feed and events"
+        m = _formatted(bt.metrics())
+    assert "Window" not in m, "metrics() builds Spark windows"
+    assert len(_distinct_exchanges(m)) == 1, "metrics() shuffles after the kernel"
+    assert set(re.findall(r"hashpartitioning\((.*?)#\d+, \d+\)", m)) == {
+        "ticker"
+    }, "the only exchange is the kernel's ticker repartition"
+    assert len(set(re.findall(r"InMemoryTableScan \(\d+\)", m))) == 1, (
+        "metrics() scans the kernel cache more than once"
+    )
 
 
 def test_q72_stoploss_plan_shape(spark):
