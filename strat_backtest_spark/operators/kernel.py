@@ -103,10 +103,10 @@ class _OrderBook:
         self.total_shares = 0.0
         self._next_id = 0
         self.parity = parity
-        # Profit of completed orders dropped from `completed` (the
-        # streaming kernel persists only open orders across micro-
-        # batches; closed-order profit folds into this base so Q2's
-        # re-add-on-every-call semantics survive the state handoff).
+        # The running sum of the profits of completed orders dropped
+        # from `completed`: the streaming state folds away the settled
+        # prefix of `completed`, and order_worth continues this sum, so
+        # Q2's re-add-on-every-call sees the same doubles.
         self.profit_base = 0.0
 
     def _new_id(self) -> int:
@@ -169,15 +169,17 @@ class _OrderBook:
 
     def order_worth(self) -> float:
         # Reference strats.py:215-224 (with Q3 inside value()).
-        return self.profit_base + sum(
-            o.profit_loss() or 0.0 for o in self.completed
+        return sum(
+            (o.profit_loss() or 0.0 for o in self.completed), self.profit_base
         ) - sum(o.value() for o in self.open_orders)
 
 
 class TradingEngine:
     """Per-group simulation state (reference: Strategy,
-    strats.py:252-420). ``dates``/``closes`` are the group's full bar
-    series, needed by the stop-loss range scan (strats.py:318-322)."""
+    strats.py:252-420). ``dates``/``closes`` are the group's bar series,
+    needed by the stop-loss range scan (strats.py:318-322): the whole
+    series in a batch walk, the retained bars plus the step's in a
+    streaming step."""
 
     def __init__(self, dates: np.ndarray, closes: np.ndarray, initial_amount: float, parity: bool = True):
         self.dates = dates
@@ -257,32 +259,39 @@ class TradingEngine:
 
 # ---------------------------------------------------------------------------
 # strategy decision drivers — the imperative residue of each Strategy
-# subclass. MA-cross signals are computed here, from one plain bar
-# series per ticker, for every Backtest and sweep (see _sma_table and
-# run_kernel's ``runs``); the action-column drivers below walk a feed
-# whose edges were marked by the Spark-side reference
-# (``MACrossStrategy.signal_feed``). The band driver decides on every bar.
+# subclass. Each walk resumes from a small carry, so the streaming
+# kernel (streaming/backtest_stream.py) steps through a bar stream
+# with these same functions; a batch walk is one step from the empty
+# carry. MA-cross signals come from one plain bar series per ticker
+# (_sma_table, _cross_edges, run_kernel's ``runs``); the action-column
+# drivers below walk a feed whose edges were marked by the Spark-side
+# reference (``MACrossStrategy.signal_feed``). The band driver decides
+# on every bar.
 # ---------------------------------------------------------------------------
 
 def _ma_cross_walk(
     eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
     idxs: np.ndarray, buys: np.ndarray,
     stop_loss_pct: float | None = None, sell_shares: float = -1,
-) -> None:
+    first_buy=None,
+):
     """Reference custom_strats.py:41-62: buy at every up-cross; sell at
     down-crosses strictly after the first buy. ``idxs`` are the cross
     edges' row indices (ascending) and ``buys`` marks the up-crosses
     among them. One loop for every MA-cross caller: the action-column
-    drivers below and ``run_kernel(runs=...)``, which finds the edges
-    itself. ``sell_shares`` is -1 (close the oldest order) or the fixed
-    share count of the partial-sell driver. Drivers take plain numpy
-    views (not per-group pandas frames): a grid sweep runs thousands of
-    simulations and per-group pandas masking was a measurable slice of
-    the sweep."""
-    buy_pos = np.flatnonzero(buys)
-    if buy_pos.size == 0:
-        return
-    first_buy = dates[idxs[buy_pos[0]]]
+    drivers below, ``run_kernel(runs=...)`` and the streaming kernel,
+    which find the edges themselves. ``sell_shares`` is -1 (close the
+    oldest order) or the fixed share count of the partial-sell driver.
+    ``first_buy``: the carry, the date of the first up-cross walked
+    before (None: none yet); returns the carry after these edges.
+    Drivers take plain numpy views (not per-group pandas frames): a
+    grid sweep runs thousands of simulations and per-group pandas
+    masking was a measurable slice of the sweep."""
+    if first_buy is None:
+        buy_pos = np.flatnonzero(buys)
+        if buy_pos.size == 0:
+            return None
+        first_buy = dates[idxs[buy_pos[0]]]
     for i, is_buy in zip(idxs, buys):
         if is_buy:
             close = closes[i]
@@ -292,12 +301,26 @@ def _ma_cross_walk(
             )
         elif dates[i] > first_buy:
             eng.sell(dates[i], closes[i], num_shares=sell_shares)
+    return first_buy
 
 
 def _action_edges(actions: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(edge indices, is-buy) of a feed's buy/sell action column."""
     idxs = np.flatnonzero((actions == "buy") | (actions == "sell"))
     return idxs, actions[idxs] == "buy"
+
+
+def _cross_edges(cross: np.ndarray, prev=None) -> tuple[np.ndarray, np.ndarray]:
+    """(edge indices, is-buy) of a ``cross`` series (sma_fast >
+    sma_lagging, a null SMA counting as false): every row where
+    ``cross`` changes, and the first row unless it continues ``prev``,
+    the carry — the ``cross`` of the bar before (None: no bar before).
+    An edge is a buy where ``cross`` holds."""
+    edge = np.empty(len(cross), dtype=bool)
+    edge[:1] = prev is None or cross[:1] != prev
+    np.not_equal(cross[1:], cross[:-1], out=edge[1:])
+    idxs = np.flatnonzero(edge)
+    return idxs, cross[idxs]
 
 
 def ma_cross_driver(
@@ -313,28 +336,35 @@ def ma_cross_driver(
 
 def band_driver(
     eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
-    actions: np.ndarray, params: dict,
-) -> None:
-    """Reference Ten_Percent_Strat (custom_strats.py:83-101): thresholds
-    anchored to the bar of the LAST transaction — fully path-dependent,
-    the canonical proof the kernel API generalizes."""
+    actions: np.ndarray, params: dict, carry=None, lo: int = 0,
+):
+    """Reference Ten_Percent_Strat (custom_strats.py:83-101): buy on the
+    first bar, then sell when the close rises to anchor·sell and buy
+    again when it falls to anchor·buy, the anchor re-pinning to the
+    close of each move — fully path-dependent, the canonical proof the
+    kernel API generalizes. Walks bars ``lo`` onwards from ``carry``,
+    (anchor close, the last move was a sell) with a None anchor (or no
+    carry) before the first bar. Returns (carry, moves), ``moves`` the
+    (bar index, action) of each decision, taken or not by the engine."""
     sell_mult = params.get("sell", 1.05)
     buy_mult = params.get("buy", 0.99)
-    if len(closes) == 0:
-        return
-    anchor = 0
-    last_move_sell = False
-    eng.buy(dates[0], closes[0])
-    for i in range(1, len(closes)):
+    anchor, last_move_sell = carry or (None, False)
+    moves = []
+    for i in range(lo, len(closes)):
         value = closes[i]
-        if value >= closes[anchor] * sell_mult and not last_move_sell:
-            eng.sell(dates[i], value)
-            anchor = i
-            last_move_sell = True
-        elif value <= closes[anchor] * buy_mult and last_move_sell:
+        if anchor is None:
             eng.buy(dates[i], value)
-            anchor = i
-            last_move_sell = False
+            moves.append((i, "buy"))
+        elif value >= anchor * sell_mult and not last_move_sell:
+            eng.sell(dates[i], value)
+            moves.append((i, "sell"))
+        elif value <= anchor * buy_mult and last_move_sell:
+            eng.buy(dates[i], value)
+            moves.append((i, "buy"))
+        else:
+            continue
+        anchor, last_move_sell = value, moves[-1][1] == "sell"
+    return (anchor, last_move_sell), moves
 
 
 def ma_cross_partial_driver(
@@ -525,24 +555,12 @@ def _run_one_group(
     orders = [*eng.book.completed, *eng.book.open_orders]
     for o in orders:
         acc.add_order(ticker, run_id, o)
-    buy_orders, sell_orders, owned = eng.buy_orders, eng.sell_orders, eng.book.shares_owned
-    events = []
-    for d in sorted(set(buy_orders) | set(sell_orders) | set(owned)):
-        # buy_orders holds order objects: read num_shares NOW so the
-        # reference's post-hoc mutation (Q4) is reflected, matching
-        # `buy * close` evaluated after the sim (strats.py:570).
-        b = buy_orders.get(d)
-        i = np.searchsorted(dates, d)
-        ev = (
-            b.num_shares if b is not None else None,
-            sell_orders.get(d), owned.get(d),
-        )
+    events = _trade_events(eng)
+    for d, i, *ev in events:
         acc.add("event", ticker, run_id, d, *ev, float(closes[i]))
-        if actions is not None:
-            events.append((i, *ev))
     if actions is None:
         return
-    buy, sell, shares, net = _portfolio_curve(closes, events, sim.initial_amount)
+    buy, sell, shares, net, *_ = _portfolio_curve(closes, events, sim.initial_amount)
     out_days, sp500 = _benchmark_rows(days, sim.benchmark, sim.parity)
     if len(out_days) > len(days):  # benchmark-only rows (Q6)
         at = np.searchsorted(out_days, days)
@@ -587,20 +605,42 @@ def _spread(x: np.ndarray, at: np.ndarray, n: int) -> np.ndarray:
     return out
 
 
-def _portfolio_curve(closes: np.ndarray, events, initial_amount: float):
-    """(buy, sell, shares_owned, net_worth) per bar from one group's
-    trade ``events`` — (bar index, buy, sell, shares owned) with None
-    for a missing value — in ``portfolio.build_portfolio``'s exact IEEE
-    order: buy and sell 0-filled; shares_owned forward-filled, then
-    0-filled; the running sums of buy·close and sell·close start at
-    0.0 and add left to right, as Spark's growing-frame SUM does
-    (np.cumsum is sequential, never pairwise); then
-    ((shares·close − Σbuy·close) + Σsell·close) + initial_amount."""
+def _trade_events(eng: TradingEngine) -> list[tuple]:
+    """(date, bar index in ``eng.dates``, buy, sell, shares owned) per
+    trade day of the engine, ascending, None where the day has no such
+    value. Buy shares are read from the order objects NOW, so the
+    reference's post-hoc mutation (Q4) is reflected, matching
+    `buy * close` evaluated after the sim (strats.py:570)."""
+    buy_orders, sell_orders, owned = eng.buy_orders, eng.sell_orders, eng.book.shares_owned
+    out = []
+    for d in sorted(set(buy_orders) | set(sell_orders) | set(owned)):
+        b = buy_orders.get(d)
+        out.append((
+            d, np.searchsorted(eng.dates, d), b.num_shares if b is not None else None,
+            sell_orders.get(d), owned.get(d),
+        ))
+    return out
+
+
+def _portfolio_curve(
+    closes: np.ndarray, events, initial_amount: float, carry=(0.0, 0.0, 0.0),
+):
+    """(buy, sell, shares_owned, net_worth, Σbuy·close, Σsell·close) per
+    bar from one group's ``_trade_events`` in
+    ``portfolio.build_portfolio``'s exact IEEE order: buy and sell
+    0-filled; shares_owned forward-filled, then filled from the carry;
+    the running sums of buy·close and sell·close add left to right from
+    the carry, as Spark's growing-frame SUM does from 0.0 (np.cumsum is
+    sequential, never pairwise, so a sum continued from a carried one
+    is the same double as one long sum); then ((shares·close − Σbuy·close)
+    + Σsell·close) + initial_amount. ``carry``: (Σbuy·close, Σsell·close,
+    shares owned) of the bar before the first — zeros for a whole series,
+    the streaming state's values before its first retained bar."""
     m = len(closes)
     buy, sell = np.zeros(m), np.zeros(m)
     last = np.full(m, -1)  # index of the bar's last shares_owned value
     owned: list = []
-    for i, b, s, o in events:
+    for _, i, b, s, o in events:
         if b is not None:
             buy[i] = b
         if s is not None:
@@ -609,13 +649,12 @@ def _portfolio_curve(closes: np.ndarray, events, initial_amount: float):
             last[i] = len(owned)
             owned.append(o)
     np.maximum.accumulate(last, out=last)
-    # index -1 (no value yet) reads the trailing 0.0
-    shares = np.append(np.asarray(owned, dtype=float), 0.0)[last]
-    zero = np.zeros(1)
-    cum_buy = np.cumsum(np.concatenate((zero, buy * closes)))[1:]
-    cum_sell = np.cumsum(np.concatenate((zero, sell * closes)))[1:]
+    # index -1 (no value yet) reads the carried shares
+    shares = np.append(np.asarray(owned, dtype=float), carry[2])[last]
+    cum_buy = np.cumsum(np.concatenate(((carry[0],), buy * closes)))[1:]
+    cum_sell = np.cumsum(np.concatenate(((carry[1],), sell * closes)))[1:]
     net = ((shares * closes - cum_buy) + cum_sell) + float(initial_amount)
-    return buy, sell, shares, net
+    return buy, sell, shares, net, cum_buy, cum_sell
 
 
 # ---------------------------------------------------------------------------
@@ -774,12 +813,8 @@ def _run_grid(
     the edges are the first row plus every row where ``cross`` changes,
     and an edge's action is 'buy' where ``cross`` holds, else 'sell'."""
     smas = _sma_table(closes, {n for _, f, l in runs for n in (f, l)})
-    edge = np.ones(len(closes), dtype=bool)
     for run_id, fast, lagging in runs:
-        cross = smas[fast] > smas[lagging]
-        np.not_equal(cross[1:], cross[:-1], out=edge[1:])
-        idxs = np.flatnonzero(edge)
-        buys = cross[idxs]
+        idxs, buys = _cross_edges(smas[fast] > smas[lagging])
         actions = None
         if curve:
             actions = np.full(len(closes), None, dtype=object)

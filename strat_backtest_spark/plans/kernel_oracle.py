@@ -176,8 +176,8 @@ def _curve_sim_sql(strategy: str) -> str:
     the curve itself. State additionally carries the emitted action and
     (band) the anchor/last-move trigger pair; the curve row at bar i is
     ``((tsh·close − cb) + cs) + init``, the same scalar accumulation
-    order the streaming fn uses (streaming/backtest_stream.py:380-382,
-    511-513). Band trigger semantics: reference Ten_Percent_Strat
+    order the kernel's curve uses (operators/kernel.py:_portfolio_curve,
+    which the streaming kernel shares). Band trigger semantics: reference Ten_Percent_Strat
     (custom_strats.py:83-101) — thresholds anchored to the LAST
     transaction bar, anchor moving even when the engine op no-ops."""
     if strategy == "ma_cross":

@@ -2,83 +2,105 @@
 
 The reference runs its order engine (strats.py:133-245) as an eager
 batch loop over a complete bar series. This module runs the SAME
-engine incrementally over an unbounded bar stream with
-``applyInPandasWithState``: per (ticker, run_id) the state carries the
-open-order FIFO book plus the moving-average warm-up tail, so each
-micro-batch resumes the simulation exactly where the previous one
-stopped. Emissions are per-bar net-worth rows identical to the batch
-``build_portfolio`` curve (operators/portfolio.py) — verified
-bit-exact in tests/test_streaming_kernel.py against a multi-batch
-replay.
+engine incrementally over an unbounded bar stream with one
+``applyInPandasWithState`` adapter (``_step_fn``) over the batch
+kernel's own pieces (operators/kernel.py): ``_check_bars``,
+``_sma_table``, ``_cross_edges``, ``_ma_cross_walk``, ``band_driver``,
+``_trade_events`` and ``_portfolio_curve``. Each resumes from a small
+carry, and a batch walk is one step from the empty carry, so a
+micro-batch is one more step of the batch walk. Every public operator
+(``streaming_backtest_curve``, ``streaming_backtest_curve_update``,
+``streaming_grid_curve``, ``streaming_signal_edges_stateful``) is one
+call into that adapter, keyed by ticker (by (ticker, run_id) for the
+grid).
 
-Design notes (100 TB framing):
-- State is O(open orders) + O(lagging) doubles per key — bounded and
-  small, the property that lets the query run forever. The MA tail is
-  ``max(fast, lagging) - 1`` closes; the book is arrays of the open
-  orders' scalar fields.
-- Signals and order matching live in ONE stateful operator instead of
-  two chained ones: Structured Streaming restricts stateful-operator
-  chaining, and the MA tail the signal layer needs is tiny next to
-  the book state anyway.
-- Out-of-order arrival is handled by a bounded REORDER BUFFER in
-  state (ma_cross path): bars wait until the event-time frontier
-  (max day seen − ``allowed_lateness_days``) passes them, so a late
-  bar within the lateness bound still enters the simulation in date
-  order; a null-close row acts as a Flink-style punctuation that
-  advances the frontier (flushing the buffer on a finite replay).
-  With the default lateness 0 every bar is consumed immediately
-  (in-order arrival, the replay drains' case). Late beyond the bound
-  = dropped-on-the-floor semantics, the standard watermark contract.
-- Stop-loss orders ARE supported (ma_cross path): the reference's
-  stop scan (strats.py:302-326) walks the close series between order
-  start and the current bar, so the state additionally carries that
-  close-history window — pruned every batch to the earliest LIVE stop
-  entry's start day, i.e. O(bars an open stop can look back over),
-  not O(stream length). A stop hit books its sell at the PAST hit
-  bar exactly like the batch engine; rows already emitted are not
-  revised (append mode), so intermediate curve rows are as-of
-  processing time while FINAL net worth/shares match the batch kernel
-  exactly.
+One micro-batch of one key, in order:
 
-Per-bar buy/sell shares are read at emission time. That is safe for
-the shipped drivers because both always close with ``num_shares=-1``
-(whole-order FIFO pop), so an order's ``num_shares`` never mutates
-after its bar is emitted — the reference's Q4 post-hoc overwrite can
-only trigger via partial closes, which no shipped strategy issues.
-Partial-close strategies ARE supported via
-``streaming_backtest_curve_update``: UPDATE output mode, where a
-partial fill that overwrites an already-emitted buy bar's shares
-re-emits the corrected history rows (tagged with a monotonically
-increasing ``emit_seq``; latest per (ticker, run_id, date) wins —
-``drain_stream_update`` resolves it). State additionally carries the
-emitted-row cache for the mutable window — bars at/after the earliest
-OPEN order's start day, the only region a future fill can rewrite —
-so state stays O(open-position look-back), not O(stream length).
+1. restore the carry and the engine (``_restore_engine``);
+2. the reorder buffer: a bar waits until the event-time frontier (max
+   day seen − ``allowed_lateness_days``) passes it, so a bar late by no
+   more than the bound still enters the walk in date order. A bar on
+   or before the last consumed day is dropped as late. A row with a
+   null or NaN close is punctuation (Flink-style watermark-as-record):
+   it advances the frontier — flushing the buffer on a finite replay —
+   and is not a bar. The ready bars must keep the batch bars contract:
+   a duplicate date or an infinite close fails the query by name;
+3. the batch pieces over (retained bars + ready bars), with the
+   engine's ``dates``/``closes`` set once for the step (the stop scan's
+   ``searchsorted(..., side="left")`` already excludes the current and
+   later bars), and the curve recomputed over the retained bars from
+   the curve carry at their start;
+4. emission: append mode emits the ready bars; update mode also
+   re-emits the retained rows from the first day whose trade events
+   the step changed (a partial fill re-sizing a past buy, Q4), each
+   with a higher ``emit_seq`` — latest per (ticker, run_id, date) wins
+   (``drain_stream_update``);
+5. prune the retained bars and save the carry.
+
+State (``_STATE``, one row per key): the reorder buffer (``pend_*``,
+``max_day``, ``last_day``); the walk carry (``prev_cross`` and
+``first_buy_day`` for MA-cross, ``anchor``/``last_move_sell`` for the
+band); the retained bars (``hist_*``) with the curve carry at their
+start (``cum_buy``, ``cum_sell``, ``shares``); and the engine
+(``_save_engine``): its scalars, the orders it can still read, its stop
+heap and its trade events on the retained days. The retained bars are
+the last max(fast, lagging) − 1 (the SMA frames), back to the earliest
+pending stop's start day (the stop scan reads them and a hit books its
+sell there), and, with partial sells, back to the earliest open
+order's start day (a fill there can re-size a past buy). State is
+O(open-position look-back), not O(stream length). Days are epoch-day
+integers throughout: the engine only compares, searchsorts and
+dict-keys them.
+
+What is bit-exact against the batch kernel (``Backtest.run``,
+``evaluate_params``), over any micro-batch split:
+
+- append mode without stop-loss, MA-cross and band: every curve row
+  (close, shares_owned, net_worth; for MA-cross also the signal
+  ``action``; the band's ``action`` is its buy/sell moves);
+- update mode (partial sells): the resolved curve;
+- the grid: every (ticker, run_id) curve, so its finals equal
+  ``evaluate_params``;
+- with stop-loss, finals only: a stop hit books its sell on a past
+  day, and rows an earlier micro-batch emitted for the days since are
+  not revised (append mode). Rows emitted after the hit, the final
+  row among them, are exact.
 """
 
 from __future__ import annotations
 
-import datetime
 from collections import deque
 from typing import Iterator, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     DateType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from strat_backtest_spark.operators.kernel import TradingEngine, _KOrder
+from strat_backtest_spark.operators.kernel import (
+    _EDGE_ACTIONS,
+    TradingEngine,
+    _check_bars,
+    _cross_edges,
+    _KOrder,
+    _ma_cross_walk,
+    _portfolio_curve,
+    _sma_table,
+    _trade_events,
+    band_driver,
+)
 
 _CURVE_OUTPUT = StructType(
     [
@@ -91,435 +113,275 @@ _CURVE_OUTPUT = StructType(
         StructField("net_worth", DoubleType()),
     ]
 )
-
-# Everything the simulation needs to resume: MA warm-up tail, edge
-# detector, and the order book flattened to parallel arrays (a struct
-# of scalars + arrays is what GroupState can hold).
-_KERNEL_STATE = StructType(
-    [
-        StructField("n_seen", LongType()),
-        StructField("ma_tail", ArrayType(DoubleType())),
-        StructField("prev_cross", IntegerType()),  # -1 none, 0 False, 1 True
-        StructField("first_buy_day", LongType()),  # ordinal; -1 = none yet
-        StructField("current_amount", DoubleType()),
-        StructField("profit_base", DoubleType()),
-        StructField("active_orders", DoubleType()),
-        StructField("total_shares", DoubleType()),
-        StructField("next_id", LongType()),
-        StructField("open_oid", ArrayType(LongType())),
-        StructField("open_shares", ArrayType(DoubleType())),
-        StructField("open_start_day", ArrayType(LongType())),
-        StructField("open_start_amount", ArrayType(DoubleType())),
-        StructField("cum_buy_cost", DoubleType()),
-        StructField("cum_sell_proceeds", DoubleType()),
-        # stop-loss extension (empty arrays when unused): pending stop
-        # heap entries, the close-history window the reference's range
-        # scan needs (strats.py:302-326), and sell bookings that a
-        # future stop hit could still OVERWRITE (the reference keys
-        # sells by date and replaces, so a later stop booking the same
-        # date supersedes). All three prune to the earliest live stop
-        # entry's start day — state is O(bars an open stop can look
-        # back over), the honest cost of the look-back semantics, not
-        # O(stream length).
-        StructField("heap_sl", ArrayType(DoubleType())),
-        StructField("heap_oid", ArrayType(LongType())),
-        StructField("heap_start_day", ArrayType(LongType())),
-        StructField("hist_day", ArrayType(LongType())),
-        StructField("hist_close", ArrayType(DoubleType())),
-        StructField("acc_day", ArrayType(LongType())),
-        StructField("acc_shares", ArrayType(DoubleType())),
-        StructField("acc_close", ArrayType(DoubleType())),
-        # out-of-order extension (empty/-1 when lateness_days=0): the
-        # reorder buffer — bars newer than (max event day seen −
-        # allowed lateness) wait here until the watermark frontier
-        # passes them, so cross-batch late arrivals slot back into
-        # date order before the simulation consumes them. State is
-        # O(bars inside the lateness window) per key.
-        StructField("pend_day", ArrayType(LongType())),
-        StructField("pend_close", ArrayType(DoubleType())),
-        StructField("max_day", LongType()),
-        # last day the simulation CONSUMED: a bar at or before it
-        # arrived later than the lateness bound allows and is dropped
-        # on the floor (true watermark-drop) — appending it would make
-        # the history unsorted and corrupt the stop-scan searchsorted
-        # and the rolling-MA tail.
-        StructField("last_day", LongType()),
-    ]
+_CURVE_OUTPUT_U = StructType(
+    list(_CURVE_OUTPUT.fields) + [StructField("emit_seq", LongType())]
 )
 
+_LONGS, _DOUBLES = ArrayType(LongType()), ArrayType(DoubleType())
+_STATE = StructType([StructField(name, dtype) for name, dtype in (
+    # the reorder buffer: bars past the frontier, the max day seen and
+    # the last day consumed (None before the first)
+    ("pend_day", _LONGS), ("pend_close", _DOUBLES),
+    ("max_day", LongType()), ("last_day", LongType()),
+    # the walk carry: MA-cross (_cross_edges, _ma_cross_walk), band
+    ("prev_cross", BooleanType()), ("first_buy_day", LongType()),
+    ("anchor", DoubleType()), ("last_move_sell", BooleanType()),
+    # the retained bars, their actions, and the curve carry at the
+    # first of them (_portfolio_curve); emit_seq for update mode
+    ("hist_day", _LONGS), ("hist_close", _DOUBLES),
+    ("hist_action", ArrayType(StringType())),
+    ("cum_buy", DoubleType()), ("cum_sell", DoubleType()),
+    ("shares", DoubleType()), ("emit_seq", LongType()),
+    # the engine (_save_engine): scalars; the orders it can still read,
+    # end day null while unfilled; the open queue (an order id repeats
+    # where Q1 queues a remainder twice) and the unsettled tail of
+    # `completed`; the stop heap; the trade events on retained days
+    ("current_amount", DoubleType()), ("profit_base", DoubleType()),
+    ("active_orders", DoubleType()), ("total_shares", DoubleType()),
+    ("next_id", LongType()),
+    ("order_id", _LONGS), ("order_shares", _DOUBLES), ("order_start", _LONGS),
+    ("order_price", _DOUBLES), ("order_end", _LONGS), ("order_end_price", _DOUBLES),
+    ("open_ids", _LONGS), ("done_ids", _LONGS),
+    ("stop_loss", _DOUBLES), ("stop_id", _LONGS),
+    ("event_day", _LONGS), ("event_buy_id", _LONGS),
+    ("event_sell", _DOUBLES), ("event_owned", _DOUBLES),
+)])
 
-def _restore_engine(state_row, initial_amount: float) -> TradingEngine:
-    """Rebuild a TradingEngine mid-simulation from the state struct
-    (positions 4..12 — shared by the MA-cross and band layouts).
-    Dates are raw day ORDINALS throughout: the engine only compares,
-    searchsorts, and dict-keys them, so ints work everywhere a
-    datetime would, serialize smaller, and make the stop-scan history
-    a plain int array.
+# the carry before a key's first bar, but for the engine's fields
+_FRESH = {
+    "pend_day": [], "pend_close": [], "max_day": None, "last_day": None,
+    "prev_cross": None, "first_buy_day": None, "anchor": None,
+    "last_move_sell": False, "hist_day": [], "hist_close": [], "hist_action": [],
+    "cum_buy": 0.0, "cum_sell": 0.0, "shares": 0.0, "emit_seq": 0,
+}
 
-    A repeated oid restores as the SAME object: Q1's partial-close
-    remainder is queued twice (strats.py:151,205) and its quirk
-    semantics depend on both deque slots aliasing one order — two
-    fresh objects would fill independently."""
-    eng = TradingEngine(
-        np.array([], dtype=np.int64), np.array([], dtype=np.float64), initial_amount
-    )
-    if state_row is None:
-        return eng
-    current_amount, profit_base, active_orders, total_shares, next_id = state_row[4:9]
-    oids, shares, start_days, start_amts = state_row[9:13]
-    eng.current_amount = current_amount
-    eng.active_orders = active_orders
+
+def _save_engine(eng: TradingEngine, since=None) -> dict:
+    """The engine as ``_STATE`` fields, its trade events from day
+    ``since`` on (all without it). The settled prefix of ``completed``
+    — up to the first order still in the open queue — folds into
+    ``profit_base`` as the running sum ``order_worth`` continues, so
+    Q2's re-add-on-every-call sees the batch engine's doubles; the rest
+    stays, since a Q1 remainder queued twice re-values its first
+    completed entry when its second copy fills. Saved orders: the open
+    queue, that tail, the stop heap's and the kept buy events'."""
     book = eng.book
-    book.profit_base = profit_base
-    book.total_shares = total_shares
-    book._next_id = next_id
-    book.open_orders = deque()
-    for oid, ns, sd, sa in zip(oids, shares, start_days, start_amts):
-        o = book.by_id.get(oid)
-        if o is None:
-            o = _KOrder(oid, ns, int(sd), sa)
-            book.by_id[oid] = o
-        book.open_orders.append(o)
+    queued = {o.oid for o in book.open_orders}
+    n = next(
+        (j for j, o in enumerate(book.completed) if o.oid in queued),
+        len(book.completed),
+    )
+    profit_base = sum(
+        (o.profit_loss() or 0.0 for o in book.completed[:n]), book.profit_base
+    )
+    done = book.completed[n:]
+    days = sorted(
+        d for d in {*eng.buy_orders, *eng.sell_orders, *book.shares_owned}
+        if since is None or d >= since
+    )
+    buys = [eng.buy_orders.get(d) for d in days]
+    orders = {o.oid: o for o in (
+        *book.open_orders, *done, *(b for b in buys if b is not None),
+        *(book.by_id[oid] for _, oid in eng.stop_heap),
+    )}.values()
+    opt = lambda x, cast: None if x is None else cast(x)  # noqa: E731
+    return {
+        "current_amount": float(eng.current_amount),
+        "profit_base": float(profit_base),
+        "active_orders": float(eng.active_orders),
+        "total_shares": float(book.total_shares),
+        "next_id": int(book._next_id),
+        "order_id": [int(o.oid) for o in orders],
+        "order_shares": [float(o.num_shares) for o in orders],
+        "order_start": [int(o.start_time) for o in orders],
+        "order_price": [float(o.start_amount) for o in orders],
+        "order_end": [opt(o.end_time, int) for o in orders],
+        "order_end_price": [opt(o.end_amount, float) for o in orders],
+        "open_ids": [int(o.oid) for o in book.open_orders],
+        "done_ids": [int(o.oid) for o in done],
+        "stop_loss": [float(sl) for sl, _ in eng.stop_heap],
+        "stop_id": [int(oid) for _, oid in eng.stop_heap],
+        "event_day": [int(d) for d in days],
+        "event_buy_id": [opt(b, lambda b: int(b.oid)) for b in buys],
+        "event_sell": [opt(eng.sell_orders.get(d), float) for d in days],
+        "event_owned": [opt(book.shares_owned.get(d), float) for d in days],
+    }
+
+
+def _restore_engine(f, initial_amount: float) -> TradingEngine:
+    """The engine ``_save_engine`` saved in ``f`` (a fresh one for
+    None), with empty ``dates``/``closes`` for the caller to set. An
+    order id restores as ONE object wherever it is cited: Q1's
+    remainder is queued twice (strats.py:151,205) and the quirk depends
+    on both deque slots, and its completed entry, aliasing one order."""
+    eng = TradingEngine(np.empty(0, np.int64), np.empty(0), initial_amount)
+    if f is None:
+        return eng
+    book = eng.book
+    for oid, ns, sd, sa, ed, ea in zip(
+        f["order_id"], f["order_shares"], f["order_start"], f["order_price"],
+        f["order_end"], f["order_end_price"],
+    ):
+        book.by_id[oid] = o = _KOrder(oid, ns, sd, sa)
+        if ed is not None:
+            o.fill(-1, ed, ea)
+    book.open_orders = deque(book.by_id[i] for i in f["open_ids"])
+    book.completed = [book.by_id[i] for i in f["done_ids"]]
+    eng.stop_heap = list(zip(f["stop_loss"], f["stop_id"]))  # saved heap-ordered
+    for d, b, s, o in zip(
+        f["event_day"], f["event_buy_id"], f["event_sell"], f["event_owned"]
+    ):
+        if b is not None:
+            eng.buy_orders[d] = book.by_id[b]
+        if s is not None:
+            eng.sell_orders[d] = s
+        if o is not None:
+            book.shares_owned[d] = o
+    eng.current_amount, eng.active_orders = f["current_amount"], f["active_orders"]
+    book.profit_base, book.total_shares = f["profit_base"], f["total_shares"]
+    book._next_id = f["next_id"]
     return eng
 
 
-def _save_engine(eng: TradingEngine) -> tuple:
-    """Flatten the live engine back to state-struct fields (book part
-    only; the caller prepends the signal-layer fields). Completed
-    orders fold their profit into profit_base and are dropped — the
-    stream never re-reads them."""
-    book = eng.book
-    profit_base = book.profit_base + sum(
-        o.profit_loss() or 0.0 for o in book.completed
-    )
-    opens = list(book.open_orders)
-    return (
-        float(eng.current_amount),
-        float(profit_base),
-        float(eng.active_orders),
-        float(book.total_shares),
-        int(book._next_id),
-        [int(o.oid) for o in opens],
-        [float(o.num_shares) for o in opens],
-        [int(o.start_time) for o in opens],
-        [float(o.start_amount) for o in opens],
-    )
+def _day(x) -> np.datetime64:
+    """An epoch-day state field as a day; NaT for None."""
+    return np.datetime64(x, "D")
 
 
-def _make_kernel_fn(
-    initial_amount: float,
-    stop_loss_pct: float | None = None,
-    resolve=None,
-    lateness_days: int = 0,
+def _step_fn(
+    initial_amount: float, resolve, lateness_days: int = 0, update: bool = False,
+    stop_loss_pct: float | None = None, sell_shares: float = -1,
+    band: dict | None = None,
 ):
-    """Build the applyInPandasWithState function for MA-cross. The MA
-    tail length is max(fast, lagging)-1, enough that pandas rolling
-    over (tail + batch) equals rolling over the full history for every
-    batch row — including pandas' null-until-n warm-up, because while
-    the key has seen < tail_len bars the tail IS the full history.
-
-    With ``stop_loss_pct`` the state additionally carries the stop
-    heap, the close history its range scan reads, and sell bookings a
-    future hit could overwrite (all pruned to the earliest live stop's
-    start day). A stop hit books the sell at the PAST hit bar, exactly
-    like the batch engine; already-emitted curve rows are not revised
-    (append mode), so intermediate rows are as-of processing time —
-    FINAL net worth and shares match the batch kernel exactly, which
-    is what the parity tests pin.
-
-    ``resolve(key) -> (fast, lagging, run_id)`` maps the group key to
-    its parameter point — a constant for the single-run operator, a
-    dict lookup on key[1] for the streaming grid (one stateful
-    operator, every (ticker, run_id) its own independent simulation
-    state)."""
+    """The one ``applyInPandasWithState`` function (the module
+    docstring has its steps). ``resolve(key) -> (run_id, fast,
+    lagging)`` maps the group key to its run — a constant for the
+    single-run operators, a lookup on key[1] for the grid. ``band``:
+    ``band_driver``'s params, which walk the band strategy instead of
+    MA-cross; ``stop_loss_pct`` and ``sell_shares`` are
+    ``_ma_cross_walk``'s. ``update``: emit ``_CURVE_OUTPUT_U`` rows,
+    re-emitting revised ones."""
+    initial_amount = float(initial_amount)
 
     def fn(
         key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import heapq
+        ticker = key[0]
+        run_id, fast, lagging = resolve(key)
+        tail = 0 if band is not None else max(fast, lagging) - 1  # SMA frames
+        # 1. restore
+        saved = dict(zip(_STATE.names, state.get)) if state.exists else None
+        st = saved or dict(_FRESH)
+        eng = _restore_engine(saved, initial_amount)
 
-        fast, lagging, run_id = resolve(key)
-        tail_len = max(fast, lagging) - 1
-        row = state.get if state.exists else None
-        if row is None:
-            n_seen, tail, prev_cross, first_buy_day = 0, [], -1, -1
-            cum_buy, cum_sell = 0.0, 0.0
-            heap_entries, hist_day, hist_close = [], [], []
-            accounted: dict[int, tuple[float, float]] = {}
-            pend_day, pend_close, max_day, last_day = [], [], -1, -1
-        else:
-            n_seen, tail, prev_cross, first_buy_day = row[0], list(row[1]), row[2], row[3]
-            cum_buy, cum_sell = row[13], row[14]
-            heap_entries = [
-                (sl, oid, sd) for sl, oid, sd in zip(row[15], row[16], row[17])
-            ]
-            hist_day, hist_close = list(row[18]), list(row[19])
-            accounted = {
-                int(d): (sh, cl) for d, sh, cl in zip(row[20], row[21], row[22])
-            }
-            pend_day, pend_close, max_day = list(row[23]), list(row[24]), row[25]
-            last_day = row[26]
-        eng = _restore_engine(row, initial_amount)
-        # re-arm the stop heap; heap entries may cite completed orders
-        # (the reference keeps them addressable for the scan's
-        # start_time read) — give those a minimal stand-in
-        for sl, oid, sd in heap_entries:
-            if oid not in eng.book.by_id:
-                eng.book.by_id[oid] = _KOrder(oid, 0.0, int(sd), 0.0)
-            heapq.heappush(eng.stop_heap, (sl, oid))
-
+        # 2. reorder buffer, late drop, punctuation
         pdf = pd.concat(list(pdf_iter))
-        b_days = [d.toordinal() for d in pdf["date"]]
-        b_closes = pdf["close"].to_numpy(dtype=np.float64)
-        if b_days:
-            max_day = max(max_day, max(b_days))
-        # Reorder buffer: a bar is consumed only once the event-time
-        # frontier (max day seen − allowed lateness) passes it, so a
-        # late arrival ≤ lateness_days old still slots back into date
-        # order. A null-close row is a PUNCTUATION (Flink-style
-        # watermark-as-record): it advances the frontier — flushing
-        # the buffer on a finite replay — but is not a bar.
-        frontier = max_day - lateness_days
-        # beyond-bound lateness = TRUE drop: a bar at or before the
-        # last consumed day would enter the simulation AFTER newer
-        # bars already simulated — unsorted history silently breaks
-        # the stop-scan searchsorted and the MA tail. Pending bars
-        # were admitted while on time, so only fresh arrivals filter.
-        combined = sorted(
-            [
-                (dy, float(cl))
-                for dy, cl in zip(pend_day, pend_close)
-            ]
-            + [
-                (dy, float(cl))
-                for dy, cl in zip(b_days, b_closes)
-                if not np.isnan(cl) and dy > last_day
-            ]
+        day = pa.array(pdf["date"], pa.date32()).to_numpy(zero_copy_only=False)
+        close = pdf["close"].to_numpy(dtype=np.float64)
+        max_day = np.fmax.reduce(np.append(day, _day(st["max_day"])))
+        # NaT compares false: a null date is kept, and fails the check
+        keep = ~np.isnan(close) & ~(day <= _day(st["last_day"]))
+        day = np.concatenate(
+            (np.asarray(st["pend_day"], dtype=np.int64).astype(day.dtype), day[keep])
         )
-        ready = [(dy, cl) for dy, cl in combined if dy <= frontier]
-        held = [(dy, cl) for dy, cl in combined if dy > frontier]
-        pend_day = [dy for dy, _ in held]
-        pend_close = [cl for _, cl in held]
-        days_new = [dy for dy, _ in ready]
-        closes_new = np.array([cl for _, cl in ready], dtype=np.float64)
-        if days_new:
-            last_day = days_new[-1]
-        dates_new = [datetime.date.fromordinal(dy) for dy in days_new]
+        close = np.concatenate((np.asarray(st["pend_close"], dtype=np.float64), close[keep]))
+        order = np.argsort(day, kind="stable")  # NaT sorts last
+        day, close = day[order], close[order]
+        ready = ~(day > max_day - lateness_days)
+        new_days = _check_bars(ticker, day[ready], close[ready]).astype(np.int64)
+        n_new = len(new_days)
 
-        concat = pd.Series(np.concatenate([np.asarray(tail, dtype=np.float64), closes_new]))
-        ma_f = concat.rolling(fast).mean().to_numpy()
-        ma_l = concat.rolling(lagging).mean().to_numpy()
-        off = len(tail)
-
-        # the scan series: retained history + this batch, as int/float
-        # arrays; per-bar prefixes are views (no copies)
-        all_days = np.concatenate(
-            [np.asarray(hist_day, dtype=np.int64), np.asarray(days_new, dtype=np.int64)]
+        # 3. the batch pieces over (retained + ready bars)
+        h = len(st["hist_day"])
+        days = np.concatenate((np.asarray(st["hist_day"], dtype=np.int64), new_days))
+        closes = np.concatenate((np.asarray(st["hist_close"], dtype=np.float64), close[ready]))
+        actions = np.concatenate(
+            (np.asarray(st["hist_action"], dtype=object), np.full(n_new, None, dtype=object))
         )
-        all_closes = np.concatenate(
-            [np.asarray(hist_close, dtype=np.float64), closes_new]
-        )
-        h = len(hist_day)
-
-        out = {c: [] for c in _CURVE_OUTPUT.names}
-        for i, (d, day, close) in enumerate(zip(dates_new, days_new, closes_new)):
-            close = float(close)
-            # bars strictly BEFORE this one (the reference's window is
-            # [order start, trading date) — current bar excluded)
-            eng.dates = all_days[: h + i]
-            eng.closes = all_closes[: h + i]
-            f, l = ma_f[off + i], ma_l[off + i]
-            cross = 1 if (not np.isnan(f) and not np.isnan(l) and f > l) else 0
-            changed = prev_cross == -1 or cross != prev_cross
-            prev_cross = cross
-            # `action` is the SIGNAL (ma_cross_signals semantics: every
-            # change row carries one, including a leading sell); the
-            # engine applies ma_cross_driver's rules on top (sell only
-            # strictly after the first buy edge).
-            action = None
-            if changed:
-                if cross:
-                    action = "buy"
-                    eng.buy(
-                        day,
-                        close,
-                        stop_loss=(close * stop_loss_pct) if stop_loss_pct else None,
-                    )
-                    if first_buy_day < 0:
-                        first_buy_day = day
-                else:
-                    action = "sell"
-                    if first_buy_day >= 0 and day > first_buy_day:
-                        eng.sell(day, close)
-            b = eng.buy_orders.get(day)
-            if b is not None:
-                cum_buy += b.num_shares * close
-            # sells may book at PAST bars (stop hits) or be overwritten
-            # at a date by a later hit — reconcile the whole dict
-            # against what has been accounted (both stay edge-sparse)
-            for dt, sh in eng.sell_orders.items():
-                dt = int(dt)
-                old = accounted.get(dt)
-                if old is None:
-                    if dt == day:
-                        c_at = close
-                    else:
-                        c_at = float(all_closes[np.searchsorted(all_days[: h + i], dt)])
-                    accounted[dt] = (float(sh), c_at)
-                    cum_sell += sh * c_at
-                elif old[0] != sh:
-                    cum_sell += (sh - old[0]) * old[1]
-                    accounted[dt] = (float(sh), old[1])
-            shares = eng.book.total_shares
-            out["ticker"].append(key[0])
-            out["run_id"].append(run_id)
-            out["date"].append(d)
-            out["close"].append(close)
-            out["action"].append(action)
-            out["shares_owned"].append(float(shares))
-            out["net_worth"].append(
-                shares * close - cum_buy + cum_sell + float(initial_amount)
+        eng.dates, eng.closes = days, closes
+        before = {e[0]: e[2:] for e in _trade_events(eng)} if update else {}
+        if band is not None:
+            carry, moves = band_driver(
+                eng, days, closes, None, band, (st["anchor"], st["last_move_sell"]), h
             )
+            st["anchor"], st["last_move_sell"] = carry
+            for i, a in moves:
+                actions[i] = a
+        elif n_new:
+            smas = _sma_table(closes[max(0, h - tail):], {fast, lagging})
+            cross = smas[fast][-n_new:] > smas[lagging][-n_new:]
+            idxs, buys = _cross_edges(cross, st["prev_cross"])
+            actions[idxs + h] = _EDGE_ACTIONS[buys.astype(np.intp)]
+            st["first_buy_day"] = _ma_cross_walk(
+                eng, days, closes, idxs + h, buys, stop_loss_pct, sell_shares,
+                st["first_buy_day"],
+            )
+            st["prev_cross"] = bool(cross[-1])
+        events = _trade_events(eng)
+        _, _, shares, net, cum_buy, cum_sell = _portfolio_curve(
+            closes, events, initial_amount, (st["cum_buy"], st["cum_sell"], st["shares"])
+        )
 
-        n_seen += len(closes_new)
-        # plain Python floats: GroupState pickles to JVM rows and
-        # numpy scalars are not registered with the unpickler
-        new_tail = (
-            [float(x) for x in concat.to_numpy()[-tail_len:]] if tail_len > 0 else []
-        )
-        # persist + prune the stop machinery to the earliest live stop
-        heap_out = [
-            (float(sl), int(oid), int(eng.book.by_id[oid].start_time))
-            for sl, oid in eng.stop_heap
-        ]
-        if heap_out:
-            keep_from = min(sd for _, _, sd in heap_out)
-            keep = all_days >= keep_from
-            hd = [int(x) for x in all_days[keep]]
-            hc = [float(x) for x in all_closes[keep]]
-            acc = {dt: v for dt, v in accounted.items() if dt >= keep_from}
-        else:
-            hd, hc, acc = [], [], {}
-        state.update(
-            (
-                int(n_seen), new_tail, int(prev_cross), int(first_buy_day),
+        # 4. emit
+        lo = h
+        if update:
+            lo = min(
+                (i for d, i, *ev in events if i < h and before.get(d) != tuple(ev)),
+                default=h,
             )
-            + _save_engine(eng)
-            + (
-                float(cum_buy), float(cum_sell),
-                [sl for sl, _, _ in heap_out],
-                [oid for _, oid, _ in heap_out],
-                [sd for _, _, sd in heap_out],
-                hd, hc,
-                [int(dt) for dt in acc],
-                [float(v[0]) for v in acc.values()],
-                [float(v[1]) for v in acc.values()],
-                [int(dy) for dy in pend_day],
-                [float(cl) for cl in pend_close],
-                int(max_day),
-                int(last_day),
+        out = pd.DataFrame({
+            "ticker": ticker, "run_id": run_id,
+            "date": days[lo:].astype("datetime64[D]").astype(object),
+            "close": closes[lo:], "action": actions[lo:],
+            "shares_owned": shares[lo:], "net_worth": net[lo:],
+        }, copy=False)
+        if update:
+            out["emit_seq"] = st["emit_seq"] + np.arange(1, len(out) + 1)
+            st["emit_seq"] += len(out)
+
+        # 5. prune and save: keep the SMA frames, the stop scan's bars
+        # and, with partial sells, the days a fill can still re-size
+        keep_at = [len(days) - tail]
+        if eng.stop_heap:
+            keep_at.append(np.searchsorted(
+                days, min(eng.book.by_id[oid].start_time for _, oid in eng.stop_heap)
+            ))
+        if sell_shares != -1 and eng.book.open_orders:
+            keep_at.append(np.searchsorted(
+                days, min(o.start_time for o in eng.book.open_orders)
+            ))
+        k = max(0, min(keep_at))
+        if k:
+            st["cum_buy"], st["cum_sell"], st["shares"] = (
+                float(cum_buy[k - 1]), float(cum_sell[k - 1]), float(shares[k - 1])
             )
+        st.update(
+            pend_day=day[~ready].astype(np.int64).tolist(),
+            pend_close=close[~ready].tolist(),
+            max_day=None if np.isnat(max_day) else int(max_day.astype(np.int64)),
+            hist_day=days[k:].tolist(), hist_close=closes[k:].tolist(),
+            hist_action=actions[k:].tolist(),
         )
-        yield pd.DataFrame(out)
+        if n_new:
+            st["last_day"] = int(new_days[-1])
+        # the trade events on the retained days: none if none is retained
+        since = days[k] if k < len(days) else (days[-1] + 1 if len(days) else None)
+        st.update(_save_engine(eng, since))
+        state.update(tuple(st[name] for name in _STATE.names))
+        if len(out):
+            yield out
 
     return fn
 
 
-# Band strategy (reference Ten_Percent_Strat, custom_strats.py:83-101)
-# is fully path-dependent: thresholds anchor to the LAST transaction's
-# close. Its streaming state is just (started, anchor_close,
-# last_move_sell) + the order book — no MA tail at all. The signal
-# fields of _KERNEL_STATE are reused: ma_tail[0] holds anchor_close is
-# NOT done — a separate struct keeps both states self-describing.
-_BAND_STATE = StructType(
-    [
-        StructField("started", IntegerType()),
-        StructField("anchor_close", DoubleType()),
-        StructField("last_move_sell", IntegerType()),
-        StructField("unused_pad", LongType()),
-        StructField("current_amount", DoubleType()),
-        StructField("profit_base", DoubleType()),
-        StructField("active_orders", DoubleType()),
-        StructField("total_shares", DoubleType()),
-        StructField("next_id", LongType()),
-        StructField("open_oid", ArrayType(LongType())),
-        StructField("open_shares", ArrayType(DoubleType())),
-        StructField("open_start_day", ArrayType(LongType())),
-        StructField("open_start_amount", ArrayType(DoubleType())),
-        StructField("cum_buy_cost", DoubleType()),
-        StructField("cum_sell_proceeds", DoubleType()),
-    ]
-)
-
-
-def _make_band_fn(
-    sell_mult: float, buy_mult: float, initial_amount: float, run_id: int
-):
-    """applyInPandasWithState function for the band strategy: buy on
-    the key's FIRST bar ever, then sell when close rises to
-    anchor*sell_mult, re-buy when it falls to anchor*buy_mult, the
-    anchor re-pinning to each transaction bar (band_driver parity,
-    operators/kernel.py)."""
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        row = state.get if state.exists else None
-        if row is None:
-            started, anchor, last_sell = 0, 0.0, 0
-            cum_buy, cum_sell = 0.0, 0.0
-        else:
-            started, anchor, last_sell = row[0], row[1], row[2]
-            cum_buy, cum_sell = row[13], row[14]
-        eng = _restore_engine(row, initial_amount)
-
-        pdf = pd.concat(list(pdf_iter)).sort_values("date")
-        closes_new = pdf["close"].to_numpy(dtype=np.float64)
-        dates_new = list(pdf["date"])
-
-        out = {c: [] for c in _CURVE_OUTPUT.names}
-        for d, close in zip(dates_new, closes_new):
-            close = float(close)
-            day = d.toordinal()
-            action = None
-            if not started:
-                started = 1
-                anchor = close
-                action = "buy"
-                eng.buy(day, close)
-            elif close >= anchor * sell_mult and not last_sell:
-                action = "sell"
-                eng.sell(day, close)
-                anchor, last_sell = close, 1
-            elif close <= anchor * buy_mult and last_sell:
-                action = "buy"
-                eng.buy(day, close)
-                anchor, last_sell = close, 0
-            b = eng.buy_orders.get(day)
-            if b is not None:
-                cum_buy += b.num_shares * close
-            s = eng.sell_orders.get(day)
-            if s:
-                cum_sell += s * close
-            shares = eng.book.total_shares
-            out["ticker"].append(key[0])
-            out["run_id"].append(run_id)
-            out["date"].append(d)
-            out["close"].append(close)
-            out["action"].append(action)
-            out["shares_owned"].append(float(shares))
-            out["net_worth"].append(
-                shares * close - cum_buy + cum_sell + float(initial_amount)
-            )
-
-        state.update(
-            (int(started), float(anchor), int(last_sell), 0)
-            + _save_engine(eng)
-            + (float(cum_buy), float(cum_sell))
-        )
-        yield pd.DataFrame(out)
-
-    return fn
+def _stateful(stream: DataFrame, keys, fn, update: bool = False) -> DataFrame:
+    return stream.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=_CURVE_OUTPUT_U if update else _CURVE_OUTPUT,
+        stateStructType=_STATE,
+        outputMode="update" if update else "append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def streaming_backtest_curve(
@@ -536,278 +398,22 @@ def streaming_backtest_curve(
 ) -> DataFrame:
     """Backtest as a streaming stateful operator: bars in, per-bar
     net-worth curve out (append mode). ``bars_stream`` needs
-    (ticker, date, close). ``strategy`` is 'ma_cross' (fast/lagging)
-    or 'band' (sell_mult/buy_mult) — both reference strategies run
-    incrementally."""
-    if strategy == "ma_cross":
-        fn = _make_kernel_fn(
-            initial_amount,
-            stop_loss_pct,
-            resolve=lambda key: (fast, lagging, run_id),
-            lateness_days=allowed_lateness_days,
-        )
-        st = _KERNEL_STATE
-    elif strategy == "band":
+    (ticker, date, close). ``strategy`` is 'ma_cross' (fast/lagging,
+    optional stop-loss) or 'band' (sell_mult/buy_mult) — both
+    reference strategies run incrementally."""
+    if strategy == "band":
         if stop_loss_pct is not None:
             raise NotImplementedError("band strategy takes no stop-loss")
-        if allowed_lateness_days:
-            raise NotImplementedError("reorder buffer is on the ma_cross path")
-        fn, st = _make_band_fn(sell_mult, buy_mult, initial_amount, run_id), _BAND_STATE
+        band = {"sell": sell_mult, "buy": buy_mult}
+    elif strategy == "ma_cross":
+        band = None
     else:
         raise ValueError(f"unknown streaming strategy {strategy!r}")
-    return (
-        bars_stream.select("ticker", "date", "close")
-        .groupBy("ticker")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_CURVE_OUTPUT,
-            stateStructType=st,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    fn = _step_fn(
+        initial_amount, lambda key: (run_id, fast, lagging), allowed_lateness_days,
+        stop_loss_pct=stop_loss_pct, band=band,
     )
-
-
-_CURVE_OUTPUT_U = StructType(
-    list(_CURVE_OUTPUT.fields) + [StructField("emit_seq", LongType())]
-)
-
-# Update-mode layout: signal fields + engine book (positions 4..12,
-# shared with _KERNEL_STATE so _restore_engine/_save_engine apply) +
-# net-worth cums + the two mutable-window structures:
-#   accb_*  — per in-window buy day, the order object buy() registered
-#             (Q4 overwrites its num_shares at its first partial fill;
-#             oid lives until that fill settles it)
-#   row_*   — the emitted-row cache a future fill can rewrite: bars
-#             at/after the earliest OPEN order's start day
-_PARTIAL_STATE = StructType(
-    [
-        StructField("n_seen", LongType()),
-        StructField("ma_tail", ArrayType(DoubleType())),
-        StructField("prev_cross", IntegerType()),
-        StructField("first_buy_day", LongType()),
-        StructField("current_amount", DoubleType()),
-        StructField("profit_base", DoubleType()),
-        StructField("active_orders", DoubleType()),
-        StructField("total_shares", DoubleType()),
-        StructField("next_id", LongType()),
-        StructField("open_oid", ArrayType(LongType())),
-        StructField("open_shares", ArrayType(DoubleType())),
-        StructField("open_start_day", ArrayType(LongType())),
-        StructField("open_start_amount", ArrayType(DoubleType())),
-        StructField("cum_buy_cost", DoubleType()),
-        StructField("cum_sell_proceeds", DoubleType()),
-        StructField("accb_day", ArrayType(LongType())),
-        StructField("accb_oid", ArrayType(LongType())),
-        StructField("accb_shares", ArrayType(DoubleType())),
-        StructField("accb_price", ArrayType(DoubleType())),
-        StructField("row_day", ArrayType(LongType())),
-        StructField("row_close", ArrayType(DoubleType())),
-        StructField("row_action", ArrayType(StringType())),
-        StructField("row_shares", ArrayType(DoubleType())),
-        StructField("row_net", ArrayType(DoubleType())),
-        StructField("emit_seq", LongType()),
-        # a Q1 double-queued remainder can sit in the open deque
-        # ALREADY FILLED (its first copy was popped and filled);
-        # value() must then read end_amount, so fill state survives
-        # the handoff (sparse: filled open orders only)
-        StructField("of_oid", ArrayType(LongType())),
-        StructField("of_end_day", ArrayType(LongType())),
-        StructField("of_end_amt", ArrayType(DoubleType())),
-    ]
-)
-
-
-def _restore_filled_open_orders(eng: TradingEngine, of_rows) -> dict:
-    """Re-mark still-queued Q1 remainder copies as FILLED after an
-    engine restore and return {oid: folded_profit} — the value each
-    order's single pre-boundary completed entry was folded into
-    profit_base with at the last save.
-
-    Why the return value matters: the batch engine's order_worth (Q2)
-    re-reads every completed entry at its CURRENT values on every
-    call, so when the still-queued copy later RE-FILLS at a new
-    price, the pre-boundary entry retroactively re-values too. The
-    folded profit_base froze the old value; the delta must be applied
-    at re-fill time (:func:`_refill_profit_correction`) or buying
-    power silently drifts from the batch engine's."""
-    out: dict[int, float] = {}
-    for oid, ed, ea in of_rows:
-        o = eng.book.by_id[int(oid)]
-        o.filled, o.end_time, o.end_amount = True, int(ed), float(ea)
-        out[int(oid)] = (float(ea) - o.start_amount) * o.num_shares
-    return out
-
-
-def _refill_profit_correction(eng: TradingEngine, order, folded: dict) -> None:
-    """Q2 retro re-valuation: when a restored-filled order re-fills,
-    replace its previously folded profit with the re-fill's value
-    (idempotent — the oid is popped on first application)."""
-    old = folded.pop(order.oid, None)
-    if old is not None:
-        eng.book.profit_base += (order.profit_loss() or 0.0) - old
-
-
-def _make_partial_kernel_fn(
-    initial_amount: float, fast: int, lagging: int, run_id: int, sell_shares: float
-):
-    """applyInPandasWithState function for MA-cross with FIXED-size
-    sells (the partial-fill path). Emission contract: every bar emits
-    once when simulated; when a later partial fill overwrites a past
-    buy bar's shares (Q4), every cached row from that bar forward is
-    re-emitted with the corrected net worth and a higher ``emit_seq``
-    — latest seq per date is the curve, and it equals the batch
-    kernel's post-run curve exactly."""
-
-    tail_len = max(fast, lagging) - 1
-
-    def fn(
-        key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        row = state.get if state.exists else None
-        if row is None:
-            n_seen, tail, prev_cross, first_buy_day = 0, [], -1, -1
-            cum_buy, cum_sell = 0.0, 0.0
-            accb: dict[int, list] = {}
-            rows: list[list] = []
-            emit_seq = 0
-        else:
-            n_seen, tail, prev_cross, first_buy_day = row[0], list(row[1]), row[2], row[3]
-            cum_buy, cum_sell = row[13], row[14]
-            accb = {
-                int(d): [int(o), float(s), float(p)]
-                for d, o, s, p in zip(row[15], row[16], row[17], row[18])
-            }
-            rows = [
-                [int(d), float(c), a, float(s), float(n)]
-                for d, c, a, s, n in zip(row[19], row[20], row[21], row[22], row[23])
-            ]
-            emit_seq = row[24]
-        eng = _restore_engine(row, initial_amount)
-        refill_folded: dict[int, float] = {}
-        if row is not None:
-            refill_folded = _restore_filled_open_orders(
-                eng, zip(row[25], row[26], row[27])
-            )
-
-        pdf = pd.concat(list(pdf_iter))
-        pdf = pdf[pdf["close"].notna()].sort_values("date")
-        days_new = [d.toordinal() for d in pdf["date"]]
-        closes_new = pdf["close"].to_numpy(dtype=np.float64)
-
-        concat = pd.Series(
-            np.concatenate([np.asarray(tail, dtype=np.float64), closes_new])
-        )
-        ma_f = concat.rolling(fast).mean().to_numpy()
-        ma_l = concat.rolling(lagging).mean().to_numpy()
-        off = len(tail)
-
-        out = {c: [] for c in _CURVE_OUTPUT_U.names}
-        settled_fills: set[int] = set()
-
-        def emit(day, close, action, shares, net, seq):
-            out["ticker"].append(key[0])
-            out["run_id"].append(run_id)
-            out["date"].append(datetime.date.fromordinal(day))
-            out["close"].append(close)
-            out["action"].append(action)
-            out["shares_owned"].append(shares)
-            out["net_worth"].append(net)
-            out["emit_seq"].append(seq)
-
-        for i, (day, close) in enumerate(zip(days_new, closes_new)):
-            close = float(close)
-            f, l = ma_f[off + i], ma_l[off + i]
-            cross = 1 if (not np.isnan(f) and not np.isnan(l) and f > l) else 0
-            changed = prev_cross == -1 or cross != prev_cross
-            prev_cross = cross
-            action = None
-            if changed:
-                if cross:
-                    action = "buy"
-                    eng.buy(day, close)
-                    if first_buy_day < 0:
-                        first_buy_day = day
-                else:
-                    action = "sell"
-                    if first_buy_day >= 0 and day > first_buy_day:
-                        eng.sell(day, close, num_shares=sell_shares)
-            b = eng.buy_orders.get(day)
-            if b is not None:
-                accb[day] = [int(b.oid), float(b.num_shares), float(b.start_amount)]
-                cum_buy += b.num_shares * b.start_amount
-            s = eng.sell_orders.get(day)
-            if s:
-                cum_sell += s * close
-            # Q4 reconciliation: a fill this bar may have overwritten
-            # the shares of an order a PAST bar's buy event registered
-            dirty = None
-            for o in eng.book.completed:
-                if o.oid in settled_fills:
-                    continue
-                settled_fills.add(o.oid)
-                _refill_profit_correction(eng, o, refill_folded)
-                ent = accb.get(int(o.start_time))
-                if ent is not None and ent[0] == o.oid:
-                    if ent[1] != o.num_shares:
-                        delta = (ent[1] - o.num_shares) * ent[2]
-                        cum_buy -= delta
-                        ent[1] = float(o.num_shares)
-                        d0 = int(o.start_time)
-                        for r in rows:
-                            if r[0] >= d0:
-                                r[4] += delta
-                        dirty = d0 if dirty is None else min(dirty, d0)
-                    ent[0] = -1  # settled: a filled order never mutates again
-            if dirty is not None:
-                for r in rows:
-                    if r[0] >= dirty:
-                        emit_seq += 1
-                        emit(r[0], r[1], r[2], r[3], r[4], emit_seq)
-            shares = eng.book.total_shares
-            net = shares * close - cum_buy + cum_sell + float(initial_amount)
-            emit_seq += 1
-            emit(day, close, action, float(shares), float(net), emit_seq)
-            rows.append([day, close, action, float(shares), float(net)])
-
-        n_seen += len(closes_new)
-        new_tail = (
-            [float(x) for x in concat.to_numpy()[-tail_len:]] if tail_len > 0 else []
-        )
-        # prune the mutable window: only bars at/after the earliest
-        # OPEN order's start day can still be rewritten
-        anchor = min((int(o.start_time) for o in eng.book.open_orders), default=None)
-        if anchor is None:
-            rows = []
-        else:
-            rows = [r for r in rows if r[0] >= anchor]
-        accb = {d: v for d, v in accb.items() if v[0] != -1}
-        filled_opens = list(
-            {o.oid: o for o in eng.book.open_orders if o.filled}.values()
-        )
-        state.update(
-            (int(n_seen), new_tail, int(prev_cross), int(first_buy_day))
-            + _save_engine(eng)
-            + (
-                float(cum_buy), float(cum_sell),
-                [int(d) for d in accb],
-                [int(v[0]) for v in accb.values()],
-                [float(v[1]) for v in accb.values()],
-                [float(v[2]) for v in accb.values()],
-                [int(r[0]) for r in rows],
-                [float(r[1]) for r in rows],
-                [r[2] for r in rows],
-                [float(r[3]) for r in rows],
-                [float(r[4]) for r in rows],
-                int(emit_seq),
-                [int(o.oid) for o in filled_opens],
-                [int(o.end_time) for o in filled_opens],
-                [float(o.end_amount) for o in filled_opens],
-            )
-        )
-        yield pd.DataFrame(out)
-
-    return fn
+    return _stateful(bars_stream.select("ticker", "date", "close"), ["ticker"], fn)
 
 
 def streaming_backtest_curve_update(
@@ -825,17 +431,12 @@ def streaming_backtest_curve_update(
     ``emit_seq``; resolve with :func:`drain_stream_update` (or any
     latest-per-key consumer). Stop-loss + reorder buffering stay on
     the append-mode operator."""
-    fn = _make_partial_kernel_fn(initial_amount, fast, lagging, run_id, sell_shares)
-    return (
-        bars_stream.select("ticker", "date", "close")
-        .groupBy("ticker")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_CURVE_OUTPUT_U,
-            stateStructType=_PARTIAL_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    fn = _step_fn(
+        initial_amount, lambda key: (run_id, fast, lagging), update=True,
+        sell_shares=sell_shares,
+    )
+    return _stateful(
+        bars_stream.select("ticker", "date", "close"), ["ticker"], fn, update=True
     )
 
 
@@ -884,27 +485,18 @@ def streaming_grid_curve(
     warm and current as bars arrive.
 
     ``params``: iterable of (run_id, fast, lagging)."""
-    rows = [(int(r), int(f), int(l)) for r, f, l in params]
-    by_run = {r: (f, l) for r, f, l in rows}
+    by_run = {int(r): (int(f), int(l)) for r, f, l in params}
     expanded = bars_stream.select(
         "ticker",
         "date",
         "close",
         F.explode(F.array(*[F.lit(r).cast("long") for r in by_run])).alias("run_id"),
     )
-    fn = _make_kernel_fn(
-        initial_amount,
-        stop_loss_pct,
-        resolve=lambda key: (*by_run[int(key[1])], int(key[1])),
-        lateness_days=allowed_lateness_days,
+    fn = _step_fn(
+        initial_amount, lambda key: (int(key[1]), *by_run[int(key[1])]),
+        allowed_lateness_days, stop_loss_pct=stop_loss_pct,
     )
-    return expanded.groupBy("ticker", "run_id").applyInPandasWithState(
-        fn,
-        outputStructType=_CURVE_OUTPUT,
-        stateStructType=_KERNEL_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _stateful(expanded, ["ticker", "run_id"], fn)
 
 
 def bars_replay_stream(
@@ -1043,9 +635,10 @@ def streaming_signal_edges_stateful(
     stateful walk as the kernel but emitting cross edges. This is the
     exact-under-incremental-arrival answer to the foreachBatch
     bridge's full-history caveat (events_stream.streaming_signal_edges)
-    — the state's MA tail supplies the ``lagging-1`` bars of history a
-    fresh micro-batch lacks. A simulation still runs underneath (cheap:
-    one engine call per edge); output is filtered to edge rows."""
+    — the retained bars supply the ``max(fast, lagging) - 1`` closes of
+    history a fresh micro-batch lacks. A simulation still runs
+    underneath (cheap: one engine call per edge); output is filtered to
+    edge rows."""
     curve = streaming_backtest_curve(bars_stream, fast, lagging, 1.0, run_id)
     return curve.filter(F.col("action").isNotNull()).select(
         "ticker", "run_id", "date", "close", "action"

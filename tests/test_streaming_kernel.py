@@ -1,8 +1,9 @@
 """Streaming order kernel vs batch kernel: the stateful
 applyInPandasWithState walk (streaming/backtest_stream.py) must equal
 the batch mapInPandas walk (operators/kernel.py) when the same bars
-are replayed as MULTIPLE micro-batches — state carries the book and
-the MA tail across batch boundaries, so the curves match bit-exactly.
+are replayed as MULTIPLE micro-batches — state carries the book, the
+walk's carry and the retained bars across batch boundaries, so the
+curves match bit-exactly (with stop-loss, the finals).
 """
 
 import os
@@ -88,10 +89,7 @@ def test_streaming_kernel_matches_batch_curve(spark, tmp_path):
     for r in got:
         want = batch[(r["ticker"], str(r["date"]))]
         assert r["shares_owned"] == want[0], (r["ticker"], r["date"])
-        assert r["net_worth"] == pytest.approx(want[1], rel=1e-12), (
-            r["ticker"],
-            r["date"],
-        )
+        assert r["net_worth"] == want[1], (r["ticker"], r["date"])
 
 
 def test_streaming_kernel_golden_aapl(spark, tmp_path):
@@ -157,10 +155,7 @@ def test_streaming_kernel_edge_series(spark, tmp_path):
     for r in got:
         want = batch[(r["ticker"], str(r["date"]))]
         assert r["shares_owned"] == want[0], (r["ticker"], r["date"])
-        assert r["net_worth"] == pytest.approx(want[1], rel=1e-12), (
-            r["ticker"],
-            r["date"],
-        )
+        assert r["net_worth"] == want[1], (r["ticker"], r["date"])
 
 
 def test_streaming_kernel_random_series_fuzz(spark, tmp_path):
@@ -208,9 +203,8 @@ def test_streaming_kernel_random_series_fuzz(spark, tmp_path):
         ).collect()
         assert len(got) == len(batch), f"seed {seed}"
         for r in got:
-            assert r["net_worth"] == pytest.approx(
-                batch[(r["ticker"], str(r["date"]))], rel=1e-12
-            ), (seed, r["ticker"], r["date"])
+            assert r["net_worth"] == batch[(r["ticker"], str(r["date"]))], (
+                seed, r["ticker"], r["date"])
 
 
 def test_streaming_band_strategy_matches_batch(spark, tmp_path):
@@ -246,10 +240,7 @@ def test_streaming_band_strategy_matches_batch(spark, tmp_path):
     for r in got:
         want = batch[(r["ticker"], str(r["date"]))]
         assert r["shares_owned"] == want[0], (r["ticker"], r["date"])
-        assert r["net_worth"] == pytest.approx(want[1], rel=1e-12), (
-            r["ticker"],
-            r["date"],
-        )
+        assert r["net_worth"] == want[1], (r["ticker"], r["date"])
 
 
 def test_streaming_stop_loss_matches_batch_finals(spark, tmp_path):
@@ -285,7 +276,7 @@ def test_streaming_stop_loss_matches_batch_finals(spark, tmp_path):
         finals[r["ticker"]] = r["net_worth"]
     assert set(finals) == set(batch)
     for t, nw in finals.items():
-        assert nw == pytest.approx(batch[t], rel=1e-12), t
+        assert nw == batch[t], t
 
 
 def test_streaming_grid_matches_batch_evaluate_params(spark, tmp_path):
@@ -319,7 +310,7 @@ def test_streaming_grid_matches_batch_evaluate_params(spark, tmp_path):
         got[(r["ticker"], r["run_id"])] = r["net_worth"]
     assert set(got) == set(want)
     for k, nw in got.items():
-        assert nw == pytest.approx(want[k], rel=1e-12), k
+        assert nw == want[k], k
 
 
 def test_streaming_signal_edges_stateful_matches_batch(spark, tmp_path):
@@ -412,9 +403,8 @@ def test_streaming_kernel_out_of_order_arrival(spark, tmp_path):
     got = _drain_stream(spark, curve).collect()
     assert len(got) == len(batch)
     for r in got:
-        assert r["net_worth"] == pytest.approx(
-            batch[(r["ticker"], str(r["date"]))], rel=1e-12
-        ), (r["ticker"], r["date"])
+        assert r["net_worth"] == batch[(r["ticker"], str(r["date"]))], (
+            r["ticker"], r["date"])
 
 
 def test_streaming_kernel_drops_beyond_bound_late_bar(spark, tmp_path):
@@ -477,9 +467,8 @@ def test_streaming_kernel_drops_beyond_bound_late_bar(spark, tmp_path):
     got = _drain_stream(spark, curve).collect()
     assert len(got) == len(batch)  # no extra row for the poison bar
     for r in got:
-        assert r["net_worth"] == pytest.approx(
-            batch[(r["ticker"], str(r["date"]))], rel=1e-12
-        ), (r["ticker"], r["date"])
+        assert r["net_worth"] == batch[(r["ticker"], str(r["date"]))], (
+            r["ticker"], r["date"])
 
 
 def test_streaming_partial_close_update_mode(spark, tmp_path):
@@ -545,28 +534,29 @@ def test_streaming_partial_close_update_mode(spark, tmp_path):
     assert len(rows) == len(batch)
     for r in rows:
         want_net, want_shares = batch[(r["ticker"], str(r["date"]))]
-        assert r["net_worth"] == pytest.approx(want_net, rel=1e-12, abs=1e-9), (
-            r["ticker"], r["date"])
-        assert r["shares_owned"] == pytest.approx(want_shares, rel=1e-12)
+        assert r["net_worth"] == want_net, (r["ticker"], r["date"])
+        assert r["shares_owned"] == want_shares, (r["ticker"], r["date"])
 
 
 def test_partial_close_refill_across_boundary_state_parity():
     """A Q1 double-queued remainder whose two fills land in DIFFERENT
     micro-batches: the batch engine's order_worth (Q2) re-values the
     pre-boundary completed entry at the re-fill's prices on every
-    later call, so the streamed engine must correct its folded
-    profit_base by the same delta — otherwise buying power silently
-    drifts (measured 17-25 on this series before the fix). Pure
-    engine-level harness of the save/restore/correct helpers the
-    stateful fn uses; no Spark session needed."""
+    later call, so the saved engine must keep that entry unsettled
+    until the remainder leaves the queue — folding it into profit_base
+    at the boundary drifts buying power by about 18 on this series.
+    Pure engine-level harness of the save/restore helpers the stateful
+    fn uses, at seven split points; no Spark session needed."""
     import numpy as np
-    import pandas as pd
 
-    from strat_backtest_spark.operators.kernel import TradingEngine
+    from strat_backtest_spark.operators.kernel import (
+        TradingEngine,
+        _cross_edges,
+        _ma_cross_walk,
+        _sma_table,
+    )
     from strat_backtest_spark.streaming.backtest_stream import (
-        _refill_profit_correction,
         _restore_engine,
-        _restore_filled_open_orders,
         _save_engine,
     )
 
@@ -581,51 +571,28 @@ def test_partial_close_refill_across_boundary_state_parity():
             closes.append(v)
     closes = np.array(closes)
     days = np.arange(len(closes), dtype=np.int64)
-    s = pd.Series(closes)
-    f, l = s.rolling(2).mean(), s.rolling(4).mean()
-    actions = []
-    prev = None
-    for i in range(len(closes)):
-        cc = 1 if (not np.isnan(f.iloc[i]) and not np.isnan(l.iloc[i]) and f.iloc[i] > l.iloc[i]) else 0
-        actions.append(("buy" if cc else "sell") if (prev is None or cc != prev) else None)
-        prev = cc
+    smas = _sma_table(closes, {2, 4})
+    idxs, buys = _cross_edges(smas[2] > smas[4])
     init = 100.0  # ~10-share buys, so sell_shares=3 exhausts remainders
 
-    def drive(eng, lo, hi, first_buy, folded):
-        settled = set()
-        for i in range(lo, hi):
-            if actions[i] == "buy":
-                eng.buy(int(days[i]), float(closes[i]))
-                first_buy = True
-            elif actions[i] == "sell" and first_buy:
-                eng.sell(int(days[i]), float(closes[i]), num_shares=3.0)
-            for o in eng.book.completed:
-                if o.oid not in settled:
-                    settled.add(o.oid)
-                    _refill_profit_correction(eng, o, folded)
-        return first_buy
+    def drive(eng, lo, hi, first_buy):
+        at = (idxs >= lo) & (idxs < hi)
+        return _ma_cross_walk(
+            eng, days, closes, idxs[at], buys[at], sell_shares=3.0, first_buy=first_buy
+        )
 
     truth = TradingEngine(days, closes, init)
-    drive(truth, 0, len(closes), False, {})
+    drive(truth, 0, len(closes), None)
 
     for split in (9, 12, 15, 18, 21, 24, 27):
         e1 = TradingEngine(days, closes, init)
-        fb = drive(e1, 0, split, False, {})
-        saved = (None,) * 4 + _save_engine(e1)
-        of_rows = [
-            (o.oid, o.end_time, o.end_amount)
-            for o in {o.oid: o for o in e1.book.open_orders if o.filled}.values()
-        ]
-        e2 = _restore_engine(saved, init)
-        folded = _restore_filled_open_orders(e2, of_rows)
-        drive(e2, split, len(closes), fb, folded)
+        first_buy = drive(e1, 0, split, None)
+        e2 = _restore_engine(_save_engine(e1), init)
+        e2.dates, e2.closes = days, closes
+        drive(e2, split, len(closes), first_buy)
         assert e2.book.total_shares == truth.book.total_shares, split
-        assert e2.current_amount == pytest.approx(truth.current_amount, abs=1e-9), split
-        assert e2.book.profit_base + sum(
-            o.profit_loss() or 0.0 for o in e2.book.completed
-        ) == pytest.approx(
-            sum(o.profit_loss() or 0.0 for o in truth.book.completed), abs=1e-9
-        ), split
+        assert e2.current_amount == truth.current_amount, split
+        assert e2.book.order_worth() == truth.book.order_worth(), split
 
 
 def test_streaming_partial_close_refill_e2e(spark, tmp_path):
@@ -688,10 +655,7 @@ def test_streaming_partial_close_refill_e2e(spark, tmp_path):
         for r in got:
             want_net, want_shares = batch[str(r["date"])]
             assert r["shares_owned"] == want_shares, (n_chunks, r["date"])
-            assert r["net_worth"] == pytest.approx(want_net, rel=1e-12, abs=1e-9), (
-                n_chunks,
-                r["date"],
-            )
+            assert r["net_worth"] == want_net, (n_chunks, r["date"])
 
 
 @pytest.mark.slow
@@ -746,9 +710,7 @@ def test_streaming_partial_close_fuzz(spark, tmp_path):
         for r in got:
             want_net, want_shares = batch[(r["ticker"], str(r["date"]))]
             assert r["shares_owned"] == want_shares, (seed, r["ticker"], r["date"])
-            assert r["net_worth"] == pytest.approx(
-                want_net, rel=1e-12, abs=1e-9
-            ), (seed, r["ticker"], r["date"])
+            assert r["net_worth"] == want_net, (seed, r["ticker"], r["date"])
 
 
 @pytest.mark.parametrize("strategy", ["ma_cross", "band"])
@@ -842,3 +804,189 @@ def test_streaming_kernel_state_survives_query_restart(spark, tmp_path, strategy
         shares, net = batch[(r["ticker"], str(r["date"]))]
         assert r["shares_owned"] == shares, (r["ticker"], r["date"])
         assert r["net_worth"] == net, (r["ticker"], r["date"])
+
+
+def _stream_chunks(spark, src: str, chunks) -> "DataFrame":
+    """A (ticker, date, close) file stream replaying ``chunks`` — lists
+    of row tuples — one micro-batch each, in order. Closes are written
+    as given: NaN stays NaN and None is null."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(src)
+    base = time.time()
+    for i, rows in enumerate(chunks):
+        tickers, dates, closes = zip(*rows)
+        p = os.path.join(src, f"{i:03d}.parquet")
+        pq.write_table(
+            pa.table({
+                "ticker": pa.array(tickers, pa.string()),
+                "date": pa.array(dates, pa.date32()),
+                "close": pa.array(closes, pa.float64()),
+            }),
+            p,
+        )
+        os.utime(p, (base + i, base + i))
+    return (
+        spark.readStream.schema("ticker string, date date, close double")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+
+def _thirds(rows):
+    """``rows`` split into three chunks by date range."""
+    dates = sorted({r[1] for r in rows})
+    cut = (dates[len(dates) // 3], dates[2 * len(dates) // 3])
+    return [
+        [r for r in rows if r[1] < cut[0]],
+        [r for r in rows if cut[0] <= r[1] < cut[1]],
+        [r for r in rows if r[1] >= cut[1]],
+    ]
+
+
+def _curve_reprs(rows, cols=("close", "action", "shares_owned", "net_worth")):
+    return {(r["ticker"], str(r["date"])): repr(tuple(r[c] for c in cols)) for r in rows}
+
+
+@pytest.mark.parametrize("fast, lagging", [(3, 8), (4, 7)])
+def test_streaming_equals_batch_on_edge_shapes(spark, tmp_path, fast, lagging):
+    """The ``flat`` and ``ramp`` series (with the seeded walks, a short
+    series and a single bar) have SMAs that differ only in their last
+    bits, so a stream decides its crosses as the batch kernel does only
+    if it sums every frame the same way. Over a 3-chunk replay, compared
+    by ``repr``: the append-mode curve with ``Backtest.run()``, the
+    grid's finals with ``evaluate_params`` and the update-mode curve
+    with partial sells with ``Backtest.run()``."""
+    from test_optimize import _edge_shape_bars
+
+    from strat_backtest_spark.operators.optimize import evaluate_params
+    from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        drain_stream_update,
+        streaming_backtest_curve,
+        streaming_backtest_curve_update,
+        streaming_grid_curve,
+    )
+
+    bars = _edge_shape_bars(spark)
+    chunks = _thirds([tuple(r) for r in bars.collect()])
+    init = 10_000.0
+
+    def stream(name):
+        return _stream_chunks(spark, str(tmp_path / name), chunks)
+
+    def batch_curve(strategy):
+        bt = Backtest(bars, init, strategy)
+        rows = bt.run().collect()
+        bt.release()
+        return _curve_reprs(rows)
+
+    want = batch_curve(MACrossStrategy(fast, lagging))
+    got = _curve_reprs(drain_stream(
+        spark, streaming_backtest_curve(stream("append"), fast, lagging, init)
+    ).collect())
+    assert got == want
+
+    runs = [(0, fast, lagging), (1, lagging, fast)]
+    want = {
+        (r["ticker"], r["run_id"]): repr(r["net_worth"])
+        for r in evaluate_params(bars, runs, init).collect()
+    }
+    got = {}
+    grid = drain_stream(spark, streaming_grid_curve(stream("grid"), runs, init))
+    for r in grid.orderBy("date").collect():
+        got[(r["ticker"], r["run_id"])] = repr(r["net_worth"])
+    assert got == want
+
+    want = batch_curve(MACrossStrategy(fast, lagging, sell_shares=2.0))
+    got = _curve_reprs(drain_stream_update(
+        spark, streaming_backtest_curve_update(
+            stream("update"), fast, lagging, init, sell_shares=2.0
+        ),
+    ).collect())
+    assert got == want
+
+
+def _contract_curve(spark, path, stream):
+    """The drained curve of one streaming path over ``stream``."""
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        drain_stream_update,
+        streaming_backtest_curve,
+        streaming_backtest_curve_update,
+    )
+
+    if path == "partial":
+        return drain_stream_update(
+            spark, streaming_backtest_curve_update(stream, 3, 8, 10_000.0, sell_shares=2.0)
+        ).collect()
+    if path == "band":
+        curve = streaming_backtest_curve(stream, initial_amount=10_000.0, strategy="band")
+    else:
+        curve = streaming_backtest_curve(stream, 3, 8, 10_000.0)
+    return drain_stream(spark, curve).collect()
+
+
+@pytest.mark.parametrize("case", ["duplicate", "inf", "late", "nan"])
+@pytest.mark.parametrize("path", ["ma_cross", "band", "partial"])
+def test_streaming_bars_contract(spark, tmp_path, path, case):
+    """The batch bars contract on every streaming path: a duplicate
+    (ticker, date) among a micro-batch's bars and an infinite close are
+    refused by name; a bar on or before the last consumed day is
+    dropped as late; a null or NaN close is punctuation, not a bar. The
+    late and punctuation replays must equal the batch curve of the
+    clean bars."""
+    import math
+    from datetime import timedelta
+
+    from strat_backtest_spark.plans.backtest import (
+        Backtest,
+        BandStrategy,
+        MACrossStrategy,
+    )
+
+    from test_optimize import _edge_shape_bars
+
+    # a trading walk cut to the 60 days of the flat series, so that
+    # every series spans the three chunks
+    rows = [
+        tuple(r) for r in _edge_shape_bars(spark).collect()
+        if r["ticker"] in ("walk1", "flat", "ramp")
+    ]
+    end = max(r[1] for r in rows if r[0] == "flat")
+    rows = [r for r in rows if r[1] <= end]
+    chunks = _thirds(rows)
+    first = next(r for r in chunks[1] if r[0] == "ramp")
+    if case == "duplicate":
+        chunks[1].append(first)
+    elif case == "inf":
+        chunks[1][chunks[1].index(first)] = (*first[:2], math.inf)
+    elif case == "late":
+        # already consumed days again, with closes that must never count
+        chunks.append([(t, d, c * 10 + 999.0) for t, d, c in chunks[0][2::7]])
+    else:
+        chunks[2] += [("flat", end + timedelta(days=30), math.nan),
+                      ("ramp", end + timedelta(days=3), None)]
+    stream = _stream_chunks(spark, str(tmp_path / "src"), chunks)
+
+    if case in ("duplicate", "inf"):
+        match = "duplicate or null date" if case == "duplicate" else "non-finite close"
+        with pytest.raises(Exception, match=match):
+            _contract_curve(spark, path, stream)
+        return
+
+    strategy = {
+        "ma_cross": MACrossStrategy(3, 8),
+        "band": BandStrategy(),
+        "partial": MACrossStrategy(3, 8, sell_shares=2.0),
+    }[path]
+    bars = spark.createDataFrame(rows, "ticker string, date date, close double")
+    bt = Backtest(bars, 10_000.0, strategy)
+    want = _curve_reprs(bt.run().collect(), ("close", "shares_owned", "net_worth"))
+    bt.release()
+    got = _curve_reprs(
+        _contract_curve(spark, path, stream), ("close", "shares_owned", "net_worth")
+    )
+    assert got == want
