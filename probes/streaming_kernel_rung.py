@@ -28,7 +28,11 @@ curve oracle hash-checked at rung scale using the q72 sharding trick
 DuckDB recursion's working set stays under its 10-15M-event OOM
 boundary; the gate's LIMIT 150 tail is stripped so the FULL curve is
 compared. Receipt = AND over shards via the gate's own comparator.
-Corpus + curve deleted after. Prints one JSON line.
+Each run writes its corpus, curve and stream checkpoint to a fresh
+temporary directory, deleted after the run whether it passed or
+failed, so no run resumes another's checkpoint. Runs from any working
+directory: the checkout is found from this file and put on both the
+driver's and the Python workers' import path. Prints one JSON line.
 
     python probes/streaming_kernel_rung.py [REPLICAS] [--shard-oracle N]
 """
@@ -36,13 +40,22 @@ Corpus + curve deleted after. Prints one JSON line.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
+import tempfile
 import time
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+CHECKOUT = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, CHECKOUT)
+# Spark's Python workers inherit the JVM's environment, which the
+# session start copies from this process
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (CHECKOUT, os.environ.get("PYTHONPATH")) if p
+)
 
 from strat_backtest_spark.session import get_spark  # noqa: E402
 
@@ -58,7 +71,16 @@ def main() -> None:
     spark.conf.set("spark.sql.shuffle.partitions", "64")
     out = {"replicas": replicas, "tickers": 1500 * replicas,
            "events": 100_000 * replicas}
-    corpus = f"/tmp/skernel_rung_{replicas}x"
+    corpus = tempfile.mkdtemp(prefix=f"skernel_rung_{replicas}x_")
+    try:
+        run(spark, corpus, replicas, shards, out)
+    finally:
+        shutil.rmtree(corpus, ignore_errors=True)
+    print(json.dumps(out))
+    spark.stop()
+
+
+def run(spark, corpus: str, replicas: int, shards: int, out: dict) -> None:
     curve_dir = f"{corpus}/curve.parquet"
 
     t0 = time.time()
@@ -163,10 +185,6 @@ def main() -> None:
         out["oracle_shards"] = shards
         out["oracle_shard_ok"] = shard_ok
         out["oracle_s"] = round(sum(shard_s), 1)
-
-    shutil.rmtree(corpus, ignore_errors=True)
-    print(json.dumps(out))
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -3,16 +3,18 @@
 Everything else in the engine is declarative DataFrame algebra; this
 module is the one genuinely path-dependent component — cash balance,
 FIFO order book, stop-loss heap, and the strategy decision loop — and
-it runs per (ticker, run_id) group inside a ``mapInPandas`` batch
-walker (see ``run_kernel`` for why not ``applyInPandas``). State is
-O(open orders) per group; groups are independent, so the kernel
-parallelizes across tickers on a cluster, and a grid sweep simulates
-all of a ticker's parameter points from one pass over its bars (the
-reference's grid search is effectively serial, optimize.py:221-225).
-For ``Backtest`` the walker also finishes each group's outputs while
-it holds the group's arrays: the net-worth curve, the attached
-benchmark and the metric aggregates (``run_kernel(curve=True)``), so
-nothing after the kernel needs a window or a shuffle.
+it runs per ticker inside a ``mapInPandas`` batch walker (see
+``run_kernel`` for why not ``applyInPandas``), which simulates every
+run spec (``MACrossRun``, ``BandRun``) over the ticker's plain bar
+series. State is O(open orders) per run; tickers are independent, so
+the kernel parallelizes across tickers on a cluster, and a grid sweep
+simulates all of a ticker's parameter points from one pass over its
+bars (the reference's grid search is effectively serial,
+optimize.py:221-225). For ``Backtest`` the walker also finishes each
+run's outputs while it holds the ticker's arrays: the net-worth curve,
+the attached benchmark and the metric aggregates
+(``run_kernel(curve=True)``), so nothing after the kernel needs a
+window or a shuffle.
 
 Semantics replicate the reference order engine exactly, including its
 quirks (SURVEY.md Appendix A), because the golden tests depend on
@@ -21,7 +23,7 @@ documented fixes on.
 
 Reference citations: _Order strats.py:24-97, Order_Manager
 strats.py:133-245, Strategy.buy/sell strats.py:343-420,
-MA-cross driver custom_strats.py:41-62, band driver
+MA-cross walk custom_strats.py:41-62, band walk
 custom_strats.py:83-101.
 """
 
@@ -30,7 +32,7 @@ from __future__ import annotations
 import heapq
 import math
 from collections import deque
-from typing import Callable, Iterable, NamedTuple
+from typing import Iterable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -258,16 +260,46 @@ class TradingEngine:
 
 
 # ---------------------------------------------------------------------------
-# strategy decision drivers — the imperative residue of each Strategy
-# subclass. Each walk resumes from a small carry, so the streaming
-# kernel (streaming/backtest_stream.py) steps through a bar stream
-# with these same functions; a batch walk is one step from the empty
-# carry. MA-cross signals come from one plain bar series per ticker
-# (_sma_table, _cross_edges, run_kernel's ``runs``); the action-column
-# drivers below walk a feed whose edges were marked by the Spark-side
-# reference (``MACrossStrategy.signal_feed``). The band driver decides
-# on every bar.
+# run specs and their walks — the imperative residue of each Strategy
+# subclass. A run spec names one simulation: its run_id, its walk and
+# that walk's parameters. ``_walk_run`` is the one dispatch from a spec
+# to its walk, for the batch walker (``_run_ticker``) and the streaming
+# kernel (streaming/backtest_stream.py) alike. Every walk reads the
+# plain bar series and resumes from a small carry, so a micro-batch is
+# one more step of the batch walk, and a batch walk is one step from
+# the empty carry.
 # ---------------------------------------------------------------------------
+
+class MACrossRun(NamedTuple):
+    """An MA-cross run (reference MA_Cross_Strat, custom_strats.py:7-62):
+    a buy at every up-cross of the ``fast`` SMA over the ``lagging`` one,
+    a sell at every down-cross after the first buy. ``stop_loss_pct``
+    places a stop at close × pct under every buy; ``sell_shares`` is -1
+    (close the oldest order) or a fixed share count per sell, which
+    takes the engine's partial-fill path."""
+
+    run_id: int
+    fast: int
+    lagging: int
+    stop_loss_pct: float | None = None
+    sell_shares: float = -1
+
+    @property
+    def lengths(self) -> tuple[int, int]:
+        """The SMA lengths the walk reads."""
+        return self.fast, self.lagging
+
+
+class BandRun(NamedTuple):
+    """A threshold-band run (reference Ten_Percent_Strat,
+    custom_strats.py:65-101): sell when the close rises to anchor ×
+    ``sell``, buy when it falls to anchor × ``buy``."""
+
+    run_id: int
+    sell: float = 1.05
+    buy: float = 0.99
+    lengths = ()  # reads no SMA
+
 
 def _ma_cross_walk(
     eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
@@ -278,15 +310,13 @@ def _ma_cross_walk(
     """Reference custom_strats.py:41-62: buy at every up-cross; sell at
     down-crosses strictly after the first buy. ``idxs`` are the cross
     edges' row indices (ascending) and ``buys`` marks the up-crosses
-    among them. One loop for every MA-cross caller: the action-column
-    drivers below, ``run_kernel(runs=...)`` and the streaming kernel,
-    which find the edges themselves. ``sell_shares`` is -1 (close the
-    oldest order) or the fixed share count of the partial-sell driver.
-    ``first_buy``: the carry, the date of the first up-cross walked
-    before (None: none yet); returns the carry after these edges.
-    Drivers take plain numpy views (not per-group pandas frames): a
-    grid sweep runs thousands of simulations and per-group pandas
-    masking was a measurable slice of the sweep."""
+    among them (``_cross_edges``). ``sell_shares`` is -1 (close the
+    oldest order) or a fixed share count. ``first_buy``: the carry, the
+    date of the first up-cross walked before (None: none yet); returns
+    the carry after these edges. Walks take plain numpy views (not
+    per-group pandas frames): a grid sweep runs thousands of
+    simulations and per-group pandas masking was a measurable slice of
+    the sweep."""
     if first_buy is None:
         buy_pos = np.flatnonzero(buys)
         if buy_pos.size == 0:
@@ -304,12 +334,6 @@ def _ma_cross_walk(
     return first_buy
 
 
-def _action_edges(actions: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(edge indices, is-buy) of a feed's buy/sell action column."""
-    idxs = np.flatnonzero((actions == "buy") | (actions == "sell"))
-    return idxs, actions[idxs] == "buy"
-
-
 def _cross_edges(cross: np.ndarray, prev=None) -> tuple[np.ndarray, np.ndarray]:
     """(edge indices, is-buy) of a ``cross`` series (sma_fast >
     sma_lagging, a null SMA counting as false): every row where
@@ -323,20 +347,9 @@ def _cross_edges(cross: np.ndarray, prev=None) -> tuple[np.ndarray, np.ndarray]:
     return idxs, cross[idxs]
 
 
-def ma_cross_driver(
-    eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
-    actions: np.ndarray, params: dict,
-) -> None:
-    """MA-cross over a feed whose ``action`` column marks the edges."""
-    _ma_cross_walk(
-        eng, dates, closes, *_action_edges(actions),
-        stop_loss_pct=params.get("stop_loss_pct"),
-    )
-
-
 def band_driver(
     eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
-    actions: np.ndarray, params: dict, carry=None, lo: int = 0,
+    sell: float, buy: float, carry=None, lo: int = 0,
 ):
     """Reference Ten_Percent_Strat (custom_strats.py:83-101): buy on the
     first bar, then sell when the close rises to anchor·sell and buy
@@ -346,8 +359,6 @@ def band_driver(
     (anchor close, the last move was a sell) with a None anchor (or no
     carry) before the first bar. Returns (carry, moves), ``moves`` the
     (bar index, action) of each decision, taken or not by the engine."""
-    sell_mult = params.get("sell", 1.05)
-    buy_mult = params.get("buy", 0.99)
     anchor, last_move_sell = carry or (None, False)
     moves = []
     for i in range(lo, len(closes)):
@@ -355,10 +366,10 @@ def band_driver(
         if anchor is None:
             eng.buy(dates[i], value)
             moves.append((i, "buy"))
-        elif value >= anchor * sell_mult and not last_move_sell:
+        elif value >= anchor * sell and not last_move_sell:
             eng.sell(dates[i], value)
             moves.append((i, "sell"))
-        elif value <= anchor * buy_mult and last_move_sell:
+        elif value <= anchor * buy and last_move_sell:
             eng.buy(dates[i], value)
             moves.append((i, "buy"))
         else:
@@ -367,28 +378,43 @@ def band_driver(
     return (anchor, last_move_sell), moves
 
 
-def ma_cross_partial_driver(
-    eng: TradingEngine, dates: np.ndarray, closes: np.ndarray,
-    actions: np.ndarray, params: dict,
-) -> None:
-    """ma_cross variant selling a FIXED share count per down-cross
-    (``sell_shares``): exercises the engine's partial-fill path — Q1's
-    remainder double-queue (strats.py:151,205) and Q4's
-    num_shares-overwrite-on-fill (strats.py:81) — which whole-order
-    ``sell(-1)`` closes never reach. No shipped reference strategy
-    issues partial closes; this driver exists so the partial path has
-    end-to-end batch/streaming parity coverage."""
-    _ma_cross_walk(
-        eng, dates, closes, *_action_edges(actions),
-        sell_shares=params.get("sell_shares", 1.0),
+_EDGE_ACTIONS = np.array(["sell", "buy"], dtype=object)
+
+
+def _walk_run(
+    eng: TradingEngine, spec, smas: dict, lo: int = 0, carry=None,
+) -> tuple[dict, np.ndarray]:
+    """Walk run ``spec`` over the engine's bars (``eng.dates``,
+    ``eng.closes``) from bar ``lo`` on, resuming from ``carry`` — the
+    walk's carry mapping (``prev_cross`` and ``first_buy`` for
+    MA-cross, ``anchor`` and ``last_move_sell`` for the band; None or
+    missing keys: nothing walked before). ``smas``: ``_sma_table`` of
+    ``spec.lengths`` over a run of bars that ends with the last bar and
+    reaches back to bar ``lo``. Returns (the carry after the walk, the
+    action of each bar from ``lo`` on): 'buy'/'sell' at the MA-cross
+    edges or the band's moves, None elsewhere."""
+    dates, closes = eng.dates, eng.closes
+    carry = carry or {}
+    action = np.full(len(closes) - lo, None, dtype=object)
+    if isinstance(spec, BandRun):
+        (anchor, last_move_sell), moves = band_driver(
+            eng, dates, closes, spec.sell, spec.buy,
+            (carry.get("anchor"), carry.get("last_move_sell", False)), lo,
+        )
+        for i, a in moves:
+            action[i - lo] = a
+        return {"anchor": anchor, "last_move_sell": last_move_sell}, action
+    m = len(action)
+    fast, lagging = (smas[n][len(smas[n]) - m:] for n in spec.lengths)
+    cross = fast > lagging
+    idxs, buys = _cross_edges(cross, carry.get("prev_cross"))
+    action[idxs] = _EDGE_ACTIONS[buys.astype(np.intp)]
+    first_buy = _ma_cross_walk(
+        eng, dates, closes, idxs + lo, buys, spec.stop_loss_pct,
+        spec.sell_shares, carry.get("first_buy"),
     )
-
-
-DRIVERS: dict[str, Callable[..., None]] = {
-    "ma_cross": ma_cross_driver,
-    "ma_cross_partial": ma_cross_partial_driver,
-    "band": band_driver,
-}
+    prev_cross = bool(cross[-1]) if m else carry.get("prev_cross")
+    return {"prev_cross": prev_cross, "first_buy": first_buy}, action
 
 
 # ---------------------------------------------------------------------------
@@ -518,7 +544,7 @@ class _Sim(NamedTuple):
 
 
 def _check_bars(ticker, dates: np.ndarray, closes: np.ndarray) -> np.ndarray:
-    """The bars contract every walk relies on: within a group the dates
+    """The bars contract every walk relies on: within a ticker the dates
     strictly increase (the event lookups and the stop-loss scan
     ``searchsorted`` them) and every close is finite (Spark orders NaN
     above every number and skips null closes in its window averages;
@@ -539,19 +565,32 @@ def _check_bars(ticker, dates: np.ndarray, closes: np.ndarray) -> np.ndarray:
     return days
 
 
-def _run_one_group(
-    acc: _KernelOutAcc, sim: _Sim, ticker, run_id,
+def _run_ticker(
+    acc: _KernelOutAcc, sim: _Sim, ticker,
     dates: np.ndarray, days: np.ndarray, closes: np.ndarray,
-    actions, drive, *args,
+    runs, curve: bool,
 ) -> None:
-    """Simulate one (ticker, run_id) group into the accumulator:
-    ``drive(engine, dates, closes, *args)`` makes the decisions.
-    Inputs are numpy views over the batch arrays, already date-sorted
-    and checked (``_check_bars``) — no per-group pandas objects.
-    ``actions``: the group's per-bar signal column, to emit its curve
-    rows and its stats row with; None emits neither."""
-    eng = TradingEngine(dates, closes, sim.initial_amount, parity=sim.parity)
-    drive(eng, dates, closes, *args)
+    """Every run spec of ``runs`` over one ticker's bars, into the
+    accumulator. Inputs are numpy views over the batch arrays, already
+    date-sorted and checked (``_check_bars``) — no per-group pandas
+    objects. Each distinct SMA length is computed once per ticker and
+    shared by every MA-cross run that reads it. ``curve``: also emit
+    each run's curve rows and stats row."""
+    smas = _sma_table(closes, {n for spec in runs for n in spec.lengths})
+    for spec in runs:
+        eng = TradingEngine(dates, closes, sim.initial_amount, parity=sim.parity)
+        _, actions = _walk_run(eng, spec, smas)
+        _emit_run(acc, sim, ticker, spec.run_id, eng, days, actions if curve else None)
+
+
+def _emit_run(
+    acc: _KernelOutAcc, sim: _Sim, ticker, run_id, eng: TradingEngine,
+    days: np.ndarray, actions,
+) -> None:
+    """One walked run's order and event rows; given its per-bar
+    ``actions`` (None emits neither), also its curve rows and its
+    stats row."""
+    dates, closes = eng.dates, eng.closes
     orders = [*eng.book.completed, *eng.book.open_orders]
     for o in orders:
         acc.add_order(ticker, run_id, o)
@@ -799,75 +838,44 @@ def _sma_table(closes: np.ndarray, lengths) -> dict[int, np.ndarray]:
     return out
 
 
-_EDGE_ACTIONS = np.array(["sell", "buy"], dtype=object)
-
-
-def _run_grid(
-    acc: _KernelOutAcc, sim: _Sim, ticker,
-    dates: np.ndarray, days: np.ndarray, closes: np.ndarray,
-    runs, stop_loss_pct, sell_shares, curve: bool,
-) -> None:
-    """Every MA-cross run of ``runs`` over one ticker's bars. The
-    signal semantics are ``MACrossStrategy.signal_feed``'s: ``cross``
-    is sma_fast > sma_lagging with a null (NaN) SMA counting as false,
-    the edges are the first row plus every row where ``cross`` changes,
-    and an edge's action is 'buy' where ``cross`` holds, else 'sell'."""
-    smas = _sma_table(closes, {n for _, f, l in runs for n in (f, l)})
-    for run_id, fast, lagging in runs:
-        idxs, buys = _cross_edges(smas[fast] > smas[lagging])
-        actions = None
-        if curve:
-            actions = np.full(len(closes), None, dtype=object)
-            actions[idxs] = _EDGE_ACTIONS[buys.astype(np.intp)]
-        _run_one_group(
-            acc, sim, ticker, run_id, dates, days, closes, actions,
-            _ma_cross_walk, idxs, buys, stop_loss_pct, sell_shares,
-        )
-
-
 def run_kernel(
-    feed: DataFrame,
+    bars: DataFrame,
     initial_amount: float,
-    strategy: str = "ma_cross",
-    params: dict | None = None,
+    *,
+    runs: list,
     parity: bool = True,
-    runs: list[tuple[int, int, int]] | None = None,
     curve: bool = False,
     benchmark: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
-    """Run the order-matching simulation per (ticker, run_id) group.
+    """Simulate every run spec of ``runs`` over every ticker's bars.
 
-    ``feed``: (ticker, run_id, date, close, action) — all bars for the
-    group, with ``action`` null on non-event bars (the stop-loss scan
-    and path-dependent drivers need the full series; Catalyst prunes
-    the unused columns from the scan). Every group must have strictly
-    increasing dates and finite closes; a group that breaks this bars
-    contract fails the job with a ``ValueError`` naming the ticker and
-    the first offending date (``_check_bars``).
+    ``bars``: the plain bar series; the kernel reads only ``ticker``,
+    ``date`` and ``close`` (Catalyst prunes any other column from the
+    scan). Every ticker must have strictly increasing dates and finite
+    closes; a ticker that breaks this bars contract fails the job with
+    a ``ValueError`` naming it and the first offending date
+    (``_check_bars``).
 
-    ``runs``: the (run_id, fast, lagging) points to simulate — a
-    ``Backtest``'s single point or a sweep's grid. The kernel then
-    computes the MA-cross signals itself: ``feed`` carries one plain
-    bar series per ticker (``action`` and ``run_id`` are ignored; see
-    ``signals.ma_cross_feed_grid``), every run is simulated over it,
-    and the output rows carry the runs' ids. Each distinct
+    ``runs``: the run specs — ``MACrossRun`` and ``BandRun`` in any mix,
+    a ``Backtest``'s one run or a sweep's grid. Every run is simulated
+    over every ticker, and its output rows carry its ``run_id``. The
+    kernel computes the MA-cross signals itself: each distinct
     moving-average length is computed once per ticker and shared by
-    every run that uses it (``_sma_table``; bit-identical to the Spark
-    window ``MACrossStrategy.signal_feed`` uses). Compared with a
-    Spark-built feed, each bar crosses into Python once instead of once
-    per run, and no window re-aggregates its frame for every row. Only
-    ``strategy="ma_cross"`` (``params`` may set ``stop_loss_pct``) and
-    ``"ma_cross_partial"`` (``sell_shares``).
+    every run that reads it (``_sma_table``; bit-identical to the Spark
+    window ``MACrossStrategy.signal_feed`` uses), so each bar crosses
+    into Python once however many runs read it, and no window
+    re-aggregates its frame for every row.
 
-    ``curve``: also emit, per group, one ``row_type='bar'`` row per
-    curve row and one ``row_type='stats'`` row. The bar rows are the
+    ``curve``: also emit, per (ticker, run), one ``row_type='bar'`` row
+    per curve row and one ``row_type='stats'`` row. The bar rows are the
     daily net-worth curve ``portfolio.build_portfolio`` would build from
-    the feed and the trade events, bit for bit, with the bar's signal
-    ``action`` and ``benchmark`` attached as ``attach_benchmark`` would
-    (Q6 positional when ``parity``, by date otherwise; read them with
-    :func:`portfolio_curve`). The stats row holds the per-group
+    the bars and the trade events, bit for bit, with the run's per-bar
+    ``action`` (the MA-cross edges or the band's moves, null elsewhere)
+    and ``benchmark`` attached as ``attach_benchmark`` would (Q6
+    positional when ``parity``, by date otherwise; read them with
+    :func:`portfolio_curve`). The stats row holds the per-run
     aggregates ``metrics.metric_aggregates`` computes from that curve
-    and the group's orders, as the same doubles (``_group_stats``; read
+    and the run's orders, as the same doubles (``_group_stats``; read
     it with :func:`kernel_stats`). ``Backtest.run`` needs both; the
     sweep and ``final_net_worth`` only need the events, and skip the
     |bars| × |runs| rows.
@@ -875,83 +883,61 @@ def run_kernel(
     ``benchmark``: ``benchmark_series``' (days, sp500) arrays, or None.
 
     Plan shape: repartition on ticker + sortWithinPartitions +
-    ``mapInPandas`` with a batch-spanning group walker — NOT
+    ``mapInPandas`` with a batch-spanning ticker walker — NOT
     ``groupBy().applyInPandas``. Both shuffle once; the difference is
-    Python-side: mapInPandas lets one Python call process every group
-    in an Arrow batch (see ``_KernelOutAcc``), where
-    applyInPandas pays per-group pandas frame construction for every
-    (ticker, run_id) group. The walker splits partitions on key
-    changes, so groups sharing a partition cost nothing. Keying on
-    ticker alone lets Spark ELIDE the repartition when the feed comes
-    straight off a per-ticker signal window (``signal_feed``): the
-    kernel then adds no exchange.
+    Python-side: mapInPandas lets one Python call process every ticker
+    in an Arrow batch (see ``_KernelOutAcc``), where applyInPandas pays
+    per-group pandas frame construction. The walker splits partitions
+    on ticker changes, so tickers sharing a partition cost nothing.
 
     Returns the tagged kernel output — KERNEL_OUT_SCHEMA with the
     curve, KERNEL_LEDGER_SCHEMA without; split with
     :func:`split_kernel_output`, :func:`portfolio_curve` and
     :func:`kernel_stats`.
     """
-    driver = DRIVERS[strategy]
-    params = params or {}
     sim = _Sim(float(initial_amount), parity, benchmark)
-    if runs is not None:
-        # the walk options ma_cross_driver / ma_cross_partial_driver read
-        if strategy == "ma_cross":
-            walk_opts = (params.get("stop_loss_pct"), -1)
-        elif strategy == "ma_cross_partial":
-            walk_opts = (None, params.get("sell_shares", 1.0))
-        else:
-            raise ValueError(f"runs= computes MA-cross signals, not {strategy!r}")
-        runs = [(int(i), int(f), int(l)) for i, f, l in runs]
-        if any(min(f, l) < 1 for _, f, l in runs):
-            raise ValueError("moving-average lengths must be at least 1")
+    if any(n < 1 for spec in runs for n in spec.lengths):
+        raise ValueError("moving-average lengths must be at least 1")
 
     srt = (
-        feed.select("ticker", "run_id", "date", "close", "action")
+        bars.select("ticker", "date", "close")
         .repartition("ticker")
-        .sortWithinPartitions("ticker", "run_id", "date")
+        .sortWithinPartitions("ticker", "date")
     )
 
     schema = KERNEL_OUT_SCHEMA if curve else KERNEL_LEDGER_SCHEMA
 
     def walk(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         acc = _KernelOutAcc(schema)
-        # open group's segments as (dates, closes, actions) array views
-        carry: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
+        # open ticker's segments as (dates, closes) array views
+        carry: list[tuple[np.ndarray, np.ndarray]] = []
         carry_key = None
 
-        def run(key, segs):
+        def run(ticker, segs):
             if len(segs) == 1:
-                d, c, a = segs[0]
+                d, c = segs[0]
             else:
                 d = np.concatenate([x[0] for x in segs])
                 c = np.concatenate([x[1] for x in segs])
-                a = np.concatenate([x[2] for x in segs])
-            days = _check_bars(key[0], d, c)
-            if runs is None:
-                _run_one_group(acc, sim, key[0], key[1], d, days, c,
-                               a if curve else None, driver, a, params)
-            else:
-                _run_grid(acc, sim, key[0], d, days, c, runs, *walk_opts, curve)
+            days = _check_bars(ticker, d, c)
+            _run_ticker(acc, sim, ticker, d, days, c, runs, curve)
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             t = pdf["ticker"].to_numpy()
-            r = pdf["run_id"].to_numpy()
             dates = pdf["date"].to_numpy()
             closes = pdf["close"].to_numpy()
-            actions = pdf["action"].to_numpy()
-            change = np.flatnonzero((t[1:] != t[:-1]) | (r[1:] != r[:-1])) + 1
+            change = np.flatnonzero(t[1:] != t[:-1]) + 1
             starts = np.concatenate(([0], change))
             ends = np.concatenate((change, [len(pdf)]))
             for s, e in zip(starts, ends):
-                key = (t[s], r[s])
-                seg = (dates[s:e], closes[s:e], actions[s:e])
+                key = t[s]
+                seg = (dates[s:e], closes[s:e])
                 if carry_key is not None and carry_key != key:
                     run(carry_key, carry)
                     carry, carry_key = [], None
-                if e < len(pdf):  # complete group inside this batch
+                if e < len(pdf):  # complete ticker inside this batch
                     carry.append(seg)
                     run(key, carry)
                     carry, carry_key = [], None

@@ -31,7 +31,11 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from strat_backtest_spark.operators.kernel import run_kernel, split_kernel_output
+from strat_backtest_spark.operators.kernel import (
+    MACrossRun,
+    run_kernel,
+    split_kernel_output,
+)
 from strat_backtest_spark.operators.portfolio import final_net_worth_from_events
 from strat_backtest_spark.operators.signals import ma_cross_feed_grid
 
@@ -80,7 +84,7 @@ def evaluate_params(bars: DataFrame, params, initial_amount: float) -> DataFrame
     (run_id, fast, lagging) rows or a DataFrame of them.
 
     The kernel reads each ticker's bars once and simulates every grid
-    point over them (``run_kernel``'s ``runs``). The objective needs
+    point over them (one ``MACrossRun`` spec per row). The objective needs
     only the LAST point of each net-worth curve, and at the last bar
     the curve telescopes to an aggregation over the kernel's sparse
     trade events:
@@ -94,7 +98,9 @@ def evaluate_params(bars: DataFrame, params, initial_amount: float) -> DataFrame
     rows = [(int(i), int(f), int(l)) for i, f, l in params]
     param_df = _params_local_relation(bars.sparkSession, rows)
     feed = ma_cross_feed_grid(bars)
-    kernel_out = run_kernel(feed, initial_amount, runs=rows)
+    kernel_out = run_kernel(
+        feed, initial_amount, runs=[MACrossRun(*row) for row in rows]
+    )
     _, events = split_kernel_output(kernel_out)
     return final_net_worth_from_events(
         bars, events, param_df.select("run_id"), initial_amount

@@ -5,12 +5,15 @@ The reference computes the daily net-worth curve vectorized in pandas
 (strats.py:557-579) and concatenates the benchmark onto it
 (strats.py:592-600). ``Backtest.run`` takes both from the kernel
 (``run_kernel(curve=True, benchmark=...)``), which has the bars, the
-trade events and the benchmark series in hand. ``build_portfolio``
-(feed ⟕ events plus window algebra over (ticker, run_id) partitions)
-and ``attach_benchmark`` are the Spark-side forms of the same curve and
-attach: the path for a user-built portfolio, and the reference the
-tests hold the kernel to bit for bit. ``final_net_worth_from_events``
-serves the backtest and the sweep directly.
+trade events and the benchmark series in hand, for every strategy.
+``build_portfolio`` (feed ⟕ events plus window algebra over (ticker,
+run_id) partitions) and ``attach_benchmark`` are the Spark-side forms
+of the same curve and attach: the path for a user-built portfolio, and
+the reference the tests hold the kernel to bit for bit — the MA-cross
+curve over ``MACrossStrategy.signal_feed``, the band curve over the
+plain bars (all but ``action``, where the kernel writes the band's
+moves). ``final_net_worth_from_events`` serves the backtest and the
+sweep directly.
 """
 
 from __future__ import annotations

@@ -8,13 +8,14 @@ indexing (custom_strats.py:45-48):
     sell = cross.iloc[np.where(~cross & (cross != cross.shift(1)))]
 
 Here the same semantics are a lag + filter over a per-ticker window.
-``Backtest`` and the sweeps do not run these windows: the kernel
-computes every MA-cross point's edges, bit for bit the same, from one
-plain bar series per ticker (``ma_cross_feed_grid``;
-``operators/kernel.py:_run_grid``). ``ma_cross_signal_feed`` (behind
-``MACrossStrategy.signal_feed``) and its edge rows ``ma_cross_signals``
-are the Spark-side reference forms the tests hold the kernel to;
-``band_signals`` is the band strategy's all-bars feed.
+``Backtest`` and the sweeps do not run these windows: the kernel reads
+the plain bar series for every strategy and computes every MA-cross
+run's edges, bit for bit the same (``operators/kernel.py:_walk_run``);
+the band strategy has no signal table, it decides on every bar.
+``ma_cross_signal_feed`` (behind ``MACrossStrategy.signal_feed``) and
+its edge rows ``ma_cross_signals`` are the Spark-side reference forms
+the tests hold the kernel to, and feed the q39 query and the events
+stream.
 
 pandas parity notes:
 - NaN > NaN is False in pandas, so `cross` is False during the MA
@@ -26,7 +27,7 @@ pandas parity notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from strat_backtest_spark.functions.windows import (
     rolling_mean_sql,
@@ -84,29 +85,15 @@ def ma_cross_signals(
 
 
 def ma_cross_feed_grid(bars: DataFrame) -> DataFrame:
-    """Kernel feed for MA-cross runs (a ``Backtest``'s one point or a
-    sweep's grid): each ticker's bar series once,
-    as (ticker, run_id=0, date, close, action=NULL) — one row per bar,
-    not one per bar and grid point. The grid's signals are not built
-    here: ``run_kernel(feed, ..., runs=params)`` computes every
-    point's MA-cross edges over this series inside the kernel (see
-    ``operators/kernel.py:_run_grid``), so the series is the same for
+    """The sweep's kernel input: each ticker's bar series once, as
+    (ticker, run_id=0, date, close, action=NULL) — one row per bar, not
+    one per bar and grid point. The grid's signals are not built here:
+    ``run_kernel`` reads only (ticker, date, close) and computes every
+    point's MA-cross edges over this series (see
+    ``operators/kernel.py:_run_ticker``), so the series is the same for
     every grid."""
     return bars.selectExpr(
         "ticker", "CAST(0 AS BIGINT) AS run_id", "date", "close",
         "CAST(NULL AS STRING) AS action",
     )
 
-
-def band_signals(bars: DataFrame, run_id: int = 0) -> DataFrame:
-    """All-bars feed for path-dependent strategies (custom_strats.py:83-101):
-    every bar is a potential decision point, so the 'signals' table is
-    the full close series tagged 'bar' — the kernel's callback decides.
-    """
-    return bars.select(
-        "ticker",
-        F.lit(run_id).cast("long").alias("run_id"),
-        "date",
-        "close",
-        F.lit("bar").alias("action"),
-    )

@@ -1,14 +1,14 @@
 """The user-facing backtest plan (reference: Backtest,
 strats.py:489-655).
 
-A strategy here is a DECLARATIVE SPEC — (signal generator, kernel
-driver, params) — not an eagerly-executing subclass (the reference
-runs the whole simulation inside Strategy.__init__,
+A strategy here is a DECLARATIVE SPEC — the kernel run spec it stands
+for (``kernel_runs()``) — not an eagerly-executing subclass (the
+reference runs the whole simulation inside Strategy.__init__,
 strats.py:551-554). ``Backtest.run()`` assembles one lazy DataFrame
 graph:
 
-    bars (one row per bar) → kernel (mapInPandas group walker per
-         ticker: MA-cross signals, simulation, net-worth curve,
+    bars (one row per bar) → kernel (mapInPandas walker per ticker:
+         the strategy's signals, simulation, net-worth curve,
          benchmark attach, metric aggregates) → cache
        ├─ order rows → orders
        ├─ bar rows   → portfolio (with sp500)
@@ -17,12 +17,12 @@ graph:
 Its one eager job is a plain ``collect()`` of the benchmark's (date,
 sp500) rows, which the kernel receives as driver-side arrays
 (``kernel.benchmark_series``); everything else executes at the first
-action. The band strategy feeds the kernel its all-bars ``signal_feed``
-instead of the plain series. ``MACrossStrategy.signal_feed`` (Spark
-windows), ``portfolio.build_portfolio`` (feed ⟕ events window
-algebra), ``portfolio.attach_benchmark`` and
-``metrics.compute_metrics`` compute the same signals, curve and stats
-on the Spark side; the tests hold the kernel to them bit for bit.
+action. Both strategies feed the kernel the plain bar series.
+``MACrossStrategy.signal_feed`` (Spark windows),
+``portfolio.build_portfolio`` (feed ⟕ events window algebra),
+``portfolio.attach_benchmark`` and ``metrics.compute_metrics`` compute
+the same signals, curve and stats on the Spark side; the tests hold
+the kernel to them bit for bit.
 """
 
 from __future__ import annotations
@@ -33,6 +33,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from strat_backtest_spark.operators.kernel import (
+    BandRun,
+    MACrossRun,
     benchmark_series,
     kernel_stats,
     portfolio_curve,
@@ -47,11 +49,7 @@ from strat_backtest_spark.operators.metrics import finish_metrics
 from strat_backtest_spark.operators.metrics import compute_metrics  # noqa: F401
 from strat_backtest_spark.operators.portfolio import attach_benchmark  # noqa: F401
 from strat_backtest_spark.operators.portfolio import build_portfolio  # noqa: F401
-from strat_backtest_spark.operators.signals import (
-    band_signals,
-    ma_cross_feed_grid,
-    ma_cross_signal_feed,
-)
+from strat_backtest_spark.operators.signals import ma_cross_signal_feed
 
 
 @dataclass
@@ -62,60 +60,41 @@ class MACrossStrategy:
     fast: int = 20
     lagging: int = 100
     stop_loss_pct: Optional[float] = None
-    kernel_driver: str = "ma_cross"
     # sell a fixed share count per down-cross instead of whole-order
     # FIFO closes — routes through the engine's partial-fill path
     sell_shares: Optional[float] = None
 
     def __post_init__(self) -> None:
-        if self.sell_shares is not None:
-            if self.stop_loss_pct is not None:
-                # ma_cross_partial_driver does not run the stop scan;
-                # silently ignoring the stop would be worse
-                raise NotImplementedError(
-                    "stop_loss_pct with sell_shares is not supported"
-                )
-            self.kernel_driver = "ma_cross_partial"
+        if self.sell_shares is not None and self.stop_loss_pct is not None:
+            # no oracle or test covers a stop on the partial-fill path;
+            # refuse it rather than return an unchecked number
+            raise NotImplementedError("stop_loss_pct with sell_shares is not supported")
 
     def signal_feed(self, bars: DataFrame, run_id: int = 0) -> DataFrame:
-        """The Spark-side reference for the signals
-        ``run_kernel(runs=...)`` computes (``Backtest`` feeds the kernel
-        the plain bar series)."""
+        """The Spark-side reference for the signals the kernel computes
+        (``Backtest`` feeds the kernel the plain bar series)."""
         return ma_cross_signal_feed(bars, self.fast, self.lagging, run_id)
 
-    def kernel_params(self) -> dict:
-        p: dict = {"stop_loss_pct": self.stop_loss_pct}
-        if self.sell_shares is not None:
-            p["sell_shares"] = self.sell_shares
-        return p
-
     def kernel_runs(self) -> list:
-        """The kernel computes the signals of this one (run_id, fast,
-        lagging) point itself."""
-        return [(0, self.fast, self.lagging)]
+        """This strategy's one kernel run spec."""
+        return [MACrossRun(
+            0, int(self.fast), int(self.lagging), self.stop_loss_pct,
+            -1 if self.sell_shares is None else self.sell_shares,
+        )]
 
 
 @dataclass
 class BandStrategy:
     """Threshold-band spec (reference: Ten_Percent_Strat,
-    custom_strats.py:65-101) — fully path-dependent; every bar is a
-    decision point for the kernel callback."""
+    custom_strats.py:65-101) — fully path-dependent; the kernel decides
+    on every bar."""
 
     sell: float = 1.05
     buy: float = 0.99
-    kernel_driver: str = "band"
 
-    def signal_feed(self, bars: DataFrame, run_id: int = 0) -> DataFrame:
-        return band_signals(bars, run_id=run_id).select(
-            "ticker", "run_id", "date", "close", "action"
-        )
-
-    def kernel_params(self) -> dict:
-        return {"sell": self.sell, "buy": self.buy}
-
-    def kernel_runs(self) -> None:
-        """The kernel reads every bar from ``signal_feed``."""
-        return None
+    def kernel_runs(self) -> list:
+        """This strategy's one kernel run spec."""
+        return [BandRun(0, self.sell, self.buy)]
 
 
 @dataclass
@@ -152,19 +131,11 @@ class Backtest:
         return self.bars.filter(F.col("ticker") == self.ticker.lower())
 
     def _kernel_out(self, bars: DataFrame, curve: bool, benchmark=None) -> DataFrame:
-        runs = self.strategy.kernel_runs()
-        feed = (
-            self.strategy.signal_feed(bars)
-            if runs is None
-            else ma_cross_feed_grid(bars)
-        )
         return run_kernel(
-            feed,
+            bars,
             self.initial_amount,
-            strategy=self.strategy.kernel_driver,
-            params=self.strategy.kernel_params(),
+            runs=self.strategy.kernel_runs(),
             parity=self.parity,
-            runs=runs,
             curve=curve,
             benchmark=benchmark,
         )

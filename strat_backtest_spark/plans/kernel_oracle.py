@@ -84,8 +84,9 @@ def _ma_kernel_sim_sql(
       FROM crossed
       WHERE prev_cross IS NULL OR is_cross <> prev_cross
     ), edges AS MATERIALIZED (
-      -- ma_cross_driver: sells at or before the first buy are skipped
-      -- (kernel.py:266-276); survivors are the kernel's decision stream
+      -- the MA-cross walk (kernel._ma_cross_walk): sells at or before
+      -- the first buy are skipped; survivors are the kernel's decision
+      -- stream
       SELECT ticker, run_id, date, close, action,
              row_number() OVER (PARTITION BY ticker, run_id ORDER BY date) AS i
       FROM (
@@ -624,8 +625,8 @@ FROM m
 
 
 def _partial_sim_sql() -> str:
-    """q71's oracle: the ma_cross_partial driver (fixed 2-share sells,
-    kernel.py:305-330) with the engine's FULL partial-fill quirk set —
+    """q71's oracle: the partial-sell MA-cross walk (an ``MACrossRun``
+    with fixed 2-share sells, kernel._ma_cross_walk) with the engine's FULL partial-fill quirk set —
     the recursion carries an oid-indexed order TABLE plus the deque and
     completed lists as oid references, so Q1's remainder double-queue
     (the same remainder object queued twice, strats.py:151,205) and

@@ -5,14 +5,15 @@ batch loop over a complete bar series. This module runs the SAME
 engine incrementally over an unbounded bar stream with one
 ``applyInPandasWithState`` adapter (``_step_fn``) over the batch
 kernel's own pieces (operators/kernel.py): ``_check_bars``,
-``_sma_table``, ``_cross_edges``, ``_ma_cross_walk``, ``band_driver``,
+``_sma_table``, ``_walk_run`` (the one dispatch from a run spec,
+``MACrossRun`` or ``BandRun``, to its walk — the batch walker's too),
 ``_trade_events`` and ``_portfolio_curve``. Each resumes from a small
 carry, and a batch walk is one step from the empty carry, so a
 micro-batch is one more step of the batch walk. Every public operator
 (``streaming_backtest_curve``, ``streaming_backtest_curve_update``,
 ``streaming_grid_curve``, ``streaming_signal_edges_stateful``) is one
-call into that adapter, keyed by ticker (by (ticker, run_id) for the
-grid).
+call into that adapter with a function that resolves each key to its
+run spec, keyed by ticker (by (ticker, run_id) for the grid).
 
 One micro-batch of one key, in order:
 
@@ -39,18 +40,18 @@ One micro-batch of one key, in order:
 
 State (``_STATE``, one row per key): the reorder buffer (``pend_*``,
 ``max_day``, ``last_day``); the walk carry (``prev_cross`` and
-``first_buy_day`` for MA-cross, ``anchor``/``last_move_sell`` for the
+``first_buy`` for MA-cross, ``anchor``/``last_move_sell`` for the
 band); the retained bars (``hist_*``) with the curve carry at their
 start (``cum_buy``, ``cum_sell``, ``shares``); and the engine
 (``_save_engine``): its scalars, the orders it can still read, its stop
 heap and its trade events on the retained days. The retained bars are
 the last max(fast, lagging) − 1 (the SMA frames), back to the earliest
 pending stop's start day (the stop scan reads them and a hit books its
-sell there), and, with partial sells, back to the earliest open
-order's start day (a fill there can re-size a past buy). State is
-O(open-position look-back), not O(stream length). Days are epoch-day
-integers throughout: the engine only compares, searchsorts and
-dict-keys them.
+sell there), and, in update mode (the partial-sell operator), back to
+the earliest open order's start day (a partial fill there can re-size
+a past buy). State is O(open-position look-back), not O(stream
+length). Days are epoch-day integers throughout: the engine only
+compares, searchsorts and dict-keys them.
 
 What is bit-exact against the batch kernel (``Backtest.run``,
 ``evaluate_params``), over any micro-batch split:
@@ -69,6 +70,11 @@ What is bit-exact against the batch kernel (``Backtest.run``,
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
 from collections import deque
 from typing import Iterator, Tuple
 
@@ -90,16 +96,15 @@ from pyspark.sql.types import (
 )
 
 from strat_backtest_spark.operators.kernel import (
-    _EDGE_ACTIONS,
+    BandRun,
+    MACrossRun,
     TradingEngine,
     _check_bars,
-    _cross_edges,
     _KOrder,
-    _ma_cross_walk,
     _portfolio_curve,
     _sma_table,
     _trade_events,
-    band_driver,
+    _walk_run,
 )
 
 _CURVE_OUTPUT = StructType(
@@ -123,8 +128,8 @@ _STATE = StructType([StructField(name, dtype) for name, dtype in (
     # the last day consumed (None before the first)
     ("pend_day", _LONGS), ("pend_close", _DOUBLES),
     ("max_day", LongType()), ("last_day", LongType()),
-    # the walk carry: MA-cross (_cross_edges, _ma_cross_walk), band
-    ("prev_cross", BooleanType()), ("first_buy_day", LongType()),
+    # the walk carry (_walk_run): MA-cross, band
+    ("prev_cross", BooleanType()), ("first_buy", LongType()),
     ("anchor", DoubleType()), ("last_move_sell", BooleanType()),
     # the retained bars, their actions, and the curve carry at the
     # first of them (_portfolio_curve); emit_seq for update mode
@@ -150,7 +155,7 @@ _STATE = StructType([StructField(name, dtype) for name, dtype in (
 # the carry before a key's first bar, but for the engine's fields
 _FRESH = {
     "pend_day": [], "pend_close": [], "max_day": None, "last_day": None,
-    "prev_cross": None, "first_buy_day": None, "anchor": None,
+    "prev_cross": None, "first_buy": None, "anchor": None,
     "last_move_sell": False, "hist_day": [], "hist_close": [], "hist_action": [],
     "cum_buy": 0.0, "cum_sell": 0.0, "shares": 0.0, "emit_seq": 0,
 }
@@ -250,25 +255,20 @@ def _day(x) -> np.datetime64:
 
 def _step_fn(
     initial_amount: float, resolve, lateness_days: int = 0, update: bool = False,
-    stop_loss_pct: float | None = None, sell_shares: float = -1,
-    band: dict | None = None,
 ):
     """The one ``applyInPandasWithState`` function (the module
-    docstring has its steps). ``resolve(key) -> (run_id, fast,
-    lagging)`` maps the group key to its run — a constant for the
-    single-run operators, a lookup on key[1] for the grid. ``band``:
-    ``band_driver``'s params, which walk the band strategy instead of
-    MA-cross; ``stop_loss_pct`` and ``sell_shares`` are
-    ``_ma_cross_walk``'s. ``update``: emit ``_CURVE_OUTPUT_U`` rows,
-    re-emitting revised ones."""
+    docstring has its steps). ``resolve(key)`` maps the group key to
+    its run spec (``MACrossRun`` or ``BandRun``) — a constant for the
+    single-run operators, a lookup on key[1] for the grid. ``update``:
+    emit ``_CURVE_OUTPUT_U`` rows, re-emitting revised ones."""
     initial_amount = float(initial_amount)
 
     def fn(
         key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         ticker = key[0]
-        run_id, fast, lagging = resolve(key)
-        tail = 0 if band is not None else max(fast, lagging) - 1  # SMA frames
+        spec = resolve(key)
+        tail = max(spec.lengths, default=1) - 1  # SMA frames
         # 1. restore
         saved = dict(zip(_STATE.names, state.get)) if state.exists else None
         st = saved or dict(_FRESH)
@@ -295,28 +295,12 @@ def _step_fn(
         h = len(st["hist_day"])
         days = np.concatenate((np.asarray(st["hist_day"], dtype=np.int64), new_days))
         closes = np.concatenate((np.asarray(st["hist_close"], dtype=np.float64), close[ready]))
-        actions = np.concatenate(
-            (np.asarray(st["hist_action"], dtype=object), np.full(n_new, None, dtype=object))
-        )
         eng.dates, eng.closes = days, closes
         before = {e[0]: e[2:] for e in _trade_events(eng)} if update else {}
-        if band is not None:
-            carry, moves = band_driver(
-                eng, days, closes, None, band, (st["anchor"], st["last_move_sell"]), h
-            )
-            st["anchor"], st["last_move_sell"] = carry
-            for i, a in moves:
-                actions[i] = a
-        elif n_new:
-            smas = _sma_table(closes[max(0, h - tail):], {fast, lagging})
-            cross = smas[fast][-n_new:] > smas[lagging][-n_new:]
-            idxs, buys = _cross_edges(cross, st["prev_cross"])
-            actions[idxs + h] = _EDGE_ACTIONS[buys.astype(np.intp)]
-            st["first_buy_day"] = _ma_cross_walk(
-                eng, days, closes, idxs + h, buys, stop_loss_pct, sell_shares,
-                st["first_buy_day"],
-            )
-            st["prev_cross"] = bool(cross[-1])
+        smas = _sma_table(closes[max(0, h - tail):], spec.lengths)
+        carry, new_actions = _walk_run(eng, spec, smas, h, st)
+        st.update(carry)
+        actions = np.concatenate((np.asarray(st["hist_action"], dtype=object), new_actions))
         events = _trade_events(eng)
         _, _, shares, net, cum_buy, cum_sell = _portfolio_curve(
             closes, events, initial_amount, (st["cum_buy"], st["cum_sell"], st["shares"])
@@ -330,7 +314,7 @@ def _step_fn(
                 default=h,
             )
         out = pd.DataFrame({
-            "ticker": ticker, "run_id": run_id,
+            "ticker": ticker, "run_id": spec.run_id,
             "date": days[lo:].astype("datetime64[D]").astype(object),
             "close": closes[lo:], "action": actions[lo:],
             "shares_owned": shares[lo:], "net_worth": net[lo:],
@@ -340,13 +324,13 @@ def _step_fn(
             st["emit_seq"] += len(out)
 
         # 5. prune and save: keep the SMA frames, the stop scan's bars
-        # and, with partial sells, the days a fill can still re-size
+        # and, in update mode, the days a partial fill can still re-size
         keep_at = [len(days) - tail]
         if eng.stop_heap:
             keep_at.append(np.searchsorted(
                 days, min(eng.book.by_id[oid].start_time for _, oid in eng.stop_heap)
             ))
-        if sell_shares != -1 and eng.book.open_orders:
+        if update and eng.book.open_orders:
             keep_at.append(np.searchsorted(
                 days, min(o.start_time for o in eng.book.open_orders)
             ))
@@ -404,15 +388,12 @@ def streaming_backtest_curve(
     if strategy == "band":
         if stop_loss_pct is not None:
             raise NotImplementedError("band strategy takes no stop-loss")
-        band = {"sell": sell_mult, "buy": buy_mult}
+        spec = BandRun(run_id, sell_mult, buy_mult)
     elif strategy == "ma_cross":
-        band = None
+        spec = MACrossRun(run_id, fast, lagging, stop_loss_pct)
     else:
         raise ValueError(f"unknown streaming strategy {strategy!r}")
-    fn = _step_fn(
-        initial_amount, lambda key: (run_id, fast, lagging), allowed_lateness_days,
-        stop_loss_pct=stop_loss_pct, band=band,
-    )
+    fn = _step_fn(initial_amount, lambda key: spec, allowed_lateness_days)
     return _stateful(bars_stream.select("ticker", "date", "close"), ["ticker"], fn)
 
 
@@ -431,10 +412,8 @@ def streaming_backtest_curve_update(
     ``emit_seq``; resolve with :func:`drain_stream_update` (or any
     latest-per-key consumer). Stop-loss + reorder buffering stay on
     the append-mode operator."""
-    fn = _step_fn(
-        initial_amount, lambda key: (run_id, fast, lagging), update=True,
-        sell_shares=sell_shares,
-    )
+    spec = MACrossRun(run_id, fast, lagging, sell_shares=sell_shares)
+    fn = _step_fn(initial_amount, lambda key: spec, update=True)
     return _stateful(
         bars_stream.select("ticker", "date", "close"), ["ticker"], fn, update=True
     )
@@ -485,7 +464,9 @@ def streaming_grid_curve(
     warm and current as bars arrive.
 
     ``params``: iterable of (run_id, fast, lagging)."""
-    by_run = {int(r): (int(f), int(l)) for r, f, l in params}
+    by_run = {
+        int(r): MACrossRun(int(r), int(f), int(l), stop_loss_pct) for r, f, l in params
+    }
     expanded = bars_stream.select(
         "ticker",
         "date",
@@ -493,10 +474,18 @@ def streaming_grid_curve(
         F.explode(F.array(*[F.lit(r).cast("long") for r in by_run])).alias("run_id"),
     )
     fn = _step_fn(
-        initial_amount, lambda key: (int(key[1]), *by_run[int(key[1])]),
-        allowed_lateness_days, stop_loss_pct=stop_loss_pct,
+        initial_amount, lambda key: by_run[int(key[1])], allowed_lateness_days
     )
     return _stateful(expanded, ["ticker", "run_id"], fn)
+
+
+@functools.cache
+def _replay_root() -> str:
+    """The one parent directory of every replay this process writes,
+    removed at interpreter exit."""
+    root = tempfile.mkdtemp(prefix="bars_replay_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def bars_replay_stream(
@@ -513,7 +502,10 @@ def bars_replay_stream(
 
     This is a test/gate harness: a production job replaces it with the
     real arrival stream (kafka / cloud-storage file notifications) —
-    the downstream operators are identical.
+    the downstream operators are identical. Each replay is a fresh
+    directory under one per-process parent (``_replay_root``) that is
+    removed at interpreter exit, so the replays' files outlive every
+    query of the session but not the process.
 
     The bars themselves never touch the driver: each chunk is written
     by a Spark job (date→chunk via ntile over the DISTINCT dates — a
@@ -535,14 +527,11 @@ def bars_replay_stream(
     reorder buffer on a finite replay (no output rows; the kernel
     consumes punctuation without emitting)."""
     import glob
-    import os
-    import shutil
-    import tempfile
     import time
 
     from pyspark.sql import Window
 
-    out_dir = tempfile.mkdtemp(prefix="bars_replay_")
+    out_dir = tempfile.mkdtemp(dir=_replay_root())
     chunk_of = (
         bars.select("date")
         .distinct()

@@ -1,11 +1,13 @@
 """Exact differential test of ``Backtest``: the kernel computes the
 MA-cross signals, the daily net-worth curve, the benchmark attach and
 the metric aggregates itself, so every output must be the same double,
-compared by ``repr``, as the Spark-side reference chain
-``signal_feed`` → ``run_kernel`` (action feed) → ``build_portfolio`` →
-``attach_benchmark`` → ``compute_metrics``. Also the bars contract:
-duplicate dates, bad closes and a duplicate benchmark date fail by
-name."""
+compared by ``repr``, as the Spark-side reference chain: the kernel's
+trade events (``run_kernel(bars, ..., runs=strategy.kernel_runs())``)
+→ ``build_portfolio`` over ``signal_feed`` (the plain bars for the
+band) → ``attach_benchmark`` → ``compute_metrics``. Also the run-spec
+edge shapes (each spec alone equals itself in a mixed ``runs=`` list)
+and the bars contract: duplicate dates, bad closes and a duplicate
+benchmark date fail by name."""
 
 from datetime import date, timedelta
 
@@ -66,7 +68,11 @@ def bars_and_benchmark(spark):
 
 
 def _reference(bars, bench, strategy, parity, rf):
-    """The Spark-side chain the kernel curve, attach and stats replace."""
+    """The Spark-side chain the kernel curve, attach and stats replace,
+    over the kernel's trade events. The MA-cross curve is built over
+    ``signal_feed``, so the kernel's signal ``action`` column is held to
+    the Spark windows too; the band has no Spark-side signal form, and
+    its curve is built over the plain bars with a null ``action``."""
     from pyspark.sql import functions as F
 
     from strat_backtest_spark.operators.kernel import run_kernel, split_kernel_output
@@ -76,11 +82,17 @@ def _reference(bars, bench, strategy, parity, rf):
         build_portfolio,
         final_net_worth_from_events,
     )
+    from strat_backtest_spark.plans.backtest import BandStrategy
 
-    feed = strategy.signal_feed(bars)
+    if not isinstance(strategy, BandStrategy):
+        feed = strategy.signal_feed(bars)
+    else:
+        feed = bars.selectExpr(
+            "ticker", "CAST(0 AS BIGINT) AS run_id", "date", "close",
+            "CAST(NULL AS STRING) AS action",
+        )
     kernel_out = run_kernel(
-        feed, INIT, strategy=strategy.kernel_driver,
-        params=strategy.kernel_params(), parity=parity,
+        bars, INIT, runs=strategy.kernel_runs(), parity=parity
     ).localCheckpoint()
     orders, events = split_kernel_output(kernel_out)
     port = build_portfolio(feed, events, INIT)
@@ -105,7 +117,8 @@ def _rows(df, keys):
     )
 
 
-def _assert_same(got, want, keys, what):
+def _assert_same(got, want, keys, what, drop=()):
+    got, want = got.drop(*drop), want.drop(*drop)
     assert got.dtypes == want.dtypes, what
     g, w = _rows(got, keys), _rows(want, keys)
     assert len(g) == len(w), what
@@ -149,7 +162,11 @@ def test_backtest_equals_spark_reference_exactly(bars_and_benchmark, case):
     _assert_same(fresh.final_net_worth(), want["final"], ["ticker"], "final_net_worth")
     with Backtest(bars, INIT, strategy, benchmark=bench, parity=parity) as bt:
         port = bt.run()
-        _assert_same(port, want["portfolio"], ["ticker", "run_id", "date"], "portfolio")
+        # the band's action is its moves, which no Spark-side form has
+        drop = ("action",) if case == "band" else ()
+        _assert_same(
+            port, want["portfolio"], ["ticker", "run_id", "date"], "portfolio", drop
+        )
         metrics = bt.metrics() if rf == 0.03 else bt.metrics(risk_free_rate=rf)
         _assert_same(metrics, want["metrics"], ["ticker"], "metrics")
         _assert_same(bt.orders, want["orders"], ["ticker", "order_id"], "orders")
@@ -163,11 +180,78 @@ def test_backtest_equals_spark_reference_exactly(bars_and_benchmark, case):
             assert {r["ticker"] for r in orders} >= {"walk0", "walk1", "late"}
             late = [r for r in port.collect() if r["ticker"] == "late"]
             assert any(r["net_worth"] is None for r in late)
+        if case == "band":
+            # a buy on every ticker's first bar, then alternating moves
+            moves = {}
+            for r in sorted(port.collect(), key=lambda r: (r["ticker"], r["date"])):
+                if r["close"] is not None and r["action"] is not None:
+                    moves.setdefault(r["ticker"], []).append(r["action"])
+            assert set(moves) == {"walk0", "walk1", "late", "short", "one", "flat"}
+            for seq in moves.values():
+                assert seq[::2] == ["buy"] * len(seq[::2])
+                assert seq[1::2] == ["sell"] * len(seq[1::2])
+            assert max(len(seq) for seq in moves.values()) > 2
         if calendar in ("late", "ends_early"):
             # walk0 spans the whole calendar: its first (late) or last
             # (ends_early) row has no benchmark value
             [walk0] = [r for r in metrics.collect() if r["ticker"] == "walk0"]
             assert walk0["alpha"] is None and walk0["beta"] is not None
+
+
+def _spec_shapes():
+    """shape: (closes, MA-cross spec). The stop shape buys on its fourth
+    bar (30 > the 3-bar SMA) with a stop at 28.5; the next bar closes at
+    28 while the cross holds, so the stop fires there, booked by the
+    down-cross a bar later."""
+    from strat_backtest_spark.operators.kernel import MACrossRun
+
+    return {
+        "one_bar": ([12.5], MACrossRun(0, 1, 3)),
+        "shorter_than_windows": ([10.0, 11.0, 9.0, 12.0], MACrossRun(0, 5, 8)),
+        "stop_next_bar": (
+            [10.0, 10.0, 10.0, 30.0, 28.0, 10.0, 40.0, 41.0],
+            MACrossRun(0, 1, 3, stop_loss_pct=0.95),
+        ),
+    }
+
+
+def _kernel_rows(spark, closes, runs) -> list:
+    """Every ``run_kernel(curve=True)`` row of ``runs`` over one ticker."""
+    from strat_backtest_spark.operators.kernel import run_kernel
+
+    bars = spark.createDataFrame(
+        [("x", date(2020, 1, 1) + timedelta(days=i), c) for i, c in enumerate(closes)],
+        "ticker string, date date, close double",
+    )
+    return run_kernel(bars, INIT, runs=runs, curve=True).collect()
+
+
+@pytest.mark.parametrize("shape", list(_spec_shapes()))
+def test_run_specs_alone_equal_mixed(spark, shape):
+    """The edge shapes of the run-spec path — a single bar, a series
+    shorter than every window, a stop that fires on the bar after the
+    first buy — through both walks: every spec of a mixed MA-cross +
+    band ``runs=`` list on one ticker emits exactly the rows it emits
+    run alone (orders, events, curve and stats)."""
+    from strat_backtest_spark.operators.kernel import BandRun
+
+    closes, ma = _spec_shapes()[shape]
+    runs = [ma, BandRun(1), ma._replace(run_id=2, sell_shares=2.0), BandRun(3, 1.02, 0.97)]
+    mixed = _kernel_rows(spark, closes, runs)
+    alone = [r for spec in runs for r in _kernel_rows(spark, closes, [spec])]
+    assert sorted(map(repr, mixed)) == sorted(map(repr, alone))
+    orders = {}
+    for r in mixed:
+        if r["row_type"] == "order":
+            orders.setdefault(r["run_id"], []).append(r)
+    # the band buys on the first bar, whatever the shape
+    assert min(o["start_time"] for o in orders[1]) == date(2020, 1, 1)
+    if shape == "stop_next_bar":
+        first = min(orders[0], key=lambda o: o["order_id"])
+        assert (first["start_time"], first["end_time"]) == (date(2020, 1, 4), date(2020, 1, 5))
+        assert (first["start_amount"], first["end_amount"]) == (30.0, 28.0)
+    else:
+        assert 0 not in orders  # the MA-cross warm-up never ends
 
 
 @pytest.mark.parametrize("bad", [float("nan"), float("inf"), None])

@@ -11,8 +11,9 @@ import pandas as pd
 
 from strat_backtest_spark.operators.kernel import (
     TradingEngine,
+    _cross_edges,
+    _ma_cross_walk,
     band_driver,
-    ma_cross_driver,
 )
 
 
@@ -88,12 +89,14 @@ def test_stop_loss_triggers_on_next_action():
     assert closed.end_amount == 7.0
 
 
-def test_ma_cross_driver_skips_sell_before_first_buy():
+def test_ma_cross_walk_skips_sell_before_first_buy():
     d = _dates(4)
     closes = np.array([10.0, 10.0, 10.0, 10.0])
-    actions = np.array(["sell", "buy", None, "sell"], dtype=object)
+    # cross edges: a sell at d0, a buy at d1, a sell at d3
+    idxs, buys = _cross_edges(np.array([False, True, True, False]))
+    assert idxs.tolist() == [0, 1, 3] and buys.tolist() == [False, True, False]
     eng = TradingEngine(d, closes, 100.0)
-    ma_cross_driver(eng, d, closes, actions, {})
+    assert _ma_cross_walk(eng, d, closes, idxs, buys) == d[1]
     # leading sell ignored; buy at d1; sell at d3
     assert len(eng.book.completed) == 1
     assert eng.book.completed[0].start_time == d[1]
@@ -103,9 +106,10 @@ def test_ma_cross_driver_skips_sell_before_first_buy():
 def test_band_driver_alternates():
     d = _dates(5)
     closes = np.array([100.0, 106.0, 104.0, 98.0, 110.0])
-    actions = np.array(["bar"] * 5, dtype=object)
     eng = TradingEngine(d, closes, 1000.0)
-    band_driver(eng, d, closes, actions, {"sell": 1.05, "buy": 0.99})
+    carry, moves = band_driver(eng, d, closes, 1.05, 0.99)
+    assert moves == [(0, "buy"), (1, "sell"), (2, "buy"), (4, "sell")]
+    assert carry == (110.0, True)
     # buy@100 (d0) → sell@106 ≥ 100·1.05 (d1) → buy@104 ≤ 106·0.99 (d2)
     # → sell@110 ≥ 104·1.05 (d4); book ends flat
     assert [o.end_amount for o in eng.book.completed] == [106.0, 110.0]

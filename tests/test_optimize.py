@@ -1,8 +1,10 @@
-"""Optimizer objective parity: evaluate_params, which computes its
-MA-cross signals inside the kernel, must score every (ticker, run)
-exactly as the Spark-window reference path — ``signal_feed`` →
-``run_kernel`` (action feed) → ``final_net_worth_from_events`` — and
-the reference's README grid must reproduce the golden best point."""
+"""Optimizer objective parity: evaluate_params, which walks a whole
+grid of MA-cross run specs in one kernel pass, must score every
+(ticker, run) exactly as the same spec run alone —
+``run_kernel(bars, ..., runs=strategy.kernel_runs())`` →
+``final_net_worth_from_events``, the chain whose signals, curve and
+stats ``test_backtest`` holds to the Spark windows — and the
+reference's README grid must reproduce the golden best point."""
 
 from datetime import date, timedelta
 
@@ -12,17 +14,14 @@ import pytest
 from conftest import SF_SMALL
 
 
-def _spark_window_finals(bars, fast, lagging):
-    """ticker -> final net worth of one MA-cross point, with its
-    signals built by Spark windows (``MACrossStrategy.signal_feed``),
-    not by the kernel."""
+def _single_run_finals(bars, fast, lagging):
+    """ticker -> final net worth of one MA-cross point, run alone."""
     from strat_backtest_spark.operators.kernel import run_kernel, split_kernel_output
     from strat_backtest_spark.operators.portfolio import final_net_worth_from_events
     from strat_backtest_spark.plans.backtest import MACrossStrategy
 
-    strategy = MACrossStrategy(fast, lagging)
     kernel_out = run_kernel(
-        strategy.signal_feed(bars), 10_000.0, params=strategy.kernel_params()
+        bars, 10_000.0, runs=MACrossStrategy(fast, lagging).kernel_runs()
     )
     _, events = split_kernel_output(kernel_out)
     run_ids = bars.sparkSession.sql("SELECT CAST(0 AS BIGINT) AS run_id")
@@ -44,10 +43,8 @@ def test_evaluate_params_matches_portfolio_finals(spark):
         for r in evaluate_params(bars, params, 10_000.0).collect()
     }
     for p in params.collect():
-        for ticker, want in _spark_window_finals(bars, p["fast"], p["lagging"]).items():
-            assert got[(ticker, p["run_id"])] == pytest.approx(
-                want, rel=1e-12
-            ), (ticker, p["run_id"])
+        for ticker, want in _single_run_finals(bars, p["fast"], p["lagging"]).items():
+            assert got[(ticker, p["run_id"])] == want, (ticker, p["run_id"])
 
 
 def _edge_shape_bars(spark):
@@ -76,12 +73,20 @@ def _edge_shape_bars(spark):
 
 
 def test_evaluate_params_equals_backtest_exactly(spark):
-    """The sweep computes its MA-cross signals inside the kernel; every
-    objective value must be the same double as the single-point
-    reference path, which builds its signals with Spark windows. Covers
-    fast < lagging, fast == lagging, fast > lagging and a length-1
-    window."""
+    """The sweep shares each ticker's SMA table between its runs; every
+    objective value must be the same double as the point run alone, and
+    every run's signal edges are the Spark windows' (``signal_feed``).
+    Covers fast < lagging, fast == lagging, fast > lagging and a
+    length-1 window."""
+    from functools import reduce
+
+    from strat_backtest_spark.operators.kernel import (
+        MACrossRun,
+        portfolio_curve,
+        run_kernel,
+    )
     from strat_backtest_spark.operators.optimize import evaluate_params
+    from strat_backtest_spark.plans.backtest import MACrossStrategy
 
     bars = _edge_shape_bars(spark)
     rows = [(0, 3, 8), (1, 5, 20), (2, 8, 8), (3, 20, 5), (4, 1, 30)]
@@ -91,8 +96,16 @@ def test_evaluate_params_equals_backtest_exactly(spark):
     }
     assert len(got) == 6 * len(rows)
     for run_id, f, l in rows:
-        for ticker, want in _spark_window_finals(bars, f, l).items():
+        for ticker, want in _single_run_finals(bars, f, l).items():
             assert got[(ticker, run_id)] == (f, l, want), (ticker, f, l)
+    edges = portfolio_curve(run_kernel(
+        bars, 10_000.0, runs=[MACrossRun(*row) for row in rows], curve=True
+    )).select("ticker", "run_id", "date", "action")
+    windows = reduce(lambda a, b: a.unionByName(b), [
+        MACrossStrategy(f, l).signal_feed(bars, run_id).drop("close")
+        for run_id, f, l in rows
+    ])
+    assert sorted(edges.collect()) == sorted(windows.collect())
     # the walks trade; the edge shapes end at the initial amount
     assert got[("walk0", 0)][2] != 10_000.0
     assert got[("one", 0)][2] == got[("short", 1)][2] == 10_000.0
@@ -103,7 +116,7 @@ def test_evaluate_params_one_point_and_empty_grid(spark):
 
     bars = _edge_shape_bars(spark)
     one = evaluate_params(bars, [(7, 4, 12)], 10_000.0).collect()
-    want = _spark_window_finals(bars, 4, 12)
+    want = _single_run_finals(bars, 4, 12)
     assert {r["ticker"]: (r["run_id"], r["net_worth"]) for r in one} == {
         t: (7, v) for t, v in want.items()
     }
@@ -117,8 +130,8 @@ def test_evaluate_params_one_point_and_empty_grid(spark):
 
 
 def test_evaluate_params_rejects_bad_input(spark):
-    """A sweep fails loudly instead of scoring a series its Spark-window
-    twin would read differently: a NaN close, or a window under 1."""
+    """A sweep fails loudly instead of scoring a series Spark's windows
+    would read differently: a NaN close, or a window under 1."""
     from strat_backtest_spark.operators.optimize import evaluate_params
 
     bars = spark.createDataFrame(

@@ -210,7 +210,8 @@ def test_streaming_kernel_random_series_fuzz(spark, tmp_path):
 def test_streaming_band_strategy_matches_batch(spark, tmp_path):
     """The path-dependent band strategy (anchor re-pins to each
     transaction bar) through 4 micro-batches equals the batch kernel's
-    curve — the anchor/book state survives batch boundaries."""
+    curve, its ``action`` moves included — the anchor/book state
+    survives batch boundaries."""
     from strat_backtest_spark.sources.bars import bars_from_events
     from strat_backtest_spark.plans.backtest import Backtest, BandStrategy
     from strat_backtest_spark.plans.catalog import _t
@@ -222,7 +223,7 @@ def test_streaming_band_strategy_matches_batch(spark, tmp_path):
 
     bt = Backtest(bars, init, BandStrategy())
     batch = {
-        (r["ticker"], str(r["date"])): (r["shares_owned"], r["net_worth"])
+        (r["ticker"], str(r["date"])): (r["shares_owned"], r["net_worth"], r["action"])
         for r in bt.run().collect()
     }
     bt.release()
@@ -241,6 +242,8 @@ def test_streaming_band_strategy_matches_batch(spark, tmp_path):
         want = batch[(r["ticker"], str(r["date"]))]
         assert r["shares_owned"] == want[0], (r["ticker"], r["date"])
         assert r["net_worth"] == want[1], (r["ticker"], r["date"])
+        assert r["action"] == want[2], (r["ticker"], r["date"])
+    assert {a for _, _, a in batch.values()} == {"buy", "sell", None}
 
 
 def test_streaming_stop_loss_matches_batch_finals(spark, tmp_path):
@@ -990,3 +993,44 @@ def test_streaming_bars_contract(spark, tmp_path, path, case):
         _contract_curve(spark, path, stream), ("close", "shares_owned", "net_worth")
     )
     assert got == want
+
+
+def test_bars_replay_dirs_share_one_parent_removed_at_exit(spark):
+    """Every replay of a process is a fresh directory under one parent,
+    and that parent is gone once the process exits."""
+    import subprocess
+    import sys
+    from datetime import date, timedelta
+    from pathlib import Path
+
+    from strat_backtest_spark.streaming.backtest_stream import (
+        _replay_root,
+        bars_replay_stream,
+        drain_stream,
+    )
+
+    bars = spark.createDataFrame(
+        [(t, date(2020, 1, 1) + timedelta(days=i), 1.0 + i) for t in "ab" for i in range(6)],
+        "ticker string, date date, close double",
+    )
+    root = _replay_root()
+    before = set(os.listdir(root))
+    first = bars_replay_stream(spark, bars, n_chunks=2)
+    bars_replay_stream(spark, bars, n_chunks=3)
+    assert len(set(os.listdir(root)) - before) == 2
+    assert os.path.basename(root).startswith("bars_replay_")
+    assert drain_stream(spark, first).count() == 12
+
+    code = (
+        "import os\n"
+        "from strat_backtest_spark.streaming.backtest_stream import _replay_root\n"
+        "root = _replay_root()\n"
+        "os.makedirs(os.path.join(root, 'replay'))\n"
+        "print(root)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], check=True, capture_output=True, text=True,
+        cwd=Path(__file__).resolve().parents[1],
+    ).stdout.strip()
+    assert os.path.basename(out).startswith("bars_replay_")
+    assert not os.path.exists(out)
