@@ -18,7 +18,8 @@ engine-only and reported separately:
   post_s   — read-back count + per-ticker final aggregation of the
              curve (the consumer-side sort/agg).
 
-State size: one row per ticker (open-order book + MA tail) — the
+State size: one row per (ticker, run_id) key, here one per ticker
+(open-order book + MA tail) — the
 note the rung exists to pin is that state is O(keys · open orders),
 independent of bars-per-key, and the state store holds 150k keys.
 
@@ -101,6 +102,7 @@ def run(spark, corpus: str, replicas: int, shards: int, out: dict) -> None:
     )
     out["corpus_build_s"] = round(time.time() - t0, 1)
 
+    from strat_backtest_spark.operators.kernel import MACrossRun
     from strat_backtest_spark.plans.catalog_backtest import _bars
     from strat_backtest_spark.streaming.backtest_stream import (
         bars_replay_stream,
@@ -114,9 +116,7 @@ def run(spark, corpus: str, replicas: int, shards: int, out: dict) -> None:
     out["replay_s"] = round(time.time() - t, 1)
     print(json.dumps({"replay": out["replay_s"]}), file=sys.stderr, flush=True)
 
-    curve = streaming_backtest_curve(
-        stream, fast=3, lagging=8, initial_amount=10_000.0
-    )
+    curve = streaming_backtest_curve(stream, 10_000.0, runs=[MACrossRun(0, 3, 8)])
     t = time.time()
     q = (
         curve.writeStream.outputMode("append")

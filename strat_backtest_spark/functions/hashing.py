@@ -5,9 +5,9 @@ Spark SQL and ANSI-ish SQL (DuckDB), so dedup/similarity operators can
 be validated hash-for-hash against an external oracle — and, at 100 TB,
 recomputed anywhere without coordinating a hash-seed service.
 
-Scheme: polynomial rolling hash over codepoints, ``h = Σ h·31 + c (mod
-P)`` with P = 1e9+7; universal-hash family ``h_i(x) = (aᵢ·x + bᵢ) mod
-P`` with fixed odd multipliers. All intermediates < 2^63 — no overflow
+Scheme: a native md5's 60-bit prefix reduced mod P = 1e9+7;
+universal-hash family ``h_i(x) = (aᵢ·x + bᵢ) mod P`` with fixed odd
+multipliers. All intermediates < 2^63 — no overflow
 on either engine.
 """
 
@@ -22,21 +22,12 @@ def perm_params(k: int) -> list[tuple[int, int]]:
     return [((2 * i + 1) * 104_729 % P, (i * 7_919 + 13) % P) for i in range(k)]
 
 
-def char_hash(col: str | Column) -> Column:
-    """Polynomial codepoint hash of a string → LongType in [0, P)."""
-    c = F.col(col) if isinstance(col, str) else col
-    codes = F.transform(F.split(c, ""), lambda ch: F.ascii(ch))
-    return F.aggregate(
-        codes, F.lit(0).cast("long"), lambda acc, x: (acc * 31 + x) % P
-    )
-
-
 def md5_hash(col: str | Column) -> Column:
     """Native md5 → 60-bit prefix → mod P, LongType in [0, P).
 
-    The hot-path alternative to ``char_hash``: md5 is JVM-native on
-    Spark (no per-character lambda interpretation — ~100× faster on
-    long token streams) and byte-identical in every engine with an
+    md5 is JVM-native on Spark (no per-character lambda
+    interpretation, which a polynomial codepoint hash folded in SQL
+    needs — ~100× slower on long token streams) and byte-identical in every engine with an
     md5() builtin, so the oracle mirror is exact. 15 hex chars = 60
     bits < 2^63, so the hex parse never overflows a signed long."""
     c = F.col(col) if isinstance(col, str) else col

@@ -378,6 +378,22 @@ def band_driver(
     return (anchor, last_move_sell), moves
 
 
+def _check_runs(runs) -> None:
+    """Refuse a run list before any job starts, for ``run_kernel`` and
+    the streaming kernel alike: an MA length under 1, a ``run_id``
+    that repeats (its runs' rows would merge under one id), or a
+    stop-loss on the partial-sell path (no oracle or test covers it)."""
+    seen = set()
+    for spec in runs:
+        if any(n < 1 for n in spec.lengths):
+            raise ValueError("moving-average lengths must be at least 1")
+        if spec.run_id in seen:
+            raise ValueError(f"duplicate run_id {spec.run_id}")
+        seen.add(spec.run_id)
+        if getattr(spec, "stop_loss_pct", None) is not None and spec.sell_shares != -1:
+            raise NotImplementedError("stop_loss_pct with sell_shares is not supported")
+
+
 _EDGE_ACTIONS = np.array(["sell", "buy"], dtype=object)
 
 
@@ -857,7 +873,8 @@ def run_kernel(
     (``_check_bars``).
 
     ``runs``: the run specs — ``MACrossRun`` and ``BandRun`` in any mix,
-    a ``Backtest``'s one run or a sweep's grid. Every run is simulated
+    a ``Backtest``'s one run or a sweep's grid, each with its own
+    ``run_id`` (``_check_runs``). Every run is simulated
     over every ticker, and its output rows carry its ``run_id``. The
     kernel computes the MA-cross signals itself: each distinct
     moving-average length is computed once per ticker and shared by
@@ -895,9 +912,8 @@ def run_kernel(
     :func:`split_kernel_output`, :func:`portfolio_curve` and
     :func:`kernel_stats`.
     """
+    _check_runs(runs)
     sim = _Sim(float(initial_amount), parity, benchmark)
-    if any(n < 1 for spec in runs for n in spec.lengths):
-        raise ValueError("moving-average lengths must be at least 1")
 
     srt = (
         bars.select("ticker", "date", "close")

@@ -21,23 +21,15 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from strat_backtest_spark.functions.numeric import round_half_up
 
 
-def _dot(a: Column, b: Column) -> Column:
-    # Column-expression dot product for PER-VECTOR / low-volume
-    # contexts (e.g. the avg_norm aggregate). NOT for pair streams:
-    # the fold runs on the interpreted expression path, and every
-    # per-PAIR hot path now scores via block BLAS matmul instead
+def _norm(a: Column) -> Column:
+    # Column-expression L2 norm for PER-VECTOR / low-volume contexts
+    # (e.g. the avg_norm aggregate). NOT for pair streams: the fold
+    # runs on the interpreted expression path, and every per-PAIR hot
+    # path scores via block BLAS matmul instead
     # (_rounded_cosine_block / _bucket_rerank_pairs below). Within
     # Column-land the fold is still the right form — an unrolled
     # 64-term element_at expression measured 2.7x slower (generated
     # method blows past JIT limits).
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(
             F.transform(a, lambda x: x.cast("double") * x.cast("double")),
@@ -45,10 +37,6 @@ def _norm(a: Column) -> Column:
             lambda acc, v: acc + v,
         )
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _rounded_cosine_block(Vc, Vq) -> "np.ndarray":

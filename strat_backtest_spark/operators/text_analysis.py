@@ -129,16 +129,6 @@ def quality_score(df: DataFrame, col: str = "text") -> DataFrame:
     )
 
 
-def lang_scores(col: str | Column = "text") -> dict[str, Column]:
-    """Marker-hit counts per language over lowercase tokens."""
-    toks = whitespace_tokens(F.lower(F.col(col) if isinstance(col, str) else col))
-    out = {}
-    for lang, markers in LANG_MARKERS.items():
-        arr = F.array(*[F.lit(m) for m in markers])
-        out[lang] = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-    return out
-
-
 def predict_language(df: DataFrame, col: str = "text") -> DataFrame:
     """Heuristic language ID: cascade-argmax of marker-lexicon hits
     with a fixed preference order (list order of LANG_MARKERS), 'und'
@@ -152,8 +142,8 @@ def predict_language(df: DataFrame, col: str = "text") -> DataFrame:
     cascade reads it. Without the barrier CollapseProject inlines the
     per-language score expressions into every CASE reference and the
     document is re-tokenized ~20× per row — measured 35 s → one-pass
-    at the 5M-doc rung. Values identical to the per-language
-    ``lang_scores`` filters (integer hit counts)."""
+    at the 5M-doc rung. Each score is the integer count of the
+    language's marker tokens in the document."""
     langs = list(LANG_MARKERS)
     toks = whitespace_tokens(F.lower(F.col(col)))
     arrs = [F.array(*[F.lit(m) for m in LANG_MARKERS[lang]]) for lang in langs]

@@ -61,14 +61,9 @@ class MACrossStrategy:
     lagging: int = 100
     stop_loss_pct: Optional[float] = None
     # sell a fixed share count per down-cross instead of whole-order
-    # FIFO closes — routes through the engine's partial-fill path
+    # FIFO closes — routes through the engine's partial-fill path; the
+    # kernel refuses it together with stop_loss_pct (kernel._check_runs)
     sell_shares: Optional[float] = None
-
-    def __post_init__(self) -> None:
-        if self.sell_shares is not None and self.stop_loss_pct is not None:
-            # no oracle or test covers a stop on the partial-fill path;
-            # refuse it rather than return an unchecked number
-            raise NotImplementedError("stop_loss_pct with sell_shares is not supported")
 
     def signal_feed(self, bars: DataFrame, run_id: int = 0) -> DataFrame:
         """The Spark-side reference for the signals the kernel computes

@@ -524,22 +524,23 @@ def q48_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q49_stream_signal_edges", oracle=_CATALOG["q39_ma_cross_signals"].oracle)
 def q49_stream_signal_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful incremental signal edges: bars replayed as THREE
-    micro-batches through applyInPandasWithState, where per-ticker
-    state carries the ``lagging-1`` MA warm-up tail across batch
-    boundaries — exact under incremental arrival, not just full-batch
-    replay (the former foreachBatch bridge's caveat). Still checked
-    against q39's batch-semantics oracle."""
+    micro-batches through the streaming kernel, where per-key state
+    carries the ``lagging-1`` MA warm-up tail across batch boundaries —
+    exact under incremental arrival, not just full-batch replay. The
+    edges are the curve's rows with an action. Still checked against
+    q39's batch-semantics oracle."""
+    from strat_backtest_spark.operators.kernel import MACrossRun
     from strat_backtest_spark.streaming.backtest_stream import (
         bars_replay_stream,
         drain_stream,
-        streaming_signal_edges_stateful,
+        streaming_backtest_curve,
     )
 
     bars = _bars(spark, sf_dir)
-    edges = streaming_signal_edges_stateful(
-        bars_replay_stream(spark, bars, n_chunks=3), fast=3, lagging=8
+    curve = streaming_backtest_curve(
+        bars_replay_stream(spark, bars, n_chunks=3), 10_000.0, runs=[MACrossRun(0, 3, 8)]
     )
-    return drain_stream(spark, edges).select(
+    return drain_stream(spark, curve).filter(F.col("action").isNotNull()).select(
         "ticker",
         F.date_format("date", "yyyy-MM-dd").alias("date"),
         F.round("close", 6).alias("close"),
@@ -570,6 +571,7 @@ def q59_stream_backtest_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     net-worth curve — gate-checked against the per-bar recursive-CTE
     kernel oracle (_curve_sim_sql), so the streaming state handoff is
     verified against exact SQL, not just batch parity."""
+    from strat_backtest_spark.operators.kernel import MACrossRun
     from strat_backtest_spark.streaming.backtest_stream import (
         bars_replay_stream,
         drain_stream,
@@ -578,8 +580,7 @@ def q59_stream_backtest_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bars = _bars(spark, sf_dir)
     curve = streaming_backtest_curve(
-        bars_replay_stream(spark, bars, n_chunks=3), fast=3, lagging=8,
-        initial_amount=10_000.0,
+        bars_replay_stream(spark, bars, n_chunks=3), 10_000.0, runs=[MACrossRun(0, 3, 8)]
     )
     return _fmt_curve(drain_stream(spark, curve).orderBy("ticker", "date").limit(150))
 
@@ -716,6 +717,7 @@ def q73_stream_late_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     end of replay. The oracle is the SAME per-bar kernel sim as
     in-order q59: within-bound lateness must be invisible in the
     result, and the gate hash proves it."""
+    from strat_backtest_spark.operators.kernel import MACrossRun
     from strat_backtest_spark.streaming.backtest_stream import (
         bars_replay_stream,
         drain_stream,
@@ -727,9 +729,8 @@ def q73_stream_late_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
         bars_replay_stream(
             spark, bars, n_chunks=3, delay_last_of_first=2, punctuate=True
         ),
-        fast=3,
-        lagging=8,
-        initial_amount=10_000.0,
+        10_000.0,
+        runs=[MACrossRun(0, 3, 8)],
         allowed_lateness_days=30,
     )
     return _fmt_curve(drain_stream(spark, curve).orderBy("ticker", "date").limit(150))
@@ -742,6 +743,7 @@ def q64_stream_band_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-ticker state carries (anchor, last-move, book) across three
     micro-batches — gate-checked against the per-bar recursive-CTE
     oracle with the band trigger state folded into the recursion."""
+    from strat_backtest_spark.operators.kernel import BandRun
     from strat_backtest_spark.streaming.backtest_stream import (
         bars_replay_stream,
         drain_stream,
@@ -750,9 +752,7 @@ def q64_stream_band_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bars = _bars(spark, sf_dir)
     curve = streaming_backtest_curve(
-        bars_replay_stream(spark, bars, n_chunks=3),
-        initial_amount=10_000.0,
-        strategy="band",
+        bars_replay_stream(spark, bars, n_chunks=3), 10_000.0, runs=[BandRun(0)]
     )
     return _fmt_curve(drain_stream(spark, curve).orderBy("ticker", "date").limit(150))
 
@@ -784,16 +784,19 @@ def q65_stream_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     bar stream — one stateful operator keyed (ticker, run_id), every
     parameter point its own live order book. Gate-checked against the
     per-edge kernel sim instantiated at all four grid points."""
+    from strat_backtest_spark.operators.kernel import MACrossRun
     from strat_backtest_spark.streaming.backtest_stream import (
         bars_replay_stream,
         drain_stream,
-        streaming_grid_curve,
+        streaming_backtest_curve,
     )
 
     bars = _bars(spark, sf_dir)
     params = [(0, 3, 8), (1, 3, 13), (2, 5, 8), (3, 5, 13)]
-    curve = streaming_grid_curve(
-        bars_replay_stream(spark, bars, n_chunks=3), params, 10_000.0
+    curve = streaming_backtest_curve(
+        bars_replay_stream(spark, bars, n_chunks=3),
+        10_000.0,
+        runs=[MACrossRun(*p) for p in params],
     )
     return (
         drain_stream(spark, curve)
@@ -846,17 +849,17 @@ def q71_stream_partial_close(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit_seq wins. Gate-checked against the order-table recursion
     oracle (kernel_oracle._partial_sim_sql) in addition to the batch
     parity suite in tests/test_streaming_kernel.py."""
+    from strat_backtest_spark.operators.kernel import MACrossRun
     from strat_backtest_spark.streaming.backtest_stream import (
         bars_replay_stream,
-        drain_stream_update,
-        streaming_backtest_curve_update,
+        drain_stream,
+        streaming_backtest_curve,
     )
 
     bars = _bars(spark, sf_dir)
-    curve = streaming_backtest_curve_update(
+    curve = streaming_backtest_curve(
         bars_replay_stream(spark, bars, n_chunks=3),
-        fast=3, lagging=8, initial_amount=10_000.0, sell_shares=2.0,
+        10_000.0,
+        runs=[MACrossRun(0, 3, 8, sell_shares=2.0)],
     )
-    return _fmt_curve(
-        drain_stream_update(spark, curve).orderBy("ticker", "date").limit(150)
-    )
+    return _fmt_curve(drain_stream(spark, curve).orderBy("ticker", "date").limit(150))

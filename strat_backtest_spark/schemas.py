@@ -1,32 +1,19 @@
-"""Explicit schemas for every table the engine produces or consumes.
+"""Explicit schemas: the bars CSV the engine reads and the kernel
+output it produces, plus the names of the harness tables.
 
 The reference infers all schemas at read time (finance_data.py:101
 ``pd.read_csv(..., parse_dates=True)``); at 100 TB inference is both a
-correctness and a performance hazard, so every scan here is
-schema-first (SURVEY.md §1.3).
+correctness and a performance hazard, so the CSV scan is schema-first
+(SURVEY.md §1.3).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# ---------------------------------------------------------------------------
-# bars — long-format OHLCV (reference: dict-of-frames, finance_data.py:91-103;
-# CSV header `Date,Open,High,Low,Close,Volume`, data/aapl.csv:1)
-# ---------------------------------------------------------------------------
-BARS_SCHEMA = T.StructType(
-    [
-        T.StructField("ticker", T.StringType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("open", T.DoubleType(), True),
-        T.StructField("high", T.DoubleType(), True),
-        T.StructField("low", T.DoubleType(), True),
-        T.StructField("close", T.DoubleType(), True),
-        T.StructField("volume", T.LongType(), True),
-    ]
-)
-
-# CSV on disk has no ticker column — it is derived from the file name.
+# bars on disk — OHLCV CSV (reference: finance_data.py:91-103; header
+# `Date,Open,High,Low,Close,Volume`, data/aapl.csv:1). The CSV has no
+# ticker column — it is derived from the file name.
 BARS_CSV_SCHEMA = T.StructType(
     [
         T.StructField("date", T.DateType(), False),
@@ -35,42 +22,6 @@ BARS_CSV_SCHEMA = T.StructType(
         T.StructField("low", T.DoubleType(), True),
         T.StructField("close", T.DoubleType(), True),
         T.StructField("volume", T.LongType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# orders — the order ledger (reference: Order_Manager.to_df(),
-# strats.py:226-245, plus internal _Order fields strats.py:24-50)
-# ---------------------------------------------------------------------------
-ORDERS_SCHEMA = T.StructType(
-    [
-        T.StructField("ticker", T.StringType(), False),
-        T.StructField("run_id", T.LongType(), False),
-        T.StructField("order_id", T.LongType(), False),
-        T.StructField("num_shares", T.DoubleType(), True),
-        T.StructField("start_time", T.DateType(), True),
-        T.StructField("start_amount", T.DoubleType(), True),
-        T.StructField("filled", T.BooleanType(), True),
-        T.StructField("end_time", T.DateType(), True),
-        T.StructField("end_amount", T.DoubleType(), True),
-        T.StructField("profit", T.DoubleType(), True),
-        T.StructField("stop_loss", T.DoubleType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# trade events — per-day share deltas emitted by the kernel (reference:
-# buy_orders / sell_orders / shares_owned dicts, strats.py:275-283,
-# 155-177, 179-213)
-# ---------------------------------------------------------------------------
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("ticker", T.StringType(), False),
-        T.StructField("run_id", T.LongType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("buy_shares", T.DoubleType(), True),
-        T.StructField("sell_shares", T.DoubleType(), True),
-        T.StructField("shares_owned", T.DoubleType(), True),
     ]
 )
 
@@ -155,64 +106,6 @@ KERNEL_OUT_SCHEMA = T.StructType(
         T.StructField("net_worth", T.DoubleType(), True),
         T.StructField("sp500", T.DoubleType(), True),
         *_STATS_FIELDS,
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# signals — vectorized signal events feeding the kernel
-# (reference: custom_strats.py:45-48 edge detection)
-# ---------------------------------------------------------------------------
-SIGNALS_SCHEMA = T.StructType(
-    [
-        T.StructField("ticker", T.StringType(), False),
-        T.StructField("run_id", T.LongType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("close", T.DoubleType(), True),
-        T.StructField("action", T.StringType(), False),  # 'buy' | 'sell'
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# benchmark — market index series (reference: Finance_Data.market_data,
-# finance_data.py:13)
-# ---------------------------------------------------------------------------
-BENCHMARK_SCHEMA = T.StructType(
-    [
-        T.StructField("date", T.DateType(), False),
-        T.StructField("sp500", T.DoubleType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# params — hyper-parameter grid (reference: _Range + itertools.product,
-# optimize.py:27-38,218-219)
-# ---------------------------------------------------------------------------
-PARAMS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.LongType(), False),
-        T.StructField("fast", T.IntegerType(), False),
-        T.StructField("lagging", T.IntegerType(), False),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# posts / symbols — text-mining inputs (reference: common_stock.py:129-161,
-# 61-104)
-# ---------------------------------------------------------------------------
-POSTS_SCHEMA = T.StructType(
-    [
-        T.StructField("subreddit", T.StringType(), False),
-        T.StructField("post_id", T.StringType(), False),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("selftext", T.StringType(), True),
-        T.StructField("comments", T.ArrayType(T.StringType()), True),
-    ]
-)
-
-SYMBOLS_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("security_name", T.StringType(), True),
     ]
 )
 

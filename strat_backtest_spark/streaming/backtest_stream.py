@@ -2,18 +2,26 @@
 
 The reference runs its order engine (strats.py:133-245) as an eager
 batch loop over a complete bar series. This module runs the SAME
-engine incrementally over an unbounded bar stream with one
-``applyInPandasWithState`` adapter (``_step_fn``) over the batch
-kernel's own pieces (operators/kernel.py): ``_check_bars``,
-``_sma_table``, ``_walk_run`` (the one dispatch from a run spec,
-``MACrossRun`` or ``BandRun``, to its walk — the batch walker's too),
-``_trade_events`` and ``_portfolio_curve``. Each resumes from a small
-carry, and a batch walk is one step from the empty carry, so a
-micro-batch is one more step of the batch walk. Every public operator
-(``streaming_backtest_curve``, ``streaming_backtest_curve_update``,
-``streaming_grid_curve``, ``streaming_signal_edges_stateful``) is one
-call into that adapter with a function that resolves each key to its
-run spec, keyed by ticker (by (ticker, run_id) for the grid).
+engine incrementally over an unbounded bar stream with one operator,
+``streaming_backtest_curve(bars_stream, initial_amount, *, runs,
+allowed_lateness_days=0)``. It takes ``run_kernel``'s run specs
+(``MACrossRun`` and ``BandRun`` in any mix), so a strategy's
+``kernel_runs()`` feeds batch and stream alike. Each bar fans out to
+one row per run (a map-only literal explode), and one
+``applyInPandasWithState`` adapter (``_step_fn``) keyed on
+(ticker, run_id) keeps every run's book. The adapter steps through the
+batch kernel's own pieces (operators/kernel.py): ``_check_bars``,
+``_sma_table``, ``_walk_run`` (the one dispatch from a run spec to its
+walk — the batch walker's too), ``_trade_events`` and
+``_portfolio_curve``. Each resumes from a small carry, and a batch
+walk is one step from the empty carry, so a micro-batch is one more
+step of the batch walk.
+
+The output mode follows from the specs. A partial-sell run
+(``sell_shares`` != -1) can re-size an already-emitted buy when a later
+fill lands (Q4), so a run list with one makes the operator emit in
+update mode, with an ``emit_seq`` column; otherwise it emits in append
+mode. ``drain_stream`` drains either and resolves re-emissions.
 
 One micro-batch of one key, in order:
 
@@ -35,7 +43,7 @@ One micro-batch of one key, in order:
    re-emits the retained rows from the first day whose trade events
    the step changed (a partial fill re-sizing a past buy, Q4), each
    with a higher ``emit_seq`` — latest per (ticker, run_id, date) wins
-   (``drain_stream_update``);
+   (``drain_stream``);
 5. prune the retained bars and save the carry.
 
 State (``_STATE``, one row per key): the reorder buffer (``pend_*``,
@@ -47,11 +55,11 @@ start (``cum_buy``, ``cum_sell``, ``shares``); and the engine
 heap and its trade events on the retained days. The retained bars are
 the last max(fast, lagging) − 1 (the SMA frames), back to the earliest
 pending stop's start day (the stop scan reads them and a hit books its
-sell there), and, in update mode (the partial-sell operator), back to
-the earliest open order's start day (a partial fill there can re-size
-a past buy). State is O(open-position look-back), not O(stream
-length). Days are epoch-day integers throughout: the engine only
-compares, searchsorts and dict-keys them.
+sell there), and, in update mode, back to the earliest open order's
+start day (a partial fill there can re-size a past buy). State is
+O(open-position look-back), not O(stream length). Days are epoch-day
+integers throughout: the engine only compares, searchsorts and
+dict-keys them.
 
 What is bit-exact against the batch kernel (``Backtest.run``,
 ``evaluate_params``), over any micro-batch split:
@@ -60,7 +68,7 @@ What is bit-exact against the batch kernel (``Backtest.run``,
   (close, shares_owned, net_worth; for MA-cross also the signal
   ``action``; the band's ``action`` is its buy/sell moves);
 - update mode (partial sells): the resolved curve;
-- the grid: every (ticker, run_id) curve, so its finals equal
+- a grid: every (ticker, run_id) curve, so its finals equal
   ``evaluate_params``;
 - with stop-loss, finals only: a stop hit books its sell on a past
   day, and rows an earlier micro-batch emitted for the days since are
@@ -70,11 +78,8 @@ What is bit-exact against the batch kernel (``Backtest.run``,
 
 from __future__ import annotations
 
-import atexit
-import functools
 import os
 import shutil
-import tempfile
 from collections import deque
 from typing import Iterator, Tuple
 
@@ -96,16 +101,16 @@ from pyspark.sql.types import (
 )
 
 from strat_backtest_spark.operators.kernel import (
-    BandRun,
-    MACrossRun,
     TradingEngine,
     _check_bars,
+    _check_runs,
     _KOrder,
     _portfolio_curve,
     _sma_table,
     _trade_events,
     _walk_run,
 )
+from strat_backtest_spark.streaming import scratch_dir
 
 _CURVE_OUTPUT = StructType(
     [
@@ -253,21 +258,19 @@ def _day(x) -> np.datetime64:
     return np.datetime64(x, "D")
 
 
-def _step_fn(
-    initial_amount: float, resolve, lateness_days: int = 0, update: bool = False,
-):
+def _step_fn(initial_amount: float, by_run: dict, lateness_days: int, update: bool):
     """The one ``applyInPandasWithState`` function (the module
-    docstring has its steps). ``resolve(key)`` maps the group key to
-    its run spec (``MACrossRun`` or ``BandRun``) — a constant for the
-    single-run operators, a lookup on key[1] for the grid. ``update``:
-    emit ``_CURVE_OUTPUT_U`` rows, re-emitting revised ones."""
+    docstring has its steps), over (ticker, run_id) keys. ``by_run``
+    maps each run_id to its run spec (``MACrossRun`` or ``BandRun``).
+    ``update``: emit ``_CURVE_OUTPUT_U`` rows, re-emitting revised
+    ones."""
     initial_amount = float(initial_amount)
 
     def fn(
         key: Tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         ticker = key[0]
-        spec = resolve(key)
+        spec = by_run[int(key[1])]
         tail = max(spec.lengths, default=1) - 1  # SMA frames
         # 1. restore
         saved = dict(zip(_STATE.names, state.get)) if state.exists else None
@@ -358,134 +361,40 @@ def _step_fn(
     return fn
 
 
-def _stateful(stream: DataFrame, keys, fn, update: bool = False) -> DataFrame:
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=_CURVE_OUTPUT_U if update else _CURVE_OUTPUT,
-        stateStructType=_STATE,
-        outputMode="update" if update else "append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_backtest_curve(
     bars_stream: DataFrame,
-    fast: int = 20,
-    lagging: int = 100,
-    initial_amount: float = 10_000.0,
-    run_id: int = 0,
-    stop_loss_pct: float | None = None,
-    strategy: str = "ma_cross",
-    sell_mult: float = 1.05,
-    buy_mult: float = 0.99,
+    initial_amount: float,
+    *,
+    runs: list,
     allowed_lateness_days: int = 0,
 ) -> DataFrame:
-    """Backtest as a streaming stateful operator: bars in, per-bar
-    net-worth curve out (append mode). ``bars_stream`` needs
-    (ticker, date, close). ``strategy`` is 'ma_cross' (fast/lagging,
-    optional stop-loss) or 'band' (sell_mult/buy_mult) — both
-    reference strategies run incrementally."""
-    if strategy == "band":
-        if stop_loss_pct is not None:
-            raise NotImplementedError("band strategy takes no stop-loss")
-        spec = BandRun(run_id, sell_mult, buy_mult)
-    elif strategy == "ma_cross":
-        spec = MACrossRun(run_id, fast, lagging, stop_loss_pct)
-    else:
-        raise ValueError(f"unknown streaming strategy {strategy!r}")
-    fn = _step_fn(initial_amount, lambda key: spec, allowed_lateness_days)
-    return _stateful(bars_stream.select("ticker", "date", "close"), ["ticker"], fn)
-
-
-def streaming_backtest_curve_update(
-    bars_stream: DataFrame,
-    fast: int = 20,
-    lagging: int = 100,
-    initial_amount: float = 10_000.0,
-    run_id: int = 0,
-    sell_shares: float = 1.0,
-) -> DataFrame:
-    """MA-cross backtest with FIXED-size sells on a stream — the
-    partial-close path append mode cannot express (Q4's fill-time
-    overwrite rewrites an already-emitted buy bar's accounting).
-    UPDATE output mode: corrected history rows re-emit with a higher
-    ``emit_seq``; resolve with :func:`drain_stream_update` (or any
-    latest-per-key consumer). Stop-loss + reorder buffering stay on
-    the append-mode operator."""
-    spec = MACrossRun(run_id, fast, lagging, sell_shares=sell_shares)
-    fn = _step_fn(initial_amount, lambda key: spec, update=True)
-    return _stateful(
-        bars_stream.select("ticker", "date", "close"), ["ticker"], fn, update=True
-    )
-
-
-def drain_stream_update(spark: SparkSession, streaming_df: DataFrame) -> DataFrame:
-    """Drain an update-mode curve and resolve re-emissions: the memory
-    sink keeps every emission, so the curve is the max-``emit_seq`` row
-    per (ticker, run_id, date)."""
-    import uuid
-
-    from pyspark.sql import Window
-
-    name = f"bt_stream_u_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_df.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    w = Window.partitionBy("ticker", "run_id", "date").orderBy(F.col("emit_seq").desc())
-    return (
-        spark.table(name)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "emit_seq")
-    )
-
-
-def streaming_grid_curve(
-    bars_stream: DataFrame,
-    params,
-    initial_amount: float = 10_000.0,
-    stop_loss_pct: float | None = None,
-    allowed_lateness_days: int = 0,
-) -> DataFrame:
-    """A whole (fast, lagging) grid evaluated CONCURRENTLY on a live
-    stream: each bar fans out to one row per run_id (map-only literal
-    explode — no stream-static join needed for a driver-side grid),
-    and ONE stateful operator keyed (ticker, run_id) keeps an
-    independent simulation state per parameter point. The streaming
-    counterpart of operators/optimize.evaluate_params: the batch
-    engine re-scores the grid per job, this keeps every point's book
-    warm and current as bars arrive.
-
-    ``params``: iterable of (run_id, fast, lagging)."""
-    by_run = {
-        int(r): MACrossRun(int(r), int(f), int(l), stop_loss_pct) for r, f, l in params
-    }
+    """Simulate every run spec of ``runs`` over every ticker of a bar
+    stream: bars in, per-bar net-worth curve out — the streaming
+    ``run_kernel``. ``bars_stream`` needs (ticker, date, close);
+    ``runs`` holds ``MACrossRun`` and ``BandRun`` specs in any mix
+    (``_check_runs`` refuses a bad list before any job starts).
+    Output rows carry (ticker, run_id, date, close, action,
+    shares_owned, net_worth), one per bar and run; with a partial-sell
+    run in ``runs`` the query runs in update mode and adds
+    ``emit_seq`` (the module docstring has the rule). A bar dated up to
+    ``allowed_lateness_days`` before the newest bar seen still enters
+    its walk in date order."""
+    _check_runs(runs)
+    by_run = {spec.run_id: spec for spec in runs}
+    update = any(getattr(spec, "sell_shares", -1) != -1 for spec in runs)
     expanded = bars_stream.select(
         "ticker",
         "date",
         "close",
         F.explode(F.array(*[F.lit(r).cast("long") for r in by_run])).alias("run_id"),
     )
-    fn = _step_fn(
-        initial_amount, lambda key: by_run[int(key[1])], allowed_lateness_days
+    return expanded.groupBy("ticker", "run_id").applyInPandasWithState(
+        _step_fn(initial_amount, by_run, allowed_lateness_days, update),
+        outputStructType=_CURVE_OUTPUT_U if update else _CURVE_OUTPUT,
+        stateStructType=_STATE,
+        outputMode="update" if update else "append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _stateful(expanded, ["ticker", "run_id"], fn)
-
-
-@functools.cache
-def _replay_root() -> str:
-    """The one parent directory of every replay this process writes,
-    removed at interpreter exit."""
-    root = tempfile.mkdtemp(prefix="bars_replay_")
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
 
 
 def bars_replay_stream(
@@ -503,9 +412,9 @@ def bars_replay_stream(
     This is a test/gate harness: a production job replaces it with the
     real arrival stream (kafka / cloud-storage file notifications) —
     the downstream operators are identical. Each replay is a fresh
-    directory under one per-process parent (``_replay_root``) that is
-    removed at interpreter exit, so the replays' files outlive every
-    query of the session but not the process.
+    directory from ``streaming.scratch_dir``, removed at interpreter
+    exit, so the replays' files outlive every query of the session but
+    not the process.
 
     The bars themselves never touch the driver: each chunk is written
     by a Spark job (date→chunk via ntile over the DISTINCT dates — a
@@ -531,7 +440,7 @@ def bars_replay_stream(
 
     from pyspark.sql import Window
 
-    out_dir = tempfile.mkdtemp(dir=_replay_root())
+    out_dir = scratch_dir("bars_replay_")
     chunk_of = (
         bars.select("date")
         .distinct()
@@ -599,13 +508,19 @@ def bars_replay_stream(
 
 def drain_stream(spark: SparkSession, streaming_df: DataFrame) -> DataFrame:
     """Start → processAllAvailable → stop; return the memory table.
-    The memory sink is the local drain for gate checks; production
-    uses a durable parquet/kafka sink with the same plan."""
+    An update-mode curve (one with ``emit_seq``) is resolved: the
+    memory sink keeps every emission, so its curve is the
+    max-``emit_seq`` row per (ticker, run_id, date). The memory sink is
+    the local drain for gate checks; production uses a durable
+    parquet/kafka sink with the same plan."""
     import uuid
 
+    from pyspark.sql import Window
+
+    update = "emit_seq" in streaming_df.columns
     name = f"bt_stream_{uuid.uuid4().hex[:8]}"
     q = (
-        streaming_df.writeStream.outputMode("append")
+        streaming_df.writeStream.outputMode("update" if update else "append")
         .format("memory")
         .queryName(name)
         .start()
@@ -614,21 +529,12 @@ def drain_stream(spark: SparkSession, streaming_df: DataFrame) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    return spark.table(name)
-
-
-def streaming_signal_edges_stateful(
-    bars_stream: DataFrame, fast: int, lagging: int, run_id: int = 0
-) -> DataFrame:
-    """Signal edges only, with true incremental history: the same
-    stateful walk as the kernel but emitting cross edges. This is the
-    exact-under-incremental-arrival answer to the foreachBatch
-    bridge's full-history caveat (events_stream.streaming_signal_edges)
-    — the retained bars supply the ``max(fast, lagging) - 1`` closes of
-    history a fresh micro-batch lacks. A simulation still runs
-    underneath (cheap: one engine call per edge); output is filtered to
-    edge rows."""
-    curve = streaming_backtest_curve(bars_stream, fast, lagging, 1.0, run_id)
-    return curve.filter(F.col("action").isNotNull()).select(
-        "ticker", "run_id", "date", "close", "action"
+    if not update:
+        return spark.table(name)
+    w = Window.partitionBy("ticker", "run_id", "date").orderBy(F.col("emit_seq").desc())
+    return (
+        spark.table(name)
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "emit_seq")
     )

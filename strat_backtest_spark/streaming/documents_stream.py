@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from strat_backtest_spark.streaming import scratch_dir
 from strat_backtest_spark.streaming.events_stream import _drain_to_parquet
 
 
@@ -88,8 +89,10 @@ def _chunked_replay(
     a stream consuming one WHOLE chunk per micro-batch, in chunk
     order, so per-key state genuinely crosses batch boundaries and
     arrival order is the oracle-replayable ``(doc_id % n_chunks,
-    doc_id)``; and the replay directory, which the CALLER must remove
-    once the stream is drained (it is a full copy of the input).
+    doc_id)``; and the replay directory, which the CALLER removes once
+    the stream is drained (it is a full copy of the input; it lives
+    under ``streaming.scratch_dir``, so interpreter exit removes it
+    at the latest).
 
     Each chunk is ``files_per_chunk`` files sharing one mtime, drained
     ``maxFilesPerTrigger=files_per_chunk``: the file source takes the
@@ -109,12 +112,11 @@ def _chunked_replay(
     import glob
     import os
     import shutil
-    import tempfile
     import time
 
     if chunk_col is None:
         chunk_col = F.col("doc_id") % n_chunks
-    out_dir = tempfile.mkdtemp(prefix="docs_replay_")
+    out_dir = scratch_dir("docs_replay_")
     base = time.time()
     for i in range(n_chunks):
         stage = os.path.join(out_dir, f"_stage_{i}")

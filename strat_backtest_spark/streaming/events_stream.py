@@ -1,25 +1,19 @@
-"""Structured Streaming surface (SURVEY.md §7.2 M9 — an extension
-beyond the reference, which is batch-only).
+"""Structured Streaming surface for the events table (SURVEY.md §7.2
+M9 — an extension beyond the reference, which is batch-only).
 
 Streams are the natural arrival mode for bars/events at production
 scale; the batch operators compose onto ``readStream`` inputs. This
 module holds the events-table entry points; the streaming ORDER
-KERNEL (MA-cross/band/stop-loss/grid) lives in backtest_stream.py and
-streaming document dedup in documents_stream.py. Entry points here,
-in increasing order of streaming-native-ness:
+KERNEL (one operator over ``run_kernel``'s run specs: MA-cross, band,
+stop-loss, partial sells, grids) lives in backtest_stream.py and
+streaming document dedup in documents_stream.py. Entry points here:
 
 - ``windowed_event_counts``: watermarked tumbling-window aggregation
   (the built-in stateful operator), drained synchronously from the
   parquet-backed stream — the smoke path the harness can run. The
-  local drain uses a memory sink; the production sink is
+  local drain writes parquet under the process's streaming scratch
+  directory (``streaming.scratch_dir``); the production sink is
   ``writeStream.format("parquet")`` + append mode with the same plan.
-- ``streaming_signal_edges``: the MA-cross signal layer run through a
-  ``foreachBatch`` micro-batch bridge — the recommended pattern for
-  reusing batch operators verbatim. Window continuity across batches
-  is the caveat (an MA needs ``lagging-1`` bars of history), so the
-  bridge is exact only when each micro-batch carries a key's full
-  history (backfill/replay); for true incremental arrival the stateful
-  path below is the template to extend.
 - ``sessionize_stream``: a CUSTOM stateful operator via
   ``applyInPandasWithState`` — per-user session tracking (30-min gap,
   same semantics as the batch q35) with explicit per-key state
@@ -37,15 +31,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from strat_backtest_spark.sources.bars import normalize_events_ts
+from strat_backtest_spark.streaming import scratch_dir
 
 SESSION_GAP_MICROS = 30 * 60 * 1_000_000  # 30 min, as batch q35
 
@@ -75,9 +64,8 @@ def _drain_to_parquet(
     'complete' mode overwrites with the full aggregate state per
     batch (last write wins); 'update'/'append' append emissions."""
     import os
-    import tempfile
 
-    out_dir = tempfile.mkdtemp(prefix="stream_drain_")
+    out_dir = scratch_dir("stream_drain_")
     mode = "overwrite" if output_mode == "complete" else "append"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -209,62 +197,3 @@ def sessionize_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "avg_events_per_session"
         ),
     )
-
-
-# ---------------------------------------------------------------------------
-# foreachBatch bridge: batch signal operator on a stream
-# ---------------------------------------------------------------------------
-
-
-def streaming_signal_edges(
-    spark: SparkSession, sf_dir: str, fast: int = 3, lagging: int = 8
-) -> DataFrame:
-    """MA-cross BUY/SELL edges computed per micro-batch through
-    ``foreachBatch`` reusing the batch operators unchanged
-    (bars_from_events → ma_cross_signals).
-
-    Exact when each micro-batch holds a key's full history (replay /
-    backfill / availableNow over a complete partition); incremental
-    tails would need the last ``lagging-1`` bars carried as state —
-    see ``sessionize_stream`` for that pattern.
-    """
-    import tempfile
-
-    from strat_backtest_spark.operators.signals import ma_cross_signals
-    from strat_backtest_spark.sources.bars import bars_from_events
-
-    # Each batch's result is WRITTEN executor-side (parquet append),
-    # never collected to the driver — the earlier toPandas() drain
-    # made the driver the bottleneck at scale; a durable sink is also
-    # what a production foreachBatch job does.
-    out_dir = tempfile.mkdtemp(prefix="stream_edges_")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sig = ma_cross_signals(bars_from_events(batch_df), fast=fast, lagging=lagging)
-        sig.select(
-            "ticker",
-            F.date_format("date", "yyyy-MM-dd").alias("date"),
-            F.round("close", 6).alias("close"),
-            "action",
-        ).write.mode("append").parquet(out_dir)
-
-    q = (
-        _events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-
-    schema = StructType(
-        [
-            StructField("ticker", StringType()),
-            StructField("date", StringType()),
-            StructField("close", DoubleType()),
-            StructField("action", StringType()),
-        ]
-    )
-    return spark.read.schema(schema).parquet(out_dir)

@@ -236,7 +236,8 @@ def test_run_specs_alone_equal_mixed(spark, shape):
     from strat_backtest_spark.operators.kernel import BandRun
 
     closes, ma = _spec_shapes()[shape]
-    runs = [ma, BandRun(1), ma._replace(run_id=2, sell_shares=2.0), BandRun(3, 1.02, 0.97)]
+    partial = ma._replace(run_id=2, stop_loss_pct=None, sell_shares=2.0)
+    runs = [ma, BandRun(1), partial, BandRun(3, 1.02, 0.97)]
     mixed = _kernel_rows(spark, closes, runs)
     alone = [r for spec in runs for r in _kernel_rows(spark, closes, [spec])]
     assert sorted(map(repr, mixed)) == sorted(map(repr, alone))

@@ -131,7 +131,9 @@ def test_evaluate_params_one_point_and_empty_grid(spark):
 
 def test_evaluate_params_rejects_bad_input(spark):
     """A sweep fails loudly instead of scoring a series Spark's windows
-    would read differently: a NaN close, or a window under 1."""
+    would read differently: a NaN close, or a window under 1; and
+    instead of summing two grid points into one objective: a repeated
+    ``run_id``."""
     from strat_backtest_spark.operators.optimize import evaluate_params
 
     bars = spark.createDataFrame(
@@ -142,6 +144,8 @@ def test_evaluate_params_rejects_bad_input(spark):
         evaluate_params(bars, [(0, 1, 2)], 10_000.0).collect()
     with pytest.raises(ValueError, match="at least 1"):
         evaluate_params(bars, [(0, 0, 2)], 10_000.0)
+    with pytest.raises(ValueError, match="duplicate run_id 0"):
+        evaluate_params(bars, [(0, 3, 8), (0, 5, 13)], 10_000.0)
 
 
 def test_evaluate_params_refuses_duplicate_dates(spark):

@@ -3,7 +3,9 @@ applyInPandasWithState walk (streaming/backtest_stream.py) must equal
 the batch mapInPandas walk (operators/kernel.py) when the same bars
 are replayed as MULTIPLE micro-batches — state carries the book, the
 walk's carry and the retained bars across batch boundaries, so the
-curves match bit-exactly (with stop-loss, the finals).
+curves match bit-exactly (with stop-loss, the finals). The stream
+takes the batch kernel's run specs, so every test feeds both the same
+``kernel_runs()``.
 """
 
 import os
@@ -39,36 +41,23 @@ def _split_bars_to_files(spark, bars, tmpdir: str, n_chunks: int) -> str:
     return out_dir
 
 
-def _drain_stream(spark, curve) -> "DataFrame":
-    name = f"bt_stream_{uuid.uuid4().hex[:8]}"
-    q = (
-        curve.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", f"/tmp/ckpt_{name}")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
 def test_streaming_kernel_matches_batch_curve(spark, tmp_path):
     """Multi-ticker, 4 micro-batches: full per-bar net-worth curve and
     shares_owned match the batch build_portfolio output exactly."""
     from strat_backtest_spark.sources.bars import bars_from_events, load_testdata
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
     from strat_backtest_spark.plans.catalog import _t
-    from strat_backtest_spark.streaming.backtest_stream import streaming_backtest_curve
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        streaming_backtest_curve,
+    )
 
     ev = _t(spark, SF_SMALL, "events")
     bars = bars_from_events(ev)
-    fast, lagging, init = 3, 8, 10_000.0
+    strategy, init = MACrossStrategy(3, 8), 10_000.0
 
     # batch truth
-    bt = Backtest(bars, init, MACrossStrategy(fast, lagging))
+    bt = Backtest(bars, init, strategy)
     batch = {
         (r["ticker"], str(r["date"])): (r["shares_owned"], r["net_worth"])
         for r in bt.run().collect()
@@ -82,8 +71,8 @@ def test_streaming_kernel_matches_batch_curve(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    curve = streaming_backtest_curve(stream, fast, lagging, init)
-    got = _drain_stream(spark, curve).collect()
+    curve = streaming_backtest_curve(stream, init, runs=strategy.kernel_runs())
+    got = drain_stream(spark, curve).collect()
 
     assert len(got) == len(batch), f"row count {len(got)} != {len(batch)}"
     for r in got:
@@ -97,7 +86,11 @@ def test_streaming_kernel_golden_aapl(spark, tmp_path):
     golden final net worth 1,283,666.449897766 (tests/test_strat.py:13)
     reproduced through a 3-batch incremental stream."""
     from strat_backtest_spark.sources.bars import load_bars_csv
-    from strat_backtest_spark.streaming.backtest_stream import streaming_backtest_curve
+    from strat_backtest_spark.operators.kernel import MACrossRun
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        streaming_backtest_curve,
+    )
 
     bars = load_bars_csv(
         spark, "/root/reference/strat_backtest/data/aapl.csv"
@@ -108,8 +101,8 @@ def test_streaming_kernel_golden_aapl(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    curve = streaming_backtest_curve(stream, 36, 40, 5000.0)
-    rows = _drain_stream(spark, curve).orderBy("date").collect()
+    curve = streaming_backtest_curve(stream, 5000.0, runs=[MACrossRun(0, 36, 40)])
+    rows = drain_stream(spark, curve).orderBy("date").collect()
     assert rows[-1]["net_worth"] == pytest.approx(1283666.449897766, rel=1e-9)
 
 
@@ -122,7 +115,10 @@ def test_streaming_kernel_edge_series(spark, tmp_path):
     import pandas as pd
 
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
-    from strat_backtest_spark.streaming.backtest_stream import streaming_backtest_curve
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        streaming_backtest_curve,
+    )
 
     base = datetime.date(2020, 1, 1)
     rows = []
@@ -135,9 +131,9 @@ def test_streaming_kernel_edge_series(spark, tmp_path):
         )
     pdf = pd.DataFrame(rows, columns=["ticker", "date", "close"])
     bars = spark.createDataFrame(pdf)
-    init = 1_000.0
+    strategy, init = MACrossStrategy(2, 4), 1_000.0
 
-    bt = Backtest(bars, init, MACrossStrategy(2, 4))
+    bt = Backtest(bars, init, strategy)
     batch = {
         (r["ticker"], str(r["date"])): (r["shares_owned"], r["net_worth"])
         for r in bt.run().collect()
@@ -150,7 +146,8 @@ def test_streaming_kernel_edge_series(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    got = _drain_stream(spark, streaming_backtest_curve(stream, 2, 4, init)).collect()
+    curve = streaming_backtest_curve(stream, init, runs=strategy.kernel_runs())
+    got = drain_stream(spark, curve).collect()
     assert len(got) == len(batch)
     for r in got:
         want = batch[(r["ticker"], str(r["date"]))]
@@ -168,7 +165,10 @@ def test_streaming_kernel_random_series_fuzz(spark, tmp_path):
     import pandas as pd
 
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
-    from strat_backtest_spark.streaming.backtest_stream import streaming_backtest_curve
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        streaming_backtest_curve,
+    )
 
     base = datetime.date(2021, 3, 1)
     for seed in (0, 1, 2):
@@ -184,8 +184,8 @@ def test_streaming_kernel_random_series_fuzz(spark, tmp_path):
         bars = spark.createDataFrame(
             pd.DataFrame(rows, columns=["ticker", "date", "close"])
         )
-        fast, lagging = int(rng.integers(2, 5)), int(rng.integers(6, 12))
-        bt = Backtest(bars, 2_000.0, MACrossStrategy(fast, lagging))
+        strategy = MACrossStrategy(int(rng.integers(2, 5)), int(rng.integers(6, 12)))
+        bt = Backtest(bars, 2_000.0, strategy)
         batch = {
             (r["ticker"], str(r["date"])): r["net_worth"]
             for r in bt.run().collect()
@@ -198,9 +198,8 @@ def test_streaming_kernel_random_series_fuzz(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        got = _drain_stream(
-            spark, streaming_backtest_curve(stream, fast, lagging, 2_000.0)
-        ).collect()
+        curve = streaming_backtest_curve(stream, 2_000.0, runs=strategy.kernel_runs())
+        got = drain_stream(spark, curve).collect()
         assert len(got) == len(batch), f"seed {seed}"
         for r in got:
             assert r["net_worth"] == batch[(r["ticker"], str(r["date"]))], (
@@ -215,7 +214,10 @@ def test_streaming_band_strategy_matches_batch(spark, tmp_path):
     from strat_backtest_spark.sources.bars import bars_from_events
     from strat_backtest_spark.plans.backtest import Backtest, BandStrategy
     from strat_backtest_spark.plans.catalog import _t
-    from strat_backtest_spark.streaming.backtest_stream import streaming_backtest_curve
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        streaming_backtest_curve,
+    )
 
     ev = _t(spark, SF_SMALL, "events")
     bars = bars_from_events(ev)
@@ -234,8 +236,8 @@ def test_streaming_band_strategy_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    curve = streaming_backtest_curve(stream, initial_amount=init, strategy="band")
-    got = _drain_stream(spark, curve).collect()
+    curve = streaming_backtest_curve(stream, init, runs=BandStrategy().kernel_runs())
+    got = drain_stream(spark, curve).collect()
 
     assert len(got) == len(batch)
     for r in got:
@@ -255,13 +257,16 @@ def test_streaming_stop_loss_matches_batch_finals(spark, tmp_path):
     from strat_backtest_spark.sources.bars import bars_from_events
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
     from strat_backtest_spark.plans.catalog import _t
-    from strat_backtest_spark.streaming.backtest_stream import streaming_backtest_curve
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        streaming_backtest_curve,
+    )
 
     ev = _t(spark, SF_SMALL, "events")
     bars = bars_from_events(ev)
-    init, slp = 10_000.0, 0.97
+    strategy, init = MACrossStrategy(3, 8, stop_loss_pct=0.97), 10_000.0
 
-    bt = Backtest(bars, init, MACrossStrategy(3, 8, stop_loss_pct=slp))
+    bt = Backtest(bars, init, strategy)
     batch = {
         r["ticker"]: r["net_worth"] for r in bt.final_net_worth().collect()
     }
@@ -272,8 +277,8 @@ def test_streaming_stop_loss_matches_batch_finals(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    curve = streaming_backtest_curve(stream, 3, 8, init, stop_loss_pct=slp)
-    rows = _drain_stream(spark, curve).orderBy("date").collect()
+    curve = streaming_backtest_curve(stream, init, runs=strategy.kernel_runs())
+    rows = drain_stream(spark, curve).orderBy("date").collect()
     finals = {}
     for r in rows:
         finals[r["ticker"]] = r["net_worth"]
@@ -289,7 +294,11 @@ def test_streaming_grid_matches_batch_evaluate_params(spark, tmp_path):
     from strat_backtest_spark.operators.optimize import evaluate_params, expand_grid
     from strat_backtest_spark.plans.catalog import _t
     from strat_backtest_spark.sources.bars import bars_from_events
-    from strat_backtest_spark.streaming.backtest_stream import streaming_grid_curve
+    from strat_backtest_spark.operators.kernel import MACrossRun
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        streaming_backtest_curve,
+    )
 
     ev = _t(spark, SF_SMALL, "events")
     bars = bars_from_events(ev)
@@ -307,9 +316,9 @@ def test_streaming_grid_matches_batch_evaluate_params(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    curve = streaming_grid_curve(stream, rows, init)
+    curve = streaming_backtest_curve(stream, init, runs=[MACrossRun(*row) for row in rows])
     got = {}
-    for r in _drain_stream(spark, curve).orderBy("date").collect():
+    for r in drain_stream(spark, curve).orderBy("date").collect():
         got[(r["ticker"], r["run_id"])] = r["net_worth"]
     assert set(got) == set(want)
     for k, nw in got.items():
@@ -317,14 +326,16 @@ def test_streaming_grid_matches_batch_evaluate_params(spark, tmp_path):
 
 
 def test_streaming_signal_edges_stateful_matches_batch(spark, tmp_path):
-    """Edge stream across 3 micro-batches equals the batch
-    ma_cross_signals edges — the MA tail in state supplies the history
-    an incremental batch lacks."""
+    """Edge stream across 3 micro-batches (the curve's rows with an
+    action) equals the batch ma_cross_signals edges — the MA tail in
+    state supplies the history an incremental batch lacks."""
     from strat_backtest_spark.sources.bars import bars_from_events
+    from strat_backtest_spark.operators.kernel import MACrossRun
     from strat_backtest_spark.operators.signals import ma_cross_signals
     from strat_backtest_spark.plans.catalog import _t
     from strat_backtest_spark.streaming.backtest_stream import (
-        streaming_signal_edges_stateful,
+        drain_stream,
+        streaming_backtest_curve,
     )
 
     ev = _t(spark, SF_SMALL, "events")
@@ -340,10 +351,10 @@ def test_streaming_signal_edges_stateful_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    edges = streaming_signal_edges_stateful(stream, 3, 8)
+    curve = streaming_backtest_curve(stream, 10_000.0, runs=[MACrossRun(0, 3, 8)])
     got = {
         (r["ticker"], str(r["date"]), r["action"])
-        for r in _drain_stream(spark, edges).collect()
+        for r in drain_stream(spark, curve).filter("action IS NOT NULL").collect()
     }
     assert got == want
 
@@ -359,13 +370,16 @@ def test_streaming_kernel_out_of_order_arrival(spark, tmp_path):
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
     from strat_backtest_spark.plans.catalog import _t
     from strat_backtest_spark.sources.bars import bars_from_events
-    from strat_backtest_spark.streaming.backtest_stream import streaming_backtest_curve
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        streaming_backtest_curve,
+    )
 
     ev = _t(spark, SF_SMALL, "events")
     bars = bars_from_events(ev)
-    init = 10_000.0
+    strategy, init = MACrossStrategy(3, 8), 10_000.0
 
-    bt = Backtest(bars, init, MACrossStrategy(3, 8))
+    bt = Backtest(bars, init, strategy)
     batch = {
         (r["ticker"], str(r["date"])): r["net_worth"] for r in bt.run().collect()
     }
@@ -402,8 +416,10 @@ def test_streaming_kernel_out_of_order_arrival(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    curve = streaming_backtest_curve(stream, 3, 8, init, allowed_lateness_days=30)
-    got = _drain_stream(spark, curve).collect()
+    curve = streaming_backtest_curve(
+        stream, init, runs=strategy.kernel_runs(), allowed_lateness_days=30
+    )
+    got = drain_stream(spark, curve).collect()
     assert len(got) == len(batch)
     for r in got:
         assert r["net_worth"] == batch[(r["ticker"], str(r["date"]))], (
@@ -422,13 +438,16 @@ def test_streaming_kernel_drops_beyond_bound_late_bar(spark, tmp_path):
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
     from strat_backtest_spark.plans.catalog import _t
     from strat_backtest_spark.sources.bars import bars_from_events
-    from strat_backtest_spark.streaming.backtest_stream import streaming_backtest_curve
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        streaming_backtest_curve,
+    )
 
     ev = _t(spark, SF_SMALL, "events")
     bars = bars_from_events(ev)
-    init = 10_000.0
+    strategy, init = MACrossStrategy(3, 8), 10_000.0
 
-    bt = Backtest(bars, init, MACrossStrategy(3, 8))
+    bt = Backtest(bars, init, strategy)
     batch = {
         (r["ticker"], str(r["date"])): r["net_worth"] for r in bt.run().collect()
     }
@@ -466,8 +485,10 @@ def test_streaming_kernel_drops_beyond_bound_late_bar(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    curve = streaming_backtest_curve(stream, 3, 8, init, allowed_lateness_days=2)
-    got = _drain_stream(spark, curve).collect()
+    curve = streaming_backtest_curve(
+        stream, init, runs=strategy.kernel_runs(), allowed_lateness_days=2
+    )
+    got = drain_stream(spark, curve).collect()
     assert len(got) == len(batch)  # no extra row for the poison bar
     for r in got:
         assert r["net_worth"] == batch[(r["ticker"], str(r["date"]))], (
@@ -485,15 +506,13 @@ def test_streaming_partial_close_update_mode(spark, tmp_path):
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
     from strat_backtest_spark.plans.catalog import _t
     from strat_backtest_spark.sources.bars import bars_from_events
-    from strat_backtest_spark.streaming.backtest_stream import (
-        streaming_backtest_curve_update,
-    )
+    from strat_backtest_spark.streaming.backtest_stream import streaming_backtest_curve
 
     ev = _t(spark, SF_SMALL, "events")
     bars = bars_from_events(ev)
-    init = 10_000.0
+    strategy, init = MACrossStrategy(3, 8, sell_shares=2.0), 10_000.0
 
-    bt = Backtest(bars, init, MACrossStrategy(3, 8, sell_shares=2.0))
+    bt = Backtest(bars, init, strategy)
     batch = {
         (r["ticker"], str(r["date"])): (r["net_worth"], r["shares_owned"])
         for r in bt.run().collect()
@@ -506,9 +525,7 @@ def test_streaming_partial_close_update_mode(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    curve = streaming_backtest_curve_update(
-        stream, 3, 8, init, sell_shares=2.0
-    )
+    curve = streaming_backtest_curve(stream, init, runs=strategy.kernel_runs())
     # drain with a KNOWN query name so the raw (pre-dedup) emission
     # table can be asserted on without guessing among uuid names
     name = f"pc_test_{uuid.uuid4().hex[:8]}"
@@ -612,8 +629,8 @@ def test_streaming_partial_close_refill_e2e(spark, tmp_path):
 
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
     from strat_backtest_spark.streaming.backtest_stream import (
-        drain_stream_update,
-        streaming_backtest_curve_update,
+        drain_stream,
+        streaming_backtest_curve,
     )
 
     base = datetime.date(2022, 1, 1)
@@ -634,9 +651,9 @@ def test_streaming_partial_close_refill_e2e(spark, tmp_path):
         }
     )
     bars = spark.createDataFrame(pdf)
-    init = 100.0
+    strategy, init = MACrossStrategy(2, 4, sell_shares=3.0), 100.0
 
-    bt = Backtest(bars, init, MACrossStrategy(2, 4, sell_shares=3.0))
+    bt = Backtest(bars, init, strategy)
     batch = {
         str(r["date"]): (r["net_worth"], r["shares_owned"])
         for r in bt.run().collect()
@@ -650,10 +667,8 @@ def test_streaming_partial_close_refill_e2e(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        got = drain_stream_update(
-            spark,
-            streaming_backtest_curve_update(stream, 2, 4, init, sell_shares=3.0),
-        ).collect()
+        curve = streaming_backtest_curve(stream, init, runs=strategy.kernel_runs())
+        got = drain_stream(spark, curve).collect()
         assert len(got) == len(batch), n_chunks
         for r in got:
             want_net, want_shares = batch[str(r["date"])]
@@ -673,8 +688,8 @@ def test_streaming_partial_close_fuzz(spark, tmp_path):
 
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
     from strat_backtest_spark.streaming.backtest_stream import (
-        drain_stream_update,
-        streaming_backtest_curve_update,
+        drain_stream,
+        streaming_backtest_curve,
     )
 
     base = datetime.date(2023, 6, 1)
@@ -691,8 +706,9 @@ def test_streaming_partial_close_fuzz(spark, tmp_path):
         bars = spark.createDataFrame(
             pd.DataFrame(rows, columns=["ticker", "date", "close"])
         )
-        init, shares = 120.0, float(rng.integers(2, 5))
-        bt = Backtest(bars, init, MACrossStrategy(2, 4, sell_shares=shares))
+        init = 120.0
+        strategy = MACrossStrategy(2, 4, sell_shares=float(rng.integers(2, 5)))
+        bt = Backtest(bars, init, strategy)
         batch = {
             (r["ticker"], str(r["date"])): (r["net_worth"], r["shares_owned"])
             for r in bt.run().collect()
@@ -705,10 +721,8 @@ def test_streaming_partial_close_fuzz(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        got = drain_stream_update(
-            spark,
-            streaming_backtest_curve_update(stream, 2, 4, init, sell_shares=shares),
-        ).collect()
+        curve = streaming_backtest_curve(stream, init, runs=strategy.kernel_runs())
+        got = drain_stream(spark, curve).collect()
         assert len(got) == len(batch), (seed, n_chunks)
         for r in got:
             want_net, want_shares = batch[(r["ticker"], str(r["date"]))]
@@ -777,9 +791,7 @@ def test_streaming_kernel_state_survives_query_restart(spark, tmp_path, strategy
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        curve = streaming_backtest_curve(
-            stream, fast, lagging, init, strategy=strategy
-        )
+        curve = streaming_backtest_curve(stream, init, runs=strat.kernel_runs())
         q = (
             curve.writeStream.outputMode("append")
             .format("parquet")
@@ -858,27 +870,26 @@ def test_streaming_equals_batch_on_edge_shapes(spark, tmp_path, fast, lagging):
     series and a single bar) have SMAs that differ only in their last
     bits, so a stream decides its crosses as the batch kernel does only
     if it sums every frame the same way. Over a 3-chunk replay, compared
-    by ``repr``: the append-mode curve with ``Backtest.run()``, the
+    by ``repr``: the append-mode curve with ``Backtest.run()``, a
     grid's finals with ``evaluate_params`` and the update-mode curve
     with partial sells with ``Backtest.run()``."""
     from test_optimize import _edge_shape_bars
 
+    from strat_backtest_spark.operators.kernel import MACrossRun
     from strat_backtest_spark.operators.optimize import evaluate_params
     from strat_backtest_spark.plans.backtest import Backtest, MACrossStrategy
     from strat_backtest_spark.streaming.backtest_stream import (
         drain_stream,
-        drain_stream_update,
         streaming_backtest_curve,
-        streaming_backtest_curve_update,
-        streaming_grid_curve,
     )
 
     bars = _edge_shape_bars(spark)
     chunks = _thirds([tuple(r) for r in bars.collect()])
     init = 10_000.0
 
-    def stream(name):
-        return _stream_chunks(spark, str(tmp_path / name), chunks)
+    def stream_curve(name, runs):
+        stream = _stream_chunks(spark, str(tmp_path / name), chunks)
+        return drain_stream(spark, streaming_backtest_curve(stream, init, runs=runs))
 
     def batch_curve(strategy):
         bt = Backtest(bars, init, strategy)
@@ -886,10 +897,9 @@ def test_streaming_equals_batch_on_edge_shapes(spark, tmp_path, fast, lagging):
         bt.release()
         return _curve_reprs(rows)
 
-    want = batch_curve(MACrossStrategy(fast, lagging))
-    got = _curve_reprs(drain_stream(
-        spark, streaming_backtest_curve(stream("append"), fast, lagging, init)
-    ).collect())
+    strategy = MACrossStrategy(fast, lagging)
+    want = batch_curve(strategy)
+    got = _curve_reprs(stream_curve("append", strategy.kernel_runs()).collect())
     assert got == want
 
     runs = [(0, fast, lagging), (1, lagging, fast)]
@@ -898,49 +908,81 @@ def test_streaming_equals_batch_on_edge_shapes(spark, tmp_path, fast, lagging):
         for r in evaluate_params(bars, runs, init).collect()
     }
     got = {}
-    grid = drain_stream(spark, streaming_grid_curve(stream("grid"), runs, init))
+    grid = stream_curve("grid", [MACrossRun(*row) for row in runs])
     for r in grid.orderBy("date").collect():
         got[(r["ticker"], r["run_id"])] = repr(r["net_worth"])
     assert got == want
 
-    want = batch_curve(MACrossStrategy(fast, lagging, sell_shares=2.0))
-    got = _curve_reprs(drain_stream_update(
-        spark, streaming_backtest_curve_update(
-            stream("update"), fast, lagging, init, sell_shares=2.0
-        ),
-    ).collect())
+    strategy = MACrossStrategy(fast, lagging, sell_shares=2.0)
+    want = batch_curve(strategy)
+    got = _curve_reprs(stream_curve("update", strategy.kernel_runs()).collect())
     assert got == want
 
 
-def _contract_curve(spark, path, stream):
-    """The drained curve of one streaming path over ``stream``."""
+def test_streaming_run_specs_alone_equal_mixed(spark, tmp_path):
+    """A mixed MA-cross + band ``runs=`` list on one stream (append
+    mode): every spec's rows equal that spec streamed alone, so the
+    (ticker, run_id) keying keeps each run's book apart — the streaming
+    twin of ``test_backtest.py::test_run_specs_alone_equal_mixed``."""
+    from test_optimize import _edge_shape_bars
+
+    from strat_backtest_spark.operators.kernel import BandRun, MACrossRun
     from strat_backtest_spark.streaming.backtest_stream import (
         drain_stream,
-        drain_stream_update,
         streaming_backtest_curve,
-        streaming_backtest_curve_update,
     )
 
-    if path == "partial":
-        return drain_stream_update(
-            spark, streaming_backtest_curve_update(stream, 3, 8, 10_000.0, sell_shares=2.0)
-        ).collect()
-    if path == "band":
-        curve = streaming_backtest_curve(stream, initial_amount=10_000.0, strategy="band")
-    else:
-        curve = streaming_backtest_curve(stream, 3, 8, 10_000.0)
-    return drain_stream(spark, curve).collect()
+    chunks = _thirds([tuple(r) for r in _edge_shape_bars(spark).collect()])
+    runs = [MACrossRun(0, 3, 8), BandRun(1), MACrossRun(2, 5, 13, 0.95), BandRun(3, 1.02, 0.97)]
+
+    def rows(name, runs):
+        stream = _stream_chunks(spark, str(tmp_path / name), chunks)
+        curve = streaming_backtest_curve(stream, 10_000.0, runs=runs)
+        assert "emit_seq" not in curve.columns
+        return drain_stream(spark, curve).collect()
+
+    mixed = rows("mixed", runs)
+    alone = [r for spec in runs for r in rows(f"alone{spec.run_id}", [spec])]
+    assert sorted(map(repr, mixed)) == sorted(map(repr, alone))
+    assert {r["run_id"] for r in mixed} == {0, 1, 2, 3}
 
 
-@pytest.mark.parametrize("case", ["duplicate", "inf", "late", "nan"])
+@pytest.mark.parametrize(
+    "runs, error, match",
+    [
+        ([(0, 0, 8)], ValueError, "at least 1"),
+        ([(0, 3, 8), (0, 5, 13)], ValueError, "duplicate run_id 0"),
+        ([(0, 3, 8, 0.95, 2.0)], NotImplementedError, "stop_loss_pct with sell_shares"),
+    ],
+    ids=["length_0", "duplicate_run_id", "stop_loss_with_sell_shares"],
+)
+def test_streaming_refuses_bad_runs(spark, tmp_path, runs, error, match):
+    """A run list no walk can run is refused by name when the query is
+    built, before any job starts: an MA length of 0 (which would
+    otherwise die in the worker on a broadcast error), a repeated
+    ``run_id`` (which would otherwise keep only one of the two runs)
+    and a hand-built spec with a stop-loss on the partial-sell path."""
+    from datetime import date
+
+    from strat_backtest_spark.operators.kernel import MACrossRun
+    from strat_backtest_spark.streaming.backtest_stream import streaming_backtest_curve
+
+    stream = _stream_chunks(spark, str(tmp_path / "src"), [[("x", date(2020, 1, 1), 1.0)]])
+    with pytest.raises(error, match=match):
+        streaming_backtest_curve(stream, 10_000.0, runs=[MACrossRun(*r) for r in runs])
+
+
+@pytest.mark.parametrize("case", ["duplicate", "inf", "late", "nan", "reorder"])
 @pytest.mark.parametrize("path", ["ma_cross", "band", "partial"])
 def test_streaming_bars_contract(spark, tmp_path, path, case):
     """The batch bars contract on every streaming path: a duplicate
     (ticker, date) among a micro-batch's bars and an infinite close are
     refused by name; a bar on or before the last consumed day is
-    dropped as late; a null or NaN close is punctuation, not a bar. The
-    late and punctuation replays must equal the batch curve of the
-    clean bars."""
+    dropped as late; a null or NaN close is punctuation, not a bar; a
+    bar that arrives after newer ones but within
+    ``allowed_lateness_days`` enters its walk in date order (the
+    partial path runs this in update mode). The late, punctuation and
+    reorder replays must equal the batch curve of the clean bars."""
     import math
     from datetime import timedelta
 
@@ -948,6 +990,10 @@ def test_streaming_bars_contract(spark, tmp_path, path, case):
         Backtest,
         BandStrategy,
         MACrossStrategy,
+    )
+    from strat_backtest_spark.streaming.backtest_stream import (
+        drain_stream,
+        streaming_backtest_curve,
     )
 
     from test_optimize import _edge_shape_bars
@@ -962,6 +1008,7 @@ def test_streaming_bars_contract(spark, tmp_path, path, case):
     rows = [r for r in rows if r[1] <= end]
     chunks = _thirds(rows)
     first = next(r for r in chunks[1] if r[0] == "ramp")
+    lateness = 0
     if case == "duplicate":
         chunks[1].append(first)
     elif case == "inf":
@@ -969,68 +1016,81 @@ def test_streaming_bars_contract(spark, tmp_path, path, case):
     elif case == "late":
         # already consumed days again, with closes that must never count
         chunks.append([(t, d, c * 10 + 999.0) for t, d, c in chunks[0][2::7]])
-    else:
+    elif case == "nan":
         chunks[2] += [("flat", end + timedelta(days=30), math.nan),
                       ("ramp", end + timedelta(days=3), None)]
+    else:
+        # the two days below chunk 0's last arrive with chunk 1, after
+        # that newer bar; punctuation far past the end flushes the buffer
+        held = sorted({r[1] for r in chunks[0]})[-3:-1]
+        chunks[1] += [r for r in chunks[0] if r[1] in held]
+        chunks[0] = [r for r in chunks[0] if r[1] not in held]
+        chunks[2] += [(t, end + timedelta(days=60), None) for t in ("walk1", "flat", "ramp")]
+        lateness = 5
     stream = _stream_chunks(spark, str(tmp_path / "src"), chunks)
-
-    if case in ("duplicate", "inf"):
-        match = "duplicate or null date" if case == "duplicate" else "non-finite close"
-        with pytest.raises(Exception, match=match):
-            _contract_curve(spark, path, stream)
-        return
-
     strategy = {
         "ma_cross": MACrossStrategy(3, 8),
         "band": BandStrategy(),
         "partial": MACrossStrategy(3, 8, sell_shares=2.0),
     }[path]
+
+    def curve():
+        return drain_stream(spark, streaming_backtest_curve(
+            stream, 10_000.0, runs=strategy.kernel_runs(), allowed_lateness_days=lateness,
+        )).collect()
+
+    if case in ("duplicate", "inf"):
+        match = "duplicate or null date" if case == "duplicate" else "non-finite close"
+        with pytest.raises(Exception, match=match):
+            curve()
+        return
+
     bars = spark.createDataFrame(rows, "ticker string, date date, close double")
     bt = Backtest(bars, 10_000.0, strategy)
     want = _curve_reprs(bt.run().collect(), ("close", "shares_owned", "net_worth"))
     bt.release()
-    got = _curve_reprs(
-        _contract_curve(spark, path, stream), ("close", "shares_owned", "net_worth")
-    )
-    assert got == want
+    assert _curve_reprs(curve(), ("close", "shares_owned", "net_worth")) == want
 
 
 def test_bars_replay_dirs_share_one_parent_removed_at_exit(spark):
-    """Every replay of a process is a fresh directory under one parent,
-    and that parent is gone once the process exits."""
+    """Every replay and every parquet drain of a process is a fresh
+    directory under one parent, and that parent is gone once the
+    process exits."""
     import subprocess
     import sys
     from datetime import date, timedelta
     from pathlib import Path
 
+    from strat_backtest_spark.streaming import _scratch_root
     from strat_backtest_spark.streaming.backtest_stream import (
-        _replay_root,
         bars_replay_stream,
         drain_stream,
     )
+    from strat_backtest_spark.streaming.events_stream import _drain_to_parquet
 
     bars = spark.createDataFrame(
         [(t, date(2020, 1, 1) + timedelta(days=i), 1.0 + i) for t in "ab" for i in range(6)],
         "ticker string, date date, close double",
     )
-    root = _replay_root()
+    root = _scratch_root()
     before = set(os.listdir(root))
     first = bars_replay_stream(spark, bars, n_chunks=2)
     bars_replay_stream(spark, bars, n_chunks=3)
     assert len(set(os.listdir(root)) - before) == 2
-    assert os.path.basename(root).startswith("bars_replay_")
+    assert os.path.basename(root).startswith("stream_scratch_")
     assert drain_stream(spark, first).count() == 12
+    drained = _drain_to_parquet(bars_replay_stream(spark, bars), spark, "append")
+    assert drained.count() == 12
+    assert all(f.startswith(f"file://{root}/") for f in drained.inputFiles())
 
     code = (
         "import os\n"
-        "from strat_backtest_spark.streaming.backtest_stream import _replay_root\n"
-        "root = _replay_root()\n"
-        "os.makedirs(os.path.join(root, 'replay'))\n"
-        "print(root)\n"
+        "from strat_backtest_spark.streaming import scratch_dir\n"
+        "print(os.path.dirname(scratch_dir('replay_')))\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code], check=True, capture_output=True, text=True,
         cwd=Path(__file__).resolve().parents[1],
     ).stdout.strip()
-    assert os.path.basename(out).startswith("bars_replay_")
+    assert os.path.basename(out).startswith("stream_scratch_")
     assert not os.path.exists(out)
