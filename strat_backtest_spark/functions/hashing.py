@@ -8,10 +8,14 @@ recomputed anywhere without coordinating a hash-seed service.
 Scheme: a native md5's 60-bit prefix reduced mod P = 1e9+7;
 universal-hash family ``h_i(x) = (aᵢ·x + bᵢ) mod P`` with fixed odd
 multipliers. All intermediates < 2^63 — no overflow
-on either engine.
+on either engine. The md5-prefix hash has one form per engine: a
+Column (``md5_hash``), DuckDB SQL (``md5_hash_sql``) and Python
+(``md5_hash_py``, for the Arrow-batched operators).
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column, functions as F
 
@@ -39,3 +43,9 @@ def md5_hash(col: str | Column) -> Column:
 def md5_hash_sql(expr: str) -> str:
     """The same md5-prefix hash as DuckDB SQL over a string expression."""
     return f"(('0x' || substring(md5({expr}), 1, 15))::BIGINT % {P})"
+
+
+def md5_hash_py(s: str) -> int:
+    """The same md5-prefix hash in Python (hashlib's C md5) — what the
+    Arrow-batched operators compute per token or shingle."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16) % P

@@ -1,10 +1,12 @@
 """Text / string functions (SURVEY.md §2.8 F8-F12; reference
 common_stock.py:106-127) plus the tokenizers the text-analysis
-operators build on. All pure Column expressions — JVM-side regex,
-no Python UDFs.
+operators build on: Column expressions (JVM-side regex) and the one
+Python tokenizer the Arrow-batched operators share.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, functions as F
 
@@ -45,6 +47,20 @@ def whitespace_tokens(col: str | Column) -> Column:
     """Whitespace tokenization — the token-counting baseline."""
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(c, r"\s+"), lambda t: t != "")
+
+
+# Java's \s (whitespace_tokens) is ASCII-only: [ \t\n\x0B\f\r].
+# Python's default \s is unicode-wide, so pin re.ASCII for token parity.
+ASCII_WS = re.compile(r"\s+", re.ASCII)
+
+
+def ascii_tokens(text) -> list[str]:
+    """Python twin of :func:`whitespace_tokens` for one document:
+    the non-empty runs between ASCII whitespace; ``[]`` for a
+    non-str (null) document."""
+    if not isinstance(text, str):
+        return []
+    return [t for t in ASCII_WS.split(text) if t]
 
 
 def word_tokens(col: str | Column, lowercase: bool = True) -> Column:

@@ -19,8 +19,6 @@ to the LLM-data-pipeline surface required by BASELINE.json.
 
 from __future__ import annotations
 
-import hashlib
-import re
 from typing import NamedTuple
 
 import numpy as np
@@ -31,9 +29,9 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from pyspark.sql.types import StructField, StructType
 
-from strat_backtest_spark.functions.hashing import P, md5_hash, perm_params
+from strat_backtest_spark.functions.hashing import P, md5_hash_py, perm_params
 from strat_backtest_spark.functions.numeric import round_half_up
-from strat_backtest_spark.functions.text import whitespace_tokens
+from strat_backtest_spark.functions.text import ascii_tokens, whitespace_tokens
 
 
 # Worker-side memo: benchmark-broadcast identity -> pd.Index khash
@@ -73,51 +71,16 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 # shingles + MinHash
 # ---------------------------------------------------------------------------
 
-def shingle_hashes(
-    text_col: str | Column = "text", n: int = 3, hasher=md5_hash
-) -> Column:
-    """Distinct word n-gram shingles of a document, each reduced to an
-    integer hash in [0, P). ``hasher`` defaults to the engine-portable
-    md5 scheme (oracle-checkable). NOTE (measured, 500k-doc rung): the
-    per-shingle cost here is dominated by interpreted HOF evaluation,
-    not the hash function — for the minhash hot path use
-    ``minhash_signatures``'s Arrow impl instead of swapping hashers."""
-    toks = whitespace_tokens(text_col)
-    # guard: Spark's sequence(1, 0) yields a DESCENDING [1, 0], so an
-    # explicit empty array is required for docs shorter than n tokens
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    shingle = lambda i: F.concat_ws(
-        " ", *[F.element_at(toks, i + j) for j in range(n)]
-    )
-    return F.array_distinct(F.transform(idx, lambda i: hasher(shingle(i))))
-
-
-# Java regex \s (F.split in shingle_hashes) is ASCII-only; Python's
-# default \s is unicode-wide — pin ASCII for token parity.
-_WS_ASCII = re.compile(r"\s+", re.ASCII)
-
-
 def _py_shingle_hashes(text, n: int) -> set:
-    """Python twin of :func:`shingle_hashes` — identical values
-    (verified by the cross-impl parity tests): ASCII-whitespace
-    tokens, word n-grams joined by single spaces, md5 60-bit prefix
-    mod P, distinct. hashlib's C md5 makes this the hot path for the
-    Arrow-batched dedup operators; the Column version's per-shingle
-    cost is interpreted-HOF evaluation, ~10× slower."""
-    if not isinstance(text, str):
-        return set()
-    toks = [t for t in _WS_ASCII.split(text) if t]
+    """Distinct word n-gram shingles of a document, each reduced to an
+    integer hash in [0, P): ASCII-whitespace tokens (``ascii_tokens``),
+    n-grams joined by single spaces, ``md5_hash_py``. hashlib's C md5
+    makes this the hot path for the Arrow-batched dedup operators; the
+    DuckDB oracles mirror it with ``_shingle_hashes_sql``."""
+    toks = ascii_tokens(text)
     if len(toks) < n:
         return set()
-    return {
-        int(
-            hashlib.md5(" ".join(toks[i:i + n]).encode("utf-8")).hexdigest()[:15],
-            16,
-        ) % P
-        for i in range(len(toks) - n + 1)
-    }
+    return {md5_hash_py(" ".join(toks[i:i + n])) for i in range(len(toks) - n + 1)}
 
 
 def _py_shingle_occurrences(text, n: int) -> list:
@@ -127,62 +90,33 @@ def _py_shingle_occurrences(text, n: int) -> list:
     the distinct shingle set. Same tokens (ASCII whitespace), same
     hash (md5 60-bit prefix mod P), so the DuckDB oracle mirror is
     shared with the other shingle operators."""
-    if not isinstance(text, str):
-        return []
-    toks = [t for t in _WS_ASCII.split(text) if t]
+    toks = ascii_tokens(text)
     if len(toks) < n:
         return []
     return [
-        (
-            i,
-            int(
-                hashlib.md5(" ".join(toks[i:i + n]).encode("utf-8")).hexdigest()[:15],
-                16,
-            )
-            % P,
-        )
-        for i in range(len(toks) - n + 1)
+        (i, md5_hash_py(" ".join(toks[i:i + n]))) for i in range(len(toks) - n + 1)
     ]
 
 
 def minhash_signatures(
     df: DataFrame, k: int = 8, shingle_n: int = 3,
     text_col: str = "text", id_col: str = "doc_id",
-    hasher=md5_hash, impl: str = "arrow",
 ) -> DataFrame:
     """Per-document MinHash signature columns sig_0..sig_{k-1}:
     sig_i = min((aᵢ·x + bᵢ) mod P) over the shingle set.
 
-    Two implementations producing IDENTICAL values (cross-checked in
-    tests/test_pipeline_ops.py):
+    mapInPandas: per batch, shingle strings are built and md5-hashed
+    in C (hashlib, ``_py_shingle_hashes``) and the k permuted minima
+    fall out of one numpy outer-product — measured ~10× faster than
+    the Column-expression form it replaced at the 500k-doc rung (4.4 s
+    vs 42 s per core-partition), because per-shingle work in a
+    Catalyst higher-order ``transform`` runs on the INTERPRETED
+    expression path (~19 µs/shingle), not codegen. Map-only: no
+    exchange at all, and the mapInPandas node is an inlining barrier
+    by construction (the round-1 q23 disease — CollapseProject
+    re-evaluating the shingle pipeline per consumer — cannot occur).
 
-    - ``impl="arrow"`` (default): mapInPandas; per batch, shingle
-      strings are built and md5-hashed in C (hashlib) and the k
-      permuted minima fall out of one numpy outer-product — measured
-      ~10× faster than the expression path at the 500k-doc rung
-      (4.4 s vs 42 s per core-partition), because per-shingle work in
-      a Catalyst higher-order ``transform`` runs on the INTERPRETED
-      expression path (~19 µs/shingle), not codegen. Map-only: no
-      exchange at all (the old groupBy shuffle disappears), and the
-      mapInPandas node is an inlining barrier by construction (the
-      round-1 q23 disease — CollapseProject re-evaluating the shingle
-      pipeline per consumer — cannot occur).
-    - ``impl="jvm"``: pure Column expressions (explode shingle hashes
-      → one map-side-combining min-agg). No Python workers; keeps
-      custom ``hasher`` columns. Selected automatically when a
-      non-default hasher is passed.
-
-    Empty/short/null docs yield null sigs on both paths."""
-    if impl == "jvm" or hasher is not md5_hash:
-        sh = shingle_hashes(text_col, shingle_n, hasher=hasher)
-        ex = df.select(F.col(id_col), F.explode_outer(sh).alias("__h"))
-        return ex.groupBy(id_col).agg(
-            *[
-                F.min((F.col("__h") * F.lit(a) + F.lit(b)) % P).alias(f"sig_{i}")
-                for i, (a, b) in enumerate(perm_params(k))
-            ]
-        )
-
+    Empty/short/null docs yield null sigs."""
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, " + ", ".join(f"sig_{i} long" for i in range(k))
     A = np.array([a for a, _ in perm_params(k)], dtype=np.int64)
@@ -218,7 +152,6 @@ def lsh_candidate_pairs(
     bands: int = 4,
     id_col: str = "doc_id",
     max_bucket_size: int = 2000,
-    dedup: str = "first_band",
 ) -> DataFrame:
     """LSH banding: docs sharing any band of r = k/bands consecutive
     signature slots become a candidate pair. Returns (id_a, id_b,
@@ -233,19 +166,17 @@ def lsh_candidate_pairs(
     orders of magnitude smaller) → pairs within buckets → cross-band
     dedup.
 
-    ``dedup="first_band"`` (default) is the q58 trick: a pair is kept
-    only in the FIRST band where both band keys match and that bucket
-    survived the cap — a JVM predicate over the signature arrays
-    already in the row, replacing a ``distinct()`` exchange over the
-    full pair stream (the dominant stage at the 5M-doc rung: 48 of
-    ~80 s post-signature). Unlike ``simhash_neardup_pairs`` (whose
+    Cross-band dedup is the q58 trick: a pair is kept only in the
+    FIRST band where both band keys match and that bucket survived the
+    cap — a JVM predicate over the signature arrays already in the
+    row, which replaced a ``distinct()`` exchange over the full pair
+    stream (the dominant stage at the 5M-doc rung: 48 of ~80 s
+    post-signature). Unlike ``simhash_neardup_pairs`` (whose
     capped set collects driver-side), the capped-bucket lookup here is
     a BROADCAST LEFT JOIN per earlier band against the hot-key
     aggregate, so everything stays in ONE job — a driver collect of
     the hot set would run the (expensive) signature lineage a second
     time, which at the 5M rung cost more than the distinct it saved.
-    ``dedup="distinct"`` keeps the old shuffle (parity-tested
-    identical).
 
     est_jaccard is an UNROLLED k-term coalesce-compare (null slots
     count unequal, matching the HOF filter's null-drop) — the
@@ -320,10 +251,6 @@ def lsh_candidate_pairs(
         6,
     )
     joined = a.join(b, ["band", "band_key"]).filter(F.col("id_a") < F.col("id_b"))
-    if dedup != "first_band":
-        return joined.select(
-            "id_a", "id_b", est.alias("est_jaccard")
-        ).distinct()
 
     # first-surviving-band-wins: band keys for EARLIER bands rebuild
     # from the sig arrays with the same concat_ws (null-skipping)
@@ -358,56 +285,24 @@ def lsh_candidate_pairs(
 # ---------------------------------------------------------------------------
 
 def simhash(
-    df: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id",
-    impl: str = "arrow",
+    df: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Per-document SimHash: token char-hashes vote ±1 per bit; bit j
     set when strictly more tokens have bit j set than clear. Map-only;
     near-dup detection is then Hamming distance on one long.
 
-    Two value-identical implementations (cross-checked in
-    tests/test_pipeline_ops.py), same split as ``minhash_signatures``:
-
-    - ``impl="arrow"`` (default): ONE mapInPandas stage — ASCII-ws
-      tokenization + hashlib md5 (60-bit prefix mod P, the exact
-      ``md5_hash`` value) + the bit-matrix majority vote, all per
-      Arrow batch. Measured NOTE: unlike minhash, the JVM per-token
-      expression here is a shallow tree (md5 → conv → mod, no shingle
-      concat, no min-fold), so interpreted eval is NOT the dominant
-      cost — the win is folding tokenize+hash+vote into one pass and
-      dropping the (id, array<long>) Arrow transfer the pandas-UDF
-      vote needed: full q58 at the 500k-doc rung 6.6 → 5.5 s (~1.2×),
-      not minhash's 4-5×. Beware measuring the stages apart: a bare
-      ``count()`` on the JVM plan prunes the hash projection entirely
-      (md5 never runs), while mapInPandas always executes.
-    - ``impl="jvm"``: tokens + md5 as Column expressions, vote in a
-      pandas UDF — no Python tokenization, kept for parity testing.
+    ONE mapInPandas stage — ``ascii_tokens`` + ``md5_hash_py`` (the
+    exact ``md5_hash`` value) + the bit-matrix majority vote, all per
+    Arrow batch. Measured NOTE: unlike minhash, the JVM per-token
+    expression it replaced was a shallow tree (md5 → conv → mod, no
+    shingle concat, no min-fold), so interpreted eval was NOT the
+    dominant cost — the win is folding tokenize+hash+vote into one
+    pass and dropping the (id, array<long>) Arrow transfer a pandas-UDF
+    vote needs: full q58 at the 500k-doc rung 6.6 → 5.5 s (~1.2×), not
+    minhash's 4-5×. Null, empty and all-whitespace docs hash to 0.
     """
     powers = (1 << np.arange(bits)).astype(np.int64)
     shifts = np.arange(bits)
-
-    if impl == "jvm":
-        toks = whitespace_tokens(text_col)
-        hashes = F.transform(toks, lambda t: md5_hash(t))
-
-        # Bit parity: h in [0, P) is non-negative, so
-        # `shiftright(h, j) % 2` == `(h >> j) & 1`.
-        @F.pandas_udf("long")
-        def _vote(hs: pd.Series) -> pd.Series:
-            out = np.zeros(len(hs), dtype=np.int64)
-            for k, arr in enumerate(hs):
-                if arr is None:
-                    continue  # null text: no tokens -> 0
-                a = np.asarray(arr, dtype=np.int64)
-                n = len(a)
-                if n == 0:
-                    continue  # no tokens: no bit wins a majority -> 0
-                cnt = ((a[:, None] >> shifts) & 1).sum(axis=0)
-                out[k] = int(((cnt * 2 > n) * powers).sum())
-            return pd.Series(out)
-
-        return df.select(F.col(id_col), _vote(hashes).alias("simhash"))
-
     id_type = df.schema[id_col].dataType.simpleString()
     schema = f"{id_col} {id_type}, simhash long"
 
@@ -419,16 +314,13 @@ def simhash(
         def _h(t: str) -> int:
             v = memo.get(t)
             if v is None:
-                v = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16) % P
-                memo[t] = v
+                v = memo[t] = md5_hash_py(t)
             return v
 
         for pdf in batches:
             out = np.zeros(len(pdf), dtype=np.int64)
             for r, text in enumerate(pdf[text_col].tolist()):
-                if not isinstance(text, str):
-                    continue  # null text: no tokens -> 0, as on the JVM path
-                toks = [t for t in _WS_ASCII.split(text) if t]
+                toks = ascii_tokens(text)
                 n = len(toks)
                 if n == 0:
                     continue
@@ -496,9 +388,8 @@ def ngram_jaccard_pairs(
     every pair (~2.5x faster at sf0.1); one shuffle on the blocking
     keys either way, and shingle hashes — never text — are what
     shuffles (the arrays are built in an Arrow map stage BEFORE the
-    exchange, via the same hashlib path as minhash — the interpreted
-    shingle_hashes Column version is the slow path, see
-    _py_shingle_hashes)."""
+    exchange, via the same hashlib path as minhash,
+    ``_py_shingle_hashes``)."""
     id_type = df.schema[id_col].dataType.simpleString()
     group_types = ", ".join(
         f"{c} {df.schema[c].dataType.simpleString()}" for c in group_cols
@@ -664,7 +555,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 25,
     local_threshold: int = 200_000,
-    precontract: bool = True,
 ) -> DataFrame:
     """Near-duplicate GROUPS from candidate pairs: connected components
     by alternating LARGE-STAR / SMALL-STAR contraction (the MapReduce
@@ -779,7 +669,7 @@ def connected_components(
     # BEFORE the first star round, and moves the dedup `distinct` onto
     # the contracted (≤ one edge per node per partition) set instead
     # of the raw 88M-row pair stream.
-    if precontract and dict(p.dtypes)["u"] == "bigint" == dict(p.dtypes)["v"]:
+    if dict(p.dtypes)["u"] == "bigint" == dict(p.dtypes)["v"]:
         ed = _precontract_edges(ed)
     # DISK_ONLY for every edge-set materialization (round-12 fix): the
     # loop below checkpoints a NEW edge set each round and there is no
@@ -964,7 +854,6 @@ def simhash_neardup_pairs(
     max_bucket_size: int = 2000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "arrow",
     hot_literal_cap: int = _HOT_LITERAL_CAP,
 ) -> DataFrame:
     """SimHash near-dup pairs: (id_a < id_b, hamming ≤ ``max_hamming``).
@@ -986,7 +875,7 @@ def simhash_neardup_pairs(
     """
     width = bits // bands
     mask = (1 << width) - 1
-    sh = simhash(df, bits, text_col, id_col, impl=impl).localCheckpoint()
+    sh = simhash(df, bits, text_col, id_col).localCheckpoint()
     banded = band_simhash(sh, bits=bits, bands=bands, id_col=id_col).withColumnRenamed(
         id_col, "id"
     )

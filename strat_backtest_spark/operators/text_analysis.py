@@ -3,9 +3,11 @@ language ID, quality scoring, token counting, fingerprinting.
 
 These generalize the reference's text mining (SURVEY.md §2.1 S7,
 §2.4 A7-A8, §2.8 F10-F12) into the operators an LLM-data pipeline
-needs. Pure Column expressions — JVM regex + array lambdas, no Python
-in the hot path, so they run at scan speed over any number of
-documents and every intermediate is columnar.
+needs. Cheap per-token features are Column expressions (JVM regex +
+array lambdas); per-shingle hashing and n-gram work runs as one
+Arrow-batched Python pass per operator, on the shared tokenizer
+(``functions.text.ascii_tokens``) and hash
+(``functions.hashing.md5_hash_py``).
 """
 
 from __future__ import annotations
@@ -20,11 +22,8 @@ import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from strat_backtest_spark.functions.text import whitespace_tokens
-
-# Java \s parity (ASCII-only) — the one tokenizer mirrored on both
-# sides of every Arrow pass in this module.
-_WS_RE = re.compile(r"\s+", re.ASCII)
+from strat_backtest_spark.functions.hashing import md5_hash_py
+from strat_backtest_spark.functions.text import ASCII_WS, ascii_tokens, whitespace_tokens
 
 # Per-worker-process memo for broadcast-vocabulary khash indexes
 # (same pattern as operators/dedup.py's _BENCH_INDEX_MEMO): the
@@ -178,34 +177,17 @@ def document_fingerprint(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Document fingerprint: lexicographic min of md5 hex over word
     ``n``-gram shingles (a 1-permutation MinHash on a cryptographic
     hash). Docs with < n tokens fingerprint as NULL.
 
-    ``impl="arrow"`` (default) builds and hashes shingles in hashlib
-    per Arrow batch — the Column form runs the md5 inside an
+    Shingles are built (``ascii_tokens``) and hashed in hashlib per
+    Arrow batch — the Column form it replaced ran the md5 inside an
     interpreted higher-order ``transform`` (~19 µs/shingle, the
-    minhash disease: 503 s vs 20 s at the 5M-doc rung). Values are
-    identical: same ASCII-whitespace tokens, same utf-8 md5 hex, and
-    lexicographic min over [0-9a-f] strings agrees between Python
-    ``min`` and Spark's array_min. ``impl="jvm"`` keeps the Column
-    expression (what the DuckDB oracle mirrors) for parity testing."""
-    if impl == "jvm":
-        toks = whitespace_tokens(text_col)
-        idx = F.when(
-            F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-        ).otherwise(F.array().cast("array<int>"))
-        shingle = lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(n)]
-        )
-        fp = F.array_min(F.transform(idx, lambda i: F.md5(shingle(i).cast("binary"))))
-        return df.select(F.col(id_col), fp.alias("fingerprint"))
-
-    import re
-
-    ws = re.compile(r"\s+", re.ASCII)  # Java \s parity (ASCII-only)
+    minhash disease: 503 s vs 20 s at the 5M-doc rung). Lexicographic
+    min over [0-9a-f] strings is what the DuckDB oracle's ``list_min``
+    computes."""
     id_type = df.schema[id_col].dataType.simpleString()
     nn = n
 
@@ -213,10 +195,7 @@ def document_fingerprint(
         for pdf in batches:
             out = []
             for text in pdf[text_col].tolist():
-                if not isinstance(text, str):
-                    out.append(None)
-                    continue
-                toks = [t for t in ws.split(text) if t]
+                toks = ascii_tokens(text)
                 if len(toks) < nn:
                     out.append(None)
                     continue
@@ -235,45 +214,20 @@ def document_fingerprint(
     )
 
 
-def repetition_score(
-    df: DataFrame, n: int = 2, col: str = "text", impl: str = "arrow"
-) -> DataFrame:
+def repetition_score(df: DataFrame, n: int = 2, col: str = "text") -> DataFrame:
     """Within-document repetition: 1 − |distinct n-grams| / |n-grams|
     (0 = no repeats). The duplicate-n-gram-fraction quality rule used
     by web-corpus curation pipelines; heavily repetitive documents are
     boilerplate/spam candidates. Map-only, no shuffle.
 
-    ``impl="arrow"`` (default): n-gram building + set-distinct in
-    Python per Arrow batch — the Column form concat_ws'd every gram
-    inside an interpreted ``transform`` (422 s vs 14.6 s at the 5M-doc
-    rung). Identical values: tokens cannot contain whitespace, so
-    tuple-distinct ≡ joined-string-distinct, and the final
-    ``1 - d/g`` rounds HALF_UP on both paths. ``impl="jvm"`` keeps
-    the oracle-mirror Column expression for parity testing."""
-    if impl == "jvm":
-        toks = tokens_col(col)
-        grams = F.when(
-            F.size(toks) >= n, F.size(toks) - F.lit(n - 1)
-        ).otherwise(F.lit(0))
-        idx = F.when(
-            F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-        ).otherwise(F.array().cast("array<int>"))
-        gram = lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(n)]
-        )
-        distinct = F.size(F.array_distinct(F.transform(idx, gram)))
-        score = F.when(
-            grams > 0, F.round(F.lit(1.0) - distinct / grams, 6)
-        ).otherwise(F.lit(0.0))
-        return df.select("doc_id", score.alias("repetition"))
-
-    import re
-
-    import numpy as np
-
+    n-gram building + set-distinct in Python per Arrow batch — the
+    Column form it replaced concat_ws'd every gram inside an
+    interpreted ``transform`` (422 s vs 14.6 s at the 5M-doc rung).
+    Tokens cannot contain whitespace, so tuple-distinct ≡ the oracle's
+    joined-string-distinct; ``1 - d/g`` rounds HALF_UP. Null and
+    short docs score 0.0."""
     from strat_backtest_spark.functions.numeric import round_half_up
 
-    ws = re.compile(r"\s+", re.ASCII)
     id_type = df.schema["doc_id"].dataType.simpleString()
     nn = n
 
@@ -281,9 +235,7 @@ def repetition_score(
         for pdf in batches:
             out = np.zeros(len(pdf), dtype=np.float64)
             for r, text in enumerate(pdf[col].tolist()):
-                if not isinstance(text, str):
-                    continue  # null text -> 0.0, as on the JVM path
-                toks = [t for t in ws.split(text) if t]
+                toks = ascii_tokens(text)
                 g = len(toks) - nn + 1
                 if g <= 0:
                     continue
@@ -441,8 +393,7 @@ def tfidf_topk(
         for pdf in batches:
             ids_arr = pdf[id_col].to_numpy()
             tok_lists = [
-                [t for t in _WS_RE.split(x) if t] if isinstance(x, str) else []
-                for x in pdf["__lc"].tolist()
+                ascii_tokens(x) for x in pdf["__lc"].tolist()
             ]
             lens = np.fromiter(
                 (len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists)
@@ -610,8 +561,7 @@ def unigram_logprob(
         for pdf in batches:
             ids_arr = pdf[id_col].to_numpy()
             tok_lists = [
-                [t for t in _WS_RE.split(x) if t] if isinstance(x, str) else []
-                for x in pdf["__lc"].tolist()
+                ascii_tokens(x) for x in pdf["__lc"].tolist()
             ]
             lens = np.fromiter(
                 (len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists)
@@ -685,7 +635,7 @@ def _partial_docfreq_counts(df_lowered: DataFrame) -> DataFrame:
             for x in pdf["__lc"].tolist():
                 if not isinstance(x, str):
                     continue
-                terms.extend({t for t in _WS_RE.split(x) if t})
+                terms.extend(set(ascii_tokens(x)))
             if not terms:
                 yield empty
                 continue
@@ -717,7 +667,7 @@ def _partial_ngram_counts(df_lowered: DataFrame, n: int) -> DataFrame:
             for x in pdf["__lc"].tolist():
                 if not isinstance(x, str):
                     continue
-                ts = [t for t in _WS_RE.split(x) if t]
+                ts = ascii_tokens(x)
                 if len(ts) < nn:
                     continue
                 if nn == 1:
@@ -845,7 +795,7 @@ def bigram_logprob(
             for row_i, x in enumerate(pdf["__lc"].tolist()):
                 if not isinstance(x, str):
                     continue
-                ts = [t for t in _WS_RE.split(x) if t]
+                ts = ascii_tokens(x)
                 if len(ts) < 2:
                     continue
                 lens[row_i] = len(ts) - 1
@@ -957,34 +907,26 @@ def quality_classifier(
     ``str.split()`` (C loop, drops empties, splits on exactly the
     ASCII ``\\s`` set PLUS the unicode-whitespace/NUL characters the
     per-batch guard regex rules out first — any hit falls back to the
-    per-row ``_WS_RE.split``, so semantics are identical either way).
+    per-row ``ASCII_WS`` split, so semantics are identical either way).
     ``pd.factorize`` over the flat token stream means md5 runs once
     per DISTINCT token per batch (memoized across batches per
     worker); bigrams factorize as INT PAIRS of unigram codes, so the
     pair string is built and hashed once per distinct pair, never per
     occurrence. Per-doc sums are int64 cumsum prefix-differences —
     exact integer arithmetic end to end, no float accumulation."""
-    import hashlib
-
-    from strat_backtest_spark.functions.hashing import P
-
     w = np.asarray(weights, dtype=np.int64)
     dim = len(w)
     w2 = None if bigram_weights is None else np.asarray(bigram_weights, dtype=np.int64)
     dim2 = 0 if w2 is None else len(w2)
     b, thr = int(bias), int(threshold)
-    ws = _WS_RE
     id_type = docs.schema[id_col].dataType.simpleString()
-
-    def _hash_token(t: str, d: int) -> int:
-        return int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % P % d
 
     def _hash_uniques(uniques, memo: dict, d: int) -> "np.ndarray":
         uw = np.empty(len(uniques), dtype=np.int64)
         for j, t in enumerate(uniques):
             ix = memo.get(t)
             if ix is None:
-                ix = _hash_token(t, d)
+                ix = md5_hash_py(t) % d
                 memo[t] = ix
             uw[j] = ix
         return uw
@@ -1015,7 +957,7 @@ def quality_classifier(
             flat = np.array(("\n\x01\n".join(texts)).split(), dtype=object)
             is_sep = flat == "\x01"
             return flat[~is_sep], np.cumsum(is_sep)[~is_sep]
-        exploded = texts.str.split(ws).explode()
+        exploded = texts.str.split(ASCII_WS).explode()
         keep_tok = exploded.notna() & (exploded != "")
         toks = exploded[keep_tok]
         return toks.to_numpy(), toks.index.to_numpy(dtype=np.int64)
@@ -1046,7 +988,7 @@ def quality_classifier(
                             bg = uniques[pu // nu] + " " + uniques[pu % nu]
                             ix = memo2.get(bg)
                             if ix is None:
-                                ix = _hash_token(bg, dim2)
+                                ix = md5_hash_py(bg) % dim2
                                 memo2[bg] = ix
                             bw[j] = ix
                         logits += _segment_sums(

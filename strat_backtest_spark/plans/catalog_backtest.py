@@ -16,6 +16,7 @@ from strat_backtest_spark.functions.numeric import (
     round_half_up_sql,
 )
 from strat_backtest_spark.plans.catalog import _t, query
+from strat_backtest_spark.plans.catalog_pipeline import _TOKS_LOWER
 from strat_backtest_spark.plans.kernel_oracle import (
     _GRID_RUNS,
     _curve_sim_sql,
@@ -192,12 +193,8 @@ def q35_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q36_token_topk",
-    oracle=r"""
-    WITH toks AS (
-      SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                    t -> t <> '')) AS token
-      FROM documents
-    )
+    oracle=f"""
+    WITH toks AS (SELECT unnest({_TOKS_LOWER}) AS token FROM documents)
     SELECT token, count(*) AS n FROM toks
     WHERE token NOT IN ('the', 'a', 'an', 'and', 'or', 'of', 'to', 'in', 'is', 'it')
     GROUP BY token

@@ -33,12 +33,20 @@ from strat_backtest_spark.plans.catalog import _t, query
 # shared SQL fragments (must mirror the Spark operators exactly)
 # ---------------------------------------------------------------------------
 
-_TOKS = r"list_filter(string_split_regex(text, '\s+'), t -> t <> '')"
-_TOKS_LOWER = r"list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '')"
+def _ws_split_sql(expr: str) -> str:
+    """DuckDB mirror of ``whitespace_tokens`` / ``ascii_tokens``: split
+    on Java's ASCII ``\\s`` set. RE2's ``\\s`` leaves out the vertical
+    tab (U+000B) that Java and Python ``re.ASCII`` split on, hence the
+    explicit ``\\v``."""
+    return f"list_filter(string_split_regex({expr}, '[\\s\\v]+'), t -> t <> '')"
+
+
+_TOKS = _ws_split_sql("text")
+_TOKS_LOWER = _ws_split_sql("lower(text)")
 
 
 def _shingle_hashes_sql(n: int = 3) -> str:
-    """DuckDB mirror of operators.dedup.shingle_hashes."""
+    """DuckDB mirror of operators.dedup._py_shingle_hashes."""
     parts = " || ' ' || ".join(f"toks[i + {j}]" for j in range(n))
     return (
         f"list_distinct(list_transform("
@@ -174,7 +182,7 @@ def q25_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     SELECT doc_id,
            len({_TOKS}) AS n_tokens,
-           len(regexp_extract_all(lower(text), '([a-z0-9]+|[^a-z0-9\s])', 1)) AS n_bpe_tokens
+           len(regexp_extract_all(lower(text), '([a-z0-9]+|[^a-z0-9\s\v])', 1)) AS n_bpe_tokens
     FROM documents
     """,
 )
@@ -189,7 +197,7 @@ def q26_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH t AS (
       SELECT doc_id, {_TOKS} AS toks, length(text) AS n_chars,
-             len(list_filter(string_split(text, ''), c -> regexp_matches(c, '[^\w\s]'))) AS n_punct
+             len(list_filter(string_split(text, ''), c -> regexp_matches(c, '[^\w\s\v]'))) AS n_punct
       FROM documents
     ), s AS (
       SELECT doc_id, len(toks) AS n_tokens, n_chars, n_punct,
@@ -460,7 +468,7 @@ def q54_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH t AS (
       SELECT doc_id, {_TOKS} AS toks, length(text) AS n_chars,
-             len(list_filter(string_split(text, ''), c -> regexp_matches(c, '[^\w\s]'))) AS n_punct
+             len(list_filter(string_split(text, ''), c -> regexp_matches(c, '[^\w\s\v]'))) AS n_punct
       FROM documents
     ), s AS (
       SELECT doc_id, len(toks) AS n_tokens, n_chars, n_punct,
@@ -1339,10 +1347,7 @@ def q85_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q86_ngram_topk",
     oracle=f"""
-    WITH tok AS (
-      SELECT list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '') AS toks
-      FROM documents
-    ),
+    WITH tok AS (SELECT {_TOKS_LOWER} AS toks FROM documents),
     g AS (
       SELECT unnest(list_transform(range(1, len(toks) - 1), i ->
                toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS ngram
@@ -1366,12 +1371,8 @@ def q86_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q87_bigram_logprob",
-    oracle=r"""
-    WITH tok AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), t -> t <> '') AS toks
-      FROM documents
-    ),
+    oracle=f"""
+    WITH tok AS (SELECT doc_id, {_TOKS_LOWER} AS toks FROM documents),
     uni AS (SELECT unnest(toks) AS w1 FROM tok),
     c1t AS (SELECT w1, count(*)::BIGINT AS c1 FROM uni GROUP BY w1),
     big AS (
@@ -1577,9 +1578,7 @@ def _q92_shingle6_sql() -> str:
       FROM documents
     ),
     tok AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(coalesce(text, ''), '\\s+'),
-                         t -> t <> '') AS toks
+      SELECT doc_id, {_ws_split_sql("coalesce(text, '')")} AS toks
       FROM aug
     ),
     occh AS (

@@ -271,60 +271,80 @@ def test_banded_hamming_saturation_fallback_parity(spark):
     assert h_saturated == h_literal
 
 
-def test_minhash_arrow_jvm_parity(spark):
-    """The Arrow (mapInPandas + hashlib) and JVM (Column expressions)
-    minhash implementations must produce IDENTICAL signatures — the
-    Arrow path is the production default, the JVM path is what the
-    DuckDB oracle mirrors symbol-for-symbol. Covers null text, empty
-    text, <n tokens, exotic whitespace (Java \\s is ASCII-only), and
-    unicode content."""
-    from strat_backtest_spark.operators.dedup import minhash_signatures
+# Adversarial documents for the text-hash operators: null, empty and
+# short docs, an exact duplicate (0 and 7), tab/newline runs, unicode
+# content, heavy repeats, a no-break space (not whitespace to Java's
+# ASCII \s), leading/trailing whitespace, and a vertical tab (Java and
+# Python re.ASCII \s include it, DuckDB's RE2 \s does not).
+_EDGE_DOCS = [
+    (0, "the quick brown fox jumps over the lazy dog"),
+    (1, None),
+    (2, ""),
+    (3, "one two"),
+    (4, "tabs\tand\nnewlines   spaced tokens here"),
+    (5, "unicode naïve café 文字 text tokens"),
+    (6, "a a a a a a a"),
+    (7, "the quick brown fox jumps over the lazy dog"),
+    (8, "a b a b a b a b"),
+    (9, "one"),
+    (10, "x y z w v u t s"),
+    (11, "naïve café naïve café naïve"),
+    (12, "nbsp\u00a0joined stays here now"),
+    (13, "  \t leading and trailing whitespace \n "),
+    (14, "vt\x0bsplit here or not"),
+]
 
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, None),
-        (2, ""),
-        (3, "one two"),                      # < 3 tokens -> null sigs
-        (4, "tabs\tand\nnewlines   spaced tokens here"),
-        (5, "unicode naïve café 文字 text tokens"),
-        (6, "a a a a a a a"),                # degenerate repeats
-        (7, "the quick brown fox jumps over the lazy dog"),  # exact dup of 0
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = minhash_signatures(df, k=8).orderBy("doc_id").collect()
-    b = minhash_signatures(df, k=8, impl="jvm").orderBy("doc_id").collect()
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
-    # dup docs agree; short/null docs are all-null
-    assert a[0].asDict() == {**a[7].asDict(), "doc_id": 0}
-    for i in (1, 2, 3):
-        assert all(v is None for k_, v in a[i].asDict().items() if k_ != "doc_id")
+# query -> (doc ids that must come out empty, the empty value)
+_EDGE_EMPTY = {
+    "q22_minhash_signatures": ((1, 2, 3, 9), None),  # < 3 tokens
+    "q24_simhash": ((1, 2), 0),                       # no tokens
+    "q29_fingerprint": ((1, 2, 3, 9), None),          # < 3 tokens
+    "q61_repetition_score": ((1, 2, 3, 9, 10), 0.0),  # no repeated bigram
+    "q26_token_counts": ((), None),
+    "q27_quality_score": ((), None),
+}
 
 
-def test_simhash_arrow_jvm_parity(spark):
-    """Arrow (single mapInPandas: tokenize + hashlib md5 + vote) and
-    JVM (Column tokens + md5_hash, pandas-UDF vote) simhash must agree
-    bit-for-bit — the Arrow path is the production default, the JVM
-    path mirrors the DuckDB oracle. Same adversarial inputs as the
-    minhash parity test."""
-    from strat_backtest_spark.operators.dedup import simhash
+@pytest.fixture(scope="module")
+def edge_docs_dir(tmp_path_factory):
+    import pandas as pd
 
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, None),
-        (2, ""),
-        (3, "one two"),
-        (4, "tabs\tand\nnewlines   spaced tokens here"),
-        (5, "unicode naïve café 文字 text tokens"),
-        (6, "a a a a a a a"),
-        (7, "the quick brown fox jumps over the lazy dog"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = simhash(df, bits=32).orderBy("doc_id").collect()
-    b = simhash(df, bits=32, impl="jvm").orderBy("doc_id").collect()
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
-    assert a[0].simhash == a[7].simhash          # exact dups agree
-    assert a[1].simhash == 0 and a[2].simhash == 0  # null/empty -> 0
-    assert a[0].simhash != 0
+    d = tmp_path_factory.mktemp("edge_docs")
+    pd.DataFrame(_EDGE_DOCS, columns=["doc_id", "text"]).to_parquet(
+        d / "documents.parquet"
+    )
+    return str(d)
+
+
+@pytest.mark.parametrize("name", list(_EDGE_EMPTY))
+def test_text_hash_oracles_on_edge_docs(spark, edge_docs_dir, name):
+    """Each text-hash catalog entry equals its DuckDB oracle on the
+    adversarial corpus, exact duplicates agree, and null or short docs
+    give the operator's empty value."""
+    import duckdb
+
+    from oracle_utils import compare
+    from strat_backtest_spark.plans.catalog import CATALOG
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT * FROM "
+        f"read_parquet('{edge_docs_dir}/documents.parquet')"
+    )
+    out = CATALOG[name].fn(spark, edge_docs_dir)
+    res = compare(out, con, CATALOG[name].oracle, name)
+    assert res["ok"], res["detail"]
+
+    rows = {
+        r["doc_id"]: {k: v for k, v in r.asDict().items() if k != "doc_id"}
+        for r in out.collect()
+    }
+    assert rows[0] == rows[7]
+    empty_ids, empty = _EDGE_EMPTY[name]
+    for i in empty_ids:
+        assert all(v == empty for v in rows[i].values()), (i, rows[i])
+    if empty_ids:
+        assert any(v != empty for r in rows.values() for v in r.values())
 
 
 def test_bpe_tokenizer_through_injection_point(spark):
@@ -356,11 +376,10 @@ def test_bpe_tokenizer_through_injection_point(spark):
 
 
 def test_lsh_first_band_wins_respects_capped_earlier_band(spark):
-    """first_band dedup must NOT treat a match in a CAPPED earlier
+    """First-band-wins dedup must NOT treat a match in a CAPPED earlier
     band as 'already emitted' — that band emitted nothing. Docs 0/1
     collide in band 0 (hot, 30 members > cap 10) AND in band 1 (just
-    the two of them): the pair must surface via band 1. Also pins
-    first_band == distinct on the same input."""
+    the two of them): the pair must surface via band 1."""
     from strat_backtest_spark.operators.dedup import lsh_candidate_pairs
 
     rows = []
@@ -377,56 +396,6 @@ def test_lsh_first_band_wins_respects_capped_earlier_band(spark):
     assert [(r.id_a, r.id_b) for r in got] == [(0, 1)]
     # 4/8 slots equal (the global sig_0/sig_1 plus shared sig_2/sig_3)
     assert abs(got[0].est_jaccard - 0.5) < 1e-12
-    ref = lsh_candidate_pairs(
-        sigs, k=8, bands=4, max_bucket_size=10, dedup="distinct"
-    ).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, ref))
-
-
-def test_fingerprint_arrow_jvm_parity(spark):
-    """Arrow (hashlib) and JVM (Column md5-in-transform) document
-    fingerprints must agree exactly — min over md5 HEX strings, null
-    for <n-token/null docs, ASCII-whitespace tokenization."""
-    from strat_backtest_spark.operators.text_analysis import document_fingerprint
-
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, None),
-        (2, ""),
-        (3, "one two"),
-        (4, "tabs\tand\nnewlines   spaced tokens here"),
-        (5, "unicode naïve café 文字 text tokens"),
-        (6, "a a a a a a a"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = document_fingerprint(df).orderBy("doc_id").collect()
-    b = document_fingerprint(df, impl="jvm").orderBy("doc_id").collect()
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
-    assert a[1].fingerprint is None and a[3].fingerprint is None
-    assert a[0].fingerprint is not None
-
-
-def test_repetition_arrow_jvm_parity(spark):
-    """Arrow and JVM repetition scores must agree bit-for-bit —
-    HALF_UP rounding of 1 - distinct/grams, 0.0 for null/short docs,
-    heavy-repeat and unicode cases included."""
-    from strat_backtest_spark.operators.text_analysis import repetition_score
-
-    rows = [
-        (0, "a b a b a b a b"),            # heavy 2-gram repetition
-        (1, None),
-        (2, ""),
-        (3, "one"),                        # < n tokens
-        (4, "x y z w v u t s"),            # all distinct
-        (5, "naïve café naïve café naïve"),
-        (6, "a a a a a a a"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    a = repetition_score(df).orderBy("doc_id").collect()
-    b = repetition_score(df, impl="jvm").orderBy("doc_id").collect()
-    assert [r.asDict() for r in a] == [r.asDict() for r in b]
-    assert a[6].repetition > 0.8 and a[4].repetition == 0.0
-    assert a[1].repetition == 0.0 and a[3].repetition == 0.0
 
 
 def test_decontaminate_semijoin_matches_broadcast(spark):
@@ -519,9 +488,9 @@ def test_decontaminate_precomputed_hashes(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_connected_components_precontract_invariance(spark):
-    """The partition-local contraction is a connectivity certificate:
-    labels must be byte-identical with and without it, for any
+def test_connected_components_star_rounds_match_union_find(spark):
+    """The distributed path (partition-local pre-contraction, then star
+    rounds) labels every node like the driver union-find, for any
     partitioning — including partitions that slice components apart
     (random repartition) and a worst case where every partition holds
     a disjoint slice of one long chain."""
@@ -536,23 +505,15 @@ def test_connected_components_precontract_invariance(spark):
     rng.shuffle(edges)
     for parts in (1, 7, 32):
         pairs = spark.createDataFrame(edges, "id_a long, id_b long").repartition(parts)
-        base = {
-            r["id"]: r["component"]
-            for r in connected_components(
-                pairs, local_threshold=0, precontract=False
-            ).collect()
-        }
         got = {
             r["id"]: r["component"]
-            for r in connected_components(
-                pairs, local_threshold=0, precontract=True
-            ).collect()
+            for r in connected_components(pairs, local_threshold=0).collect()
         }
         ref = {
             r["id"]: r["component"]
             for r in connected_components(pairs).collect()  # driver union-find
         }
-        assert got == base == ref, parts
+        assert got == ref, parts
         assert all(got[i] == 0 for i in range(0, 121))
 
 
