@@ -633,8 +633,6 @@ def _partial_docfreq_counts(df_lowered: DataFrame) -> DataFrame:
         for pdf in batches:
             terms: list[str] = []
             for x in pdf["__lc"].tolist():
-                if not isinstance(x, str):
-                    continue
                 terms.extend(set(ascii_tokens(x)))
             if not terms:
                 yield empty
@@ -793,8 +791,6 @@ def bigram_logprob(
             w1s: list[str] = []
             lens = np.zeros(len(pdf), dtype=np.int64)
             for row_i, x in enumerate(pdf["__lc"].tolist()):
-                if not isinstance(x, str):
-                    continue
                 ts = ascii_tokens(x)
                 if len(ts) < 2:
                     continue

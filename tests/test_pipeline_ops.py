@@ -318,9 +318,10 @@ def edge_docs_dir(tmp_path_factory):
 
 @pytest.mark.parametrize("name", list(_EDGE_EMPTY))
 def test_text_hash_oracles_on_edge_docs(spark, edge_docs_dir, name):
-    """Each text-hash catalog entry equals its DuckDB oracle on the
-    adversarial corpus, exact duplicates agree, and null or short docs
-    give the operator's empty value."""
+    """Each catalog entry built on the whitespace split (the four
+    document hashes, token counts, quality score) equals its DuckDB
+    oracle on the adversarial corpus, exact duplicates agree, and null
+    or short docs give the operator's empty value."""
     import duckdb
 
     from oracle_utils import compare
