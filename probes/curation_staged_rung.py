@@ -65,9 +65,6 @@ import threading
 import time
 
 sys.path.insert(0, "/root/repo")
-# Python WORKERS need the package too (they unpickle engine closures);
-# must be in the env before the JVM starts so executors inherit it
-os.environ["PYTHONPATH"] = "/root/repo:" + os.environ.get("PYTHONPATH", "")
 
 def scratch_dir(ns):
     # scoped by corpus size: two runs at different rungs must never

@@ -19,19 +19,17 @@ Corpus shape: N_CHUNKS x DOCS_PER_CHUNK synthetic docs, ~10% of each
 chunk duplicating earlier text (so the probe actually exercises both
 probe joins). Everything is deleted at exit (probe convention).
 
-    PYTHONPATH=/root/repo python probes/index_compact_rung.py [N_CHUNKS]
+    python probes/index_compact_rung.py [N_CHUNKS]
 """
 
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import sys
 import time
 
 sys.path.insert(0, "/root/repo")
-os.environ["PYTHONPATH"] = "/root/repo:" + os.environ.get("PYTHONPATH", "")
 
 N_CHUNKS = int(sys.argv[1]) if len(sys.argv) > 1 else 300
 DOCS_PER_CHUNK = int(sys.argv[2]) if len(sys.argv) > 2 else 2000

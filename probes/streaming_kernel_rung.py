@@ -32,8 +32,9 @@ compared. Receipt = AND over shards via the gate's own comparator.
 Each run writes its corpus, curve and stream checkpoint to a fresh
 temporary directory, deleted after the run whether it passed or
 failed, so no run resumes another's checkpoint. Runs from any working
-directory: the checkout is found from this file and put on both the
-driver's and the Python workers' import path. Prints one JSON line.
+directory: the checkout is found from this file and put on the
+driver's import path (the session exports it to the Python workers).
+Prints one JSON line.
 
     python probes/streaming_kernel_rung.py [REPLICAS] [--shard-oracle N]
 """
@@ -41,7 +42,6 @@ driver's and the Python workers' import path. Prints one JSON line.
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import sys
 import tempfile
@@ -52,11 +52,6 @@ from pyspark.sql import functions as F
 
 CHECKOUT = str(Path(__file__).resolve().parents[1])
 sys.path.insert(0, CHECKOUT)
-# Spark's Python workers inherit the JVM's environment, which the
-# session start copies from this process
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    p for p in (CHECKOUT, os.environ.get("PYTHONPATH")) if p
-)
 
 from strat_backtest_spark.session import get_spark  # noqa: E402
 

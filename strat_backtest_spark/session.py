@@ -6,6 +6,19 @@ coalescing), Arrow on (every kernel crosses the Python boundary in
 columnar batches), UTC session timezone (oracle comparisons and
 cross-engine determinism), shuffle partitions sized to the machine
 instead of the 200 default.
+
+Spark's Python daemon starts from ``strat_backtest_spark._daemon``
+(``spark.python.daemon.module``), not from ``pyspark.daemon``. Each
+Python task calls ``importlib.invalidate_caches()``, and on CPython
+< 3.13 that re-reads the directory of every zip archive on the
+worker's path (pyspark.zip, py4j, the Spark core jar): about 200 ms of
+every ``mapInPandas``, pandas UDF and ``applyInPandasWithState`` task,
+more than the kernel's walk itself. The wrapper re-reads an archive
+only when its stamp changed; on 3.13 and later CPython does this
+itself and the wrapper only hands over to ``pyspark.daemon``. Since the
+daemon is a module of this package, the package must be importable on
+every worker, from any working directory: the session exports its
+parent directory as the executors' ``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -15,6 +28,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app_name: str = "strat_backtest_spark", cpus: str | int | None = None) -> SparkSession:
@@ -68,6 +82,8 @@ def get_spark(app_name: str = "strat_backtest_spark", cpus: str | int | None = N
         # builds. Costs only the "user code line" hint in error
         # messages; the JVM error itself is unchanged.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", "strat_backtest_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
