@@ -19,10 +19,14 @@ import sys
 import zipimport
 
 _read_archive = zipimport.zipimporter.invalidate_caches
+# archive path -> stamp at its last read; process-wide, like the
+# directory cache zipimport keeps per archive path
 _stamps: dict[str, tuple[int, int] | None] = {}
 
 
 def invalidate_if_changed(self) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive only
+    when it changed since the last read by any importer of it."""
     try:
         st = os.stat(self.archive)
         stamp = (st.st_mtime_ns, st.st_size)
@@ -36,17 +40,14 @@ def invalidate_if_changed(self) -> None:
         self._files = files
 
 
-def install() -> None:
+if __name__ == "__main__":
+    # patch with the function of the module under its package name, so
+    # workers can see which daemon forked them
+    from strat_backtest_spark._daemon import invalidate_if_changed
+
     if sys.version_info < (3, 13):
         zipimport.zipimporter.invalidate_caches = invalidate_if_changed
     importlib.invalidate_caches()
-
-
-if __name__ == "__main__":
-    # under its package name, so workers can see which daemon forked them
-    from strat_backtest_spark import _daemon
-
-    _daemon.install()
     from pyspark import daemon
 
     daemon.manager()
