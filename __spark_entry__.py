@@ -71,11 +71,12 @@ def entry(spark: SparkSession) -> DataFrame:
 #     q70 takes NO rule-1 seat this round: its entry is digest-
 #     distinct catalog code only (verified r13 by the judge, nothing
 #     it consumes changed).
-#   - late-r14 addition: simhash_neardup_pairs / hash_neardup_pairs
-#     gained the band-saturation fallback (join-based hot-bucket cap
-#     past hot_literal_cap — the r13 watch item) -> q58 (direct)
-#     moves INTO the head per rule 1; q94/q95 (hash_neardup_pairs'
-#     consumers) already hold rule-1 seats. q18 (pure catalog.py,
+#   - late-r14 addition: the banded-Hamming pair join (now the one
+#     dedup.hash_neardup_pairs, which q58 runs over simhash) gained
+#     the band-saturation fallback (join-based hot-bucket cap past
+#     _HOT_LITERAL_CAP over-cap buckets) -> q58 (direct) moves INTO
+#     the head per rule 1; q94/q95 (its other consumers) already
+#     hold rule-1 seats. q18 (pure catalog.py,
 #     zero diffs for many rounds) vacates to the tail in exchange,
 #     joining the r14-MANDATORY group at its same r15 deadline.
 # 9 returning + 11 touched = 20 head seats; the remaining 30 go to

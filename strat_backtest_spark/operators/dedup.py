@@ -146,6 +146,32 @@ def minhash_signatures(
     return df.select(id_col, text_col).mapInPandas(_sigs, schema)
 
 
+def _explode_bands(values: list[Column], value_name: str) -> Column:
+    """One exploded ``bk`` struct per band: (band j, ``values[j]`` as
+    ``value_name``) — the row layout every banding shares."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(j).alias("band"), v.alias(value_name))
+                for j, v in enumerate(values)
+            ]
+        )
+    ).alias("bk")
+
+
+def _minhash_band_keys(slots: list[Column], bands: int) -> list[Column]:
+    """Band b's key: ``concat_ws("_")`` of the r = k/bands consecutive
+    signature slots starting at b·r (k = ``len(slots)``; null slots
+    are skipped). The ONE MinHash banding convention: the join key
+    and the first-band-wins chain of ``lsh_candidate_pairs`` and the
+    persisted rows of ``minhash_band_rows`` all build from it."""
+    k = len(slots)
+    if not 1 <= bands <= k:
+        raise ValueError(f"bands must be in 1..k={k}, got {bands}")
+    r = k // bands
+    return [F.concat_ws("_", *slots[b * r:(b + 1) * r]) for b in range(bands)]
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame,
     k: int = 8,
@@ -171,7 +197,7 @@ def lsh_candidate_pairs(
     cap — a JVM predicate over the signature arrays already in the
     row, which replaced a ``distinct()`` exchange over the full pair
     stream (the dominant stage at the 5M-doc rung: 48 of ~80 s
-    post-signature). Unlike ``simhash_neardup_pairs`` (whose
+    post-signature). Unlike ``hash_neardup_pairs`` (whose
     capped set collects driver-side), the capped-bucket lookup here is
     a BROADCAST LEFT JOIN per earlier band against the hot-key
     aggregate, so everything stays in ONE job — a driver collect of
@@ -182,22 +208,11 @@ def lsh_candidate_pairs(
     count unequal, matching the HOF filter's null-drop) — the
     ``zip_with`` fold ran interpreted and measured 2× slower per pair.
     """
-    r = k // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws("_", *[F.col(f"sig_{b * r + j}") for j in range(r)]).alias(
-                    "band_key"
-                ),
-            )
-            for b in range(bands)
-        ]
-    )
-    sig_arr = F.array(*[F.col(f"sig_{i}") for i in range(k)])
+    slots = [F.col(f"sig_{i}") for i in range(k)]
+    keys = _minhash_band_keys(slots, bands)
     exploded = (
         sigs.select(
-            F.col(id_col), sig_arr.alias("sig"), F.explode(band_structs).alias("bk")
+            F.col(id_col), F.array(*slots).alias("sig"), _explode_bands(keys, "band_key")
         )
         .select(id_col, "sig", "bk.band", "bk.band_key")
         .repartition("band", "band_key")
@@ -209,10 +224,15 @@ def lsh_candidate_pairs(
     # exchange-reuse canonicalization, and this subtree has FIVE
     # consumers (both self-join sides, the hot set, and each hot
     # broadcast); measured at the 5M-doc rung the un-checkpointed plan
-    # ran the signature stage five times. The lazy localCheckpoint
-    # stores the window-partitioned rows once, PRESERVING the
+    # ran the signature stage five times. The localCheckpoint stores
+    # the window-partitioned rows once, PRESERVING the
     # (band, band_key) hash partitioning, so the self-join below adds
-    # no further shuffle.
+    # no further shuffle. Eager, so the checkpoint job runs while the
+    # plan it checkpoints is still referenced: the lazy form filled the
+    # checkpoint inside the consumer's job, and a driver GC during that
+    # job logged 33 "Failed to update accumulator (Unknown class)"
+    # DAGScheduler errors at sf0.01 (the eager form: none). Rows are
+    # the same either way.
     # DISK_ONLY: this is a bulk intermediate (docs × bands rows). The
     # default MEMORY_AND_DISK level competed with the downstream
     # join/CC stages for heap at the 5M-doc rung (GCLocker retry
@@ -220,7 +240,7 @@ def lsh_candidate_pairs(
     # next to the stages it feeds.
     ann = (
         exploded.withColumn("__bucket_n", F.count(F.lit(1)).over(bucket))
-        .localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
     exploded = ann.filter(F.col("__bucket_n") <= max_bucket_size)
 
@@ -253,25 +273,24 @@ def lsh_candidate_pairs(
     joined = a.join(b, ["band", "band_key"]).filter(F.col("id_a") < F.col("id_b"))
 
     # first-surviving-band-wins: band keys for EARLIER bands rebuild
-    # from the sig arrays with the same concat_ws (null-skipping)
-    # expression the join key used, so the match test is exact. A
-    # bucket that was CAPPED in an earlier band emitted nothing there,
-    # so a match in it must not suppress this row — the broadcast
-    # left-join flags (__hot_<b>) encode exactly that. Only bands
-    # 0..bands-2 need flags: the chain stops at the row's own band.
-    def _key(col: str, band: int) -> Column:
-        return F.concat_ws(
-            "_", *[F.col(col).getItem(band * r + j) for j in range(r)]
-        )
-
+    # from the sig arrays with the same builder the join key used, so
+    # the match test is exact. A bucket that was CAPPED in an earlier
+    # band emitted nothing there, so a match in it must not suppress
+    # this row — the broadcast left-join flags (__hot_<b>) encode
+    # exactly that. Only bands 0..bands-2 need flags: the chain stops
+    # at the row's own band.
+    keys_a, keys_b = (
+        _minhash_band_keys([F.col(c).getItem(i) for i in range(k)], bands)
+        for c in ("sig_a", "sig_b")
+    )
     for bnd in range(bands - 1):
         hb = hot.select(F.col("__hot_tag").alias(f"__hot_{bnd}"))
-        tag = F.concat_ws("|", F.lit(str(bnd)), _key("sig_a", bnd))
+        tag = F.concat_ws("|", F.lit(str(bnd)), keys_a[bnd])
         joined = joined.join(F.broadcast(hb), tag == F.col(f"__hot_{bnd}"), "left")
 
     chain = None
     for bnd in range(bands):
-        m = _key("sig_a", bnd) == _key("sig_b", bnd)
+        m = keys_a[bnd] == keys_b[bnd]
         if bnd < bands - 1:
             m = m & F.col(f"__hot_{bnd}").isNull()
         chain = F.when(m, F.lit(bnd)) if chain is None else chain.when(m, F.lit(bnd))
@@ -300,7 +319,10 @@ def simhash(
     pass and dropping the (id, array<long>) Arrow transfer a pandas-UDF
     vote needs: full q58 at the 500k-doc rung 6.6 → 5.5 s (~1.2×), not
     minhash's 4-5×. Null, empty and all-whitespace docs hash to 0.
+    ``bits`` must be in 1..64 (the hash is one signed long).
     """
+    if not 1 <= bits <= 64:
+        raise ValueError(f"bits must be in 1..64, got {bits}")
     powers = (1 << np.arange(bits)).astype(np.int64)
     shifts = np.arange(bits)
     id_type = df.schema[id_col].dataType.simpleString()
@@ -332,35 +354,37 @@ def simhash(
     return df.select(id_col, text_col).mapInPandas(_sim, schema)
 
 
-def band_simhash(
-    sh: DataFrame, bits: int = 32, bands: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
-    """Slice a ``simhash`` column into ``bands`` equal bit ranges: one
-    output row per (id, band) with band j's value
-    ``(simhash >> j*width) & mask`` — the SINGLE banding convention
-    shared by the batch near-dup pair generator and the streaming
-    near-dup admission operator (and their oracles), so a bits/bands
-    layout change lands everywhere at once. Pure Column expressions
-    (struct-array explode), streaming-transparent."""
+def _hash_bands(h: Column, bits: int, bands: int) -> list[Column]:
+    """Band j's value of a ``bits``-bit hash Column:
+    ``(h >> j*width) & mask`` with width = bits // bands — the ONE
+    place the bit-slice is written. ``band_hash`` explodes it into
+    rows and ``hash_neardup_pairs``' first-band-wins chain compares it
+    across a pair, so the two can never drift."""
+    if not 1 <= bits <= 64:
+        raise ValueError(f"bits must be in 1..64, got {bits}")
+    if not 1 <= bands <= bits:
+        raise ValueError(f"bands must be in 1..bits={bits}, got {bands}")
     width = bits // bands
-    mask = (1 << width) - 1
-    return sh.select(
+    # a 64-bit-wide band keeps every bit: the mask is all ones as a long
+    mask = (1 << width) - 1 if width < 64 else -1
+    return [F.shiftright(h, j * width).bitwiseAND(F.lit(mask)) for j in range(bands)]
+
+
+def band_hash(
+    df: DataFrame, hash_col: str, bits: int, bands: int, id_col: str = "doc_id"
+) -> DataFrame:
+    """Slice a ``bits``-bit hash column into ``bands`` equal bit
+    ranges: one output row (id_col, hash_col, band, band_val) per
+    (id, band) — the single banding convention shared by the batch
+    near-dup pair join (``hash_neardup_pairs``), the streaming near-dup
+    admission operator and their oracles, so a bits/bands layout change
+    lands everywhere at once. Pure Column expressions (struct-array
+    explode), streaming-transparent."""
+    return df.select(
         id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.shiftright(F.col("simhash"), j * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, "simhash", "bk.band", "bk.band_val")
+        hash_col,
+        _explode_bands(_hash_bands(F.col(hash_col), bits, bands), "band_val"),
+    ).select(id_col, hash_col, "bk.band", "bk.band_val")
 
 
 # ---------------------------------------------------------------------------
@@ -772,8 +796,8 @@ def connected_components(
 
 #: Over-cap (band, band_val) keys above which the plan-literal
 #: NOT-isin formulation stops scaling (collect size on the driver,
-#: isin literal count in the plan / codegen) and the banded-Hamming
-#: paths switch to the join-based saturation fallback. 8192 64-bit
+#: isin literal count in the plan / codegen) and hash_neardup_pairs
+#: switches to the join-based saturation fallback. 8192 64-bit
 #: keys collect in ~1 MB and codegen fine; a healthy banding (band
 #: space ≫ n_docs / cap) produces orders of magnitude fewer.
 _HOT_LITERAL_CAP = 8192
@@ -800,11 +824,11 @@ def _drop_hot_buckets(
 
 
 def _collect_capped_buckets(
-    banded: DataFrame, max_bucket_size: int, hot_literal_cap: int
+    banded: DataFrame, max_bucket_size: int
 ) -> "dict[int, set[int]] | None":
     """One aggregate pass over the banded stream; returns the over-cap
     (band, band_val) hot set as a driver dict, or ``None`` when the
-    hot-key count exceeds ``hot_literal_cap`` — the ADVERSARIAL BAND
+    hot-key count exceeds ``_HOT_LITERAL_CAP`` — the ADVERSARIAL BAND
     SATURATION signal (degenerate corpus or undersized band space)
     under which collecting the set and folding it into plan literals
     would blow the driver / the codegen'd predicate. Callers must then
@@ -817,10 +841,10 @@ def _collect_capped_buckets(
         banded.groupBy("band", "band_val")
         .count()
         .filter(F.col("count") > max_bucket_size)
-        .limit(hot_literal_cap + 1)
+        .limit(_HOT_LITERAL_CAP + 1)
         .collect()
     )
-    if len(rows) > hot_literal_cap:
+    if len(rows) > _HOT_LITERAL_CAP:
         return None
     capped_by_band: dict[int, set[int]] = {}
     for row in rows:
@@ -844,124 +868,6 @@ def _drop_hot_buckets_join(
         .select("band", "band_val")
     )
     return banded.join(hot, ["band", "band_val"], "left_anti")
-
-
-def simhash_neardup_pairs(
-    df: DataFrame,
-    max_hamming: int = 3,
-    bands: int = 4,
-    bits: int = 32,
-    max_bucket_size: int = 2000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    hot_literal_cap: int = _HOT_LITERAL_CAP,
-) -> DataFrame:
-    """SimHash near-dup pairs: (id_a < id_b, hamming ≤ ``max_hamming``).
-
-    Banded exact-match candidate generation with a PIGEONHOLE recall
-    guarantee: split the ``bits``-bit hash into ``bands`` equal slices;
-    a pair within Hamming distance ``bands - 1`` differs in at most
-    ``bands - 1`` slices, so at least one slice matches exactly — with
-    the default (4 bands, max_hamming 3) candidate generation misses
-    NOTHING, unlike the probabilistic MinHash/hyperplane paths. A
-    ``max_hamming`` at or above ``bands`` is allowed — the radius
-    beyond ``bands - 1`` is then probabilistic (a pair must still
-    share one exact band). One shuffle on (band, band_value); the
-    Hamming check (bit_count of xor, one long per side) runs only
-    inside buckets; hot buckets are capped like every other dedup
-    path. Past ``hot_literal_cap`` over-cap buckets (adversarial band
-    saturation) the plan-literal hot-set formulation is abandoned for
-    the join-based fallback — identical pair set, one extra shuffle.
-    """
-    width = bits // bands
-    mask = (1 << width) - 1
-    sh = simhash(df, bits, text_col, id_col).localCheckpoint()
-    banded = band_simhash(sh, bits=bits, bands=bands, id_col=id_col).withColumnRenamed(
-        id_col, "id"
-    )
-    # capped (hot) buckets: driver-bounded tiny in the designed regime
-    # — only buckets whose size exceeds the cap, collected so the
-    # first-band-wins predicate below can skip them exactly. None =
-    # saturated (more hot keys than plan literals can carry).
-    capped_by_band = _collect_capped_buckets(banded, max_bucket_size, hot_literal_cap)
-    if capped_by_band is None:
-        return _banded_hamming_pairs_saturated(
-            banded, "simhash", max_bucket_size, max_hamming
-        )
-    # same one-aggregate fold as hash_neardup_pairs: the collected hot
-    # set IS the cap filter — no second count window over the stream
-    banded = _drop_hot_buckets(banded, capped_by_band)
-    a = banded.select(
-        "band", "band_val", F.col("id").alias("id_a"), F.col("simhash").alias("sh_a")
-    )
-    b = banded.select(
-        "band", "band_val", F.col("id").alias("id_b"), F.col("simhash").alias("sh_b")
-    )
-
-    # FIRST-SURVIVING-BAND-WINS dedup: a pair colliding in k bands
-    # would emit k times; instead of a dropDuplicates shuffle over the
-    # full pair stream, keep the row only in the first band where both
-    # sides' slices match AND that bucket survived the cap — a pure
-    # JVM expression, because every band value derives from the two
-    # simhashes already in the row.
-    def _slice(col, j):
-        return F.shiftright(F.col(col), j * width).bitwiseAND(F.lit(mask))
-
-    first_match = F.lit(None).cast("int")
-    chain = None
-    for j in range(bands):
-        m = _slice("sh_a", j) == _slice("sh_b", j)
-        hot = capped_by_band.get(j)
-        if hot:
-            m = m & ~_slice("sh_a", j).isin([int(x) for x in hot])
-        chain = F.when(m, F.lit(j)) if chain is None else chain.when(m, F.lit(j))
-    first_match = chain
-
-    return (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(first_match == F.col("band"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def _banded_hamming_pairs_saturated(
-    banded: DataFrame, hash_name: str, max_bucket_size: int, max_hamming: int
-) -> DataFrame:
-    """Saturated-regime banded-Hamming pairs: cap filter as an
-    anti-join (``_drop_hot_buckets_join``) and multi-band pair
-    de-duplication as a ``dropDuplicates`` over the candidate stream
-    instead of the first-surviving-band-wins literal chain. SAME pair
-    set as the literal path — a pair is emitted iff it shares at least
-    one surviving bucket, and its hamming derives from the full hashes
-    so every duplicate row is identical — at the cost of the pair-id
-    shuffle the chain exists to avoid. Only reachable when the hot-key
-    count already exceeds ``hot_literal_cap``, i.e. when the corpus or
-    banding is degenerate and graceful degradation beats a driver OOM.
-    ``banded`` must carry (band, band_val, id, <hash_name>)."""
-    banded = _drop_hot_buckets_join(banded, max_bucket_size)
-    a = banded.select(
-        "band", "band_val", F.col("id").alias("id_a"), F.col(hash_name).alias("h_a")
-    )
-    b = banded.select(
-        "band", "band_val", F.col("id").alias("id_b"), F.col(hash_name).alias("h_b")
-    )
-    return (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1614,10 +1520,10 @@ def minhash_band_rows(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Slim (id, band, band_key) rows — the SAME banding convention as
-    ``lsh_candidate_pairs`` (concat_ws of r = k/bands consecutive
-    signature slots), factored out so a persisted dedup index and the
-    batch pair generator can never drift. Docs with no shingles (null
+    """Slim (id, band, band_key) rows — the SAME band keys as
+    ``lsh_candidate_pairs`` (both build them with
+    ``_minhash_band_keys``), so a persisted dedup index and the batch
+    pair generator can never drift. Docs with no shingles (null
     signatures) emit NOTHING: they have no content to collide on, and
     dropping them keeps the join semantics identical across engines
     (Spark's concat_ws would fold null sigs to "" while SQL string
@@ -1626,21 +1532,10 @@ def minhash_band_rows(
     sigs = minhash_signatures(
         df, k=k, shingle_n=shingle_n, text_col=text_col, id_col=id_col
     )
-    r = k // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_", *[F.col(f"sig_{b * r + j}") for j in range(r)]
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
+    keys = _minhash_band_keys([F.col(f"sig_{i}") for i in range(k)], bands)
     return (
         sigs.filter(F.col("sig_0").isNotNull())
-        .select(F.col(id_col), F.explode(band_structs).alias("bk"))
+        .select(F.col(id_col), _explode_bands(keys, "band_key"))
         .select(id_col, "bk.band", "bk.band_key")
     )
 
@@ -2315,7 +2210,7 @@ def dedup_incremental(
 
 
 # ---------------------------------------------------------------------------
-# generic banded-Hamming pairs over a precomputed hash column (q94)
+# banded-Hamming near-dup pairs over a hash column (q58, q94, q95)
 # ---------------------------------------------------------------------------
 
 def hash_neardup_pairs(
@@ -2326,22 +2221,37 @@ def hash_neardup_pairs(
     max_hamming: int = 4,
     max_bucket_size: int = 2000,
     id_col: str = "doc_id",
-    hot_literal_cap: int = _HOT_LITERAL_CAP,
 ) -> DataFrame:
-    """``simhash_neardup_pairs``' banded-Hamming join generalized to a
-    PRECOMPUTED ``bits``-bit hash column (perceptual image hashes,
-    audio fingerprints — anything where the hash comes from a decode
-    stage, not from text). Same pigeonhole guarantee: a pair within
-    Hamming ``bands - 1`` shares at least one exact band slice; same
-    first-surviving-band-wins JVM predicate instead of a pair-stream
-    distinct; same hot-bucket cap, with the same join-based fallback
-    past ``hot_literal_cap`` over-cap buckets. One shuffle on
-    (band, band_value); payloads never ride past the hash column.
+    """Near-dup pairs (id_a < id_b, hamming ≤ ``max_hamming``) over a
+    ``bits``-bit hash column — the one banded-Hamming pair join, for
+    any hash: ``simhash`` of text (q58:
+    ``hash_neardup_pairs(simhash(docs, 32), "simhash", bits=32,
+    bands=4, max_hamming=6)``), perceptual image hashes, audio
+    fingerprints (q94/q95, where the hash comes from a decode stage).
+
+    Banded exact-match candidate generation (``band_hash``) with a
+    PIGEONHOLE recall guarantee: a pair within Hamming ``bands - 1``
+    differs in at most ``bands - 1`` slices, so at least one slice
+    matches exactly — candidate generation misses NOTHING, unlike the
+    probabilistic MinHash/hyperplane paths. A ``max_hamming`` at or
+    above ``bands`` is allowed — the radius beyond ``bands - 1`` is
+    then probabilistic (a pair must still share one exact band). One
+    shuffle on (band, band_value); the Hamming check (bit_count of
+    xor, one long per side) runs only inside buckets; payloads never
+    ride past the hash column.
+
+    FIRST-SURVIVING-BAND-WINS dedup: a pair colliding in several bands
+    is kept only in the first band where both slices match and that
+    bucket survived the ``max_bucket_size`` cap — a JVM predicate over
+    the two hashes already in the row, instead of a pair-stream
+    distinct. Past ``_HOT_LITERAL_CAP`` over-cap buckets (adversarial
+    band saturation) the plan-literal hot-set formulation gives way to
+    the join-based fallback — identical pair set, one extra shuffle.
 
     Negative hashes (bit 63 set, stored in a signed long) band
-    correctly: arithmetic shiftright's low ``width`` bits equal the
-    logical shift's for every band, and the top band's mask strips the
-    sign extension.
+    correctly: an arithmetic right shift's low ``width`` bits equal
+    the logical shift's for every band, and the top band's mask strips
+    the sign extension.
 
     Size ``bands`` so the band-value SPACE stays sparse:
     ``2^(bits/bands)`` must be ≫ ``n_docs / max_bucket_size``, or
@@ -2358,66 +2268,48 @@ def hash_neardup_pairs(
     differing bit never consumes a clean band; pairs differing only
     in uncovered bits collide in every band and are exact-filtered
     like any other candidate)."""
-    width = bits // bands
-    mask = (1 << width) - 1
     sh = hashed.select(
         F.col(id_col).alias("id"), F.col(hash_col).alias("__h")
     ).localCheckpoint()
-    banded = sh.select(
-        "id",
-        "__h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band"),
-                        F.shiftright(F.col("__h"), j * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("id", "__h", "bk.band", "bk.band_val")
+    banded = band_hash(sh, "__h", bits, bands, id_col="id")
     # ONE aggregate pass: the collected over-cap set drives BOTH the
     # cap filter (a literal NOT-isin predicate — no second count
     # window over the banded stream) and the first-band-wins chain's
     # hot-band exclusion below. Driver-bounded by the over-cap bucket
-    # count, not the corpus (r10 verdict's fold); None = saturated,
-    # take the join-based fallback instead of a driver-sized collect.
-    capped_by_band = _collect_capped_buckets(banded, max_bucket_size, hot_literal_cap)
+    # count, not the corpus; None = saturated (more hot keys than plan
+    # literals can carry): the cap becomes an anti-join against the
+    # recomputed hot-key aggregate and the chain a pair-id
+    # dropDuplicates — the SAME pair set (a pair is emitted iff it
+    # shares a surviving bucket, and every duplicate row carries the
+    # same hamming) for one extra shuffle instead of a driver OOM.
+    capped_by_band = _collect_capped_buckets(banded, max_bucket_size)
     if capped_by_band is None:
-        return _banded_hamming_pairs_saturated(
-            banded, "__h", max_bucket_size, max_hamming
-        )
-    banded = _drop_hot_buckets(banded, capped_by_band)
+        banded = _drop_hot_buckets_join(banded, max_bucket_size)
+    else:
+        banded = _drop_hot_buckets(banded, capped_by_band)
     a = banded.select(
         "band", "band_val", F.col("id").alias("id_a"), F.col("__h").alias("h_a")
     )
     b = banded.select(
         "band", "band_val", F.col("id").alias("id_b"), F.col("__h").alias("h_b")
     )
-
-    def _slice(col: str, j: int) -> Column:
-        return F.shiftright(F.col(col), j * width).bitwiseAND(F.lit(mask))
-
-    chain = None
-    for j in range(bands):
-        m = _slice("h_a", j) == _slice("h_b", j)
-        hot = capped_by_band.get(j)
-        if hot:
-            m = m & ~_slice("h_a", j).isin([int(x) for x in hot])
-        chain = F.when(m, F.lit(j)) if chain is None else chain.when(m, F.lit(j))
-
-    return (
-        a.join(b, ["band", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(chain == F.col("band"))
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    pairs = a.join(b, ["band", "band_val"]).filter(F.col("id_a") < F.col("id_b"))
+    if capped_by_band is not None:
+        slices_a = _hash_bands(F.col("h_a"), bits, bands)
+        slices_b = _hash_bands(F.col("h_b"), bits, bands)
+        chain = None
+        for j in range(bands):
+            m = slices_a[j] == slices_b[j]
+            hot = capped_by_band.get(j)
+            if hot:
+                m = m & ~slices_a[j].isin([int(x) for x in hot])
+            chain = F.when(m, F.lit(j)) if chain is None else chain.when(m, F.lit(j))
+        pairs = pairs.filter(chain == F.col("band"))
+    pairs = pairs.select(
+        "id_a",
+        "id_b",
+        F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming"),
+    ).filter(F.col("hamming") <= max_hamming)
+    if capped_by_band is None:
+        return pairs.dropDuplicates(["id_a", "id_b"])
+    return pairs

@@ -451,7 +451,7 @@ def dhash_bits(img: np.ndarray, hash_h: int = 8, hash_w: int = 8) -> int:
     grayscale to ``hash_h`` x ``hash_w + 1`` blocks, emit one bit per
     horizontal neighbor pair — bit (r*hash_w + c) set iff block (r, c)
     is strictly brighter than block (r, c+1). Returns a signed 64-bit
-    int (bit 63 may be set; ``hash_neardup_pairs`` bands it correctly).
+    int (bit 63 may be set; ``dedup.band_hash`` bands it correctly).
 
     EXACT integer math end to end — block comparison is done on
     cross-multiplied integer block SUMS (sum_l * count_r > sum_r *

@@ -599,10 +599,12 @@ def q58_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a probabilistic radius: 4 bands of 8 bits, Hamming ≤ 6 (exact
     recall up to 3; banded recall beyond). One shuffle on
     (band, band_val); Hamming check = bit_count(xor) on longs."""
-    from strat_backtest_spark.operators.dedup import simhash_neardup_pairs
+    from strat_backtest_spark.operators.dedup import hash_neardup_pairs, simhash
 
     docs = _t(spark, sf_dir, "documents")
-    return simhash_neardup_pairs(docs, max_hamming=6, bands=4, bits=32)
+    return hash_neardup_pairs(
+        simhash(docs, 32), "simhash", bits=32, bands=4, max_hamming=6
+    )
 
 
 @query(

@@ -248,7 +248,7 @@ def simhash_claim_verdicts(
     """The stateful stage of streaming simhash near-dup, exposed so
     the scale probe (probes/streaming_simhash_rung.py) can time the
     EXACT production code path: simhash mapInPandas → shared banding
-    (operators/dedup.band_simhash) → per-(band, band_val) bucket
+    (operators/dedup.band_hash) → per-(band, band_val) bucket
     claims via applyInPandasWithState. Emits one (doc_id, first)
     verdict per band row; reduce with ``novel_from_verdicts``."""
     from typing import Iterator, Tuple
@@ -258,9 +258,9 @@ def simhash_claim_verdicts(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
-    from strat_backtest_spark.operators.dedup import band_simhash, simhash
+    from strat_backtest_spark.operators.dedup import band_hash, simhash
 
-    banded = band_simhash(simhash(stream, bits=bits), bits=bits, bands=bands).drop(
+    banded = band_hash(simhash(stream, bits=bits), "simhash", bits, bands).drop(
         "simhash"
     )
 
@@ -310,7 +310,7 @@ def streaming_simhash_neardup(
     is novel iff in EVERY band of its simhash it is the first arrival
     in that ``(band, band_val)`` bucket; otherwise some earlier doc
     shares an exact band slice (Hamming-close under the pigeonhole
-    argument of the batch ``simhash_neardup_pairs``, reference
+    argument of the batch ``hash_neardup_pairs``, reference
     parity: the online form of dhruvsamdani/strat-backtest-style
     corpus curation) and it is flagged a near-duplicate.
 
@@ -331,7 +331,7 @@ def streaming_simhash_neardup(
     ``row_number() OVER (PARTITION BY band, band_val ORDER BY
     doc_id % n_chunks, doc_id) = 1`` aggregated per doc — the q91
     oracle. The simhash and banding stages are the batch operators
-    (operators/dedup.py: simhash, band_simhash) composed unchanged
+    (operators/dedup.py: simhash, band_hash) composed unchanged
     onto the stream: stateless Arrow map / Column stages are
     streaming-transparent."""
     import shutil

@@ -175,61 +175,9 @@ def test_token_count_tokenizer_injection(spark):
     assert injected == {"hello, world!": 13, "a b c": 5}
 
 
-def test_simhash_neardup_capped_bucket_parity(spark):
-    """First-surviving-band-wins dedup must equal the any-surviving-
-    band contract exactly when caps bite: with a tiny cap some band
-    buckets drop, and a pair whose FIRST matching band was capped must
-    still surface via a later surviving band."""
-    from strat_backtest_spark.operators.dedup import simhash, simhash_neardup_pairs
-
-    texts = [
-        (f"d{i:02d}", "common shared words everywhere " + ("alpha" if i % 2 else "beta") * (i % 5 + 1))
-        for i in range(30)
-    ]
-    docs = spark.createDataFrame(texts, "doc_id string, text string")
-    got = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_neardup_pairs(
-            docs, max_hamming=10, bands=4, bits=32, max_bucket_size=6
-        ).collect()
-    }
-    # brute-force reference: any band where both sides share a
-    # SURVIVING (<= cap) bucket
-    sh = {r["doc_id"]: r["simhash"] for r in simhash(docs, 32).collect()}
-    width, mask = 8, 255
-    from collections import Counter
-    bucket_sizes = Counter()
-    for h in sh.values():
-        for j in range(4):
-            bucket_sizes[(j, (h >> (j * width)) & mask)] += 1
-    want = {}
-    ids = sorted(sh)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1:]:
-            ok = any(
-                ((sh[a] >> (j * width)) & mask) == ((sh[b] >> (j * width)) & mask)
-                and bucket_sizes[(j, (sh[a] >> (j * width)) & mask)] <= 6
-                for j in range(4)
-            )
-            ham = bin(sh[a] ^ sh[b]).count("1")
-            if ok and ham <= 10:
-                want[(a, b)] = ham
-    assert any(bucket_sizes[k] > 6 for k in bucket_sizes), "cap never bit; weak test"
-    assert got == want
-
-
-def test_banded_hamming_saturation_fallback_parity(spark):
-    """Adversarial band saturation (more over-cap buckets than
-    ``hot_literal_cap`` plan literals) must flip both banded-Hamming
-    paths to the join-based fallback with an IDENTICAL pair set —
-    same corpus, ``hot_literal_cap=0`` forces the fallback while the
-    default takes the literal chain; dicts (pair -> hamming) must be
-    equal, and the fixture must actually have hot buckets so the
-    forced run exercises the anti-join cap too."""
-    from strat_backtest_spark.operators.dedup import (
-        hash_neardup_pairs,
-        simhash_neardup_pairs,
-    )
+def _simhash_text_source(spark):
+    """SimHash of a clustered text corpus: 32-bit, non-negative."""
+    from strat_backtest_spark.operators.dedup import simhash
 
     texts = [
         (
@@ -240,35 +188,117 @@ def test_banded_hamming_saturation_fallback_parity(spark):
         for i in range(30)
     ]
     docs = spark.createDataFrame(texts, "doc_id string, text string")
-    kw = dict(max_hamming=10, bands=4, bits=32, max_bucket_size=6)
-    literal = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_neardup_pairs(docs, **kw).collect()
-    }
-    saturated = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_neardup_pairs(docs, hot_literal_cap=0, **kw).collect()
-    }
-    assert literal, "no pairs at all; weak fixture"
-    assert saturated == literal
+    kw = dict(hash_col="simhash", bits=32, bands=4, max_hamming=10, max_bucket_size=6)
+    return simhash(docs, 32), kw
 
-    # generic precomputed-hash path: clustered longs so buckets both
-    # collide (pairs exist) and blow the tiny cap (anti-join bites)
-    hashed = spark.createDataFrame(
-        [(f"h{i:02d}", (i % 3) * 0x0101010101 + (i // 3)) for i in range(24)],
-        "doc_id string, phash long",
+
+def _signed_long_source(spark):
+    """Precomputed 64-bit hashes, every fourth with bit 63 set (a
+    negative long). Bands 1-2 are one over-cap bucket each and band 0
+    is unique per hash, so every pair matches first in a CAPPED band
+    and must surface in the TOP band, whose slice holds the sign bit
+    (two 3-member buckets of negatives; the non-negatives' top bucket
+    is over the cap)."""
+    rows = []
+    for i in range(24):
+        h = (i % 3) * 0x0101 + (i // 3) + (0x5A5A5A5A << 16)
+        if i % 4 == 0:
+            h = (h | (1 << 63) | ((i % 8) << 48)) - (1 << 64)
+        rows.append((f"h{i:02d}", h))
+    hashed = spark.createDataFrame(rows, "doc_id string, phash long")
+    kw = dict(hash_col="phash", bits=64, bands=4, max_hamming=12, max_bucket_size=3)
+    return hashed, kw
+
+
+@pytest.mark.parametrize("saturated", [False, True], ids=["literal", "saturated"])
+@pytest.mark.parametrize("source", [_simhash_text_source, _signed_long_source],
+                         ids=["simhash_text", "signed_longs"])
+def test_hash_neardup_pairs_match_brute_force(spark, monkeypatch, source, saturated):
+    """The banded-Hamming join must emit exactly the pairs within
+    ``max_hamming`` that share at least one SURVIVING (≤ cap) band
+    bucket — a brute-force Python reference over the collected hashes.
+    Tiny caps make hot buckets bite, so first-surviving-band-wins must
+    not drop a pair whose first matching band was capped. Both paths:
+    the plan-literal chain, and the join-based saturation fallback
+    (``_HOT_LITERAL_CAP`` = 0 makes any hot bucket saturate)."""
+    from collections import Counter
+
+    from strat_backtest_spark.operators import dedup
+
+    fallback_calls = []
+    real_fallback = dedup._drop_hot_buckets_join
+    monkeypatch.setattr(
+        dedup, "_drop_hot_buckets_join",
+        lambda *a: fallback_calls.append(1) or real_fallback(*a),
     )
-    hkw = dict(hash_col="phash", bits=40, bands=5, max_hamming=6, max_bucket_size=3)
-    h_literal = {
+    if saturated:
+        monkeypatch.setattr(dedup, "_HOT_LITERAL_CAP", 0)
+    hashed, kw = source(spark)
+    got = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in hash_neardup_pairs(hashed, **hkw).collect()
+        for r in dedup.hash_neardup_pairs(hashed, **kw).collect()
     }
-    h_saturated = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in hash_neardup_pairs(hashed, hot_literal_cap=0, **hkw).collect()
-    }
-    assert h_literal, "no pairs on the precomputed-hash path; weak fixture"
-    assert h_saturated == h_literal
+    assert fallback_calls == ([1] if saturated else [])
+
+    h = {r["doc_id"]: r[kw["hash_col"]] for r in hashed.collect()}
+    width = kw["bits"] // kw["bands"]
+    mask = (1 << width) - 1
+
+    def band(x, j):  # Python ints shift as infinite two's complement
+        return (x >> (j * width)) & mask
+
+    sizes = Counter((j, band(x, j)) for x in h.values() for j in range(kw["bands"]))
+    want = {}
+    ids = sorted(h)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            shared = any(
+                band(h[a], j) == band(h[b], j)
+                and sizes[(j, band(h[a], j))] <= kw["max_bucket_size"]
+                for j in range(kw["bands"])
+            )
+            ham = bin((h[a] ^ h[b]) & ((1 << 64) - 1)).count("1")
+            if shared and ham <= kw["max_hamming"]:
+                want[(a, b)] = ham
+    assert any(n > kw["max_bucket_size"] for n in sizes.values()), "cap never bit"
+    assert want, "no pairs at all; weak fixture"
+    assert got == want
+    if source is _signed_long_source:
+        assert any(h[a] < 0 or h[b] < 0 for a, b in want), "no negative hash paired"
+
+
+@pytest.mark.parametrize(
+    "fn, kwargs, arg",
+    [
+        pytest.param("simhash", dict(bits=65), "bits", id="simhash-bits65"),
+        pytest.param("simhash", dict(bits=0), "bits", id="simhash-bits0"),
+        pytest.param("band_hash", dict(hash_col="h", bits=65, bands=4), "bits",
+                     id="band_hash-bits65"),
+        pytest.param("band_hash", dict(hash_col="h", bits=32, bands=33), "bands",
+                     id="band_hash-bands33"),
+        pytest.param("band_hash", dict(hash_col="h", bits=32, bands=0), "bands",
+                     id="band_hash-bands0"),
+        pytest.param("lsh_candidate_pairs", dict(k=8, bands=9), "bands",
+                     id="lsh_candidate_pairs-bands9"),
+        pytest.param("lsh_candidate_pairs", dict(k=8, bands=0), "bands",
+                     id="lsh_candidate_pairs-bands0"),
+        pytest.param("minhash_band_rows", dict(k=8, bands=9), "bands",
+                     id="minhash_band_rows-bands9"),
+    ],
+)
+def test_band_parameters_out_of_range_fail_by_name(spark, fn, kwargs, arg):
+    """Band layouts that cannot be built refuse by name instead of
+    answering wrongly: bits past 64 used to hash like 64, and more
+    MinHash bands than slots made every band key "" (all pairs)."""
+    from strat_backtest_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        [(1, "a b c d", 7) + tuple(range(8))],
+        "doc_id long, text string, h long, "
+        + ", ".join(f"sig_{i} long" for i in range(8)),
+    )
+    with pytest.raises(ValueError, match=rf"^{arg} must be in 1\.\."):
+        getattr(dedup, fn)(df, **kwargs)
 
 
 # Adversarial documents for the text-hash operators: null, empty and
@@ -1182,7 +1212,7 @@ def test_streaming_simhash_state_survives_query_restart(spark, tmp_path):
 
     from pyspark.sql import Window, functions as F
 
-    from strat_backtest_spark.operators.dedup import band_simhash, simhash
+    from strat_backtest_spark.operators.dedup import band_hash, simhash
     from strat_backtest_spark.streaming.documents_stream import (
         novel_from_verdicts,
         simhash_claim_verdicts,
@@ -1197,7 +1227,7 @@ def test_streaming_simhash_state_survives_query_restart(spark, tmp_path):
     )
     want = {
         r["doc_id"]: r["novel"]
-        for r in band_simhash(simhash(docs, bits=32), bits=32, bands=4)
+        for r in band_hash(simhash(docs, bits=32), "simhash", 32, 4)
         .withColumn("rn", F.row_number().over(w))
         .groupBy("doc_id")
         .agg(F.min((F.col("rn") == 1).cast("int")).alias("novel"))

@@ -507,12 +507,12 @@ def test_streaming_simhash_upstream_map_only(spark):
     on the batch twin of the upstream (stateless Arrow/Column stages
     are streaming-transparent) plus the streaming plan's single
     exchange."""
-    from strat_backtest_spark.operators.dedup import band_simhash, simhash
+    from strat_backtest_spark.operators.dedup import band_hash, simhash
 
     docs = spark.read.parquet(f"{SF_MED}/documents.parquet").select(
         "doc_id", "text"
     )
-    up = _formatted(band_simhash(simhash(docs, bits=32), bits=32, bands=4))
+    up = _formatted(band_hash(simhash(docs, bits=32), "simhash", 32, 4))
     assert "Exchange" not in up, "simhash/banding upstream gained a shuffle"
     assert up.count("Scan parquet  (") == 1
 
