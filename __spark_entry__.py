@@ -79,6 +79,12 @@ def entry(spark: SparkSession) -> DataFrame:
 #     hold rule-1 seats. q18 (pure catalog.py,
 #     zero diffs for many rounds) vacates to the tail in exchange,
 #     joining the r14-MANDATORY group at its same r15 deadline.
+#   - the persisted dedup index (operators/dedup.py: one chunk=<k>
+#     layout, probe rows as the only delta input, the replay_chunk
+#     guard inside dedup_incremental; streaming/documents_stream.py:
+#     q96 now writes per-batch chunks) -> q93 (direct), q96 and q100
+#     (via the two loops); all three stay in the head under rule 1,
+#     no seat changes.
 # 9 returning + 11 touched = 20 head seats; the remaining 30 go to
 # the r12 tail's 41 entries returning for their rule-2 r15 deadline.
 # The eleven that did not fit — q01/q02/q04/q08/q10/q11/q12/q14/q16/

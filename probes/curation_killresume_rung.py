@@ -5,10 +5,12 @@ asserts the combined verdict set equals the uninterrupted run's —
 counts per status AND an order-insensitive row hash over all ~5M
 verdict rows (collecting them would be a driver anti-pattern).
 
-The kill is MID-BATCH, not at a chunk boundary: incarnation 1 dies at
-the ``index_appended`` failpoint — batch 0's verdicts AND index delta
-are durable but its quota counters die with the process, the
-at-least-once case production foreachBatch actually delivers.
+The kill is MID-BATCH, not at a chunk boundary: incarnation 1 dies
+right after its first index append (``dedup_index_append`` is patched
+to append and then raise; the loop imports it at call time) — batch
+0's verdicts AND index delta are durable but its quota counters die
+with the process, the at-least-once case production foreachBatch
+actually delivers.
 Incarnation 2 conservatively replays EVERYTHING (chunk_ids=[0,1,2],
 empty counter seed: all chunks replay, so nothing may pre-count),
 exercising verdict overwrite-by-chunk, index overwrite-by-chunk, and
@@ -52,6 +54,7 @@ def main() -> None:
     spark.conf.set("spark.sql.shuffle.partitions", "64")
     from _corpus import N_BASE as n_base
     from _corpus import assert_family_construction, build_family_corpus
+    from strat_backtest_spark.operators import dedup
     from strat_backtest_spark.streaming.documents_stream import (
         streaming_curation_loop,
     )
@@ -79,16 +82,22 @@ def main() -> None:
     shutil.rmtree(state, ignore_errors=True)
     t0 = time.time()
     killed = None
+    real_append = dedup.dedup_index_append
+
+    def append_then_die(*args, **kwargs):
+        real_append(*args, **kwargs)
+        raise RuntimeError("injected crash after index_appended")
+
+    dedup.dedup_index_append = append_then_die
     try:
-        streaming_curation_loop(
-            spark, corpus_dir, cap=cap, state_dir=state,
-            fail_after="index_appended",
-        )
+        streaming_curation_loop(spark, corpus_dir, cap=cap, state_dir=state)
     except Exception as exc:  # the injected mid-batch kill
         killed = type(exc).__name__
-    # raised OUTSIDE the try: a regressed no-op failpoint must fail
-    # the probe, not be swallowed and report success (review r13)
-    assert killed is not None, "failpoint did not fire"
+    finally:
+        dedup.dedup_index_append = real_append
+    # raised OUTSIDE the try: a regressed no-op crash injection must
+    # fail the probe, not be swallowed and report success (review r13)
+    assert killed is not None, "injected crash did not fire"
     out["incarnation1_killed"] = killed
     out["incarnation1_s"] = round(time.time() - t0, 1)
 

@@ -12,12 +12,17 @@ index-probe path, not just within-delta priority. j is recoverable
 from doc_id ((doc_id // 5000) % 5), so sub-deltas slice cleanly.
 
 Phases (all walls engine-only, noop-write forced):
-  index_build   — dedup_index_write over the index docs: the ONE-time
-                  signature cost the incremental contract amortizes;
-  inc_full      — dedup_incremental(delta=j∈{3,4}) vs the index;
-  inc_half      — dedup_incremental(delta=j==3 only): half the delta
-                  against the SAME index — if cost tracks the delta,
-                  wall ≈ half of inc_full's;
+  index_build   — delta_probe_rows + dedup_index_write over the index
+                  docs: the ONE-time signature cost the incremental
+                  contract amortizes;
+  inc_full      — delta_probe_rows + dedup_incremental (delta=j∈{3,4})
+                  vs the index;
+  inc_half_*    — the same over j==3 only: half the delta against the
+                  SAME index — if cost tracks the delta, wall ≈ half of
+                  inc_full's; ``_bc``/``_semi`` force the broadcast
+                  or the semi-join plan (``DELTA_BROADCAST_MAX_DOCS``
+                  set above or below the delta's size);
+  inc_small_*   — the same over 2% of j==3, the daily-crawl regime;
   batch_anchor  — minhash_band_rows over index ∪ delta (the signature
                   recompute a closed-world batch run pays EVERY day).
 
@@ -25,7 +30,7 @@ Verdict counts are collected (3 rows) for the full delta. Corpus and
 index are deleted after. Prints one JSON line.
 
     python probes/incremental_dedup_rung.py [REPLICAS] \
-        [--corpus DIR] [--index-members K] [--delta-members D] [--big-delta]
+        [--corpus DIR] [--index-members K] [--delta-members D]
 
 ``--corpus DIR``     reuse an existing family-of-5 corpus (e.g. kept by
                      curation_10m_rung.py ``keep``) instead of building
@@ -35,9 +40,6 @@ index are deleted after. Prints one JSON line.
                      K + D < 5 leaves middle members out of both sides
                      (how the 20M-index/20M-delta regime is cut from a
                      50M corpus: K=2, D=2, j=2 unused).
-``--big-delta``      run only the big-delta A/B (auto plan vs bucketed
-                     index) — skips the half/small sub-delta runs whose
-                     point is the small-delta regime.
 """
 
 from __future__ import annotations
@@ -66,7 +68,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                     help="reuse an existing family-of-5 corpus dir")
     ap.add_argument("--index-members", type=int, default=3)
     ap.add_argument("--delta-members", type=int, default=2)
-    ap.add_argument("--big-delta", action="store_true")
     return ap.parse_args(argv)
 
 
@@ -76,7 +77,6 @@ def main() -> None:
     reuse_corpus = ns.corpus
     idx_members = ns.index_members
     delta_members = ns.delta_members
-    big_delta = ns.big_delta
     spark = get_spark(cpus=32)
     spark.conf.set("spark.sql.shuffle.partitions", "64")
     from _corpus import N_BASE as n_base
@@ -101,10 +101,11 @@ def main() -> None:
 
     assert_family_construction(spark, corpus_dir)
 
+    from strat_backtest_spark.operators import dedup
     from strat_backtest_spark.operators.dedup import (
         dedup_incremental,
         dedup_index_write,
-        dedup_index_write_bucketed,
+        delta_probe_rows,
         minhash_band_rows,
     )
 
@@ -117,7 +118,7 @@ def main() -> None:
     delta_half = docs.filter(member == 5 - delta_members)
 
     t = time.time()
-    dedup_index_write(index_docs, index_dir)
+    dedup_index_write(delta_probe_rows(index_docs), index_dir)
     out["index_build_s"] = round(time.time() - t, 1)
     out["index_docs"] = index_docs.count()
     print(json.dumps({"index_build": out["index_build_s"],
@@ -125,46 +126,37 @@ def main() -> None:
           file=sys.stderr, flush=True)
 
     # inc_half runs BOTH plans on the same delta/index — the
-    # broadcast-vs-semi A/B at the gate boundary; inc_small_bc is the
+    # broadcast-vs-semi A/B at the gate boundary; inc_small is the
     # daily-crawl regime (1% of the delta vs the full index), where
     # the broadcast plan's index-scan-only property should dominate.
-    # the bucketed index: one-time extra write cost (it IS a shuffle —
-    # that is the point: pay it once, skip the index exchange on every
-    # probe), then the big-delta semi runs against it
-    t = time.time()
-    dedup_index_write_bucketed(
-        spark, index_docs, "rung_bidx", f"{scratch}/bidx"
-    )
-    out["index_build_bucketed_s"] = round(time.time() - t, 1)
-    print(json.dumps({"index_build_bucketed": out["index_build_bucketed_s"]}),
-          file=sys.stderr, flush=True)
-
+    # The plan is forced through the module's broadcast gate: a cap of
+    # 0 docs always takes the semi-join, an unbounded one always
+    # broadcasts, None keeps the default gate.
     delta_small = delta_half.filter(F.col("doc_id") % 50 == 0)
+    default_cap = dedup.DELTA_BROADCAST_MAX_DOCS
+    semi, bc = 0, float("inf")
     runs = [
-        ("inc_full", delta_full, None, None),
-        ("inc_full_semi", delta_full, False, None),
-        ("inc_full_bucketed", delta_full, False, "rung_bidx"),
+        ("inc_full", delta_full, default_cap),
+        ("inc_half_semi", delta_half, semi),
+        ("inc_half_bc", delta_half, bc),
+        ("inc_small_bc", delta_small, bc),
+        ("inc_small_semi", delta_small, semi),
     ]
-    if not big_delta:
-        runs = runs[:1] + runs[2:] + [
-            ("inc_half_semi", delta_half, False, None),
-            ("inc_half_bc", delta_half, True, None),
-            ("inc_small_bc", delta_small, True, None),
-            ("inc_small_semi", delta_small, False, None),
-        ]
-    for key, delta, bc, tbl in runs:
+    for key, delta, cap in runs:
+        dedup.DELTA_BROADCAST_MAX_DOCS = cap
         t = time.time()
         dedup_incremental(
-            spark, delta, index_dir, broadcast_delta=bc, index_table=tbl
+            spark, delta_probe_rows(delta), index_dir
         ).write.format("noop").mode("overwrite").save()
         out[key + "_s"] = round(time.time() - t, 1)
         print(json.dumps({key: out[key + "_s"]}), file=sys.stderr, flush=True)
+    dedup.DELTA_BROADCAST_MAX_DOCS = default_cap
     out["delta_full_docs"] = delta_full.count()
     out["delta_half_docs"] = delta_half.count()
     out["delta_small_docs"] = delta_small.count()
 
     verdicts = (
-        dedup_incremental(spark, delta_full, index_dir)
+        dedup_incremental(spark, delta_probe_rows(delta_full), index_dir)
         .groupBy("verdict")
         .count()
         .collect()

@@ -6,7 +6,7 @@ small files — partition discovery, the per-batch probe scan, and the
 file-system metadata all degrade with file count, not byte count.
 
 This rung builds an index the way the loop does (N_CHUNKS sequential
-partitioned appends), measures a delta probe (``dedup_incremental``)
+``chunk=<k>`` writes), measures a delta probe (``dedup_incremental``)
 against the fragmented index, compacts, re-measures, and prints ONE
 JSON line:
 
@@ -61,6 +61,7 @@ def main() -> None:
         dedup_incremental,
         dedup_index_compact,
         dedup_index_write,
+        delta_probe_rows,
     )
     from strat_backtest_spark.session import get_spark
 
@@ -73,15 +74,14 @@ def main() -> None:
     try:
         t0 = time.time()
         dedup_index_write(
-            spark.createDataFrame([], "doc_id long, text string"),
+            delta_probe_rows(spark.createDataFrame([], "doc_id long, text string")),
             PATH,
-            partition=-1,
         )
         for k in range(N_CHUNKS):
-            dedup_index_write(chunk_docs(spark, k), PATH, partition=k)
+            dedup_index_write(delta_probe_rows(chunk_docs(spark, k)), PATH, k)
         out["build_wall_s"] = round(time.time() - t0, 1)
 
-        delta = chunk_docs(spark, N_CHUNKS).limit(2000)
+        delta = delta_probe_rows(chunk_docs(spark, N_CHUNKS).limit(2000))
 
         def probe():
             t = time.time()

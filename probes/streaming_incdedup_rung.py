@@ -1,8 +1,9 @@
 """Streaming incremental-dedup rung (q96 at scale): the foreachBatch
 crawl-ingest loop over a 5M-doc corpus in 3 chunk micro-batches, from
-an empty day-zero index — each ~1.67M-doc batch takes the
-broadcast-delta probe path (under the 2M gate), and the index grows by
-each batch's survivors between triggers.
+an empty day-zero index (``chunk=-1``) — each ~1.67M-doc batch takes
+the broadcast-delta probe path (under the 2M gate), and the index
+grows by each batch's survivors, written under the batch's own
+``chunk=<k>``, between triggers.
 
 Corpus: the family-of-5 hashed-token construction (see
 curation_10m_rung.py), so batches genuinely collide with earlier

@@ -976,10 +976,9 @@ def decontaminate(
     skip re-shingling the eval corpus entirely; everything downstream
     (broadcast gate, both physical paths) is identical. The artifact's
     embedded (``n``, ``kernel``) stamp is VERIFIED against this call's
-    own shingling (ADVICE r13, the ``_check_probe_params`` contract
-    class): an artifact built with a different ``n`` than the corpus
-    side would otherwise match nothing and report silent near-zero
-    contamination in the screening path.
+    own shingling (ADVICE r13): an artifact built with a different
+    ``n`` than the corpus side would otherwise match nothing and
+    report silent near-zero contamination in the screening path.
 
     ``slices``: bound the LIVE scratch of one screening job by
     splitting the corpus into ``slices`` modular sub-jobs
@@ -1509,7 +1508,7 @@ def substring_dedup(
 
 
 # ---------------------------------------------------------------------------
-# incremental dedup against a persisted index (q93)
+# incremental dedup against a persisted index (q93, q96, q100)
 # ---------------------------------------------------------------------------
 
 def minhash_band_rows(
@@ -1540,131 +1539,17 @@ def minhash_band_rows(
     )
 
 
-def dedup_index_write(
-    df: DataFrame,
-    path: str,
-    k: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
-    partition: int | None = None,
-) -> None:
-    """Persist the corpus-side dedup index under ``path``: two slim
-    parquet tables — ``{path}/bands`` (band, band_key, id) MinHash band
-    buckets and ``{path}/digests`` (text_hash, id) exact md5 digests.
-    This is the write-once artifact production curation dedups each
-    day's crawl against: signatures for the history are computed ONCE,
-    here, never again (the closed-world batch entries q21/q23/q68
-    recompute them per run). Each table is one map-only Arrow/codegen
-    pass over ``df`` plus the parquet write; ``mode="append"`` is the
-    survivor-append path (see ``dedup_index_append``).
-
-    Scale note: at 100 TB the bands table is (corpus docs × bands)
-    slim rows. ``dedup_incremental`` probes it with a join on (band,
-    band_key); re-writing it bucketed on those keys (sources/
-    bucketed.write_bucketed) removes even that exchange, leaving the
-    index side scan-only.
-
-    ``partition``: write into hive-style ``chunk=<partition>``
-    subdirectories of the two tables instead of their roots — the
-    at-least-once layout (see ``dedup_index_append``): a writer that
-    owns one partition can make its write IDEMPOTENT by overwriting
-    exactly its own subdirectory on replay. Readers are unchanged
-    (partition discovery adds a ``chunk`` column the probes never
-    select); a given index must use ONE layout throughout — mixing
-    root files with partition dirs breaks discovery, so the day-zero
-    write of a partitioned index passes a partition too."""
-    sub = "" if partition is None else f"/chunk={int(partition)}"
-    minhash_band_rows(df, k, bands, shingle_n, text_col, id_col).write.mode(
-        mode
-    ).parquet(f"{path}/bands{sub}")
-    df.select(
-        F.md5(F.col(text_col).cast("binary")).alias("text_hash"), F.col(id_col)
-    ).write.mode(mode).parquet(f"{path}/digests{sub}")
-
-
-def dedup_index_write_bucketed(
-    spark,
-    df: DataFrame,
-    table: str,
-    path: str,
-    n_buckets: int = 64,
-    k: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """``dedup_index_write`` for the BIG-delta regime: persist the two
-    index tables as EXTERNAL BUCKETED catalog tables
-    (``{table}_bands`` bucketed+sorted on band_key at ``{path}/bands``,
-    ``{table}_digests`` on text_hash) so the semi-join fallback in
-    ``dedup_incremental`` never shuffles the index either — the
-    bucketed scan's HashPartitioning(key, n_buckets) already satisfies
-    the join's clustered distribution, and only the delta side
-    exchanges (to the bucket count). Combined with the broadcast-delta
-    path this makes the index shuffle-free in BOTH regimes:
-    broadcast when the delta is small, bucket-aligned semi when it is
-    not. Bucket metadata lives in the session catalog (that is what
-    records it — sources/bucketed.py), so a new application re-creates
-    the table entries over the same external ``path``;
-    ``mode="append"`` appends with the identical bucket spec (the
-    survivor-append path)."""
-    (
-        minhash_band_rows(df, k, bands, shingle_n, text_col, id_col)
-        .write.mode(mode)
-        .format("parquet")
-        .bucketBy(n_buckets, "band_key")
-        .sortBy("band_key")
-        .option("path", f"{path}/bands")
-        .saveAsTable(f"{table}_bands")
-    )
-    (
-        df.select(
-            F.md5(F.col(text_col).cast("binary")).alias("text_hash"),
-            F.col(id_col),
-        )
-        .write.mode(mode)
-        .format("parquet")
-        .bucketBy(n_buckets, "text_hash")
-        .sortBy("text_hash")
-        .option("path", f"{path}/digests")
-        .saveAsTable(f"{table}_digests")
-    )
-
-
 class ProbeRows(NamedTuple):
-    """``delta_probe_rows``'s product: the delta's slim probe tables
-    plus the signature parameters they were built with — consumers
-    (``dedup_incremental``, ``dedup_index_append``) REFUSE a probe
-    whose parameters disagree with their own, so a probe built under
-    one banding convention can never silently write or query a
-    different-convention index."""
+    """``delta_probe_rows``'s product: a doc set's slim, checkpointed
+    probe tables — digests (text_hash, id) and band rows (id, band,
+    band_key) — and the id column they carry. The index writers and
+    ``dedup_incremental`` take only these, so the signature parameters
+    are set in ONE place (``delta_probe_rows``) and no call can name
+    two banding conventions at once."""
 
     digests: DataFrame
     band_rows: DataFrame
-    k: int
-    bands: int
-    shingle_n: int
-    text_col: str
     id_col: str
-
-
-def _check_probe_params(
-    probe: "ProbeRows", k: int, bands: int, shingle_n: int,
-    text_col: str, id_col: str, caller: str,
-) -> None:
-    mine = (k, bands, shingle_n, text_col, id_col)
-    theirs = (probe.k, probe.bands, probe.shingle_n, probe.text_col, probe.id_col)
-    if mine != theirs:
-        raise ValueError(
-            f"{caller}: probe_rows built with (k, bands, shingle_n, "
-            f"text_col, id_col)={theirs} but the call asks for {mine} — "
-            "mixed banding conventions would silently corrupt the index"
-        )
 
 
 def delta_probe_rows(
@@ -1676,17 +1561,16 @@ def delta_probe_rows(
     id_col: str = "doc_id",
     digests: DataFrame | None = None,
 ) -> ProbeRows:
-    """The delta's slim probe rows — digests (text_hash, id) and band
-    rows (id, band, band_key) — computed ONCE and localCheckpointed,
-    for callers that consume them more than once in a single job. The
-    MinHash signature pass (Arrow hashlib over the text) is the
-    dominant cost of incremental dedup; a foreachBatch that runs
-    ``dedup_incremental`` and then ``dedup_index_append`` would
-    otherwise pay it twice per micro-batch (exchange reuse does NOT
-    fire across PythonUDF subtrees — the r7 LSH finding — so only an
-    explicit checkpoint makes the pass single). Pass the result to
-    both via their ``probe_rows`` parameter; the embedded parameters
-    are verified there.
+    """The slim probe rows of a doc set — digests (text_hash, id) and
+    band rows (id, band, band_key) — computed ONCE and
+    localCheckpointed. This is the only place the MinHash signature
+    pass (Arrow hashlib over the text, the dominant cost of
+    incremental dedup) runs for the index: ``dedup_index_write`` and
+    ``dedup_index_append`` write these rows, ``dedup_incremental``
+    probes with them, and a foreachBatch that runs both pays the pass
+    once per micro-batch (exchange reuse does NOT fire across
+    PythonUDF subtrees, so only an explicit checkpoint makes the pass
+    single).
 
     ``digests``: a caller that already materialized md5-over-text
     rows (e.g. the q100 loop's scrub_hash) passes them as
@@ -1699,7 +1583,9 @@ def delta_probe_rows(
     checked without re-hashing, which would defeat the point).
     Caller-supplied digests are localCheckpointed here too, so the
     single-pass guarantee holds regardless of what plan produced
-    them (ADVICE r11)."""
+    them. The digests hold one row per doc (null text → null
+    text_hash), so they are also the doc list ``dedup_incremental``
+    gives a verdict to."""
     if digests is None:
         digests = delta.select(
             F.md5(F.col(text_col).cast("binary")).alias("text_hash"),
@@ -1718,66 +1604,68 @@ def delta_probe_rows(
     band_rows = minhash_band_rows(
         delta, k, bands, shingle_n, text_col, id_col
     ).localCheckpoint()
-    return ProbeRows(digests, band_rows, k, bands, shingle_n, text_col, id_col)
+    return ProbeRows(digests, band_rows, id_col)
+
+
+def dedup_index_write(probe: ProbeRows, path: str, chunk: int = -1) -> None:
+    """Persist probe rows (``delta_probe_rows``) as the corpus-side
+    dedup index under ``path``: two slim parquet tables —
+    ``{path}/bands`` (id, band, band_key) MinHash band buckets and
+    ``{path}/digests`` (text_hash, id) exact md5 digests — each
+    partitioned hive-style by ``chunk``. This is the write-once
+    artifact production curation dedups each day's crawl against:
+    signatures for the history are computed ONCE, never again (the
+    closed-world batch entries q21/q23/q68 recompute them per run).
+
+    The call OVERWRITES exactly ``chunk=<chunk>`` of both tables and
+    nothing else, which is what makes an at-least-once writer
+    idempotent: a replayed batch replaces its own prior (possibly
+    partial) write instead of doubling it. ``chunk=-1`` (the default)
+    is the day-zero base; batches write chunk ids >= 0 (see
+    ``dedup_index_append``), and ``dedup_index_compact`` folds them
+    into a negative base. Partition discovery adds a ``chunk`` column
+    on read, which the probes never select.
+
+    Scale note: at 100 TB the bands table is (corpus docs × bands)
+    slim rows; ``dedup_incremental`` probes it by broadcasting the
+    delta into the index scan, so the index side is scan-only."""
+    sub = f"chunk={int(chunk)}"
+    probe.band_rows.select(probe.id_col, "band", "band_key").write.mode(
+        "overwrite"
+    ).parquet(f"{path}/bands/{sub}")
+    probe.digests.select("text_hash", probe.id_col).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/digests/{sub}")
 
 
 def dedup_index_append(
-    delta: DataFrame,
-    verdicts: DataFrame,
-    path: str,
-    k: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    probe_rows: ProbeRows | None = None,
-    partition: int | None = None,
+    probe: ProbeRows, verdicts: DataFrame, path: str, chunk: int
 ) -> None:
     """Register a delta's SURVIVORS (verdict == 'kept') in the index:
-    append their band rows + digests. After this, a future delta that
-    duplicates one of today's survivors is dropped by the index probe
-    alone — the incremental invariant. Dropped docs are NOT appended:
-    their content is (near-)covered by what the index already holds,
-    so appending them would only grow the index without changing any
-    future verdict.
+    ``dedup_index_write`` of the delta's probe rows restricted to the
+    kept ids, into the delta's own ``chunk=<chunk>``. After this, a
+    future delta that duplicates one of today's survivors is dropped
+    by the index probe alone — the incremental invariant. Dropped docs
+    are NOT appended: their content is (near-)covered by what the
+    index already holds, so appending them would only grow the index
+    without changing any future verdict.
 
-    ``probe_rows`` (from ``delta_probe_rows``): reuse the delta's
-    already-computed digests + band rows instead of re-shingling the
-    survivors' text — the verdict pass just computed them; appending
-    is then two kept-filtered slim writes with NO text scan at all.
-    The probe's embedded parameters must match this call's, or the
-    append would register a different banding convention than the
-    index's other writers (checked, ValueError).
-
-    ``partition``: the at-least-once path (r12 verdict item 2) for a
-    batch writer that may be REPLAYED after a crash (production
-    foreachBatch delivers exactly this). A plain append run twice
-    leaves duplicate index rows; with ``partition`` set the delta's
-    rows land in ``chunk=<partition>`` subdirectories with
-    mode=overwrite, so a replay replaces its own prior (possibly
-    partial) append byte-for-byte instead of doubling it. The index
-    must have been created with the same layout
-    (``dedup_index_write(..., partition=...)``)."""
-    kept_ids = verdicts.filter(F.col("verdict") == "kept").select(id_col)
-    sub = "" if partition is None else f"/chunk={int(partition)}"
-    mode = "append" if partition is None else "overwrite"
-    if probe_rows is not None:
-        _check_probe_params(
-            probe_rows, k, bands, shingle_n, text_col, id_col,
-            "dedup_index_append",
-        )
-        # canonical column order of dedup_index_write's two tables
-        probe_rows.band_rows.join(kept_ids, id_col, "left_semi").select(
-            id_col, "band", "band_key"
-        ).write.mode(mode).parquet(f"{path}/bands{sub}")
-        probe_rows.digests.join(kept_ids, id_col, "left_semi").select(
-            "text_hash", id_col
-        ).write.mode(mode).parquet(f"{path}/digests{sub}")
-        return
-    kept = delta.join(kept_ids, id_col, "left_semi")
+    The probe rows are the ones the verdict pass just used, so the
+    append is two kept-filtered slim writes with NO text scan at all.
+    ``chunk`` is the batch's stable identity (>= 0; -1 is the day-zero
+    base): the write overwrites ``chunk=<chunk>``, so a batch REPLAYED
+    after a crash (production foreachBatch delivers exactly this)
+    replaces its own prior append byte-for-byte instead of doubling
+    it."""
+    kept = verdicts.filter(F.col("verdict") == "kept").select(probe.id_col)
     dedup_index_write(
-        kept, path, k, bands, shingle_n, text_col, id_col,
-        mode=mode, partition=partition,
+        ProbeRows(
+            probe.digests.join(kept, probe.id_col, "left_semi"),
+            probe.band_rows.join(kept, probe.id_col, "left_semi"),
+            probe.id_col,
+        ),
+        path,
+        chunk,
     )
 
 
@@ -1786,14 +1674,13 @@ def compacted_chunks(path: str) -> set[int]:
     partition of the index at ``path`` — read from the sidecar the
     compactor maintains (``_compacted_chunks.json``; the underscore
     prefix keeps it out of Spark's partition discovery). An empty set
-    for a never-compacted index. At-least-once writers consult this
-    before choosing their replay guard: a replayed batch whose chunk
-    is in this set can no longer exclude its prior append by partition
-    prune (the rows moved into the base), so it must fall back to the
-    id anti-join (``dedup_incremental(exclude_index_ids=...)``). The
-    sidecar may OVERSTATE after a mid-compaction crash (ids recorded
-    before the fold commits) — safe: the fallback guard is correct for
-    never-folded chunks too, just not free."""
+    for a never-compacted index. ``dedup_incremental(replay_chunk=k)``
+    consults this to choose its replay guard: a replayed batch whose
+    chunk is in this set can no longer exclude its prior append by
+    partition prune (the rows moved into the base), so the guard adds
+    the id anti-join. The sidecar may OVERSTATE after a mid-compaction
+    crash (ids recorded before the fold commits) — safe: the anti-join
+    is correct for never-folded chunks too, just not free."""
     import json
     import os
 
@@ -1829,6 +1716,37 @@ def _chunk_dir_ids(table_dir: str) -> set[int]:
     return out
 
 
+def _check_index_layout(path: str) -> None:
+    """Refuse an index at ``path`` that is not in the chunk-partitioned
+    layout ``dedup_index_write`` produces: both table dirs exist, each
+    holds at least one ``chunk=<k>`` partition, and neither holds
+    root-level parquet files. An index written at its root (the
+    pre-chunk layout, a raw ``df.write.parquet``) or a day-zero write
+    that died mid-write would otherwise get ``chunk=`` dirs written
+    NEXT TO root files — the layout mixing that breaks partition
+    discovery — and has no ``chunk`` column for the replay guard to
+    prune on."""
+    import os
+
+    problems = []
+    for t in ("bands", "digests"):
+        td = os.path.join(path, t)
+        if not os.path.isdir(td):
+            problems.append(f"{t}: table dir missing")
+            continue
+        if not _chunk_dir_ids(td):
+            problems.append(f"{t}: no chunk=<k> partition dirs")
+        n_root = sum(e.endswith(".parquet") for e in os.listdir(td))
+        if n_root:
+            problems.append(f"{t}: {n_root} root-level parquet file(s)")
+    if problems:
+        raise ValueError(
+            f"dedup index at {path!r} is not in the chunk-partitioned "
+            f"layout ({'; '.join(problems)}) — rewrite it with "
+            "dedup_index_write, or point at fresh storage"
+        )
+
+
 def _parquet_file_count(root: str) -> int:
     import os
 
@@ -1847,8 +1765,8 @@ def dedup_index_compact(
     target_files: int | None = None,
 ) -> dict:
     """Fold the accumulated per-batch ``chunk=<k>`` partitions of a
-    chunk-partitioned dedup index (``dedup_index_write/append``
-    ``partition=`` layout) into ONE consolidated partition
+    dedup index (``dedup_index_write``/``dedup_index_append``) into
+    ONE consolidated partition
     ``chunk=<into>`` — the maintenance pass that keeps a long-horizon
     at-least-once ingest from drowning in files and partitions (the
     loop writes one partition per micro-batch forever; a year of
@@ -1860,14 +1778,13 @@ def dedup_index_compact(
     deduplicating re-folded replays) changes no verdict — pinned by
     tests/test_pipeline_ops.py::test_dedup_index_compact_*.
 
-    REPLAY INTERACTION (defined here, tested): the loop's free replay
-    guard prunes ``chunk != k``. Once chunk ``k`` is folded, that
-    prune no longer removes its rows (they live in ``chunk=<into>``),
-    so the compactor records every folded id in a sidecar
-    (:func:`compacted_chunks`) BEFORE the fold commits, and an
-    at-least-once writer whose chunk is in the sidecar must use
-    ``dedup_incremental(exclude_index_ids=<its own ids>)`` instead —
-    ``streaming_curation_loop`` does exactly this. A replay's
+    REPLAY INTERACTION (defined here, tested): the free replay guard
+    of ``dedup_incremental(replay_chunk=k)`` prunes ``chunk != k``.
+    Once chunk ``k`` is folded, that prune no longer removes its rows
+    (they live in ``chunk=<into>``), so the compactor records every
+    folded id in a sidecar (:func:`compacted_chunks`) BEFORE the fold
+    commits, and the guard adds an anti-join of the delta's own ids
+    for a chunk in the sidecar. A replay's
     re-append then recreates ``chunk=k`` next to the folded copy;
     the duplicate rows are verdict-harmless (existence semantics) and
     the NEXT compaction's distinct removes them. Callers should still
@@ -2002,20 +1919,12 @@ DELTA_BROADCAST_MAX_DOCS = 2_000_000
 
 def dedup_incremental(
     spark,
-    delta: DataFrame,
+    probe: ProbeRows,
     index_path: str,
-    k: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    broadcast_delta: bool | None = None,
-    index_table: str | None = None,
-    probe_rows: ProbeRows | None = None,
-    exclude_index_ids: DataFrame | None = None,
-    index_filter: str | None = None,
+    replay_chunk: int | None = None,
 ) -> DataFrame:
-    """Incremental dedup of a delta batch against a persisted index
+    """Incremental dedup of a delta batch, given as its probe rows
+    (``delta_probe_rows``), against a persisted index
     (``dedup_index_write``): one verdict row per delta doc —
     (id, verdict) with verdict ∈ ('dup_exact', 'dup_near', 'kept').
 
@@ -2042,114 +1951,60 @@ def dedup_incremental(
 
     Scale shape — cost tracks the DELTA, not the index:
     - signatures (the dominant cost: hashlib shingles, ~87 s for 10M
-      docs at the r9 rung) are computed for DELTA docs only; the
-      index contributes pre-computed slim rows;
+      docs at the r9 rung) are computed for DELTA docs only, once, in
+      ``delta_probe_rows``; the index contributes pre-computed slim
+      rows;
     - the index probes are joins on 16-byte digests / short band keys.
-      When the delta is small (≤ ``DELTA_BROADCAST_MAX_DOCS``, or
-      ``broadcast_delta=True``), the delta's probe rows are BROADCAST
-      into an inner join with the index as the streamed side — the
-      index is SCANNED, never shuffled, never sorted, which is the
-      only shape that survives a 100 TB index (a left-semi cannot
-      broadcast its probe side, so the semi formulation necessarily
-      exchanged the index). Above the gate the semi-join fallback
-      keeps both sides distributed; plan ratchet + path-equivalence
-      unit in tests. ``broadcast_delta=None`` auto-picks via one
-      ``delta.count()`` (trivial next to the signature pass);
+      When the delta has at most ``DELTA_BROADCAST_MAX_DOCS`` docs, its
+      probe rows are BROADCAST into an inner join with the index as
+      the streamed side — the index is SCANNED, never shuffled, never
+      sorted, which is the only shape that survives a 100 TB index (a
+      left-semi cannot broadcast its probe side, so the semi
+      formulation necessarily exchanges the index). Above the gate the
+      semi-join fallback keeps both sides distributed; plan ratchet +
+      path-equivalence unit in tests. The choice costs one count of
+      the checkpointed digests;
     - within-delta priority is a window min over the delta's own band
       rows — a shuffle of (id, band, band_key) sized by the delta.
     - delta text never shuffles anywhere.
 
-    ``index_table`` (from ``dedup_index_write_bucketed``) switches the
-    index side to the bucketed catalog tables: in the semi fallback
-    the index scan then arrives pre-partitioned on the join key and
-    ONLY the delta exchanges — the big-delta complement of the
-    broadcast path (plan-ratcheted in tests/test_plans.py).
+    ``replay_chunk`` (the at-least-once replay guard): the chunk id
+    the delta appends itself under (``dedup_index_append``). A batch
+    replayed after a crash may already have appended part of itself;
+    without the guard the replay judges the batch against its own
+    prior append (its docs as dup_exact of themselves, smaller ids as
+    dup_near of same-batch survivors) and diverges from the
+    uninterrupted run. The guard always prunes ``chunk != k`` — a
+    partition prune, no join and no per-batch cost, since only this
+    batch writes ``chunk=<k>``. When ``dedup_index_compact`` has
+    folded chunk ``k`` into a base partition (``k`` is in
+    :func:`compacted_chunks`), the prune no longer sees those rows, so
+    the guard also anti-joins the delta's own ids out of both index
+    tables (broadcast in the small-delta regime; in the big-delta
+    regime it exchanges the index on the id — paid only by batches
+    whose chunk was folded). In normal operation a delta id never
+    pre-exists in the index, so either guard is a semantic no-op.
 
-    ``probe_rows`` (from ``delta_probe_rows``): reuse precomputed
-    digests + band rows so a caller that also appends survivors to
-    the index (``dedup_index_append``) pays the signature pass once
-    per micro-batch, not twice. The probe's embedded parameters must
-    match this call's (checked, ValueError).
+    The index must be chunk-partitioned (checked: an index written at
+    its root raises ``ValueError`` naming the path)."""
+    _check_index_layout(index_path)
+    id_col = probe.id_col
+    digs, dbands = probe.digests, probe.band_rows
+    idx_digests = spark.read.parquet(f"{index_path}/digests")
+    idx_bands = spark.read.parquet(f"{index_path}/bands")
+    small_delta = digs.count() <= DELTA_BROADCAST_MAX_DOCS
+    if replay_chunk is not None:
+        own_chunk = F.col("chunk") != int(replay_chunk)
+        idx_digests = idx_digests.filter(own_chunk)
+        idx_bands = idx_bands.filter(own_chunk)
+        if int(replay_chunk) in compacted_chunks(index_path):
+            own_ids = digs.select(id_col)
+            if small_delta:
+                own_ids = F.broadcast(own_ids)
+            idx_digests = idx_digests.join(own_ids, id_col, "left_anti")
+            idx_bands = idx_bands.join(own_ids, id_col, "left_anti")
 
-    ``exclude_index_ids`` (the at-least-once replay guard, r12
-    verdict item 2): a slim (``id_col``) frame of ids whose index
-    rows must be IGNORED by both probes — pass the delta's own ids
-    when a crashed-and-replayed batch may have already appended part
-    of itself to the index, otherwise the replay judges the batch
-    against its own prior append (its docs as dup_exact of
-    themselves, smaller ids as dup_near of same-batch survivors) and
-    diverges from the uninterrupted run. In normal operation a delta
-    id never pre-exists in the index, so the anti-join is a semantic
-    no-op; it follows the same broadcast regime as the delta probes
-    (the exclude set is delta-sized by construction). Cost note: in
-    the big-delta regime the exclude set cannot broadcast, so the
-    anti-join exchanges the INDEX on ``id_col`` — a price paid every
-    batch for protection only a replay needs; a CHUNK-PARTITIONED
-    index (``dedup_index_append(partition=...)``) should prefer
-    ``index_filter`` below, which is free.
-
-    ``index_filter``: a SQL predicate applied to both index tables
-    right after the scan — with the chunk-partitioned layout,
-    ``"chunk != <k>"`` excludes a replayed batch's own prior append
-    by PARTITION PRUNING (no join, no exchange, no per-batch cost:
-    only this batch ever writes ``chunk=<k>``, so the prune removes
-    exactly its prior partial append and nothing else).
-    """
-    if probe_rows is not None:
-        _check_probe_params(
-            probe_rows, k, bands, shingle_n, text_col, id_col,
-            "dedup_incremental",
-        )
-    if index_table is not None:
-        idx_digests = spark.table(f"{index_table}_digests")
-        idx_bands = spark.table(f"{index_table}_bands")
-    else:
-        idx_digests = spark.read.parquet(f"{index_path}/digests")
-        idx_bands = spark.read.parquet(f"{index_path}/bands")
-    if index_filter is not None:
-        # targeted failure for the common layout mismatch (r13 verdict
-        # item 7): a chunk predicate against an index written WITHOUT
-        # partition= has no chunk column, and Spark's unresolved-column
-        # error would not name the real problem (wrong index layout)
-        if "chunk" in index_filter and (
-            "chunk" not in idx_digests.columns
-            or "chunk" not in idx_bands.columns
-        ):
-            where = index_table or index_path
-            raise ValueError(
-                f"dedup_incremental: index_filter={index_filter!r} "
-                f"references 'chunk' but the index at {where!r} is not "
-                "chunk-partitioned (no chunk column on "
-                f"digests={idx_digests.columns} / bands={idx_bands.columns}) "
-                "— write it with dedup_index_write(..., partition=...) / "
-                "dedup_index_append(..., partition=...) to get the "
-                "replay-prunable layout"
-            )
-        idx_digests = idx_digests.filter(index_filter)
-        idx_bands = idx_bands.filter(index_filter)
-    if broadcast_delta is None:
-        gate_df = probe_rows.digests if probe_rows is not None else delta
-        broadcast_delta = gate_df.count() <= DELTA_BROADCAST_MAX_DOCS
-    if exclude_index_ids is not None:
-        # the index side must stay shuffle-free: broadcast the exclude
-        # set into the anti-join whenever the delta regime broadcasts
-        # (it is the delta's own ids); in the big-delta regime both
-        # sides are distributed anyway
-        excl = exclude_index_ids.select(id_col)
-        if broadcast_delta:
-            excl = F.broadcast(excl)
-        idx_digests = idx_digests.join(excl, id_col, "left_anti")
-        idx_bands = idx_bands.join(excl, id_col, "left_anti")
-
-    digs = (
-        probe_rows.digests
-        if probe_rows is not None
-        else delta.select(
-            F.md5(F.col(text_col).cast("binary")).alias("text_hash"),
-            F.col(id_col),
-        )
-    )
-    if broadcast_delta:
+    if small_delta:
         exact_vs_index = idx_digests.select("text_hash").join(
             F.broadcast(digs), "text_hash", "inner"
         ).select(id_col)
@@ -2172,12 +2027,7 @@ def dedup_incremental(
     )
     exact_dup = exact_vs_index.unionByName(exact_within).distinct()
 
-    dbands = (
-        probe_rows.band_rows
-        if probe_rows is not None
-        else minhash_band_rows(delta, k, bands, shingle_n, text_col, id_col)
-    )
-    if broadcast_delta:
+    if small_delta:
         near_vs_index = idx_bands.select("band", "band_key").join(
             F.broadcast(dbands), ["band", "band_key"], "inner"
         ).select(id_col)
@@ -2196,7 +2046,7 @@ def dedup_incremental(
     near_dup = near_vs_index.unionByName(near_within).distinct()
 
     return (
-        delta.select(id_col)
+        digs.select(id_col)
         .join(exact_dup.withColumn("__e", F.lit(1)), id_col, "left")
         .join(near_dup.withColumn("__n", F.lit(1)), id_col, "left")
         .select(

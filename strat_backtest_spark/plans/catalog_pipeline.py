@@ -1695,23 +1695,26 @@ def q93_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     written once to a parquet index), odd doc_ids are today's crawl,
     and each delta doc gets a verdict (dup_exact / dup_near / kept)
     from index probes + within-delta priority — signatures are
-    computed for the DELTA ONLY. The index write at construction time
-    is the operator's contract (the decontaminate precedent for eager
-    stages); the oracle mirrors the priority semantics exactly
+    computed for the DELTA ONLY, once (``delta_probe_rows``). The
+    index write and the delta's signature pass at construction time
+    are the operator's contract (the decontaminate precedent for eager
+    stages); the index lives in a per-process scratch dir
+    (``streaming.scratch_dir``) at its day-zero ``chunk=-1``; the
+    oracle mirrors the priority semantics exactly
     (operators/dedup.dedup_incremental)."""
-    import hashlib as _hl
-
     from strat_backtest_spark.operators.dedup import (
         dedup_incremental,
         dedup_index_write,
+        delta_probe_rows,
     )
+    from strat_backtest_spark.streaming import scratch_dir
 
     docs = _t(spark, sf_dir, "documents")
     index_docs = docs.filter(F.col("doc_id") % 2 == 0)
     delta = docs.filter(F.col("doc_id") % 2 == 1)
-    path = "/tmp/spark_graft_q93_index_" + _hl.md5(sf_dir.encode()).hexdigest()[:10]
-    dedup_index_write(index_docs, path)
-    return dedup_incremental(spark, delta, path)
+    path = scratch_dir("q93_index_")
+    dedup_index_write(delta_probe_rows(index_docs), path)
+    return dedup_incremental(spark, delta_probe_rows(delta), path)
 
 
 def _q94_oracle(sf_dir: str) -> str:

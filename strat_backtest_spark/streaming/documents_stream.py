@@ -190,56 +190,21 @@ def _chunk_of_file(file_uri: str) -> int | None:
     return int(m.group(1)) if m else None
 
 
-def _committed_parquet(root: str) -> bool:
-    """True when ``root`` holds at least one COMMITTED parquet file —
-    hidden dirs (_temporary task attempts) are pruned, matching what
-    Spark's reader would actually list; counting them would send a
-    committed-data-less store into a schema-less read that cannot
-    infer (review r13)."""
-    import os
-
-    for dirpath, dirs, files in os.walk(root):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
-
-
-def _check_index_layout(index_dir: str) -> None:
-    """Refuse to RESUME onto an index that is not chunk-partitioned
-    (ADVICE r13): a durable state_dir written by the pre-r13 root
-    layout (or a day-zero write that crashed mid-write) would
-    otherwise get new ``chunk=`` partition dirs written NEXT TO root
-    parquet files — the exact layout mixing that breaks partition
-    discovery at the final read. Valid: each table dir exists, holds
-    at least one ``chunk=<k>`` partition, and no root-level part
-    files."""
-    import os
-    import re
-
-    problems = []
-    for t in ("bands", "digests"):
-        td = os.path.join(index_dir, t)
-        if not os.path.isdir(td):
-            problems.append(f"{t}: table dir missing")
-            continue
-        entries = os.listdir(td)
-        if not any(re.fullmatch(r"chunk=-?\d+", e) for e in entries):
-            problems.append(f"{t}: no chunk=* partition dirs")
-        root_files = [e for e in entries if e.endswith(".parquet")]
-        if root_files:
-            problems.append(
-                f"{t}: {len(root_files)} root-level parquet file(s)"
-            )
-    if problems:
-        raise ValueError(
-            f"streaming_curation_loop: index at {index_dir!r} is not in "
-            f"the chunk-partitioned layout ({'; '.join(problems)}) — "
-            "resuming would mix root files with chunk= partition dirs and "
-            "break partition discovery. Migrate the index (rewrite it via "
-            "dedup_index_write(..., partition=...)) or point state_dir at "
-            "fresh storage."
-        )
+def _batch_chunk(batch_df: DataFrame, chunk_col) -> int | None:
+    """A foreachBatch micro-batch's STABLE identity — unlike Spark's
+    batch_id, which restarts from 0 in a new incarnation — or None for
+    an empty (replay padding) trigger. Primary: the chunk id every
+    ``_chunked_replay`` file encodes in its name (a production file
+    source names its daily drop the same way), valid for ANY doc→chunk
+    assignment. Fallback (non-file sources): ``chunk_col``, the
+    assignment expression, evaluated on a row."""
+    head = batch_df.select(
+        F.input_file_name().alias("__f"), chunk_col.alias("__c")
+    ).head(1)
+    if not head:
+        return None
+    ck = _chunk_of_file(head[0]["__f"])
+    return int(head[0]["__c"]) if ck is None else ck
 
 
 def simhash_claim_verdicts(
@@ -472,12 +437,16 @@ def streaming_incremental_dedup(
     stream: the streaming query itself is stateless, so a restart
     resumes from the checkpoint + the index as-is — at 100 TB the
     index is the durable artifact and micro-batch cost tracks the
-    day's delta exactly as the q93 rung measures."""
-    import hashlib
-    import os
+    day's delta exactly as the q93 rung measures. The index starts as
+    an empty day-zero ``chunk=-1``; each batch writes its verdicts and
+    its survivors under its own chunk id (``_batch_chunk``) and probes
+    with ``replay_chunk`` set, so a replayed batch overwrites its own
+    prior writes and is judged as the uninterrupted run judged it —
+    the same at-least-once shape as ``streaming_curation_loop``."""
     import shutil
 
     from strat_backtest_spark.operators.dedup import (
+        _parquet_file_count,
         dedup_incremental,
         dedup_index_append,
         dedup_index_write,
@@ -488,31 +457,24 @@ def streaming_incremental_dedup(
         "doc_id", "text"
     )
     stream, replay_dir = _chunked_replay(spark, static, n_chunks)
-    # deterministic scratch dirs (the q93/q97 convention): repeated
-    # gate runs REUSE the paths instead of accumulating tempdirs;
-    # out_dir is the returned DataFrame's backing store, so it is
-    # wiped at the START of the next run rather than on exit.
-    # Single-writer assumption: two CONCURRENT runs with identical
-    # (sf_dir, n_chunks) would share and corrupt these paths — the
-    # gate (and any sane caller) serializes runs per input; a
-    # production loop keys the index path per pipeline, not per call
-    tag = hashlib.md5(f"{sf_dir}|{n_chunks}".encode()).hexdigest()[:10]
-    index_dir = f"/tmp/stream_dedup_index_{tag}"
-    out_dir = f"/tmp/stream_dedup_verdicts_{tag}"
-    shutil.rmtree(out_dir, ignore_errors=True)
-    dedup_index_write(static.limit(0), index_dir)  # day-zero: empty (overwrite)
+    index_dir = scratch_dir("stream_dedup_index_")
+    # the returned DataFrame's backing store: it outlives this call
+    out_dir = scratch_dir("stream_dedup_verdicts_")
+    dedup_index_write(delta_probe_rows(static.limit(0)), index_dir)
+    chunk_col = F.col("doc_id") % n_chunks
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # replay padding trigger
+        ck = _batch_chunk(batch_df, chunk_col)
+        if ck is None:  # replay padding trigger
             return
         # one signature pass per micro-batch, shared by the verdict
         # probe and the survivor append
         probe = delta_probe_rows(batch_df)
         verdicts = dedup_incremental(
-            spark, batch_df, index_dir, probe_rows=probe
+            spark, probe, index_dir, replay_chunk=ck
         ).localCheckpoint()
-        verdicts.write.mode("append").parquet(out_dir)
-        dedup_index_append(batch_df, verdicts, index_dir, probe_rows=probe)
+        verdicts.write.mode("overwrite").parquet(f"{out_dir}/chunk={ck}")
+        dedup_index_append(probe, verdicts, index_dir, ck)
 
     q = stream.writeStream.foreachBatch(process).start()
     try:
@@ -522,11 +484,9 @@ def streaming_incremental_dedup(
         shutil.rmtree(replay_dir, ignore_errors=True)
         shutil.rmtree(index_dir, ignore_errors=True)
 
-    if not os.path.isdir(out_dir) or not any(
-        f.endswith(".parquet") for f in os.listdir(out_dir)
-    ):
+    if _parquet_file_count(out_dir) == 0:
         return spark.createDataFrame([], "doc_id long, verdict string")
-    return spark.read.schema("doc_id long, verdict string").parquet(out_dir)
+    return spark.read.parquet(out_dir).select("doc_id", "verdict")
 
 
 def streaming_curation_loop(
@@ -540,7 +500,6 @@ def streaming_curation_loop(
     chunk_ids: list[int] | None = None,
     initial_counts: dict[str, int] | None = None,
     state_dir: str | None = None,
-    fail_after: str | None = None,
     chunk_expr: str | None = None,
 ) -> DataFrame:
     """The production ingest shape as ONE streaming job (q100): every
@@ -590,9 +549,10 @@ def streaming_curation_loop(
     COLD RESTART (the production resume path, r11 verdict item 2):
     - ``state_dir`` makes the two cross-batch artifacts DURABLE at
       ``{state_dir}/index`` and ``{state_dir}/verdicts`` — they
-      survive the call instead of living in per-run /tmp scratch, and
-      an existing index there is RESUMED (no day-zero overwrite, no
-      verdict-store reset);
+      survive the call instead of living in per-process scratch
+      (``streaming.scratch_dir``), and an existing index there is
+      RESUMED (no day-zero overwrite, no verdict-store reset) after
+      its layout is checked;
     - ``initial_counts`` seeds the per-source admitted counters —
       on resume, pass ``curation_quota_counts_from_verdicts`` over
       the surviving verdict store (equality with the live counters is
@@ -614,12 +574,13 @@ def streaming_curation_loop(
       write, never duplicates it);
     - the index append commits SECOND, to ``chunk=<k>`` partitions of
       the two index tables, also overwrite-by-chunk
-      (``dedup_index_append(partition=...)``);
-    - the dedup probe EXCLUDES the batch's own chunk partition from
-      the index (``dedup_incremental(index_filter="chunk != k")`` — a
-      partition PRUNE, zero per-batch cost), so a replay whose prior
-      incarnation already appended part of itself is judged against
-      exactly the index state the uninterrupted run saw.
+      (``dedup_index_append(..., chunk=k)``);
+    - the dedup probe runs with ``dedup_incremental(replay_chunk=k)``,
+      which excludes the batch's own prior append from the index (a
+      partition prune, plus an id anti-join once the chunk has been
+      compacted), so a replay whose prior incarnation already appended
+      part of itself is judged against exactly the index state the
+      uninterrupted run saw.
     A crashed incarnation therefore resumes by replaying the
     in-flight chunk plus the unprocessed ones; the ONE caller
     obligation is to seed ``initial_counts`` from the verdict store
@@ -631,12 +592,9 @@ def streaming_curation_loop(
     row-identical verdict sets) is pinned for chunk-boundary kills by
     tests/test_pipeline_ops.py::test_curation_loop_cold_restart and
     for MID-BATCH kills (between the two commits, and after both) by
-    ::test_curation_loop_midbatch_crash_resume.
-
-    ``fail_after``: crash-injection failpoint for those tests — raise
-    after the named commit point (``"verdicts_written"`` |
-    ``"index_appended"``) in every batch that reaches it. Test-only;
-    never set in production.
+    ::test_curation_loop_midbatch_crash_resume, which injects the
+    crash by patching ``operators.dedup.dedup_index_append`` (the
+    loop imports it at call time).
 
     BATCH IDENTITY (r13 verdict item 4): inside the micro-batch the
     chunk id is derived from ``input_file_name()`` — the replay
@@ -644,29 +602,25 @@ def streaming_curation_loop(
     file source names its daily drop — so identity holds for ANY
     doc→chunk assignment, not just the modular one. Only when the
     file path carries no chunk (non-file sources) does the loop fall
-    back to evaluating the assignment expression on a row.
-    ``chunk_expr``: that assignment, a SQL expression over the doc
+    back to evaluating the assignment expression on a row
+    (``_batch_chunk``). ``chunk_expr``: that assignment, a SQL expression over the doc
     columns with values in [0, n_chunks); default
     ``doc_id % n_chunks`` (the q100 oracle unrolls the default — a
     custom assignment changes arrival order, so it is for
     equivalence-tested resume scenarios, not the gate).
 
     COMPACTION INTERACTION: if ``dedup_index_compact`` has folded
-    this batch's chunk into the index base (its id is in the
-    ``compacted_chunks`` sidecar), the free ``chunk != k`` prune can
-    no longer exclude a replayed batch's prior append — the loop
-    detects this per batch and adds the id anti-join guard
-    (``exclude_index_ids`` = the batch's own admitted ids) for
-    exactly that batch, keeping replay-after-compaction verdicts
-    identical (tested)."""
-    import hashlib
+    this batch's chunk into the index base, ``replay_chunk`` adds the
+    id anti-join for exactly that batch, keeping
+    replay-after-compaction verdicts identical (tested)."""
     import os
     import shutil
 
     from pyspark.sql import Window
 
     from strat_backtest_spark.operators.dedup import (
-        compacted_chunks,
+        _check_index_layout,
+        _parquet_file_count,
         dedup_incremental,
         dedup_index_append,
         dedup_index_write,
@@ -721,28 +675,18 @@ def streaming_curation_loop(
             # appending chunk= dirs next to root files is the layout
             # mixing that breaks discovery (ADVICE r13)
             _check_index_layout(index_dir)
+        else:
+            # a verdict store without an index is not resumable state
+            shutil.rmtree(out_dir, ignore_errors=True)
     else:
-        # deterministic scratch (same single-writer assumption as
-        # streaming_incremental_dedup's note: concurrent identical-param
-        # runs are not supported; gate runs are serialized per input)
-        tag = hashlib.md5(f"{sf_dir}|{n_chunks}|{cap}".encode()).hexdigest()[:10]
-        index_dir = f"/tmp/stream_curation_index_{tag}"
-        out_dir = f"/tmp/stream_curation_out_{tag}"
+        index_dir = scratch_dir("stream_curation_index_")
+        # the returned DataFrame's backing store: it outlives this call
+        out_dir = scratch_dir("stream_curation_out_")
         resume = False
     if not resume:
-        shutil.rmtree(out_dir, ignore_errors=True)
-        # ALSO wipe the index: a hard-killed prior scratch run (no
-        # finally-cleanup) leaves stale chunk partitions that the
-        # partitioned day-zero write below would NOT clear (unlike the
-        # old root-layout overwrite) — a fresh run would then dedup
-        # against a poisoned index (review r13). In the durable
-        # not-resume case index_dir does not exist; harmless.
-        shutil.rmtree(index_dir, ignore_errors=True)
-        # day-zero: empty, in the chunk-partitioned layout every later
-        # append uses (chunk=-1 is no batch's id, so it is never
-        # overwritten; mixing root files with partition dirs would
-        # break discovery)
-        dedup_index_write(static.limit(0), index_dir, partition=-1)
+        # day-zero: empty, at chunk=-1 (no batch's id, so it is never
+        # overwritten)
+        dedup_index_write(delta_probe_rows(static.limit(0)), index_dir)
 
     w1, w2 = fixture_weights(dim), fixture_weights(dim2)
     admitted_counts: dict[str, int] = dict(initial_counts or {})
@@ -751,20 +695,9 @@ def streaming_curation_loop(
     import time as _time
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        head = batch_df.select(
-            F.input_file_name().alias("__f"), chunk_col.alias("__c")
-        ).head(1)
-        if not head:  # replay padding trigger
+        ck = _batch_chunk(batch_df, chunk_col)
+        if ck is None:  # replay padding trigger
             return
-        # the batch's STABLE identity — unlike Spark's batch_id, which
-        # restarts from 0 in a new incarnation. Primary: the chunk id
-        # every replay file encodes in its name (a production file
-        # source names its daily drop the same way), valid for ANY
-        # doc→chunk assignment. Fallback (non-file sources): evaluate
-        # the assignment expression on a row.
-        ck = _chunk_of_file(head[0]["__f"])
-        if ck is None:
-            ck = int(head[0]["__c"])
         tm: dict = {"batch_id": batch_id, "chunk": ck}
         t0 = _time.time()
         prior = spark.createDataFrame(
@@ -822,24 +755,9 @@ def streaming_curation_loop(
             ),
         )
         # at-least-once: a replayed batch must not be judged against
-        # its own prior partial append. Partition prune, not an id
-        # anti-join: only this batch ever writes chunk=ck, so the
-        # prune removes exactly its prior append at ZERO per-batch
-        # cost (the anti-join formulation exchanged the whole index on
-        # doc_id every batch in the big-delta regime — review r13).
-        # EXCEPT when dedup_index_compact has folded this chunk into
-        # the base partition: the prune can no longer see those rows,
-        # so this batch (alone) adds the id anti-join guard — the
-        # sidecar read is a tiny JSON stat per batch.
-        guard: dict = {"index_filter": f"chunk != {ck}"}
-        if ck in compacted_chunks(index_dir):
-            guard["exclude_index_ids"] = adm.select("doc_id")
+        # its own prior partial append
         verdicts = dedup_incremental(
-            spark,
-            adm.select("doc_id", "text"),
-            index_dir,
-            probe_rows=probe,
-            **guard,
+            spark, probe, index_dir, replay_chunk=ck
         ).localCheckpoint()
         tm["dedup_s"] = round(_time.time() - t0, 1)
         t0 = _time.time()
@@ -878,15 +796,9 @@ def streaming_curation_loop(
             "overwrite"
         ).parquet(f"{out_dir}/chunk={ck}")
         tm["classify_write_s"] = round(_time.time() - t0, 1)
-        if fail_after == "verdicts_written":
-            raise RuntimeError("failpoint: verdicts_written")
         t0 = _time.time()
-        dedup_index_append(
-            adm, verdicts, index_dir, probe_rows=probe, partition=ck
-        )
+        dedup_index_append(probe, verdicts, index_dir, ck)
         tm["index_append_s"] = round(_time.time() - t0, 1)
-        if fail_after == "index_appended":
-            raise RuntimeError("failpoint: index_appended")
         for r in adm.groupBy("source").count().collect():
             admitted_counts[r["source"]] = admitted_counts.get(
                 r["source"], 0
@@ -913,8 +825,7 @@ def streaming_curation_loop(
         if state_dir is None:  # durable state survives for resume
             shutil.rmtree(index_dir, ignore_errors=True)
 
-    have_files = os.path.isdir(out_dir) and _committed_parquet(out_dir)
-    if not have_files:
+    if _parquet_file_count(out_dir) == 0:
         return spark.createDataFrame([], out_schema)
     # chunk=<k> partition discovery adds a chunk column; project it
     # away so the returned schema is the documented verdict schema
@@ -987,10 +898,10 @@ def curation_resume_counts(
     admission log, as for ``curation_quota_counts_from_verdicts``
     (which this delegates to, inheriting its loud incomplete-log
     failure)."""
-    import os
+    from strat_backtest_spark.operators.dedup import _parquet_file_count
 
     out_dir = f"{state_dir}/verdicts"
-    if not (os.path.isdir(out_dir) and _committed_parquet(out_dir)):
+    if _parquet_file_count(out_dir) == 0:
         return {}
     v = spark.read.parquet(out_dir).filter(
         ~F.col("chunk").isin([int(c) for c in replay_chunks])

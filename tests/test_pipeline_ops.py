@@ -1901,18 +1901,13 @@ def test_dedup_incremental_index_only_dup_dropped(spark, tmp_path):
     the property that distinguishes incremental dedup from the
     closed-world batch entries (which would keep it: nothing inside
     the delta collides with it)."""
-    from strat_backtest_spark.operators.dedup import (
-        dedup_incremental,
-        dedup_index_write,
-    )
-
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     idx_docs = spark.createDataFrame(
         [(0, base), (2, "completely different historical content " * 3)],
         "doc_id long, text string",
     )
     path = str(tmp_path / "idx")
-    dedup_index_write(idx_docs, path)
+    _index(idx_docs, path)
 
     delta = spark.createDataFrame(
         [
@@ -1922,21 +1917,20 @@ def test_dedup_incremental_index_only_dup_dropped(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    got = {r["doc_id"]: r["verdict"] for r in dedup_incremental(spark, delta, path).collect()}
+    got = _incremental(spark, delta, path)
     assert got == {101: "dup_exact", 103: "dup_near", 105: "kept"}
 
 
 def test_dedup_index_partitioned_replay_idempotent(spark, tmp_path):
-    """The at-least-once index layout at operator level (r12 verdict
-    item 2): with ``partition`` set, a REPLAYED append overwrites its
-    own chunk partition instead of doubling it, and
-    ``exclude_index_ids`` makes the replayed batch's probe blind to
-    its own prior append — so verdicts and index contents after a
-    replay are byte-identical to the single-run ones."""
+    """The at-least-once index layout at operator level: a REPLAYED
+    append overwrites its own chunk partition instead of doubling it,
+    and ``replay_chunk`` makes the replayed batch's probe blind to its
+    own prior append — so verdicts and index contents after a replay
+    are byte-identical to the single-run ones."""
     from strat_backtest_spark.operators.dedup import (
         dedup_incremental,
         dedup_index_append,
-        dedup_index_write,
+        delta_probe_rows,
     )
 
     path = str(tmp_path / "pidx")
@@ -1944,7 +1938,7 @@ def test_dedup_index_partitioned_replay_idempotent(spark, tmp_path):
         [(0, "historical alpha beta gamma delta epsilon zeta eta")],
         "doc_id long, text string",
     )
-    dedup_index_write(day0, path, partition=-1)
+    _index(day0, path)
 
     batch = spark.createDataFrame(
         [
@@ -1955,19 +1949,19 @@ def test_dedup_index_partitioned_replay_idempotent(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    excl = batch.select("doc_id")
+    probe = delta_probe_rows(batch)
 
     def verdicts():
         return {
             r["doc_id"]: r["verdict"]
             for r in dedup_incremental(
-                spark, batch, path, exclude_index_ids=excl
+                spark, probe, path, replay_chunk=7
             ).collect()
         }
 
     v1 = verdicts()
     assert v1 == {10: "dup_exact", 11: "kept", 12: "dup_exact", 13: "kept"}
-    dedup_index_append(batch, _as_verdicts(spark, v1), path, partition=7)
+    dedup_index_append(probe, _as_verdicts(spark, v1), path, 7)
 
     def index_counts():
         return (
@@ -1981,21 +1975,47 @@ def test_dedup_index_partitioned_replay_idempotent(spark, tmp_path):
     # double it
     v2 = verdicts()
     assert v2 == v1
-    dedup_index_append(batch, _as_verdicts(spark, v2), path, partition=7)
+    dedup_index_append(probe, _as_verdicts(spark, v2), path, 7)
     assert index_counts() == once
     # and a LATER batch still collides with the registered survivors
     later = spark.createDataFrame(
         [(20, "novel content one with plenty of distinct tokens")],
         "doc_id long, text string",
     )
-    got = dedup_incremental(spark, later, path).collect()
-    assert got[0]["verdict"] == "dup_exact"
+    assert _incremental(spark, later, path) == {20: "dup_exact"}
 
 
 def _as_verdicts(spark, mapping):
     return spark.createDataFrame(
         list(mapping.items()), "doc_id long, verdict string"
     )
+
+
+def _index(docs, path, chunk=-1):
+    """Write ``docs`` into the dedup index at ``path`` as its
+    ``chunk=<chunk>`` partition."""
+    from strat_backtest_spark.operators.dedup import (
+        dedup_index_write,
+        delta_probe_rows,
+    )
+
+    dedup_index_write(delta_probe_rows(docs), path, chunk)
+
+
+def _incremental(spark, delta, path, **kw):
+    """``dedup_incremental`` of ``delta`` against the index at
+    ``path``, as a {doc_id: verdict} dict."""
+    from strat_backtest_spark.operators.dedup import (
+        dedup_incremental,
+        delta_probe_rows,
+    )
+
+    return {
+        r["doc_id"]: r["verdict"]
+        for r in dedup_incremental(
+            spark, delta_probe_rows(delta), path, **kw
+        ).collect()
+    }
 
 
 def test_dedup_incremental_equals_batch_priority(spark, tmp_path):
@@ -2007,10 +2027,6 @@ def test_dedup_incremental_equals_batch_priority(spark, tmp_path):
     is exercised on organic text."""
     from pyspark.sql import functions as F
 
-    from strat_backtest_spark.operators.dedup import (
-        dedup_incremental,
-        dedup_index_write,
-    )
     from strat_backtest_spark.plans.catalog import _t
 
     docs = _t(spark, SF_SMALL, "documents").select("doc_id", "text")
@@ -2019,18 +2035,13 @@ def test_dedup_incremental_equals_batch_priority(spark, tmp_path):
     delta = docs.filter(F.col("doc_id") >= split)
 
     p_idx = str(tmp_path / "half_idx")
-    dedup_index_write(idx_docs, p_idx)
-    inc = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(spark, delta, p_idx).collect()
-    }
+    _index(idx_docs, p_idx)
+    inc = _incremental(spark, delta, p_idx)
 
     p_empty = str(tmp_path / "empty_idx")
-    dedup_index_write(docs.filter(F.lit(False)), p_empty)
+    _index(docs.filter(F.lit(False)), p_empty)
     batch = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(spark, docs, p_empty).collect()
-        if r["doc_id"] >= split
+        i: v for i, v in _incremental(spark, docs, p_empty).items() if i >= split
     }
     assert inc == batch
     assert set(inc.values()) >= {"kept"}, "degenerate fixture: nothing kept"
@@ -2045,7 +2056,7 @@ def test_dedup_index_append_closes_the_loop(spark, tmp_path):
     from strat_backtest_spark.operators.dedup import (
         dedup_incremental,
         dedup_index_append,
-        dedup_index_write,
+        delta_probe_rows,
     )
 
     path = str(tmp_path / "rolling")
@@ -2053,7 +2064,7 @@ def test_dedup_index_append_closes_the_loop(spark, tmp_path):
         [(0, "the quick brown fox jumps over the lazy dog today")],
         "doc_id long, text string",
     )
-    dedup_index_write(seed, path)
+    _index(seed, path)
 
     day1 = spark.createDataFrame(
         [
@@ -2062,10 +2073,11 @@ def test_dedup_index_append_closes_the_loop(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    v1 = dedup_incremental(spark, day1, path)
+    p1 = delta_probe_rows(day1)
+    v1 = dedup_incremental(spark, p1, path)
     got1 = {r["doc_id"]: r["verdict"] for r in v1.collect()}
     assert got1 == {10: "kept", 11: "dup_exact"}
-    dedup_index_append(day1, v1, path)
+    dedup_index_append(p1, v1, path, 1)
 
     day2 = spark.createDataFrame(
         [
@@ -2074,75 +2086,62 @@ def test_dedup_index_append_closes_the_loop(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    got2 = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(spark, day2, path).collect()
-    }
-    assert got2 == {20: "dup_exact", 21: "kept"}
+    assert _incremental(spark, day2, path) == {20: "dup_exact", 21: "kept"}
 
 
 def test_delta_probe_rows_path_equals_recompute(spark, tmp_path):
-    """The one-signature-pass fold (delta_probe_rows → probe_rows=):
-    verdicts AND the post-append index content must be byte-identical
-    to the recompute-from-text path — the q96/q100 micro-batch shape
-    pays the shingle pass once, with nothing else changing. Includes
-    a null-text doc (probe digests carry the NULL hash row exactly
-    like dedup_index_write does)."""
+    """The one-signature-pass shape (delta_probe_rows → dedup_incremental
+    → dedup_index_append over the same probe rows) the q96/q100
+    micro-batches run: fixed verdicts, and an index that afterwards
+    holds exactly the seed plus the kept docs — digests equal to
+    md5 over each kept text recomputed here in Python, 4 band rows per
+    kept doc with content. Includes a null-text doc (its digest row
+    carries a NULL hash; it has no band rows)."""
+    import hashlib
+    from collections import Counter
+
     from strat_backtest_spark.operators.dedup import (
         dedup_incremental,
         dedup_index_append,
-        dedup_index_write,
         delta_probe_rows,
     )
 
-    seed = spark.createDataFrame(
-        [(0, "the quick brown fox jumps over the lazy dog today")],
-        "doc_id long, text string",
-    )
+    seed_text = "the quick brown fox jumps over the lazy dog today"
+    t10 = "brand new survivor content alpha beta gamma delta epsilon"
+    t14 = "totally novel second day text with sufficient tokens inside"
+    seed = spark.createDataFrame([(0, seed_text)], "doc_id long, text string")
     delta = spark.createDataFrame(
-        [
-            (10, "brand new survivor content alpha beta gamma delta epsilon"),
-            (11, "the quick brown fox jumps over the lazy dog today"),
-            (12, "brand new survivor content alpha beta gamma delta epsilon"),
-            (13, None),
-            (14, "totally novel second day text with sufficient tokens inside"),
-        ],
+        [(10, t10), (11, seed_text), (12, t10), (13, None), (14, t14)],
         "doc_id long, text string",
     )
+    path = str(tmp_path / "idx")
+    _index(seed, path)
+    probe = delta_probe_rows(delta)
+    v = dedup_incremental(spark, probe, path)
+    assert {r["doc_id"]: r["verdict"] for r in v.collect()} == {
+        10: "kept",
+        11: "dup_exact",
+        12: "dup_exact",
+        13: "kept",
+        14: "kept",
+    }
+    dedup_index_append(probe, v, path, 0)
 
-    def run(use_probe):
-        path = str(tmp_path / f"idx_{use_probe}")
-        dedup_index_write(seed, path)
-        probe = delta_probe_rows(delta) if use_probe else None
-        v = dedup_incremental(spark, delta, path, probe_rows=probe)
-        verdicts = sorted(
-            (r["doc_id"], r["verdict"]) for r in v.collect()
-        )
-        dedup_index_append(delta, v, path, probe_rows=probe)
-        nonesafe = lambda t: tuple((x is None, x) for x in t)
-        bands = sorted(
-            (tuple(r) for r in spark.read.parquet(f"{path}/bands").collect()),
-            key=nonesafe,
-        )
-        digs = sorted(
-            (tuple(r) for r in spark.read.parquet(f"{path}/digests").collect()),
-            key=nonesafe,
-        )
-        return verdicts, bands, digs
-
-    base, folded = run(False), run(True)
-    assert folded == base
-    assert dict(base[0])[11] == "dup_exact" and dict(base[0])[13] == "kept"
-
-    # the convention guard: a probe built under different signature
-    # parameters is refused, not silently mixed into the index
-    import pytest as _pytest
-
-    probe = delta_probe_rows(delta, bands=2)
-    with _pytest.raises(ValueError, match="banding conventions"):
-        dedup_incremental(
-            spark, delta, str(tmp_path / "idx_True"), probe_rows=probe
-        )
+    md5 = lambda t: hashlib.md5(t.encode()).hexdigest()
+    digs = {
+        (r["doc_id"], r["text_hash"])
+        for r in spark.read.parquet(f"{path}/digests").collect()
+    }
+    assert digs == {
+        (0, md5(seed_text)),
+        (10, md5(t10)),
+        (13, None),
+        (14, md5(t14)),
+    }
+    bands = Counter(
+        r["doc_id"] for r in spark.read.parquet(f"{path}/bands").collect()
+    )
+    assert bands == {0: 4, 10: 4, 14: 4}
 
 
 def test_perceptual_hash_pairs_reencoded_image(spark):
@@ -2322,37 +2321,26 @@ def test_audio_fingerprint_pairs_reencoded_audio(spark):
 
 
 @pytest.mark.slow
-def test_dedup_incremental_broadcast_equals_semi(spark, tmp_path):
+def test_dedup_incremental_broadcast_equals_semi(spark, tmp_path, monkeypatch):
     """Path equivalence for the delta-broadcast probe (the tfidf
     broadcast-vocab precedent): identical verdicts from the
-    broadcast-delta plan and the distributed semi-join fallback on
-    organic documents."""
+    broadcast-delta plan and the distributed semi-join fallback (the
+    ``DELTA_BROADCAST_MAX_DOCS`` gate patched to 0) on organic
+    documents."""
     from pyspark.sql import functions as F
 
-    from strat_backtest_spark.operators.dedup import (
-        dedup_incremental,
-        dedup_index_write,
-    )
+    from strat_backtest_spark.operators import dedup
     from strat_backtest_spark.plans.catalog import _t
 
     docs = _t(spark, SF_SMALL, "documents").select("doc_id", "text")
     idx_docs = docs.filter(F.col("doc_id") % 2 == 0)
     delta = docs.filter(F.col("doc_id") % 2 == 1)
     path = str(tmp_path / "bc_idx")
-    dedup_index_write(idx_docs, path)
+    _index(idx_docs, path)
 
-    bc = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(
-            spark, delta, path, broadcast_delta=True
-        ).collect()
-    }
-    semi = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(
-            spark, delta, path, broadcast_delta=False
-        ).collect()
-    }
+    bc = _incremental(spark, delta, path)
+    monkeypatch.setattr(dedup, "DELTA_BROADCAST_MAX_DOCS", 0)
+    semi = _incremental(spark, delta, path)
     assert bc == semi and len(bc) > 0
     # sf0.001 documents have no exact dup across the parity split;
     # near-dups and kept docs must both occur or the fixture is dead
@@ -2426,24 +2414,22 @@ def test_quality_classifier_exact_and_null_safe(spark):
 
 
 @pytest.mark.slow
-def test_dedup_incremental_null_text_kept(spark, tmp_path):
+def test_dedup_incremental_null_text_kept(spark, tmp_path, monkeypatch):
     """ADVICE-r10 regression: md5(NULL text) is NULL and Spark windows
     group NULLs into one partition — without the isNotNull filter the
     within-delta exact window flagged all-but-min-id null-text docs
     dup_exact. The pinned contract (the q93/q96 oracles' WHERE text IS
     NOT NULL) treats content-less docs as kept; two null-text delta
-    docs must BOTH come back kept, and real dups must be unaffected."""
-    from strat_backtest_spark.operators.dedup import (
-        dedup_incremental,
-        dedup_index_write,
-    )
+    docs must BOTH come back kept, and real dups must be unaffected —
+    on the broadcast path and on the semi-join fallback."""
+    from strat_backtest_spark.operators import dedup
 
     idx_docs = spark.createDataFrame(
         [(0, "historical alpha beta gamma delta epsilon zeta eta")],
         "doc_id long, text string",
     )
     path = str(tmp_path / "null_idx")
-    dedup_index_write(idx_docs, path)
+    _index(idx_docs, path)
 
     delta = spark.createDataFrame(
         [
@@ -2454,19 +2440,15 @@ def test_dedup_incremental_null_text_kept(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
-    for bc in (True, False):
-        got = {
-            r["doc_id"]: r["verdict"]
-            for r in dedup_incremental(
-                spark, delta, path, broadcast_delta=bc
-            ).collect()
-        }
+    for max_docs in (dedup.DELTA_BROADCAST_MAX_DOCS, 0):
+        monkeypatch.setattr(dedup, "DELTA_BROADCAST_MAX_DOCS", max_docs)
+        got = _incremental(spark, delta, path)
         assert got == {
             101: "kept",
             103: "kept",
             105: "dup_exact",
             107: "kept",
-        }, f"broadcast_delta={bc}: {got}"
+        }, f"DELTA_BROADCAST_MAX_DOCS={max_docs}: {got}"
 
 
 def test_quality_classifier_bigrams_and_vectorized_parity(spark):
@@ -2693,7 +2675,7 @@ def test_curation_loop_cold_restart(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_curation_loop_midbatch_crash_resume(spark, tmp_path):
+def test_curation_loop_midbatch_crash_resume(spark, tmp_path, monkeypatch):
     """At-least-once for the COMPOSED q100 loop (r12 verdict item 2):
     production foreachBatch replays a batch after ANY crash, so the
     micro-batch must be idempotent — not merely resumable at chunk
@@ -2713,9 +2695,11 @@ def test_curation_loop_midbatch_crash_resume(spark, tmp_path):
     the replayed chunks — via curation_resume_counts, the wrapped
     obligation (here all chunks replay, so the rebuilt seed must come
     back empty). Verdict sets must equal the uninterrupted run's
-    exactly."""
+    exactly. The crash is injected by patching ``dedup_index_append``
+    (``_crash_after``)."""
     import pyspark.errors
 
+    from strat_backtest_spark.operators import dedup
     from strat_backtest_spark.streaming.documents_stream import (
         curation_resume_counts,
         streaming_curation_loop,
@@ -2729,13 +2713,13 @@ def test_curation_loop_midbatch_crash_resume(spark, tmp_path):
 
     for point in ("verdicts_written", "index_appended"):
         state = str(tmp_path / f"curation_state_{point}")
-        try:
-            streaming_curation_loop(
-                spark, SF_SMALL, cap=cap, state_dir=state, fail_after=point
-            )
-            raise AssertionError("failpoint did not fire")
-        except pyspark.errors.exceptions.base.PySparkException:
-            pass  # the injected crash killed the stream mid-batch
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "dedup_index_append", _crash_after(point))
+            try:
+                streaming_curation_loop(spark, SF_SMALL, cap=cap, state_dir=state)
+                raise AssertionError("injected crash did not fire")
+            except pyspark.errors.exceptions.base.PySparkException:
+                pass  # the injected crash killed the stream mid-batch
         docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
         seeds = curation_resume_counts(spark, state, [0, 1, 2], docs)
         assert seeds == {}, "replaying everything must rebuild an empty prior"
@@ -2751,6 +2735,25 @@ def test_curation_loop_midbatch_crash_resume(spark, tmp_path):
             ).collect()
         }
         assert got == want, f"crash window {point!r} diverged"
+
+
+def _crash_after(point):
+    """A stand-in for ``operators.dedup.dedup_index_append`` that kills
+    the curation loop's micro-batch at one of its two commit points:
+    ``"verdicts_written"`` raises instead of appending (the verdicts
+    committed, the index append is lost); ``"index_appended"`` appends
+    and then raises (both commits landed, the in-memory counters are
+    lost)."""
+    from strat_backtest_spark.operators import dedup
+
+    real = dedup.dedup_index_append
+
+    def crash(*args, **kwargs):
+        if point == "index_appended":
+            real(*args, **kwargs)
+        raise RuntimeError(f"injected crash after {point}")
+
+    return crash
 
 
 @pytest.mark.slow
@@ -2874,14 +2877,8 @@ def _compact_index(spark, tmp_path, n_chunks=4):
     """A chunk-partitioned index accumulated over ``n_chunks`` batch
     appends (the at-least-once layout), plus a probe delta with one
     exact dup, one near dup, and one novel doc."""
-    from strat_backtest_spark.operators.dedup import dedup_index_write
-
     path = str(tmp_path / "cidx")
-    dedup_index_write(
-        spark.createDataFrame([], "doc_id long, text string"),
-        path,
-        partition=-1,
-    )
+    _index(spark.createDataFrame([], "doc_id long, text string"), path)
     for k in range(n_chunks):
         chunk_docs = spark.createDataFrame(
             [
@@ -2890,7 +2887,7 @@ def _compact_index(spark, tmp_path, n_chunks=4):
             ],
             "doc_id long, text string",
         )
-        dedup_index_write(chunk_docs, path, partition=k)
+        _index(chunk_docs, path, k)
     delta = spark.createDataFrame(
         [
             (900, f"{_CBASE} family2"),            # exact dup of chunk 2
@@ -2912,19 +2909,11 @@ def test_dedup_index_compact_preserves_verdicts(spark, tmp_path):
 
     from strat_backtest_spark.operators.dedup import (
         compacted_chunks,
-        dedup_incremental,
         dedup_index_compact,
     )
 
     path, delta = _compact_index(spark, tmp_path)
-
-    def verdicts():
-        return {
-            r["doc_id"]: r["verdict"]
-            for r in dedup_incremental(spark, delta, path).collect()
-        }
-
-    before = verdicts()
+    before = _incremental(spark, delta, path)
     assert before == {900: "dup_exact", 901: "dup_near", 902: "kept"}
 
     stats = dedup_index_compact(spark, path)
@@ -2934,7 +2923,7 @@ def test_dedup_index_compact_preserves_verdicts(spark, tmp_path):
     # the source partitions are gone; only the base remains
     assert sorted(os.listdir(f"{path}/bands")) == ["chunk=-1"]
     assert sorted(os.listdir(f"{path}/digests")) == ["chunk=-1"]
-    assert verdicts() == before
+    assert _incremental(spark, delta, path) == before
 
     again = dedup_index_compact(spark, path)
     assert again["folded_chunks"] == []
@@ -2952,15 +2941,11 @@ def test_dedup_index_compact_exclude_and_target_files(spark, tmp_path):
 
     from strat_backtest_spark.operators.dedup import (
         compacted_chunks,
-        dedup_incremental,
         dedup_index_compact,
     )
 
     path, delta = _compact_index(spark, tmp_path)
-    before = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(spark, delta, path).collect()
-    }
+    before = _incremental(spark, delta, path)
     with pytest.raises(ValueError, match="negative"):
         dedup_index_compact(spark, path, into=0)
     stats = dedup_index_compact(spark, path, exclude_chunks=[3], target_files=1)
@@ -2974,36 +2959,25 @@ def test_dedup_index_compact_exclude_and_target_files(spark, tmp_path):
         if f.endswith(".parquet")
     ]
     assert len(base_files) == 1
-    got = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(spark, delta, path).collect()
-    }
-    assert got == before
+    assert _incremental(spark, delta, path) == before
 
 
 @pytest.mark.slow
-def test_dedup_index_compact_replay_after_fold(spark, tmp_path):
+def test_dedup_index_compact_replay_after_fold(spark, tmp_path, monkeypatch):
     """The defined replay interaction (r13 verdict item 2): once a
     chunk is folded into the base, the free ``chunk != k`` prune no
     longer hides a replayed batch's prior append — the sidecar names
-    the chunk and the replay must add the id anti-join guard. With
+    the chunk and ``replay_chunk`` adds the id anti-join guard. With
     the guard, replay verdicts are identical; the replay's re-append
     then coexists with the folded copy (duplicate rows are
     verdict-harmless) and the NEXT compaction's distinct folds them
     away without row inflation."""
-    from strat_backtest_spark.operators.dedup import (
-        compacted_chunks,
-        dedup_incremental,
-        dedup_index_append,
-        dedup_index_compact,
-        dedup_index_write,
-    )
+    from strat_backtest_spark.operators import dedup
 
     path = str(tmp_path / "ridx")
-    dedup_index_write(
+    _index(
         spark.createDataFrame([(0, f"{_CBASE} historical")], "doc_id long, text string"),
         path,
-        partition=-1,
     )
     batch = spark.createDataFrame(
         [
@@ -3014,42 +2988,45 @@ def test_dedup_index_compact_replay_after_fold(spark, tmp_path):
         ],
         "doc_id long, text string",
     )
+    probe = dedup.delta_probe_rows(batch)
 
-    def verdicts(**kw):
+    def verdicts():
         return {
             r["doc_id"]: r["verdict"]
-            for r in dedup_incremental(
-                spark, batch, path, index_filter="chunk != 7", **kw
+            for r in dedup.dedup_incremental(
+                spark, probe, path, replay_chunk=7
             ).collect()
         }
 
     want = verdicts()
     assert want == {10: "dup_exact", 11: "kept", 12: "dup_exact", 13: "kept"}
-    dedup_index_append(batch, _as_verdicts(spark, want), path, partition=7)
+    dedup.dedup_index_append(probe, _as_verdicts(spark, want), path, 7)
 
     # crash window: the batch committed its append, then died; a
     # compaction ran before the replay landed and folded chunk 7
-    stats = dedup_index_compact(spark, path)
+    stats = dedup.dedup_index_compact(spark, path)
     assert stats["folded_chunks"] == [7]
-    assert 7 in compacted_chunks(path)
+    assert 7 in dedup.compacted_chunks(path)
 
-    # the prune alone is now blind to the folded copy: the replay
-    # would judge its own docs as dups of themselves
-    poisoned = verdicts()
+    # the prune alone (sidecar hidden) is blind to the folded copy:
+    # the replay would judge its own docs as dups of themselves
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "compacted_chunks", lambda p: set())
+        poisoned = verdicts()
     assert poisoned[10] == "dup_exact" and poisoned[11] != "kept"
-    # the documented remedy — sidecar names the chunk, replay adds the
-    # id anti-join — restores the uninterrupted verdicts exactly
-    replay = verdicts(exclude_index_ids=batch.select("doc_id"))
+    # with the sidecar read, the guard adds the id anti-join and
+    # restores the uninterrupted verdicts exactly
+    replay = verdicts()
     assert replay == want
 
     # the replay re-appends; base copy + fresh chunk dir coexist, and
     # the next compaction dedupes instead of inflating
-    dedup_index_append(batch, _as_verdicts(spark, replay), path, partition=7)
+    dedup.dedup_index_append(probe, _as_verdicts(spark, replay), path, 7)
     rows_before = {
         t: spark.read.parquet(f"{path}/{t}").count()
         for t in ("bands", "digests")
     }
-    stats2 = dedup_index_compact(spark, path)
+    stats2 = dedup.dedup_index_compact(spark, path)
     assert stats2["folded_chunks"] == [7]
     rows_after = {
         t: spark.read.parquet(f"{path}/{t}").count()
@@ -3062,8 +3039,49 @@ def test_dedup_index_compact_replay_after_fold(spark, tmp_path):
         [(20, "novel content one with plenty of distinct tokens")],
         "doc_id long, text string",
     )
-    got = dedup_incremental(spark, later, path).collect()
-    assert got[0]["verdict"] == "dup_exact"
+    assert _incremental(spark, later, path) == {20: "dup_exact"}
+
+
+def test_dedup_incremental_replay_guard_anti_join_iff_compacted(
+    spark, tmp_path, monkeypatch
+):
+    """``replay_chunk`` always prunes ``chunk != k`` and adds the id
+    anti-join (one per index table) exactly when ``k`` is in the
+    ``compacted_chunks`` sidecar — a spy on DataFrame.join counts the
+    left_anti joins each call builds."""
+    from strat_backtest_spark.operators import dedup
+
+    path = str(tmp_path / "gidx")
+    _index(
+        spark.createDataFrame([(0, f"{_CBASE} historical")], "doc_id long, text string"),
+        path,
+    )
+    batch = spark.createDataFrame(
+        [(10, f"{_CBASE} historical"), (11, "novel content with distinct tokens")],
+        "doc_id long, text string",
+    )
+    probe = dedup.delta_probe_rows(batch)
+    frame_cls = type(probe.digests)
+    real_join = frame_cls.join
+    hows: list = []
+
+    def spy(self, other, on=None, how=None):
+        hows.append(how)
+        return real_join(self, other, on, how)
+
+    def anti_joins(**kw):
+        hows.clear()
+        with monkeypatch.context() as m:
+            m.setattr(frame_cls, "join", spy)
+            dedup.dedup_incremental(spark, probe, path, **kw)
+        return hows.count("left_anti")
+
+    assert anti_joins() == 0
+    assert anti_joins(replay_chunk=7) == 0
+    dedup._record_compacted(path, {7})
+    assert anti_joins(replay_chunk=7) == 2
+    assert anti_joins(replay_chunk=8) == 0
+    assert anti_joins() == 0
 
 
 @pytest.mark.slow
@@ -3076,16 +3094,10 @@ def test_dedup_index_compact_crash_recovery(spark, tmp_path):
     import os
     import shutil
 
-    from strat_backtest_spark.operators.dedup import (
-        dedup_incremental,
-        dedup_index_compact,
-    )
+    from strat_backtest_spark.operators.dedup import dedup_index_compact
 
     path, delta = _compact_index(spark, tmp_path)
-    want = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(spark, delta, path).collect()
-    }
+    want = _incremental(spark, delta, path)
 
     # window A: crash mid-stage — tmp exists, no _SUCCESS
     for t in ("bands", "digests"):
@@ -3096,20 +3108,13 @@ def test_dedup_index_compact_crash_recovery(spark, tmp_path):
     stats = dedup_index_compact(spark, path)
     assert stats["folded_chunks"] == [0, 1, 2, 3]
     assert not os.path.isdir(f"{path}/bands/.compact_tmp")
-    got = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(spark, delta, path).collect()
-    }
-    assert got == want
+    assert _incremental(spark, delta, path) == want
 
     # window B: crash after a COMMITTED stage, before the swap — the
     # tmp (base ∪ candidates) carries _SUCCESS and the old base is
     # still live; recovery must complete the swap, not duplicate it
     path2, delta2 = _compact_index(spark, tmp_path / "b")
-    want2 = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(spark, delta2, path2).collect()
-    }
+    want2 = _incremental(spark, delta2, path2)
     first = dedup_index_compact(spark, path2, exclude_chunks=[2, 3])
     assert first["folded_chunks"] == [0, 1]
     for t in ("bands", "digests"):
@@ -3127,11 +3132,7 @@ def test_dedup_index_compact_crash_recovery(spark, tmp_path):
     # sources of the completed fold) are re-folded by this pass
     assert not os.path.isdir(f"{path2}/bands/.compact_tmp")
     assert sorted(os.listdir(f"{path2}/bands")) == ["chunk=-1"]
-    got2 = {
-        r["doc_id"]: r["verdict"]
-        for r in dedup_incremental(spark, delta2, path2).collect()
-    }
-    assert got2 == want2
+    assert _incremental(spark, delta2, path2) == want2
 
 
 def test_decontaminate_slices_identity(spark):
@@ -3229,37 +3230,42 @@ def test_benchmark_hashes_artifact_stamp(spark, tmp_path):
     assert got == inline and len(got) == 1
 
 
-def test_dedup_incremental_index_filter_layout_error(spark, tmp_path):
-    """r13 verdict item 7: a chunk predicate against an index written
-    WITHOUT the partitioned layout must fail with an error that names
-    the real problem (index layout) instead of Spark's unresolved-
-    column noise."""
-    import pytest
+def _root_layout_index(spark, path):
+    """An index written at its ROOT with raw ``df.write.parquet`` (the
+    pre-chunk layout): the right tables and columns, no ``chunk=<k>``
+    partition dirs."""
+    from strat_backtest_spark.operators.dedup import delta_probe_rows
 
-    from strat_backtest_spark.operators.dedup import (
-        dedup_incremental,
-        dedup_index_write,
-    )
-
-    path = str(tmp_path / "flat_idx")
-    dedup_index_write(
+    probe = delta_probe_rows(
         spark.createDataFrame(
             [(0, "historical alpha beta gamma delta epsilon zeta")],
             "doc_id long, text string",
-        ),
-        path,
+        )
     )
+    probe.band_rows.write.parquet(f"{path}/bands")
+    probe.digests.write.parquet(f"{path}/digests")
+
+
+def test_dedup_incremental_refuses_root_layout_index(spark, tmp_path):
+    """An index that is not chunk-partitioned is input from outside
+    the program: ``dedup_incremental`` must refuse it with an error
+    that names the layout problem and the path, instead of probing it
+    (no replay prune is possible) or failing with Spark's
+    unresolved-column noise."""
+    import pytest
+
+    path = str(tmp_path / "flat_idx")
+    _root_layout_index(spark, path)
     delta = spark.createDataFrame(
         [(1, "some delta text with enough tokens")], "doc_id long, text string"
     )
-    with pytest.raises(ValueError, match="not[ -]chunk-partitioned|not chunk"):
-        dedup_incremental(
-            spark, delta, path, index_filter="chunk != 0"
-        ).collect()
+    with pytest.raises(ValueError, match="chunk-partitioned") as e:
+        _incremental(spark, delta, path)
+    assert path in str(e.value) and "root-level parquet" in str(e.value)
 
 
 @pytest.mark.slow
-def test_curation_loop_nonmodular_chunks_crash_resume(spark, tmp_path):
+def test_curation_loop_nonmodular_chunks_crash_resume(spark, tmp_path, monkeypatch):
     """r13 verdict item 4: batch identity now derives from the input
     FILES, not from ``doc_id % n_chunks`` — so the mid-batch
     kill/resume equivalence must hold under a chunk assignment where
@@ -3269,6 +3275,7 @@ def test_curation_loop_nonmodular_chunks_crash_resume(spark, tmp_path):
     against the wrong index prune."""
     import pyspark.errors
 
+    from strat_backtest_spark.operators import dedup
     from strat_backtest_spark.streaming.documents_stream import (
         curation_resume_counts,
         streaming_curation_loop,
@@ -3291,18 +3298,15 @@ def test_curation_loop_nonmodular_chunks_crash_resume(spark, tmp_path):
     assert nonmod > 0
 
     state = str(tmp_path / "nm_state")
-    try:
-        streaming_curation_loop(
-            spark,
-            SF_SMALL,
-            cap=cap,
-            chunk_expr=shuffled,
-            state_dir=state,
-            fail_after="index_appended",
-        )
-        raise AssertionError("failpoint did not fire")
-    except pyspark.errors.exceptions.base.PySparkException:
-        pass
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "dedup_index_append", _crash_after("index_appended"))
+        try:
+            streaming_curation_loop(
+                spark, SF_SMALL, cap=cap, chunk_expr=shuffled, state_dir=state
+            )
+            raise AssertionError("injected crash did not fire")
+        except pyspark.errors.exceptions.base.PySparkException:
+            pass
     seeds = curation_resume_counts(spark, state, [0, 1, 2], docs)
     assert seeds == {}
     got = {
@@ -3321,7 +3325,7 @@ def test_curation_loop_nonmodular_chunks_crash_resume(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_curation_loop_replay_after_compaction(spark, tmp_path):
+def test_curation_loop_replay_after_compaction(spark, tmp_path, monkeypatch):
     """END-TO-END for the compaction/replay interaction the compactor
     defines: a batch commits both writes and crashes; a maintenance
     compaction then folds the in-flight chunk into the index base;
@@ -3330,7 +3334,7 @@ def test_curation_loop_replay_after_compaction(spark, tmp_path):
     verdicts identical to the uninterrupted run."""
     import pyspark.errors
 
-    from strat_backtest_spark.operators.dedup import dedup_index_compact
+    from strat_backtest_spark.operators import dedup
     from strat_backtest_spark.streaming.documents_stream import (
         curation_resume_counts,
         streaming_curation_loop,
@@ -3342,17 +3346,16 @@ def test_curation_loop_replay_after_compaction(spark, tmp_path):
         for r in streaming_curation_loop(spark, SF_SMALL, cap=cap).collect()
     }
     state = str(tmp_path / "compact_state")
-    try:
-        streaming_curation_loop(
-            spark, SF_SMALL, cap=cap, state_dir=state,
-            fail_after="index_appended",
-        )
-        raise AssertionError("failpoint did not fire")
-    except pyspark.errors.exceptions.base.PySparkException:
-        pass
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "dedup_index_append", _crash_after("index_appended"))
+        try:
+            streaming_curation_loop(spark, SF_SMALL, cap=cap, state_dir=state)
+            raise AssertionError("injected crash did not fire")
+        except pyspark.errors.exceptions.base.PySparkException:
+            pass
     # maintenance pass between incarnations folds the crashed batch's
     # own chunk (0) into the base
-    stats = dedup_index_compact(spark, f"{state}/index")
+    stats = dedup.dedup_index_compact(spark, f"{state}/index")
     assert 0 in stats["folded_chunks"]
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
@@ -3379,17 +3382,12 @@ def test_curation_loop_resume_layout_mismatch(spark, tmp_path):
     exactly the mixing that breaks partition discovery."""
     import pytest
 
-    from strat_backtest_spark.operators.dedup import dedup_index_write
     from strat_backtest_spark.streaming.documents_stream import (
         streaming_curation_loop,
     )
 
     state = str(tmp_path / "legacy_state")
-    legacy = spark.createDataFrame(
-        [(0, "historical alpha beta gamma delta epsilon zeta")],
-        "doc_id long, text string",
-    )
-    dedup_index_write(legacy, f"{state}/index")  # root layout, no partition
+    _root_layout_index(spark, f"{state}/index")
     with pytest.raises(ValueError, match="chunk-partitioned"):
         streaming_curation_loop(spark, SF_SMALL, state_dir=state)
 
@@ -3403,20 +3401,11 @@ def test_dedup_index_compact_tiers(spark, tmp_path):
 
     from strat_backtest_spark.operators.dedup import (
         compacted_chunks,
-        dedup_incremental,
         dedup_index_compact,
-        dedup_index_write,
     )
 
     path, delta = _compact_index(spark, tmp_path)
-
-    def verdicts():
-        return {
-            r["doc_id"]: r["verdict"]
-            for r in dedup_incremental(spark, delta, path).collect()
-        }
-
-    want = verdicts()
+    want = _incremental(spark, delta, path)
     # tier 1: fold chunks 0-1 into the default base (-1)
     s1 = dedup_index_compact(spark, path, exclude_chunks=[2, 3])
     assert s1["folded_chunks"] == [0, 1]
@@ -3425,15 +3414,14 @@ def test_dedup_index_compact_tiers(spark, tmp_path):
         chunk_docs = spark.createDataFrame(
             [(k * 10, f"{_CBASE} family{k}")], "doc_id long, text string"
         )
-        dedup_index_write(chunk_docs, path, partition=k)
+        _index(chunk_docs, path, k)
     s2 = dedup_index_compact(spark, path, into=-2)
     assert s2["folded_chunks"] == [2, 3, 4, 5]
     assert sorted(os.listdir(f"{path}/bands")) == ["chunk=-1", "chunk=-2"]
     assert compacted_chunks(path) == {0, 1, 2, 3, 4, 5}
-    assert verdicts() == want
+    assert _incremental(spark, delta, path) == want
     # the tier-2 content is probed too: an exact dup of chunk 4's doc
     probe = spark.createDataFrame(
         [(990, f"{_CBASE} family4")], "doc_id long, text string"
     )
-    got = dedup_incremental(spark, probe, path).collect()
-    assert got[0]["verdict"] == "dup_exact"
+    assert _incremental(spark, probe, path) == {990: "dup_exact"}

@@ -596,94 +596,41 @@ def test_ivf_max_list_cap_plan_shape(spark):
     assert "Exchange rangepartitioning" not in p, "cap must not global-sort"
 
 
-def test_incremental_dedup_broadcast_delta_plan(spark, tmp_path):
-    """The daily-crawl regime's load-bearing shape: with
-    broadcast_delta=True the 100 TB-scale INDEX side is scanned and
-    streamed into BroadcastHashJoins (delta probe rows broadcast) and
-    is never hash-exchanged — a left-semi cannot broadcast its probe
-    side, so the semi fallback necessarily exchanges the index.
-    Ratchet: auto-broadcast disabled so tiny test tables can't fake
-    the shape; the hint path must still broadcast, and must carry
-    strictly fewer hash exchanges than the semi fallback."""
-    from strat_backtest_spark.operators.dedup import (
-        dedup_incremental,
-        dedup_index_write,
-    )
+def test_incremental_dedup_delta_broadcast_plan(spark, tmp_path, monkeypatch):
+    """The daily-crawl regime's load-bearing shape: with the delta
+    under ``DELTA_BROADCAST_MAX_DOCS`` the 100 TB-scale INDEX side is
+    scanned and streamed into BroadcastHashJoins (delta probe rows
+    broadcast) and is never hash-exchanged — a left-semi cannot
+    broadcast its probe side, so the semi fallback (the constant
+    patched to 0) necessarily exchanges the index. Ratchet:
+    auto-broadcast disabled so tiny test tables can't fake the shape;
+    the hint path must still broadcast, and must carry strictly fewer
+    hash exchanges than the semi fallback."""
+    from strat_backtest_spark.operators import dedup
 
     idx_docs = spark.createDataFrame(
         [(i, f"historical doc {i} alpha beta gamma delta {i}") for i in range(20)],
         "doc_id long, text string",
     )
     path = str(tmp_path / "plan_idx")
-    dedup_index_write(idx_docs, path)
+    dedup.dedup_index_write(dedup.delta_probe_rows(idx_docs), path)
     delta = spark.createDataFrame(
         [(100 + i, f"todays doc {i} epsilon zeta eta theta {i}") for i in range(5)],
         "doc_id long, text string",
     )
+    probe = dedup.delta_probe_rows(delta)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        p_bc = _formatted(
-            dedup_incremental(spark, delta, path, broadcast_delta=True)
-        )
-        p_semi = _formatted(
-            dedup_incremental(spark, delta, path, broadcast_delta=False)
-        )
+        p_bc = _formatted(dedup.dedup_incremental(spark, probe, path))
+        monkeypatch.setattr(dedup, "DELTA_BROADCAST_MAX_DOCS", 0)
+        p_semi = _formatted(dedup.dedup_incremental(spark, probe, path))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert p_bc.count("BroadcastHashJoin") >= 2, "index probes must broadcast"
     n_bc = p_bc.count("hashpartitioning(")
     n_semi = p_semi.count("hashpartitioning(")
     assert n_bc < n_semi, f"broadcast path lost its exchange win: {n_bc} vs {n_semi}"
-
-
-def test_incremental_dedup_bucketed_index_plan(spark, tmp_path):
-    """Big-delta complement of the broadcast ratchet: with the index
-    persisted as bucketed catalog tables, the semi fallback's index
-    scans arrive pre-partitioned on the join key (bucketed scan
-    HashPartitioning satisfies the join's clustered distribution via
-    the subset rule), so only the DELTA side exchanges — the bucketed
-    semi plan must carry strictly fewer hash exchanges than the
-    path-based semi plan, and identical verdicts."""
-    from strat_backtest_spark.operators.dedup import (
-        dedup_incremental,
-        dedup_index_write,
-        dedup_index_write_bucketed,
-    )
-
-    idx_docs = spark.createDataFrame(
-        [(i, f"historical doc {i} alpha beta gamma delta {i}") for i in range(40)],
-        "doc_id long, text string",
-    )
-    p_plain = str(tmp_path / "plain_idx")
-    dedup_index_write(idx_docs, p_plain)
-    dedup_index_write_bucketed(
-        spark, idx_docs, "t_bidx", str(tmp_path / "bidx"), n_buckets=8
-    )
-    delta = spark.createDataFrame(
-        [(100 + i, f"todays doc {i} epsilon zeta eta theta {i}") for i in range(10)]
-        + [(200, "historical doc 3 alpha beta gamma delta 3")],
-        "doc_id long, text string",
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plain = dedup_incremental(spark, delta, p_plain, broadcast_delta=False)
-        bucketed = dedup_incremental(
-            spark, delta, "", broadcast_delta=False, index_table="t_bidx"
-        )
-        p_plain_s, p_buck_s = _formatted(plain), _formatted(bucketed)
-        got_plain = {r["doc_id"]: r["verdict"] for r in plain.collect()}
-        got_buck = {r["doc_id"]: r["verdict"] for r in bucketed.collect()}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_bidx_bands")
-        spark.sql("DROP TABLE IF EXISTS t_bidx_digests")
-    assert got_plain == got_buck and got_plain[200] == "dup_exact"
-    assert "Bucketed: true" in p_buck_s, "index scan lost its bucket metadata"
-    n_plain = p_plain_s.count("hashpartitioning(")
-    n_buck = p_buck_s.count("hashpartitioning(")
-    assert n_buck < n_plain, f"bucketed index still exchanges: {n_buck} vs {n_plain}"
 
 
 def test_q97_partition_pruning(spark):
